@@ -18,8 +18,6 @@ projection) loses more to the extra stage than the parallelism returns.
 
 from __future__ import annotations
 
-import re
-
 from pyspark.sql import DataFrame
 
 #: Logical-plan nodes that put an exchange (or a driver-side barrier)
@@ -30,11 +28,28 @@ from pyspark.sql import DataFrame
 #: ``Dataset.rdd`` forces ``finalPhysicalPlan``, which EXECUTES every
 #: exchange in the plan as blocking driver-side jobs at gate-call time
 #: (measured: +1 job / 0.23 s for one RR exchange at sf0.1 — per call).
-_SHUFFLE_NODES = re.compile(
-    r"\b(Aggregate|Join|Window|Sort|Repartition|RepartitionByExpression"
-    r"|Deduplicate|Distinct|Intersect|Except|GroupingSets|Expand"
-    r"|CoGroup|FlatMapGroupsInPandas|FlatMapGroupsWithState)\b"
-)
+#: Matched against node class names (``nodeName``), never the plan's
+#: text, so a column aliased ``Sort`` or a literal containing ``Join``
+#: cannot switch the spread off.
+_SHUFFLE_NODES = frozenset({
+    "Aggregate", "Join", "Window", "Sort", "Repartition",
+    "RepartitionByExpression", "RebalancePartitions", "Deduplicate",
+    "Distinct", "Intersect", "Except", "GroupingSets", "Expand", "CoGroup",
+    "FlatMapGroupsInPandas", "FlatMapGroupsWithState",
+})
+
+
+def _shuffled(df: DataFrame) -> bool:
+    """True when *df*'s optimized logical plan holds a node of
+    :data:`_SHUFFLE_NODES` — a compile-only walk over ``children``."""
+    stack = [df._jdf.queryExecution().optimizedPlan()]
+    while stack:
+        node = stack.pop()
+        if node.nodeName() in _SHUFFLE_NODES:
+            return True
+        children = node.children()
+        stack.extend(children.apply(i) for i in range(children.size()))
+    return False
 
 
 def spread_small_scan(df: DataFrame) -> DataFrame:
@@ -70,9 +85,8 @@ def spread_small_scan(df: DataFrame) -> DataFrame:
     # already shuffles, the input's parallelism is the shuffle's (AQE-
     # managed) — the spread would be redundant, and probing ``df.rdd``
     # would eagerly execute those exchanges driver-side (see
-    # _SHUFFLE_NODES).  The optimized-plan check is compile-only.
-    plan = df._jdf.queryExecution().optimizedPlan().toString()
-    if _SHUFFLE_NODES.search(plan):
+    # _SHUFFLE_NODES).
+    if _shuffled(df):
         return df
     sc = df.sparkSession.sparkContext
     par = sc.defaultParallelism

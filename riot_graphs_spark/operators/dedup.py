@@ -15,12 +15,13 @@ and DuckDB (``('0x' || ..)::BIGINT``), so every stage is oracle-checkable.
 
 from __future__ import annotations
 
-from collections.abc import Sequence
+from collections.abc import Callable, Sequence
 
 from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
 
 from ..functions.spread import spread_small_scan
+from .graph import _sym
 
 #: Modulus for the MinHash permutation family (prime > 2^30 × small a).
 MINHASH_P = 1_000_000_007
@@ -210,7 +211,9 @@ def _minhash_wide(
     # tokenize + k array_min passes per row: the per-row-heavy stage the
     # under-partitioned-scan spread exists for (r13-opt: 2.3 -> 1.3 s
     # warm for minhash_lsh_pairs at sf0.1 on the one-split fixture).
-    docs = spread_small_scan(docs)
+    # Spread only the two columns the signature reads: the exchange
+    # carries whatever it is given.
+    docs = spread_small_scan(docs.select(F.col(id_col), F.col(text_col)))
     word_hashes = F.transform(words(text_col), lambda t: hash32(t))
     with_h = docs.select(
         F.col(id_col),
@@ -455,6 +458,39 @@ def ngram_containment_pairs(
 # --------------------------------------------------------------------------
 # SimHash
 # --------------------------------------------------------------------------
+def _simhash_batches(batches, bits: int, id_name: str):
+    """``mapInArrow`` kernel of :func:`simhash_signatures`: each batch is
+    ``(id, token-hash list)``; bit b of a row's signature is set iff more
+    than half of its token hashes have bit b set.  Rows with an empty or
+    NULL token list are dropped."""
+    import numpy as np
+    import pyarrow as pa
+
+    for b in batches:
+        ids = b.column(0)
+        lst = b.column(1)
+        # A sliced ListArray keeps its parent's absolute offsets: rebase
+        # them onto the slice's own flattened values.
+        offs = lst.offsets.to_numpy(zero_copy_only=False).astype(np.int64)
+        offs -= offs[0]
+        flat = lst.flatten().to_numpy(zero_copy_only=False).astype(np.int64)
+        n = np.diff(offs)
+        sig = np.zeros(len(n), dtype=np.int64)
+        for bit in range(bits):
+            bitvals = (flat >> bit) & 1
+            cs = np.concatenate(([0], np.cumsum(bitvals)))
+            cnt = cs[offs[1:]] - cs[offs[:-1]]
+            sig |= (2 * cnt - n > 0).astype(np.int64) << bit
+        # Empty/NULL token list → no signature: the exploded relational
+        # form drops the doc (unnest of empty) — keep parity by dropping
+        # here too.
+        keep = n > 0
+        yield pa.RecordBatch.from_arrays(
+            [ids.filter(pa.array(keep)), pa.array(sig[keep])],
+            names=[id_name, "simhash"],
+        )
+
+
 def simhash_signatures(
     docs: DataFrame,
     id_col: str = "doc_id",
@@ -487,37 +523,10 @@ def simhash_signatures(
     out_schema = StructType(
         [hs.schema[0], StructField("simhash", LongType())]
     )
-
-    def compute(batches):
-        import numpy as np
-        import pyarrow as pa
-
-        for b in batches:
-            ids = b.column(0)
-            lst = b.column(1)
-            offs = lst.offsets.to_numpy(zero_copy_only=False).astype(
-                np.int64
-            )
-            flat = lst.values.to_numpy(zero_copy_only=False).astype(
-                np.int64
-            )
-            n = np.diff(offs)
-            sig = np.zeros(len(n), dtype=np.int64)
-            for bit in range(bits):
-                bitvals = (flat >> bit) & 1
-                cs = np.concatenate(([0], np.cumsum(bitvals)))
-                cnt = cs[offs[1:]] - cs[offs[:-1]]
-                sig |= (2 * cnt - n > 0).astype(np.int64) << bit
-            # Empty/NULL token list → no signature: the exploded
-            # relational form drops the doc (unnest of empty) — keep
-            # parity by dropping here too.
-            keep = n > 0
-            yield pa.RecordBatch.from_arrays(
-                [ids.filter(pa.array(keep)), pa.array(sig[keep])],
-                names=[out_schema[0].name, "simhash"],
-            )
-
-    return hs.mapInArrow(compute, out_schema)
+    id_name = out_schema[0].name
+    return hs.mapInArrow(
+        lambda batches: _simhash_batches(batches, bits, id_name), out_schema
+    )
 
 
 def simhash_hamming_pairs(
@@ -636,12 +645,46 @@ def hamming_banded_pairs(
     )
 
 
+def _fixpoint(
+    state: DataFrame,
+    step: Callable[[DataFrame], DataFrame],
+    signature: Sequence[Column],
+    max_iter: int,
+    name: str,
+) -> DataFrame:
+    """Iterate ``state = step(state)`` until a round repeats the previous
+    round's observed ``signature`` — the convergence loop shared by both
+    connected-components operators.
+
+    The signature rides the round's eager ``localCheckpoint`` via
+    ``observe``, so each round is ONE action: no separate probe job
+    re-scans the state, and the checkpoint cuts lineage so plan size
+    stays constant across rounds.  Running out of ``max_iter`` raises:
+    silently unconverged labels would under-merge duplicate clusters
+    (transitive near-dups get different components and both survive
+    dedup)."""
+    prev = None
+    for _ in range(max_iter):
+        obs = Observation()
+        state = (
+            step(state).observe(obs, *signature).localCheckpoint(eager=True)
+        )
+        cur = obs.get
+        if cur == prev:
+            return state
+        prev = cur
+    raise RuntimeError(
+        f"{name} did not converge in {max_iter} rounds; raise max_iter "
+        "(connected_components_star needs only O(log² n) rounds on deep "
+        "graphs)"
+    )
+
+
 def connected_components(
     pairs: DataFrame,
     src: str = "doc_a",
     dst: str = "doc_b",
     max_iter: int = 25,
-    allow_partial: bool = False,
 ) -> DataFrame:
     """Duplicate-cluster assignment: connected components of the near-dup
     pair graph by iterative min-label propagation.
@@ -652,12 +695,11 @@ def connected_components(
 
     Iterative (O(graph diameter) rounds — near-dup clusters are shallow, so
     this converges in a handful). Each round is one shuffle-join of labels
-    onto edges plus a min-agg; ``localCheckpoint`` truncates the lineage so
-    plan size stays constant across rounds. Convergence is detected with one
-    cheap action per round on the monotonically decreasing Σ(component_id)
-    — label sets only ever move down, so an unchanged sum means a fixpoint.
-    At billion-edge scale swap the propagation body for the large-star /
-    small-star contraction (same loop skeleton, fewer rounds).
+    onto edges plus a min-agg, run by :func:`_fixpoint` on the
+    monotonically decreasing Σ(component_id) — label sets only ever move
+    down, so an unchanged sum means a fixpoint; a graph deeper than
+    ``max_iter`` raises.  At billion-edge scale use
+    :func:`connected_components_star` (same loop, fewer rounds).
 
     ``localCheckpoint`` caveat (applies to every barrier in this module):
     the materialized partitions live in executor storage with TRUNCATED
@@ -670,33 +712,23 @@ def connected_components(
     in a long-lived session, unpersist the returned frame's lineage when
     done with it.
     """
-    # Materialize the narrow pair projection FIRST: the symmetrizing
-    # union below references ``pairs`` twice, and Spark performs no
-    # common-subtree elimination across union branches — without this
-    # barrier the (possibly expensive) pair-generation plan upstream
-    # runs twice inside the edges checkpoint job (r13-opt: halved the
-    # LSH+verify cost of every CC consumer).
-    fwd = pairs.select(
-        F.col(src).alias("a"), F.col(dst).alias("b")
-    ).localCheckpoint(eager=False)
     # Materialize the edge list once: every round joins against it, and
     # without the checkpoint each round would re-run the plan upstream
     # of ``pairs``.  Lazy (r14): the round-1 action materializes it —
     # an eager checkpoint here was a whole extra driver round-trip.
     edges = (
-        fwd.union(fwd.select(F.col("b").alias("a"), F.col("a").alias("b")))
+        _sym(pairs.select(F.col(src).alias("src"), F.col(dst).alias("dst")))
         .distinct()
         .localCheckpoint(eager=False)
     )
     labels = (
-        edges.select(F.col("a").alias("id"))
+        edges.select(F.col("src").alias("id"))
         .distinct()
         .withColumn("comp", F.col("id"))
         .localCheckpoint(eager=False)
     )
-    prev_sum = None
-    converged = False
-    for _ in range(max_iter):
+
+    def _round(labels: DataFrame) -> DataFrame:
         # Self-message formulation (r14): new_comp(u) = min(comp(u),
         # min over neighbors comp(v)) is ONE aggregation over the union
         # of neighbor messages and each node's own label — value-
@@ -705,36 +737,19 @@ def connected_components(
         # labels⋈nbr_min join entirely: 3 exchanges per round instead
         # of 5, and with AQE each exchange is a scheduler round-trip.
         msgs = (
-            edges.join(labels, edges["b"] == labels["id"])
-            .select(F.col("a").alias("id"), "comp")
+            edges.join(labels, edges["dst"] == labels["id"])
+            .select(F.col("src").alias("id"), "comp")
             .unionByName(labels.select("id", "comp"))
         )
-        # The Σ(comp) convergence probe rides the checkpoint job itself
-        # (``observe`` metrics are collected by the eager materialization),
-        # so each round is ONE action — no separate label-table re-scan.
-        obs = Observation()
-        labels = (
-            msgs.groupBy("id")
-            .agg(F.min("comp").alias("comp"))
-            .observe(obs, F.sum("comp").alias("s"))
-            .localCheckpoint(eager=True)
-        )
-        cur_sum = obs.get["s"]
-        if cur_sum == prev_sum:
-            converged = True
-            break
-        prev_sum = cur_sum
-    if not converged and not allow_partial:
-        # Silently-unconverged labels would under-merge duplicate clusters
-        # (docs that ARE transitive near-dups get different components and
-        # both survive dedup). Deep graphs should use the O(log²n)-round
-        # :func:`connected_components_star` instead of raising max_iter.
-        raise RuntimeError(
-            f"connected_components did not converge in {max_iter} rounds "
-            "(component diameter exceeds max_iter); use "
-            "connected_components_star for deep graphs, raise max_iter, or "
-            "pass allow_partial=True to accept under-merged labels"
-        )
+        return msgs.groupBy("id").agg(F.min("comp").alias("comp"))
+
+    labels = _fixpoint(
+        labels,
+        _round,
+        [F.sum("comp").alias("s")],
+        max_iter,
+        "connected_components",
+    )
     return labels.select(F.col("id"), F.col("comp").alias("component_id"))
 
 
@@ -768,9 +783,11 @@ def connected_components_star(
 
     The edge multiset only shrinks in Σ(parent); a full round that leaves
     the (count, Σa, Σb) signature unchanged is a fixpoint (the edge set is
-    then exactly the star forest). One ``localCheckpoint`` per round
-    truncates lineage as in the iterative operator (reliable
-    ``checkpoint`` on a real cluster — docs/SCALING.md).
+    then exactly the star forest).  The rounds run on :func:`_fixpoint`,
+    the loop the iterative operator uses (reliable ``checkpoint`` on a
+    real cluster — docs/SCALING.md); at O(log² n) rounds, exhausting
+    ``max_iter`` means something is structurally wrong (e.g. ids not
+    totally ordered) and raises.
     """
     # Orientation invariant: edges are always stored big→small (a > b) —
     # both star phases preserve it, so the per-round symmetrization is a
@@ -811,9 +828,7 @@ def connected_components_star(
 
     _w_a = Window.partitionBy("a")
 
-    prev = None
-    converged = False
-    for _ in range(max_iter):
+    def _round(edges: DataFrame) -> DataFrame:
         # large-star over UNDIRECTED neighborhoods — with the a>b invariant
         # the reversal union is duplicate-free: (v, m(u)) for v ∈ Γ(u), v>u.
         sym = edges.union(
@@ -838,37 +853,25 @@ def connected_components_star(
         lw = large.withColumn(
             "m", F.least(F.min("b").over(_w_a), F.col("a"))
         ).localCheckpoint(eager=False)
-        # The (count, Σa, Σb) fixpoint signature rides the checkpoint job
-        # via ``observe`` — one action per round, no separate edge re-scan.
-        obs = Observation()
-        edges = (
+        return (
             lw.select(F.col("b").alias("a"), "m")
             .union(lw.select(F.col("a"), F.col("m")))
             .select(F.col("a"), F.col("m").alias("b"))
             .filter(F.col("a") != F.col("b"))
             .distinct()
-            .observe(
-                obs,
-                F.count(F.lit(1)).alias("n"),
-                F.sum("a").alias("sa"),
-                F.sum("b").alias("sb"),
-            )
-            .localCheckpoint(eager=True)  # one lineage cut per round
         )
-        got = obs.get
-        cur = (got["n"], got["sa"], got["sb"])
-        if cur == prev:
-            converged = True
-            break
-        prev = cur
-    if not converged:
-        # At O(log² n) rounds worst-case, hitting 25 means something is
-        # structurally wrong (e.g. ids not totally ordered) — never return
-        # silently under-merged dedup clusters.
-        raise RuntimeError(
-            f"connected_components_star did not converge in {max_iter} "
-            "rounds; raise max_iter"
-        )
+
+    edges = _fixpoint(
+        edges,
+        _round,
+        [
+            F.count(F.lit(1)).alias("n"),
+            F.sum("a").alias("sa"),
+            F.sum("b").alias("sb"),
+        ],
+        max_iter,
+        "connected_components_star",
+    )
 
     # Fixpoint edge set is a star forest: (member, root). Roots and
     # isolated nodes label themselves.

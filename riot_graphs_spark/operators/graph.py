@@ -22,68 +22,63 @@ from ..functions import fastsum as _fs
 _DEC = "decimal(28,12)"
 
 
+def _sym(edges: DataFrame) -> DataFrame:
+    """Symmetric closure of an undirected ``(src, dst)`` edge list.
+
+    The narrow projection is materialized before the mirroring union:
+    both branches read the upstream edge plan and Spark performs no
+    common-subtree elimination across union branches — without the
+    barrier an expensive pair-generation aggregate upstream runs twice
+    (r13-opt, the connected_components fix)."""
+    fwd = edges.select("src", "dst").localCheckpoint(eager=False)
+    return fwd.union(
+        fwd.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
+    )
+
+
 def pagerank(
     edges: DataFrame,
     src: str = "src",
     dst: str = "dst",
     iterations: int = 3,
     damping: float = 0.85,
-    undirected: bool = True,
-    checkpoint: bool = True,
-    broadcast_scores: bool = False,
     dedup_edges: bool = True,
 ) -> DataFrame:
-    """Fixed-iteration PageRank over an edge list.
+    """Fixed-iteration PageRank over an undirected edge list.
 
-    Each iteration is one join (node scores onto out-edges) plus one
-    destination-keyed partial-aggregable sum — the per-iteration shuffle
-    budget is 2 exchanges keyed on node id, state is one double per node,
-    and no step ever collects the graph to the driver (the one scalar
-    pulled is the node COUNT, needed inside the teleport constant).
-    Neighbor sums are carried in ``decimal(28,12)`` so every iteration is
-    bit-deterministic regardless of partitioning — which is what makes
-    the fixed-iteration form oracle-pairable by loop unrolling (the SQL
-    twin writes ``iterations`` chained CTEs).
+    Each iteration is one broadcast join (node scores onto out-edges)
+    plus one destination-keyed partial-aggregable sum — one shuffle per
+    iteration, keyed on node id; state is one double per node, and no
+    step ever collects the graph to the driver (the one scalar pulled is
+    the node COUNT, needed inside the teleport constant).  Neighbor sums are carried exactly (decimal-equivalent
+    long buffers) so every iteration is bit-deterministic regardless of
+    partitioning — which is what makes the fixed-iteration form
+    oracle-pairable by loop unrolling (the SQL twin writes
+    ``iterations`` chained CTEs).
 
-    ``undirected=True`` mirrors each edge; nodes are the edge endpoints
+    Every edge is mirrored (:func:`_sym`); nodes are the edge endpoints
     (isolated vertices don't participate — at corpus scale the node table
-    IS the edge-endpoint set; for the directed case that means the union
-    of src AND dst endpoints, so pure-sink nodes are kept).  Dangling-mass
-    redistribution is omitted: with mirrored edges every node has
-    out-degree ≥ 1; in the directed case mass reaching a sink node leaves
-    the system each iteration (scores then sum to < 1 — the classic
-    non-redistributing formulation).  Per-round
-    ``localCheckpoint`` (lazy) caps lineage growth exactly like the
-    connected-components contraction loop; disable for short runs feeding
-    a larger plan.  ``broadcast_scores=True`` ships the per-node score
-    table (one double per node) to the edge side each iteration instead
-    of shuffling the edges — right whenever the node table is
-    executor-memory-sized (a parts catalog, a vocab), wrong for
-    billion-node graphs, hence opt-in.  ``dedup_edges=False`` skips the edge-distinct
-    exchange when the caller guarantees unique ``(src, dst)`` pairs with
-    ``src < dst`` (mirroring cannot then collide) — one full edge-set
-    shuffle saved.
+    IS the edge-endpoint set).  With mirrored edges every node has
+    out-degree ≥ 1, so there is no dangling mass to redistribute.
 
-    Output: ``(node, pr double)`` — scores sum to ~1 over nodes reachable
-    from the uniform start.
+    The per-node score table (one double per node) is broadcast to the
+    edge side each iteration instead of shuffling the edges — the node
+    table must be executor-memory-sized (a parts catalog, a vocab).  The
+    iterations pipeline into one plan with no per-iteration barrier,
+    which suits the short fixed runs this operator serves; plan size
+    grows linearly with ``iterations``.  ``dedup_edges=False`` skips the
+    edge-distinct exchange when the caller guarantees unique
+    ``(src, dst)`` pairs with ``src < dst`` (mirroring cannot then
+    collide) — one full edge-set shuffle saved.
+
+    Output: ``(node, pr double)`` — scores sum to ~1 over nodes.
     """
     if iterations < 0:
         raise ValueError("iterations must be >= 0")
     if not 0.0 < damping < 1.0:
         raise ValueError("need 0 < damping < 1")
 
-    e = edges.select(F.col(src).alias("s"), F.col(dst).alias("d"))
-    if undirected:
-        # Materialize the narrow projection FIRST: the mirroring union
-        # references the upstream plan (often an expensive
-        # pair-generation aggregate) twice, and Spark performs no
-        # common-subtree elimination across union branches — without
-        # this barrier that plan runs twice inside the edge-checkpoint
-        # job (r13-opt, the connected_components fix).
-        e = e.localCheckpoint(eager=False)
-        e = e.unionByName(
-            e.select(F.col("d").alias("s"), F.col("s").alias("d"))
-        )
+    e = _sym(edges.select(F.col(src).alias("src"), F.col(dst).alias("dst")))
     if dedup_edges:
         e = e.distinct()
     # One lazy checkpoint of the edge list: degree, weighted edges, the
@@ -91,69 +86,44 @@ def pagerank(
     # upstream edge construction (often a pair-generation aggregate) runs
     # once per consumer.
     e = e.localCheckpoint(eager=False)
-    deg = e.groupBy("s").agg(F.count(F.lit(1)).alias("_od"))
-    # The degree-weighted edge table is static across iterations, but the
-    # per-iteration checkpoints truncate lineage — without its own
-    # barrier every iteration re-runs the degree aggregate and the
-    # edge⋈degree join (3 exchanges per iteration, r14).
-    ew = e.join(deg, "s")
+    deg = e.groupBy("src").agg(F.count(F.lit(1)).alias("_od"))
+    # The degree-weighted edge table is static across iterations: without
+    # its own barrier every iteration re-runs the degree aggregate and
+    # the edge⋈degree join (3 exchanges per iteration, r14).
+    ew = e.join(deg, "src")
     if iterations > 1:
         ew = ew.localCheckpoint(eager=False)
-    if undirected:
-        # Mirrored edges: every endpoint appears as a src.
-        nodes = e.select(F.col("s").alias("node")).distinct()
-    else:
-        # Directed: pure-sink nodes appear only as dst — the node set is
-        # the union of both endpoints or sinks vanish from the output and
-        # deflate n. (Mass flowing into a dangling node still leaves the
-        # system each iteration; see the docstring.)
-        nodes = (
-            e.select(F.col("s").alias("node"))
-            .unionByName(e.select(F.col("d").alias("node")))
-            .distinct()
-        )
-    if iterations > 0 and not undirected:
-        nodes = nodes.localCheckpoint(eager=False)
+    # Mirrored edges: every endpoint appears as a src.
+    nodes = e.select(F.col("src").alias("node")).distinct()
 
     n = nodes.count()  # one bounded scalar: the node count
     pr = nodes.withColumn("pr", F.lit(1.0) / F.lit(float(n)))
     teleport = F.lit(1.0) - F.lit(damping)
     for _ in range(iterations):
-        pr_side = F.broadcast(pr) if broadcast_scores else pr
+        pr_side = F.broadcast(pr)
         # Long-buffer exact sum (functions.fastsum): value-identical to
         # sum(cast(decimal(28,12))) — terms are |pr/od| ≤ 1, far inside
         # the scale-12 recovery bound (r13-opt: the >18-precision decimal
         # buffer paid a BigDecimal round trip per edge per iteration).
         acc = (
-            ew.join(pr_side, ew["s"] == pr_side["node"])
+            ew.join(pr_side, ew["src"] == pr_side["node"])
             .select(
-                F.col("d").alias("node"),
+                F.col("dst").alias("node"),
                 (F.col("pr") / F.col("_od")).alias("_m"),
             )
             .groupBy("node")
             .agg(*_fs.parts(F.col("_m"), "m", scale=12))
             .select("node", _fs.value("m", scale=12).alias("_acc"))
         )
-        if undirected:
-            # Mirrored edges ⇒ every node receives mass ⇒ ``acc`` already
-            # covers the node set; the re-anchoring join is pure cost.
-            pr = acc.select(
-                "node",
-                (
-                    teleport / F.lit(float(n))
-                    + F.lit(damping) * F.col("_acc")
-                ).alias("pr"),
-            )
-        else:
-            pr = nodes.join(acc, "node", "left").select(
-                "node",
-                (
-                    teleport / F.lit(float(n))
-                    + F.lit(damping) * F.coalesce("_acc", F.lit(0.0))
-                ).alias("pr"),
-            )
-        if checkpoint:
-            pr = pr.localCheckpoint(eager=False)
+        # Every node receives mass over its mirrored edges, so ``acc``
+        # already covers the node set — no re-anchoring join.
+        pr = acc.select(
+            "node",
+            (
+                teleport / F.lit(float(n))
+                + F.lit(damping) * F.col("_acc")
+            ).alias("pr"),
+        )
     return pr
 
 
@@ -252,7 +222,6 @@ def hits(
     src: str = "src",
     dst: str = "dst",
     iterations: int = 2,
-    broadcast_scores: bool = False,
 ) -> DataFrame:
     """Fixed-iteration HITS (hubs & authorities) over a DIRECTED edge
     list — on a bipartite interaction graph (customer→part, query→doc)
@@ -269,9 +238,9 @@ def hits(
     (and mirror-wise for authorities): HITS scores are defined by edge
     incidence.
 
-    ``broadcast_scores`` has :func:`pagerank` semantics: ship the
-    per-node score vector to the edge side each half-step when the node
-    sets are executor-memory-sized (catalogs), shuffle-join otherwise.
+    As in :func:`pagerank`, the per-node score vector is broadcast to the
+    edge side each half-step, so the node sets must be
+    executor-memory-sized (catalogs).
 
     Output: ``(node, kind, score)`` — ``kind`` ∈ {'hub', 'auth'},
     each side L1-normalized (sums to 1.0).
@@ -296,7 +265,6 @@ def hits(
             "node", (F.col(col) / F.col("_t")).alias(col)
         )
 
-    _maybe_bc = F.broadcast if broadcast_scores else (lambda df: df)
     auth = None
     for _ in range(iterations):
         # Long-buffer exact edge-mass sums (functions.fastsum): terms are
@@ -304,14 +272,14 @@ def hits(
         # normalize — inside the scale-12 bound.  The small per-side L1
         # total in _l1 (one row per node) stays on the decimal path.
         auth = _l1(
-            e.join(_maybe_bc(hub), e["s"] == hub["node"])
+            e.join(F.broadcast(hub), e["s"] == hub["node"])
             .groupBy(F.col("d").alias("node"))
             .agg(*_fs.parts(F.col("h"), "h", scale=12))
             .select("node", _fs.value("h", scale=12).alias("a")),
             "a",
         )
         hub = _l1(
-            e.join(_maybe_bc(auth), e["d"] == auth["node"])
+            e.join(F.broadcast(auth), e["d"] == auth["node"])
             .groupBy(F.col("s").alias("node"))
             .agg(*_fs.parts(F.col("a"), "a", scale=12))
             .select("node", _fs.value("a", scale=12).alias("h")),
@@ -355,22 +323,14 @@ def label_propagation(
     """
     if iterations < 0:
         raise ValueError("iterations must be >= 0")
-    # Narrow projection materialized FIRST: the mirroring union reads
-    # the upstream edge plan twice (no common-subtree elimination across
-    # union branches — r13-opt, the connected_components fix).  The union
-    # itself is NOT checkpointed (r14, VERDICT item 1): it is a zero-cost
-    # narrow map over the cached ``e`` partitions, so re-deriving it per
-    # consumer (the node set + one message join per iteration) is cheaper
-    # than materializing a second full copy of the edge list — the
-    # stacked e→und barrier pair was the one suspect in the driver's
-    # 32-core regression report.
-    e = edges.select(
-        F.col(src).alias("s"), F.col(dst).alias("d")
-    ).localCheckpoint(eager=False)
-    und = e.unionByName(
-        e.select(F.col("d").alias("s"), F.col("s").alias("d"))
-    )
-    nodes = und.select(F.col("s").alias("node")).distinct()
+    # The mirrored union is NOT checkpointed (r14, VERDICT item 1): it is
+    # a zero-cost narrow map over _sym's cached projection, so
+    # re-deriving it per consumer (the node set + one message join per
+    # iteration) is cheaper than materializing a second full copy of the
+    # edge list — the stacked barrier pair was the one suspect in the
+    # driver's 32-core regression report.
+    und = _sym(edges.select(F.col(src).alias("src"), F.col(dst).alias("dst")))
+    nodes = und.select(F.col("src").alias("node")).distinct()
     state = (
         nodes.join(
             seeds.select(
@@ -385,13 +345,11 @@ def label_propagation(
         )
         .localCheckpoint(eager=False)
     )
-    from pyspark.sql import Window
-
     for _ in range(iterations):
         msgs = (
-            und.join(state, und["s"] == state["node"])
+            und.join(state, und["src"] == state["node"])
             .where(F.col("label").isNotNull())
-            .select(F.col("d").alias("node"), "label")
+            .select(F.col("dst").alias("node"), "label")
         )
         counted = msgs.groupBy("node", "label").agg(
             F.count(F.lit(1)).alias("_c")
@@ -440,48 +398,27 @@ def k_core_peel(
     """
     if k < 1 or rounds < 0:
         raise ValueError("need k >= 1 and rounds >= 0")
-    # Narrow projection materialized FIRST: the mirroring union reads
-    # the upstream edge plan twice (no common-subtree elimination across
-    # union branches — r13-opt, the connected_components fix).
-    e = edges.select(
-        F.col(src).alias("s"), F.col(dst).alias("d")
-    ).localCheckpoint(eager=False)
-    und = e.unionByName(
-        e.select(F.col("d").alias("s"), F.col("s").alias("d"))
+    live = _sym(
+        edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
     ).localCheckpoint(eager=False)
 
     def _degrees(live_edges: DataFrame) -> DataFrame:
-        return live_edges.groupBy("s").agg(
+        return live_edges.groupBy("src").agg(
             F.count(F.lit(1)).alias("degree")
         )
 
-    live = und
     deg = _degrees(live)
     for _ in range(rounds):
-        alive = deg.where(F.col("degree") >= k).select("s")
+        alive = deg.where(F.col("degree") >= k).select("src")
         live = (
-            live.join(alive, "s")
-            .join(alive.withColumnRenamed("s", "d"), "d")
-            .select("s", "d")
+            live.join(alive, "src")
+            .join(alive.withColumnRenamed("src", "dst"), "dst")
+            .select("src", "dst")
             .localCheckpoint(eager=False)
         )
         deg = _degrees(live)
     return deg.where(F.col("degree") >= k).select(
-        F.col("s").alias("node"), "degree"
-    )
-
-
-def _sym(edges: DataFrame) -> DataFrame:
-    """Symmetric closure of an undirected ``(src, dst)`` edge list.
-
-    The narrow projection is materialized before the mirroring union:
-    both branches read the upstream edge plan and Spark performs no
-    common-subtree elimination across union branches — without the
-    barrier an expensive pair-generation aggregate upstream runs twice
-    (r13-opt, the connected_components fix)."""
-    fwd = edges.select("src", "dst").localCheckpoint(eager=False)
-    return fwd.union(
-        fwd.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
+        F.col("src").alias("node"), "degree"
     )
 
 

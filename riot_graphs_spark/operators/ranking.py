@@ -739,10 +739,7 @@ def textrank_keywords(
         edges,
         iterations=iterations,
         damping=0.85,
-        undirected=True,
-        broadcast_scores=True,  # vocabulary-sized score table
         dedup_edges=False,  # distinct (src < dst) by construction
-        checkpoint=False,
     )
     return (
         pr.select(

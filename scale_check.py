@@ -237,10 +237,7 @@ def _pagerank(lineitem):
         .filter(F.col("_n") >= 2)
         .select("src", "dst")
     )
-    return pagerank(
-        edges, iterations=3, broadcast_scores=True,
-        dedup_edges=False, checkpoint=False,
-    )
+    return pagerank(edges, iterations=3, dedup_edges=False)
 
 
 def _hits(tables):
@@ -254,7 +251,7 @@ def _hits(tables):
                 F.col("l_partkey").alias("dst"))
         .distinct()
     )
-    return hits(edges, iterations=2, broadcast_scores=True)
+    return hits(edges, iterations=2)
 
 
 def _tri(lineitem):

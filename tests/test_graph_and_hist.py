@@ -49,7 +49,7 @@ def test_cc_converges_before_max_iter(spark):
     assert a == b == [(1, 1), (2, 1), (3, 1)]
 
 
-def test_cc_raises_on_nonconvergence_unless_partial(spark):
+def test_cc_raises_on_nonconvergence(spark):
     # A 6-chain needs ~5 propagation rounds; max_iter=2 cannot converge —
     # silently under-merged dedup clusters must be an error, not a result.
     import pytest
@@ -57,12 +57,6 @@ def test_cc_raises_on_nonconvergence_unless_partial(spark):
     pairs = _pairs(spark, [(i, i + 1) for i in range(1, 6)])
     with pytest.raises(RuntimeError, match="did not converge"):
         connected_components(pairs, max_iter=2)
-    got = {
-        (r.id, r.component_id)
-        for r in connected_components(pairs, max_iter=2, allow_partial=True)
-        .collect()
-    }
-    assert len(got) == 6  # partial labels are still one-per-node
 
 
 def test_histogram_clamps_and_reconciles(spark):
@@ -757,6 +751,19 @@ def test_star_cc_long_chain_converges_in_log_rounds(spark):
     assert got == {(i, 1) for i in range(1, 65)}
 
 
+def test_star_cc_raises_on_nonconvergence(spark):
+    """The star variant shares the CC convergence loop: a 64-node chain
+    cannot reach its fixpoint in 2 rounds, and running out of rounds is
+    an error, never under-merged labels."""
+    import pytest
+
+    from riot_graphs_spark.operators.dedup import connected_components_star
+
+    pairs = _pairs(spark, [(i, i + 1) for i in range(1, 64)])
+    with pytest.raises(RuntimeError, match="did not converge"):
+        connected_components_star(pairs, max_iter=2).collect()
+
+
 def test_keep_best_per_cluster_selects_one_winner(spark):
     from riot_graphs_spark.operators.dedup import keep_best_per_cluster
 
@@ -868,30 +875,6 @@ def test_pagerank_star_hand_computed(spark):
     for leaf in "bcd":
         assert abs(got[leaf] - (0.0375 + 0.85 * 0.25 / 3)) < 1e-9
     assert abs(sum(got.values()) - 1.0) < 1e-9
-
-
-def test_pagerank_directed_keeps_sink_nodes(spark):
-    """Directed graphs: a pure-sink node (appears only as dst) must be in
-    the output AND in the node count n — b→sink mass lands on the sink, it
-    does not vanish from the vertex set."""
-    from riot_graphs_spark.operators.graph import pagerank
-
-    # a -> b -> c ; c is a pure sink
-    edges = spark.createDataFrame(
-        [("a", "b"), ("b", "c")], "src string, dst string"
-    )
-    got = {
-        r.node: r.pr
-        for r in pagerank(edges, iterations=1, undirected=False).collect()
-    }
-    assert set(got) == {"a", "b", "c"}  # sink c present
-    # n=3, p0=1/3; teleport=0.15/3=0.05
-    # p1(a) = 0.05 (no in-edges)
-    # p1(b) = 0.05 + 0.85*(1/3)  (all of a's mass, od(a)=1)
-    # p1(c) = 0.05 + 0.85*(1/3)  (all of b's mass)
-    assert abs(got["a"] - 0.05) < 1e-9
-    assert abs(got["b"] - (0.05 + 0.85 / 3)) < 1e-9
-    assert abs(got["c"] - (0.05 + 0.85 / 3)) < 1e-9
 
 
 def test_pagerank_zero_iterations_uniform_and_validates(spark):

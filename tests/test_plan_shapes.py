@@ -82,6 +82,33 @@ def test_simhash_is_shuffle_free(spark):
     assert shuffle_count(plan) == 0
 
 
+def test_spread_gate_reads_node_classes_not_plan_text(spark, tmp_path):
+    """The spread gate decides on plan node classes: a column aliased
+    ``Sort`` or a literal reading ``Join`` must not switch off the spread
+    of a one-split scan, and a ``rebalance`` hint (an exchange the old
+    text match missed) must keep the input as it is."""
+    from pyspark.sql import functions as F
+
+    from riot_graphs_spark.functions.spread import spread_small_scan
+
+    path = str(tmp_path / "one_split.parquet")
+    spark.range(64).coalesce(1).write.parquet(path)
+    scan = spark.read.parquet(path)
+    par = spark.sparkContext.defaultParallelism
+    assert scan.rdd.getNumPartitions() < par  # the gate's target shape
+
+    for narrow in (
+        scan.select(F.col("id").alias("Sort")),
+        scan.select("id", F.lit("Join").alias("tag")),
+    ):
+        spread = spread_small_scan(narrow)
+        assert spread is not narrow
+        assert spread.rdd.getNumPartitions() == par
+
+    hinted = scan.hint("rebalance", 1)
+    assert spread_small_scan(hinted) is hinted
+
+
 def test_cosine_topk_broadcasts_queries(spark):
     plan = formatted_plan(spark, "ann_cosine_topk")
     assert "BroadcastNestedLoopJoin" in plan or "BroadcastExchange" in plan

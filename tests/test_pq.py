@@ -110,6 +110,32 @@ def test_simhash_hamming_pairs_recall_is_total_at_radius(spark):
     assert got == brute  # exact: no false negatives AND verified positives
 
 
+def test_simhash_kernel_reads_sliced_batches():
+    """A sliced batch keeps its ListArray offsets absolute into the
+    parent's values: the kernel must sign exactly the rows the slice
+    holds, with the signatures the unsliced batch gives them."""
+    import pyarrow as pa
+
+    from riot_graphs_spark.operators.dedup import _simhash_batches
+
+    ids = pa.array([1, 2, 3, 4, 5, 6], pa.int64())
+    hashes = pa.array(
+        [[7, 8, 9], [0xFFFF, 1], [], [5, 5, 5, 6], None, [0x7FFFFFFF, 3, 3]],
+        pa.list_(pa.int64()),
+    )
+    batch = pa.RecordBatch.from_arrays([ids, hashes], names=["doc_id", "h"])
+
+    def sign(b):
+        out = pa.Table.from_batches(list(_simhash_batches([b], 32, "doc_id")))
+        return dict(zip(out["doc_id"].to_pylist(), out["simhash"].to_pylist()))
+
+    full = sign(batch)
+    assert set(full) == {1, 2, 4, 6}  # empty and NULL token lists drop
+    for off, n in [(1, 3), (3, 3), (5, 1)]:
+        want = {k: v for k, v in full.items() if off < k <= off + n}
+        assert sign(batch.slice(off, n)) == want
+
+
 def test_matryoshka_recall_crafted(spark):
     from riot_graphs_spark.operators.similarity import matryoshka_recall
 

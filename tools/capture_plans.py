@@ -1,9 +1,9 @@
 #!/usr/bin/env python
 """Capture .explain("formatted") output for named queries into
-plans/r13/<query>_<suffix>.txt — the before/after evidence files for the
-round-13 optimization pass.
+plans/r<round>/<query>_<suffix>.txt — the before/after evidence files of
+an optimization round.
 
-Usage: python tools/capture_plans_r13.py <before|after> name1 name2 ...
+Usage: python tools/capture_plans.py <round> <before|after> name1 name2 ...
 """
 
 from __future__ import annotations
@@ -21,9 +21,9 @@ SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 
 def main() -> None:
-    suffix = sys.argv[1]
-    names = sys.argv[2:]
-    outdir = os.path.join(REPO, "plans", "r13")
+    rnd, suffix = sys.argv[1:3]
+    names = sys.argv[3:]
+    outdir = os.path.join(REPO, "plans", f"r{rnd}")
     os.makedirs(outdir, exist_ok=True)
     spark = get_spark(app_name="riot-graphs-plan-capture")
     spark.sparkContext.setLogLevel("ERROR")
