@@ -76,6 +76,8 @@ from dataclasses import dataclass, field
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..sources.sinks import PARTITION_COL
+
 _DUR_SECONDS = {"s": 1, "m": 60, "h": 3600, "d": 86400, "w": 604800}
 
 #: Sub-second units for the functions that take them (elapsed); value is
@@ -790,24 +792,26 @@ def influxql(
         c = _time_value(expr, now)
         df = df.filter(ts <= c if op == "<=" else ts < c)
         hi = hi or expr
-    # Date-partitioned sinks (streaming ingest writes partitionBy(p_date)):
-    # derive partition-key bounds from the time predicates so the scan
-    # prunes whole date directories, not just row groups
-    if "p_date" in df.columns:
+    # Date-partitioned sinks (the build_sizes sink writes one directory per
+    # PARTITION_COL date): derive partition-key bounds from the time
+    # predicates so the scan prunes whole date directories, not just row
+    # groups
+    if PARTITION_COL in df.columns:
+        p_date = F.col(PARTITION_COL)
         if q.uses_time_filter and time_range is not None:
             df = df.filter(
-                F.col("p_date").between(
+                p_date.between(
                     F.to_date(F.lit(time_range[0])),
                     F.to_date(F.lit(time_range[1])),
                 )
             )
         if q.time_lo:
             df = df.filter(
-                F.col("p_date") >= F.to_date(_time_value(q.time_lo[1], now))
+                p_date >= F.to_date(_time_value(q.time_lo[1], now))
             )
         if q.time_hi:
             df = df.filter(
-                F.col("p_date") <= F.to_date(_time_value(q.time_hi[1], now))
+                p_date <= F.to_date(_time_value(q.time_hi[1], now))
             )
 
     for tag, op, val in q.tag_conds:

@@ -213,9 +213,9 @@ def upsert_partials(
     """Idempotent maintenance step: the re-delivered (bucket, dims) keys in
     ``fresh`` REPLACE their rows in ``existing``; all other rows pass
     through.  Replaying the same day twice is a no-op; a corrected day
-    overwrites.  One anti-join on the grain key — at scale, pair with the
-    partition-pruned dynamic-overwrite sink (``sources/sinks.py``) so only
-    touched date partitions rewrite.
+    overwrites.  One anti-join on the grain key — at scale, write the result
+    with a dynamic partition overwrite of only the touched date partitions
+    (as ``sources/sinks.merge_upsert_partitions`` does).
     """
     keys = ["bucket", *dims]
     kept = existing.join(fresh.select(*keys).distinct(), keys, "left_anti")

@@ -21,16 +21,16 @@ from ..operators.timeseries import last_per_bucket
 from ..functions.scalars import anchored_day
 
 
-def build_sizes_from_raw(sizes_raw: DataFrame, dedupe: bool = True) -> DataFrame:
+def build_sizes_from_raw(sizes_raw: DataFrame) -> DataFrame:
     """E1 core: nightly documents → ``build_sizes`` fact rows
     (reference ``rg.py:269-315``): P1 explode, P2 ``dec``, P3 casts,
-    P4 count default; O2 idempotent re-run via dropDuplicates on the
-    InfluxDB point key (test, board, ts).
+    P4 count default. Rows are not deduped here: O2 idempotency (one row
+    per InfluxDB point key) is the sink append's job,
+    :func:`..sources.sinks.merge_append`.
     """
-    flat = explode_sizes(sizes_raw).select(
+    return explode_sizes(sizes_raw).select(
         "ts", "test", "board", "bss", "data", "text", "dec"
     )
-    return flat.dropDuplicates(["test", "board", "ts"]) if dedupe else flat
 
 
 def pr_events_from_commits(

@@ -1,118 +1,108 @@
-"""Batch sinks — the InfluxDB write path (reference ``rg.py:33-41`` S7,
-``rg.py:30-36`` S8 dry-run, O2 point-overwrite idempotency) as partitioned
-parquet writes.
+"""The ``build_sizes`` sink and the parquet layout writers — the InfluxDB
+write path (reference ``rg.py:33-41`` S7, ``rg.py:30-36`` S8 dry-run, O2
+point-overwrite idempotency).
 
-Layout/scale design (SURVEY §4 "100 TB posture"):
+Every ``build_sizes`` writer goes through :func:`merge_append`: ``/update``
+(:func:`..streaming.ingest.incremental_refresh`), ``fetch`` and
+``fetch --noop`` (:func:`..plans.fetch.batch_fetch`); the streaming corpus
+ingest uses the same append keyed on its fingerprint. This module owns the
+sink's layout and upsert key:
 
-- Facts are partitioned by event date (``partitionBy("date")``): time-range
-  queries prune whole directories before any I/O, and a re-ingest of one day
-  touches exactly one partition.
-- InfluxDB's (measurement, tags, time) point-overwrite becomes
-  **dynamic partition overwrite**: replaying a day's ingest replaces that
-  day's partition atomically and leaves every other partition untouched —
-  idempotent without a transactional table format. (On Delta/Iceberg the
-  same function body would be a keyed MERGE INTO; the call sites would not
-  change.)
+- Facts are partitioned by event date, ``p_date = to_date(ts)``
+  (:data:`PARTITION_COL`): time-range queries prune whole directories
+  before any I/O, and one batch's merge touches only its own dates.
+- InfluxDB's (measurement, tags, time) point-overwrite becomes a **keyed
+  append**: dedupe the batch on the key, left-anti-join it against the keys
+  already stored in the batch's date partitions, append the rest. Replayed
+  or re-delivered input lands nothing — idempotent without a transactional
+  table format. (On Delta/Iceberg the same body would be a keyed MERGE
+  INTO; the call sites would not change.)
 - Batching (reference ``batch_size=20``) is the file-sizing concern Spark
-  already owns; writers emit one file per task — control size with
-  ``spark.sql.files.maxRecordsPerFile`` / repartition before write.
-- ``noop=True`` (reference ``--noop``) routes to the built-in noop sink:
-  full plan execution, zero writes — also what ``bench.py`` measures.
+  already owns; writers emit one file per task, and
+  :func:`compact_partitions` rewrites the small files appends accumulate.
+- ``noop=True`` (reference ``--noop``) runs the same dedupe and pruned
+  anti-join into the built-in noop sink: the count a real run would
+  ingest, zero writes.
 """
 
 from __future__ import annotations
 
 from collections.abc import Sequence
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
+from .fs import path_exists
 
-def with_date_partition(df: DataFrame, ts: str = "ts", col: str = "date") -> DataFrame:
-    """Derive the partition column from event time (ISO date string —
-    readable paths, lexicographic order == time order)."""
-    return df.withColumn(col, F.date_format(F.col(ts), "yyyy-MM-dd"))
+#: InfluxDB point key of a ``build_sizes`` row (reference ``rg.py:301-315``).
+BUILD_SIZES_KEY = ["test", "board", "ts"]
 
-
-def append_partitioned(
-    df: DataFrame,
-    path: str,
-    partition_cols: Sequence[str] = ("date",),
-    noop: bool = False,
-) -> None:
-    """S7 — plain partitioned append (the non-replay fast path)."""
-    if noop:
-        write_noop(df)
-        return
-    df.write.mode("append").partitionBy(*partition_cols).parquet(path)
+#: Sink layout: one directory per event date, so the per-batch merge and any
+#: time-ranged readback touch only the partitions they name.
+PARTITION_COL = "p_date"
 
 
-def upsert_partitions(
-    df: DataFrame,
-    path: str,
-    key: Sequence[str],
-    partition_cols: Sequence[str] = ("date",),
-    noop: bool = False,
-) -> None:
-    """O2 — idempotent re-ingest: dedupe the batch on the upsert key, then
-    dynamically overwrite exactly the partitions present in the batch.
+def _date_partition(df: DataFrame) -> DataFrame:
+    """Derive the partition column from event time."""
+    return df.withColumn(PARTITION_COL, F.to_date(F.col("ts")))
 
-    Replay-safe the same way InfluxDB point writes are: running the same
-    day twice converges to one copy of each (key) row. Requires the batch to
-    carry *complete* partitions (true for day-scoped ingest jobs like the
-    reference's ``push_last_of_day``, ``rg.py:106-117``).
+
+def _existing_keys(
+    spark: SparkSession, sink_path: str, key: list[str], dates: list
+) -> DataFrame:
+    """Upsert keys already stored in the sink, restricted to the given date
+    partitions — the read carries a partition filter (asserted by
+    tests/test_streaming: only the batch's partitions are listed/scanned,
+    never the whole sink)."""
+    return (
+        spark.read.parquet(sink_path)
+        .where(F.col(PARTITION_COL).isin(dates))
+        .select(*key)
+    )
+
+
+def merge_append(
+    batch_df: DataFrame, sink_path: str, key: list[str], noop: bool = False
+) -> int:
+    """Idempotent append: dedupe the batch on the upsert key, anti-join
+    against already-stored keys *in the batch's date partitions only*, and
+    append the remainder partitioned by date. Returns the number of NEW
+    rows written (the reference's `/update` response, ``rg.py:156``),
+    counted via ``observe`` on the write itself — no sink re-scan.
+    ``noop=True`` runs the same plan into the noop sink and returns the
+    count a real run would write.
+
+    At a 100-TB sink the anti-join's sink-side read is bounded by the dates
+    present in one micro-batch (typically 1-2 partitions), not sink size.
+    (With a transactional table format this would be a keyed MERGE INTO; on
+    plain parquet the pruned anti-join gives the same at-most-once-per-key
+    effect for replayed batches.)
     """
-    deduped = df.dropDuplicates(list(key))
-    if noop:
-        write_noop(deduped)
-        return
-    spark = df.sparkSession
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
+    spark = batch_df.sparkSession
+    deduped = _date_partition(batch_df.dropDuplicates(key)).persist()
     try:
-        deduped.write.mode("overwrite").partitionBy(*partition_cols).parquet(path)
+        dates = [r[0] for r in deduped.select(PARTITION_COL).distinct().collect()]
+        if not dates:
+            return 0
+        if path_exists(spark, sink_path):
+            existing = _existing_keys(spark, sink_path, key, dates)
+            fresh = deduped.join(existing, on=key, how="left_anti")
+        else:  # first batch: nothing to merge against
+            fresh = deduped
+        obs = Observation()
+        fresh = fresh.observe(obs, F.count(F.lit(1)).alias("n"))
+        if noop:
+            fresh.write.format("noop").mode("overwrite").save()
+        else:
+            fresh.write.mode("append").partitionBy(PARTITION_COL).parquet(sink_path)
+        return int(obs.get["n"])
     finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
-
-
-def write_noop(df: DataFrame) -> None:
-    """S8 — dry-run sink (reference ``--noop``): executes the full plan,
-    writes nothing."""
-    df.write.format("noop").mode("overwrite").save()
-
-
-def write_with_metrics(
-    df: DataFrame,
-    path: str | None = None,
-    partition_cols: Sequence[str] = ("date",),
-    metrics: Sequence | None = None,
-) -> dict:
-    """A4 — ingest accounting (reference logs ``len(data)`` and the
-    measurement count, ``rg.py:156, 252``) via the ``observe`` API: metrics
-    ride the write job itself, so the answer to "how many rows landed?"
-    costs zero extra scans — where a ``df.count()`` after the write would
-    re-execute the whole plan.
-
-    Returns the observed metrics dict (default: row count). Pass extra
-    aggregate Columns via ``metrics`` (e.g. ``F.min("ts"), F.max("ts")``
-    for the ingested time range).
-    """
-    from pyspark.sql import Observation
-
-    obs = Observation()
-    cols = [F.count(F.lit(1)).alias("n_rows"), *(metrics or [])]
-    observed = df.observe(obs, *cols)
-    if path is None:
-        write_noop(observed)
-    else:
-        observed.write.mode("append").partitionBy(*partition_cols).parquet(path)
-    return obs.get
+        deduped.unpersist()
 
 
 def compact_partitions(
     spark,
     path: str,
-    partition_col: str = "date",
     partitions: Sequence[str] | None = None,
     files_per_partition: int = 1,
 ) -> int:
@@ -121,7 +111,7 @@ def compact_partitions(
     month of availableNow runs a day-partition holds hundreds of KB-sized
     files, and scan planning cost grows with file count, not bytes).
 
-    Rewrites the selected partitions (default: all) to
+    Rewrites the selected date partitions (default: all) to
     ``files_per_partition`` files each via repartition on the partition
     column + dynamic partition overwrite — untouched partitions are left
     alone, and readers see the old files until the atomic directory swap.
@@ -129,17 +119,17 @@ def compact_partitions(
     """
     df = spark.read.parquet(path)
     if partitions is not None:
-        df = df.filter(F.col(partition_col).isin(list(partitions)))
+        df = df.filter(F.col(PARTITION_COL).isin(list(partitions)))
         n_parts = len(set(partitions))
     else:
-        n_parts = df.select(partition_col).distinct().count()
+        n_parts = df.select(PARTITION_COL).distinct().count()
     compacted = df.repartition(
-        max(1, n_parts * files_per_partition), partition_col
+        max(1, n_parts * files_per_partition), PARTITION_COL
     )
     prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
     spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     try:
-        compacted.write.mode("overwrite").partitionBy(partition_col).parquet(path)
+        compacted.write.mode("overwrite").partitionBy(PARTITION_COL).parquet(path)
     finally:
         spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
     return n_parts
@@ -327,7 +317,6 @@ def expire_partitions(
     path: str,
     keep_days: int,
     today,
-    partition_col: str = "p_date",
 ) -> list[str]:
     """Retention/TTL job: delete date partitions older than ``today −
     keep_days`` from a date-partitioned parquet sink; returns the dropped
@@ -354,7 +343,7 @@ def expire_partitions(
         if not status.isDirectory():
             continue
         name = status.getPath().getName()
-        if not name.startswith(f"{partition_col}="):
+        if not name.startswith(f"{PARTITION_COL}="):
             continue
         value = name.split("=", 1)[1]
         try:
@@ -406,12 +395,12 @@ def write_with_bloom_filters(
 #
 # The reference delegates multi-writer point-upsert to InfluxDB's storage
 # engine (``rg.py:301-315`` semantics: last point wins per (measurement,
-# tags, time) with server-side serialization).  ``upsert_partitions`` above
-# is correct for a SINGLE writer replaying complete partitions; two
-# concurrent writers to one partition are last-writer-wins with silent row
-# loss when batches are PARTIAL.  Without a transactional table format in
-# the environment, the discipline below serializes per-partition
-# read-merge-write cycles behind filesystem leases:
+# tags, time) with server-side serialization).  ``merge_append`` above is
+# insert-if-absent: a key already stored keeps its first values, and two
+# writers racing on one partition can both append the same key.  Without
+# a transactional table format in the environment, the discipline below
+# serializes per-partition read-merge-write cycles behind filesystem
+# leases:
 #
 # - a lease is an O_CREAT|O_EXCL file under ``<path>/_leases/`` — atomic
 #   on POSIX and on HDFS (create with overwrite=false); on eventually-
@@ -525,25 +514,25 @@ def merge_upsert_partitions(
     df: DataFrame,
     path: str,
     key: Sequence[str],
-    partition_cols: Sequence[str] = ("date",),
-    writer_id: str | None = None,
     lease_ttl_s: float = 600.0,
     acquire_timeout_s: float = 60.0,
     poll_s: float = 0.25,
 ) -> None:
     """O2 for PARTIAL batches under CONCURRENT writers: per-key merge into
-    the batch's partitions (batch wins per key — InfluxDB point-overwrite
-    semantics, reference ``rg.py:301-315``), serialized per partition by
-    filesystem leases so two writers touching the same partition cannot
-    lose each other's rows.
+    the batch's date partitions (batch wins per key — InfluxDB
+    point-overwrite semantics, reference ``rg.py:301-315``), serialized per
+    partition by filesystem leases so two writers touching the same
+    partition cannot lose each other's rows. The batch is laid out like the
+    ``build_sizes`` sink (``p_date = to_date(ts)``); each call writes under
+    a fresh writer id.
 
-    Differences from :func:`upsert_partitions` (which stays the right
-    call for single-writer jobs replaying COMPLETE partitions): the
-    existing partition contents are read and merged, so a batch carrying
-    three rows of a million-row day updates three keys and keeps the
-    rest; and the read-merge-write cycle holds the partition lease, so
-    an interleaved writer waits (up to ``acquire_timeout_s``, then
-    :class:`ConcurrentWriteError`) instead of silently clobbering.
+    Differences from :func:`merge_append` (the ingest path, where a stored
+    key keeps its first values): the existing partition contents are read
+    and merged, so a batch carrying three rows of a million-row day updates
+    three keys and keeps the rest; and the read-merge-write cycle holds the
+    partition lease, so an interleaved writer waits (up to
+    ``acquire_timeout_s``, then :class:`ConcurrentWriteError`) instead of
+    silently clobbering.
 
     Scale notes: the merge reads ONLY the batch's partitions (partition
     filter pushed to the scan), shuffles once on the upsert key, and
@@ -557,19 +546,13 @@ def merge_upsert_partitions(
     import uuid
 
     spark = df.sparkSession
-    pcols = list(partition_cols)
     kcols = list(key)
-    batch = with_date_partition(df) if (
-        pcols == ["date"] and "date" not in df.columns and "ts" in df.columns
-    ) else df
-    parts_rows = batch.select(*pcols).distinct().collect()
-    parts = [
-        "/".join(f"{c}={r[c]}" for c in pcols) for r in parts_rows
-    ]
+    batch = _date_partition(df)
+    dates = [r[0] for r in batch.select(PARTITION_COL).distinct().collect()]
     leases = _PartitionLeases(
         os.path.join(path, "_leases"),
-        parts,
-        writer_id or uuid.uuid4().hex,
+        [f"{PARTITION_COL}={d}" for d in dates],
+        uuid.uuid4().hex,
         lease_ttl_s,
         acquire_timeout_s,
         poll_s,
@@ -577,26 +560,20 @@ def merge_upsert_partitions(
     with leases:
         cols = batch.columns
         # replay-safety inside the batch too: one row per key before the
-        # merge, same as upsert_partitions
+        # merge, same as merge_append
         tagged = batch.dropDuplicates(kcols).select(
             *cols, F.lit(1).alias("_pri")
         )
         if os.path.isdir(path) and any(
-            e.startswith(f"{pcols[0]}=") for e in os.listdir(path)
+            e.startswith(f"{PARTITION_COL}=") for e in os.listdir(path)
         ):
-            existing = spark.read.parquet(path)
             # prune to the batch's partitions only — the filter reaches
             # the scan as partition pruning
-            in_batch = None
-            for r in parts_rows:
-                cond = F.lit(True)
-                for c in pcols:
-                    cond = cond & (F.col(c) == F.lit(r[c]))
-                in_batch = cond if in_batch is None else (in_batch | cond)
+            existing = spark.read.parquet(path).where(
+                F.col(PARTITION_COL).isin(dates)
+            )
             tagged = tagged.unionByName(
-                existing.filter(in_batch).select(
-                    *cols, F.lit(0).alias("_pri")
-                )
+                existing.select(*cols, F.lit(0).alias("_pri"))
             )
         merged = (
             tagged.groupBy(*kcols)
@@ -615,7 +592,7 @@ def merge_upsert_partitions(
             "spark.sql.sources.partitionOverwriteMode", "dynamic"
         )
         try:
-            merged.write.mode("overwrite").partitionBy(*pcols).parquet(
+            merged.write.mode("overwrite").partitionBy(PARTITION_COL).parquet(
                 path
             )
         finally:

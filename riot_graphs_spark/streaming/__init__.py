@@ -1,5 +1,4 @@
 from .ingest import (  # noqa: F401
     incremental_refresh,
-    stream_build_sizes,
     stream_events_rollup,
 )

@@ -19,8 +19,8 @@ log length); the per-batch cost is one max_by shuffle over state + batch.
 With a transactional table format the overwrite becomes a keyed MERGE INTO
 touching only changed keys; on plain parquet the state table is rewritten,
 which is the right trade at dimension-table cardinalities (the usual CDC
-target) — fact-sized targets should use `_merge_append`-style partition
-upserts instead.
+target) — fact-sized targets should use the date-partitioned keyed append
+(:func:`..sources.sinks.merge_append`) instead.
 """
 
 from __future__ import annotations

@@ -18,8 +18,9 @@ plans, per SURVEY §7 step 4):
 - **quality gate** — Gopher flags + quality score computed in-stream; rows
   failing ``gopher_keep`` are dropped at the map side (never shuffled,
   never written);
-- **sink** — idempotent date-partitioned merge (``_merge_append``), so the
-  corpus directory is always safely re-readable mid-ingest.
+- **sink** — the ``build_sizes`` sink's date-partitioned append
+  (:func:`..sources.sinks.merge_append`), keyed on the fingerprint, so
+  the corpus directory is always safely re-readable mid-ingest.
 """
 
 from __future__ import annotations
@@ -41,7 +42,7 @@ from ..operators.textstats import (
     quality_score,
 )
 from ..sources.fs import path_exists
-from .ingest import _merge_append
+from ..sources.sinks import merge_append
 
 #: Landing-zone document schema: JSONL with a crawl timestamp.
 DOCS_RAW = StructType(
@@ -124,7 +125,9 @@ def stream_corpus_ingest(
                 )
             batch = batch.persist()
         try:
-            _merge_append(batch, sink_path, CORPUS_KEY, counter=batch_counts)
+            n = merge_append(batch, sink_path, CORPUS_KEY)
+            if batch_counts is not None:
+                batch_counts.append(n)
             if near_dedup_buckets_path is not None:
                 minhash_band_buckets(batch).write.mode("append").parquet(
                     near_dedup_buckets_path

@@ -10,132 +10,33 @@ What each reference mechanism becomes:
   incremental listing of the landing zone;
 - HTTP `/update` trigger (``server.py:11-17``) → ``trigger(availableNow=True)``
   fired per call — processes exactly the new files, then stops;
-- InfluxDB point-overwrite idempotency (O2) → batch-local
-  ``dropDuplicates`` + left-anti merge against the sink inside
-  ``foreachBatch`` (exactly-once against replays);
+- InfluxDB point-overwrite idempotency (O2) → the ``build_sizes`` sink's
+  keyed append (:func:`..sources.sinks.merge_append`: batch-local dedupe +
+  left-anti merge against the sink) inside ``foreachBatch`` — exactly-once
+  against replays;
 - late/missing data tolerance (O4) → ``withWatermark`` on event time.
 
 The transformation body is shared with the batch plans
-(:func:`..plans.riot.build_sizes_from_raw`) — batch and streaming run the
-same DataFrame function, per SURVEY §7 step 4.
+(:func:`..plans.riot.build_sizes_from_raw`) and the sink append is shared
+with ``fetch`` (:func:`..plans.fetch.batch_fetch`) — batch and streaming run
+the same DataFrame functions, per SURVEY §7 step 4.
 
-Scale notes: file-source listing is incremental (``maxFilesPerTrigger``
-bounds batch size); the foreachBatch merge touches only the sink partitions
-whose keys appear in the batch (partition-pruned anti-join on date).
+Scale notes: file-source listing is incremental; the foreachBatch merge
+touches only the sink partitions whose dates appear in the batch
+(partition-pruned anti-join on date).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..plans.riot import build_sizes_from_raw
 from ..schemas import SIZES_RAW
-from ..sources.fs import path_exists
+from ..sources.sinks import BUILD_SIZES_KEY, merge_append
 
-BUILD_SIZES_KEY = ["test", "board", "ts"]
-
-#: Sink layout: one directory per event date, so the per-batch merge and any
-#: time-ranged readback touch only the partitions they name.
-PARTITION_COL = "p_date"
-
-
-def _existing_keys(
-    spark: SparkSession, sink_path: str, key: list[str], dates: list
-) -> DataFrame:
-    """Upsert keys already stored in the sink, restricted to the given date
-    partitions — the read carries a partition filter (asserted by
-    tests/test_plan_shapes: only the batch's partitions are listed/scanned,
-    never the whole sink)."""
-    return (
-        spark.read.parquet(sink_path)
-        .where(F.col(PARTITION_COL).isin(dates))
-        .select(*key)
-    )
-
-
-def _merge_append(
-    batch_df: DataFrame,
-    sink_path: str,
-    key: list[str],
-    ts_col: str = "ts",
-    counter: list[int] | None = None,
-) -> int:
-    """Idempotent append: dedupe the batch on the upsert key, anti-join
-    against already-stored keys *in the batch's date partitions only*, and
-    append the remainder partitioned by date. Returns the number of NEW
-    rows written (the reference's `/update` response, ``rg.py:156``),
-    counted via ``observe`` on the write itself — no sink re-scan.
-
-    At a 100-TB sink the anti-join's sink-side read is bounded by the dates
-    present in one micro-batch (typically 1-2 partitions), not sink size.
-    (With a transactional table format this would be a keyed MERGE INTO; on
-    plain parquet the pruned anti-join gives the same at-most-once-per-key
-    effect for replayed batches.)
-    """
-    spark = batch_df.sparkSession
-    deduped = (
-        batch_df.dropDuplicates(key)
-        .withColumn(PARTITION_COL, F.to_date(F.col(ts_col)))
-        .persist()
-    )
-    try:
-        dates = [r[0] for r in deduped.select(PARTITION_COL).distinct().collect()]
-        if not dates:
-            n = 0
-        else:
-            if path_exists(spark, sink_path):
-                existing = _existing_keys(spark, sink_path, key, dates)
-                fresh = deduped.join(existing, on=key, how="left_anti")
-            else:  # first batch: nothing to merge against
-                fresh = deduped
-            obs = Observation()
-            fresh = fresh.observe(obs, F.count(F.lit(1)).alias("n"))
-            fresh.write.mode("append").partitionBy(PARTITION_COL).parquet(sink_path)
-            n = int(obs.get["n"])
-    finally:
-        deduped.unpersist()
-    if counter is not None:
-        counter.append(n)
-    return n
-
-
-def stream_build_sizes(
-    spark: SparkSession,
-    landing_dir: str,
-    sink_path: str,
-    checkpoint_dir: str,
-    watermark: str = "2 days",
-    available_now: bool = True,
-    max_files_per_trigger: int | None = None,
-    batch_counts: list[int] | None = None,
-):
-    """O1 — incremental ``sizes.json`` landing-zone → ``build_sizes`` sink.
-
-    Returns the started StreamingQuery; with ``available_now`` the caller
-    awaits termination for `/update`-style semantics (process the delta,
-    respond, stop). When ``batch_counts`` is given, each micro-batch appends
-    its count of NEW rows written to it.
-    """
-    reader = (
-        spark.readStream.schema(SIZES_RAW)
-        .option("multiLine", "true")
-    )
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
-    raw = reader.json(landing_dir)
-    flat = build_sizes_from_raw(
-        raw.withWatermark("ts", watermark), dedupe=False
-    )
-
-    writer = flat.writeStream.foreachBatch(
-        lambda df, _epoch: _merge_append(
-            df, sink_path, BUILD_SIZES_KEY, counter=batch_counts
-        )
-    ).option("checkpointLocation", checkpoint_dir)
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+#: Event-time watermark on the landed documents (O4 late-data tolerance).
+WATERMARK = "2 days"
 
 
 def incremental_refresh(
@@ -149,12 +50,22 @@ def incremental_refresh(
     until done, return the number of NEW rows ingested by this call
     (reference ``rg.py:156`` returns ``len(data)`` — the delta, not the
     sink total). A refresh with nothing new returns 0."""
-    counts: list[int] = []
-    q = stream_build_sizes(
-        spark, landing_dir, sink_path, checkpoint_dir,
-        available_now=True, batch_counts=counts,
+    raw = spark.readStream.schema(SIZES_RAW).option("multiLine", "true").json(
+        landing_dir
     )
-    q.awaitTermination()
+    flat = build_sizes_from_raw(raw.withWatermark("ts", WATERMARK))
+    counts: list[int] = []
+    (
+        flat.writeStream.foreachBatch(
+            lambda df, _epoch: counts.append(
+                merge_append(df, sink_path, BUILD_SIZES_KEY)
+            )
+        )
+        .option("checkpointLocation", checkpoint_dir)
+        .trigger(availableNow=True)
+        .start()
+        .awaitTermination()
+    )
     return sum(counts)
 
 

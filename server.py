@@ -58,9 +58,7 @@ def _split_statements(q: str) -> list[str]:
     return [p.strip() for p in parts if p.strip()]
 
 
-def _influx_payload_multi(
-    query_runner, q: str, epoch: str | None = None
-) -> str:
+def _influx_results(query_runner, q: str, epoch: str | None) -> list[dict]:
     """Run every ';'-separated statement; one results entry per statement
     (statement_id increments), errors embedded per statement as InfluxDB
     does — one bad panel query doesn't blank the whole dashboard."""
@@ -131,7 +129,14 @@ def _influx_payload_multi(
             results.append(entry)
         except Exception as exc:  # noqa: BLE001 — per-statement error slot
             results.append({"statement_id": sid, "error": str(exc)})
-    return json.dumps({"results": results})
+    return results
+
+
+def _influx_payload_multi(
+    query_runner, q: str, epoch: str | None = None
+) -> str:
+    """The InfluxDB ``/query`` response body for ``q``."""
+    return json.dumps({"results": _influx_results(query_runner, q, epoch)})
 
 
 def make_handler(refresh, query_runner=None):
@@ -150,6 +155,19 @@ def make_handler(refresh, query_runner=None):
             self.end_headers()
             self.wfile.write(data)
 
+        def _query(self, params: dict[str, list[str]]) -> None:
+            """Answer a /query request (GET or POST): 400 when ``q`` is
+            missing or every statement failed, otherwise 200."""
+            q = params.get("q", [""])[0]
+            if not q:
+                self._send(400, json.dumps({"error": "missing q parameter"}))
+                return
+            results = _influx_results(
+                query_runner, q, params.get("epoch", [None])[0]
+            )
+            all_err = all("error" in r for r in results)
+            self._send(400 if all_err else 200, json.dumps({"results": results}))
+
         def do_GET(self):  # noqa: N802 (http.server API)
             from urllib.parse import parse_qs, urlparse
 
@@ -164,17 +182,7 @@ def make_handler(refresh, query_runner=None):
                 except Exception:  # reference returns {'status': 'error'}
                     self._send(500, json.dumps({"status": "error"}))
             elif url.path == "/query" and query_runner is not None:
-                params = parse_qs(url.query)
-                q = params.get("q", [""])[0]
-                if not q:
-                    self._send(400, json.dumps({"error": "missing q parameter"}))
-                    return
-                body = _influx_payload_multi(
-                    query_runner, q, params.get("epoch", [None])[0]
-                )
-                payload = json.loads(body)
-                all_err = all("error" in r for r in payload["results"])
-                self._send(400 if all_err else 200, body)
+                self._query(parse_qs(url.query))
             else:
                 self._send(404, json.dumps({"status": "not found"}))
 
@@ -189,16 +197,7 @@ def make_handler(refresh, query_runner=None):
             body = self.rfile.read(length).decode() if length else ""
             params = parse_qs(body)
             params.update(parse_qs(url.query))  # q may ride either way
-            q = params.get("q", [""])[0]
-            if not q:
-                self._send(400, json.dumps({"error": "missing q parameter"}))
-                return
-            body = _influx_payload_multi(
-                query_runner, q, params.get("epoch", [None])[0]
-            )
-            payload = json.loads(body)
-            all_err = all("error" in r for r in payload["results"])
-            self._send(400 if all_err else 200, body)
+            self._query(params)
 
         def log_message(self, *args):  # quiet by default
             pass

@@ -60,6 +60,19 @@ def test_fetch_noop_counts_without_writing(spark, landing, tmp_path):
         spark.read.parquet(sink).count()
 
 
+def test_fetch_noop_after_real_fetch_reports_nothing_new(spark, landing, tmp_path):
+    """--noop runs the real fetch's anti-join against the sink: after the
+    window has been ingested it reports 0, as a real re-fetch would."""
+    import glob
+
+    sink = str(tmp_path / "sink")
+    assert batch_fetch(spark, landing, sink, history=2, now=NOW) == 3
+    files = sorted(glob.glob(f"{sink}/**/*.parquet", recursive=True))
+    assert batch_fetch(spark, landing, sink, history=2, noop=True, now=NOW) == 0
+    assert sorted(glob.glob(f"{sink}/**/*.parquet", recursive=True)) == files
+    assert spark.read.parquet(sink).count() == 3
+
+
 def test_cli_fetch_noop_with_reference_config(spark, landing, tmp_path, capsys):
     cfg = tmp_path / "config.ini"
     cfg.write_text(

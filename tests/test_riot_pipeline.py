@@ -217,10 +217,23 @@ def test_gap_fill_linear_interpolates(spark):
     assert got[("y", 3)] is None  # after last observation stays NULL
 
 
-def test_build_sizes_idempotent_rerun(spark, sizes_raw):
-    once = build_sizes_from_raw(sizes_raw)
-    twice = build_sizes_from_raw(sizes_raw.unionByName(sizes_raw))
-    assert once.count() == twice.count()  # O2: replay-safe on (test, board, ts)
+def test_build_sizes_idempotent_rerun(spark, sizes_raw, tmp_path):
+    """O2: a document landed twice ingests one row per (test, board, ts)
+    key — the sink append dedupes, not the transformation."""
+    from riot_graphs_spark.plans.fetch import batch_fetch
+
+    landing = tmp_path / "landing"
+    landing.mkdir()
+    for i, doc in enumerate(sizes_raw.toJSON().collect()):
+        for copy in ("a", "b"):
+            (landing / f"doc{i}{copy}.json").write_text(doc)
+    n = build_sizes_from_raw(sizes_raw).count()
+    sink = str(tmp_path / "sink")
+    got = batch_fetch(
+        spark, str(landing), sink, history=30, now=dt.datetime(2024, 1, 10)
+    )
+    assert got == n  # not 2n
+    assert spark.read.parquet(sink).count() == n
 
 
 def test_parse_commit_log_total(spark):

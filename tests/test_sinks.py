@@ -1,123 +1,17 @@
-"""Sink-layer tests (SURVEY §2.1 S7/S8, §2.6 O2): partitioned layout,
-idempotent day replay via dynamic partition overwrite, untouched-partition
-preservation."""
+"""Sink-layer tests (SURVEY §2.1 S7/S8, §2.6 O2): compaction, layout
+writers, retention, and the concurrent-writer keyed upsert on the
+``build_sizes`` date layout."""
 
 from __future__ import annotations
 
 import datetime as dt
+import json
 import os
 
 import pytest
 from pyspark.sql import Row
 
-from riot_graphs_spark.sources.sinks import (
-    append_partitioned,
-    upsert_partitions,
-    with_date_partition,
-)
-
 UTC = dt.timezone.utc
-
-
-def rows(day: int, val: int):
-    return [
-        Row(
-            ts=dt.datetime(2024, 1, day, 4, tzinfo=UTC),
-            test="t1",
-            board="b1",
-            text=val,
-        ),
-        Row(
-            ts=dt.datetime(2024, 1, day, 4, tzinfo=UTC),
-            test="t1",
-            board="b2",
-            text=val,
-        ),
-    ]
-
-
-@pytest.fixture()
-def sink(tmp_path):
-    return str(tmp_path / "build_sizes")
-
-
-def test_partitioned_layout_and_pruning(spark, sink):
-    df = with_date_partition(spark.createDataFrame(rows(1, 10) + rows(2, 20)))
-    append_partitioned(df, sink)
-    assert sorted(
-        d for d in os.listdir(sink) if d.startswith("date=")
-    ) == ["date=2024-01-01", "date=2024-01-02"]
-    # date filter prunes to one partition directory
-    out = spark.read.parquet(sink).filter("date = '2024-01-01'")
-    assert out.count() == 2
-
-
-def test_upsert_replay_is_idempotent(spark, sink):
-    day1 = with_date_partition(spark.createDataFrame(rows(1, 10)))
-    upsert_partitions(day1, sink, key=["test", "board", "ts"])
-    upsert_partitions(day1, sink, key=["test", "board", "ts"])  # replay
-    assert spark.read.parquet(sink).count() == 2  # not 4
-
-
-def test_upsert_overwrites_only_its_partition(spark, sink):
-    upsert_partitions(
-        with_date_partition(spark.createDataFrame(rows(1, 10))),
-        sink,
-        key=["test", "board", "ts"],
-    )
-    upsert_partitions(
-        with_date_partition(spark.createDataFrame(rows(2, 20))),
-        sink,
-        key=["test", "board", "ts"],
-    )
-    # re-run day 2 with corrected values; day 1 must be untouched
-    upsert_partitions(
-        with_date_partition(spark.createDataFrame(rows(2, 99))),
-        sink,
-        key=["test", "board", "ts"],
-    )
-    # partition-column type inference reads date=2024-01-01 back as DateType
-    got = {
-        (str(r.date), r.board): r.text for r in spark.read.parquet(sink).collect()
-    }
-    assert got[("2024-01-01", "b1")] == 10
-    assert got[("2024-01-02", "b1")] == 99
-    assert len(got) == 4
-
-
-def test_upsert_dedupes_batch_on_key(spark, sink):
-    dup = spark.createDataFrame(rows(1, 10) + rows(1, 10))
-    upsert_partitions(with_date_partition(dup), sink, key=["test", "board", "ts"])
-    assert spark.read.parquet(sink).count() == 2
-
-
-def test_write_with_metrics_counts_without_rescan(spark, tmp_path):
-    """A4: the observation rides the write job — row count and time range
-    come back without re-executing the plan."""
-    import datetime as dt
-
-    from pyspark.sql import Row
-    from pyspark.sql import functions as F
-
-    from riot_graphs_spark.sources.sinks import (
-        with_date_partition,
-        write_with_metrics,
-    )
-
-    rows = [
-        Row(ts=dt.datetime(2024, 1, 1, 4), v=1),
-        Row(ts=dt.datetime(2024, 1, 2, 4), v=2),
-        Row(ts=dt.datetime(2024, 1, 2, 5), v=3),
-    ]
-    df = with_date_partition(spark.createDataFrame(rows))
-    got = write_with_metrics(
-        df, str(tmp_path / "sink"),
-        metrics=[F.min("ts").alias("min_ts"), F.max("ts").alias("max_ts")],
-    )
-    assert got["n_rows"] == 3
-    assert got["min_ts"] == dt.datetime(2024, 1, 1, 4)
-    assert got["max_ts"] == dt.datetime(2024, 1, 2, 5)
-    assert spark.read.parquet(str(tmp_path / "sink")).count() == 3
 
 
 def test_compact_partitions_reduces_files_keeps_data(spark, tmp_path):
@@ -128,23 +22,58 @@ def test_compact_partitions_reduces_files_keeps_data(spark, tmp_path):
     from riot_graphs_spark.sources.sinks import compact_partitions
 
     path = str(tmp_path / "t")
-    rows = [Row(date=f"2024-01-0{d}", v=i) for d in (1, 2) for i in range(40)]
+    rows = [
+        Row(p_date=dt.date(2024, 1, d), v=i) for d in (1, 2) for i in range(40)
+    ]
     # simulate many micro-batch appends: 8 files per partition
     spark.createDataFrame(rows).repartition(8).write.partitionBy(
-        "date"
+        "p_date"
     ).parquet(path)
-    before = len(glob.glob(f"{path}/date=2024-01-01/*.parquet"))
+    before = len(glob.glob(f"{path}/p_date=2024-01-01/*.parquet"))
     assert before >= 8
 
     n = compact_partitions(spark, path, partitions=["2024-01-01"])
     assert n == 1
-    after = len(glob.glob(f"{path}/date=2024-01-01/*.parquet"))
-    untouched = len(glob.glob(f"{path}/date=2024-01-02/*.parquet"))
+    after = len(glob.glob(f"{path}/p_date=2024-01-01/*.parquet"))
+    untouched = len(glob.glob(f"{path}/p_date=2024-01-02/*.parquet"))
     assert after < before and untouched >= 8  # only the named partition rewritten
 
     got = spark.read.parquet(path)
     assert got.count() == 80
-    assert got.groupBy("date").count().collect()[0][1] == 40
+    assert got.groupBy("p_date").count().collect()[0][1] == 40
+
+
+def test_compact_partitions_on_the_update_sink(spark, tmp_path):
+    """Compaction with its defaults reads the layout /update writes: three
+    nights landed into one day leave one file per refresh in that day's
+    directory, and compacting keeps exactly the same keys."""
+    import glob
+
+    from riot_graphs_spark.sources.sinks import BUILD_SIZES_KEY, compact_partitions
+    from riot_graphs_spark.streaming.ingest import incremental_refresh
+
+    landing, sink, ckpt = (str(tmp_path / d) for d in ("landing", "sink", "ckpt"))
+    os.makedirs(landing)
+    b = {"bss": 1, "text": 2, "data": 3, "count": 0}
+    for night, hour in enumerate((4, 12, 20)):
+        with open(f"{landing}/night{night}.json", "w") as f:
+            f.write(json.dumps({
+                "ts": f"2024-01-01 {hour:02d}:00:00",
+                "sha": f"sha{night}",
+                "sizes": {"tests_shell": {"native": b, "esp32": b}},
+            }))
+        assert incremental_refresh(spark, landing, sink, ckpt) == 2
+
+    def keys():
+        return sorted(spark.read.parquet(sink).select(*BUILD_SIZES_KEY).collect())
+
+    day = f"{sink}/p_date=2024-01-01/*.parquet"
+    before, keys_before = len(glob.glob(day)), keys()
+    assert before >= 3 and len(keys_before) == 6
+
+    assert compact_partitions(spark, sink) == 1
+    assert len(glob.glob(day)) < before
+    assert keys() == keys_before
 
 
 def test_write_clustered_tightens_row_group_stats(spark, tmp_path):
@@ -493,8 +422,8 @@ def test_write_with_bloom_filters_size_and_readback(spark, tmp_path):
 def _read_map(spark, path):
     out = {}
     for r in spark.read.parquet(path).collect():
-        # partition-column inference reads date= back as datetime.date
-        out[(str(r["date"]), r["board"])] = r["text"]
+        # partition-column inference reads p_date= back as datetime.date
+        out[(str(r["p_date"]), r["board"])] = r["text"]
     return out
 
 
@@ -505,25 +434,21 @@ def test_merge_upsert_two_writer_interleaving_loses_nothing(spark, tmp_path):
     from riot_graphs_spark.sources.sinks import merge_upsert_partitions
 
     sink = str(tmp_path / "merge")
-    a = with_date_partition(
-        spark.createDataFrame(
-            [
-                Row(ts=dt.datetime(2024, 1, 1, 4, tzinfo=UTC), board="b1", text=10),
-                Row(ts=dt.datetime(2024, 1, 1, 5, tzinfo=UTC), board="b2", text=11),
-            ]
-        )
+    a = spark.createDataFrame(
+        [
+            Row(ts=dt.datetime(2024, 1, 1, 4, tzinfo=UTC), board="b1", text=10),
+            Row(ts=dt.datetime(2024, 1, 1, 5, tzinfo=UTC), board="b2", text=11),
+        ]
     )
-    b = with_date_partition(
-        spark.createDataFrame(
-            [
-                # overlaps A on (date, b2): later writer wins that key
-                Row(ts=dt.datetime(2024, 1, 1, 6, tzinfo=UTC), board="b2", text=22),
-                Row(ts=dt.datetime(2024, 1, 1, 7, tzinfo=UTC), board="b3", text=23),
-            ]
-        )
+    b = spark.createDataFrame(
+        [
+            # overlaps A on (p_date, b2): later writer wins that key
+            Row(ts=dt.datetime(2024, 1, 1, 6, tzinfo=UTC), board="b2", text=22),
+            Row(ts=dt.datetime(2024, 1, 1, 7, tzinfo=UTC), board="b3", text=23),
+        ]
     )
-    merge_upsert_partitions(a, sink, key=["date", "board"])
-    merge_upsert_partitions(b, sink, key=["date", "board"])
+    merge_upsert_partitions(a, sink, key=["p_date", "board"])
+    merge_upsert_partitions(b, sink, key=["p_date", "board"])
     got = _read_map(spark, sink)
     # no lost rows (b1 survives B's partial batch), no duplicates, B wins b2
     assert got == {
@@ -532,7 +457,7 @@ def test_merge_upsert_two_writer_interleaving_loses_nothing(spark, tmp_path):
         ("2024-01-01", "b3"): 23,
     }
     # replay idempotence: running B again converges to the same state
-    merge_upsert_partitions(b, sink, key=["date", "board"])
+    merge_upsert_partitions(b, sink, key=["p_date", "board"])
     assert _read_map(spark, sink) == got
 
 
@@ -540,21 +465,17 @@ def test_merge_upsert_touches_only_batch_partitions(spark, tmp_path):
     from riot_graphs_spark.sources.sinks import merge_upsert_partitions
 
     sink = str(tmp_path / "merge2")
-    day1 = with_date_partition(
-        spark.createDataFrame(
-            [Row(ts=dt.datetime(2024, 1, 1, 4, tzinfo=UTC), board="b1", text=1)]
-        )
+    day1 = spark.createDataFrame(
+        [Row(ts=dt.datetime(2024, 1, 1, 4, tzinfo=UTC), board="b1", text=1)]
     )
-    day2 = with_date_partition(
-        spark.createDataFrame(
-            [Row(ts=dt.datetime(2024, 1, 2, 4, tzinfo=UTC), board="b1", text=2)]
-        )
+    day2 = spark.createDataFrame(
+        [Row(ts=dt.datetime(2024, 1, 2, 4, tzinfo=UTC), board="b1", text=2)]
     )
-    merge_upsert_partitions(day1, sink, key=["date", "board"])
-    f1 = os.path.getmtime(os.path.join(sink, "date=2024-01-01"))
-    merge_upsert_partitions(day2, sink, key=["date", "board"])
+    merge_upsert_partitions(day1, sink, key=["p_date", "board"])
+    f1 = os.path.getmtime(os.path.join(sink, "p_date=2024-01-01"))
+    merge_upsert_partitions(day2, sink, key=["p_date", "board"])
     # day-1 directory untouched by the day-2 merge
-    assert os.path.getmtime(os.path.join(sink, "date=2024-01-01")) == f1
+    assert os.path.getmtime(os.path.join(sink, "p_date=2024-01-01")) == f1
     assert _read_map(spark, sink) == {
         ("2024-01-01", "b1"): 1,
         ("2024-01-02", "b1"): 2,
@@ -564,32 +485,28 @@ def test_merge_upsert_touches_only_batch_partitions(spark, tmp_path):
 def test_merge_upsert_lease_contention_raises_then_recovers(spark, tmp_path):
     """A held lease blocks an interleaved writer (ConcurrentWriteError
     after the timeout); releasing it lets the writer through."""
-    import json
-
     from riot_graphs_spark.sources.sinks import (
         ConcurrentWriteError,
         merge_upsert_partitions,
     )
 
     sink = str(tmp_path / "merge3")
-    batch = with_date_partition(
-        spark.createDataFrame(
-            [Row(ts=dt.datetime(2024, 1, 1, 4, tzinfo=UTC), board="b1", text=1)]
-        )
+    batch = spark.createDataFrame(
+        [Row(ts=dt.datetime(2024, 1, 1, 4, tzinfo=UTC), board="b1", text=1)]
     )
     lease_dir = os.path.join(sink, "_leases")
     os.makedirs(lease_dir)
-    lease = os.path.join(lease_dir, "date=2024-01-01.lease")
+    lease = os.path.join(lease_dir, "p_date=2024-01-01.lease")
     with open(lease, "w") as f:
         json.dump({"writer": "other", "epoch": 0}, f)
     os.utime(lease)  # fresh mtime: NOT stale
     with pytest.raises(ConcurrentWriteError):
         merge_upsert_partitions(
-            batch, sink, key=["date", "board"], acquire_timeout_s=0.6,
+            batch, sink, key=["p_date", "board"], acquire_timeout_s=0.6,
             poll_s=0.1,
         )
     os.unlink(lease)
-    merge_upsert_partitions(batch, sink, key=["date", "board"])
+    merge_upsert_partitions(batch, sink, key=["p_date", "board"])
     assert _read_map(spark, sink) == {("2024-01-01", "b1"): 1}
     # leases are released after a successful merge
     assert os.listdir(lease_dir) == []
@@ -597,24 +514,20 @@ def test_merge_upsert_lease_contention_raises_then_recovers(spark, tmp_path):
 
 def test_merge_upsert_breaks_stale_lease(spark, tmp_path):
     """A lease older than the TTL is presumed dead and broken."""
-    import json
-
     from riot_graphs_spark.sources.sinks import merge_upsert_partitions
 
     sink = str(tmp_path / "merge4")
-    batch = with_date_partition(
-        spark.createDataFrame(
-            [Row(ts=dt.datetime(2024, 1, 1, 4, tzinfo=UTC), board="b1", text=1)]
-        )
+    batch = spark.createDataFrame(
+        [Row(ts=dt.datetime(2024, 1, 1, 4, tzinfo=UTC), board="b1", text=1)]
     )
     lease_dir = os.path.join(sink, "_leases")
     os.makedirs(lease_dir)
-    lease = os.path.join(lease_dir, "date=2024-01-01.lease")
+    lease = os.path.join(lease_dir, "p_date=2024-01-01.lease")
     with open(lease, "w") as f:
         json.dump({"writer": "dead", "epoch": 0}, f)
     os.utime(lease, (0, 0))  # ancient mtime: stale
     merge_upsert_partitions(
-        batch, sink, key=["date", "board"], lease_ttl_s=60.0,
+        batch, sink, key=["p_date", "board"], lease_ttl_s=60.0,
         acquire_timeout_s=5.0, poll_s=0.1,
     )
     assert _read_map(spark, sink) == {("2024-01-01", "b1"): 1}

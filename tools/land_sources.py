@@ -18,8 +18,9 @@ Layout written (consumed by the engine):
   .text``).
 - ``<landing>/sizes/<sha>.json`` — one JSON document per build,
   ``{"ts": <Last-Modified>, "sha": ..., "sizes": {...}}`` matching
-  ``schemas.SIZES_RAW`` (consumed by ``streaming.ingest.stream_build_sizes``
-  / ``incremental_refresh``).
+  ``schemas.SIZES_RAW`` (consumed by ``streaming.ingest.incremental_refresh``
+  and ``plans.fetch.batch_fetch``, which both land it through
+  ``sources.sinks.merge_append``).
 
 Deliberately stdlib-only (subprocess + urllib): this is an ops script that
 runs on a cron box or sidecar, not on the cluster.
