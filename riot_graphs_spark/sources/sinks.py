@@ -17,6 +17,10 @@ sink's layout and upsert key:
   or re-delivered input lands nothing — idempotent without a transactional
   table format. (On Delta/Iceberg the same body would be a keyed MERGE
   INTO; the call sites would not change.)
+- The append costs four Spark jobs against an existing sink, whatever its
+  size: one exchange-free pass caches the batch and observes its row count
+  and dates, and the stored-key read lists and scans only the batch's own
+  ``p_date=`` directories, with a known schema (no inference job).
 - Batching (reference ``batch_size=20``) is the file-sizing concern Spark
   already owns; writers emit one file per task, and
   :func:`compact_partitions` rewrites the small files appends accumulate.
@@ -31,6 +35,7 @@ from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from .fs import path_exists
 
@@ -48,14 +53,31 @@ def _date_partition(df: DataFrame) -> DataFrame:
 
 
 def _existing_keys(
-    spark: SparkSession, sink_path: str, key: list[str], dates: list
-) -> DataFrame:
-    """Upsert keys already stored in the sink, restricted to the given date
-    partitions — the read carries a partition filter (asserted by
-    tests/test_streaming: only the batch's partitions are listed/scanned,
-    never the whole sink)."""
+    spark: SparkSession,
+    sink_path: str,
+    key: list[str],
+    dates: list,
+    schema: StructType,
+) -> DataFrame | None:
+    """Upsert keys already stored in the sink's partitions for ``dates``, or
+    ``None`` when none of those partitions exists yet.
+
+    Listing and scanning are both bounded by the batch: the read names only
+    the ``p_date=<date>`` directories that exist (one ``path_exists`` per
+    date, never a listing of the whole sink), and the key + partition
+    fields of ``schema`` are passed to the reader, so no job infers the
+    schema from the files. The ``isin`` filter keeps ``PartitionFilters``
+    in the plan (both asserted by tests/test_streaming)."""
+    root = sink_path.rstrip("/")
+    parts = [f"{root}/{PARTITION_COL}={d}" for d in dates]
+    parts = [p for p in parts if path_exists(spark, p)]
+    if not parts:
+        return None
+    fields = StructType([schema[c] for c in (*key, PARTITION_COL)])
     return (
-        spark.read.parquet(sink_path)
+        spark.read.schema(fields)
+        .option("basePath", root)
+        .parquet(*parts)
         .where(F.col(PARTITION_COL).isin(dates))
         .select(*key)
     )
@@ -72,23 +94,40 @@ def merge_append(
     ``noop=True`` runs the same plan into the noop sink and returns the
     count a real run would write.
 
-    At a 100-TB sink the anti-join's sink-side read is bounded by the dates
-    present in one micro-batch (typically 1-2 partitions), not sink size.
-    (With a transactional table format this would be a keyed MERGE INTO; on
-    plain parquet the pruned anti-join gives the same at-most-once-per-key
-    effect for replayed batches.)
+    Two actions, four jobs against an existing sink (the exchange-free
+    cache fill, the dedupe and stored-key exchanges, the write):
+
+    1. The batch, with ``p_date`` added, is persisted and forced once by a
+       noop write that observes its row count and date set. An empty batch
+       stops here. Emptiness is the count, not the dates: ``collect_set``
+       drops nulls, and a null-``ts`` row is still appended.
+    2. ``dropDuplicates(key)`` → left-anti join against
+       :func:`_existing_keys` (skipped when none of the batch's partitions
+       exists) → observed count → partitioned append or noop sink.
+
+    At a 100-TB sink the anti-join's sink-side listing and read are bounded
+    by the dates present in one micro-batch (typically 1-2 partitions), not
+    sink size. (With a transactional table format this would be a keyed
+    MERGE INTO; on plain parquet the pruned anti-join gives the same
+    at-most-once-per-key effect for replayed batches.)
     """
     spark = batch_df.sparkSession
-    deduped = _date_partition(batch_df.dropDuplicates(key)).persist()
+    rows = _date_partition(batch_df).persist()
     try:
-        dates = [r[0] for r in deduped.select(PARTITION_COL).distinct().collect()]
-        if not dates:
+        seen = Observation()
+        rows.observe(
+            seen,
+            F.count(F.lit(1)).alias("n"),
+            F.collect_set(PARTITION_COL).alias("dates"),
+        ).write.format("noop").mode("overwrite").save()
+        if seen.get["n"] == 0:
             return 0
-        if path_exists(spark, sink_path):
-            existing = _existing_keys(spark, sink_path, key, dates)
-            fresh = deduped.join(existing, on=key, how="left_anti")
-        else:  # first batch: nothing to merge against
-            fresh = deduped
+        fresh = rows.dropDuplicates(key)
+        existing = _existing_keys(
+            spark, sink_path, key, seen.get["dates"], rows.schema
+        )
+        if existing is not None:
+            fresh = fresh.join(existing, on=key, how="left_anti")
         obs = Observation()
         fresh = fresh.observe(obs, F.count(F.lit(1)).alias("n"))
         if noop:
@@ -97,7 +136,7 @@ def merge_append(
             fresh.write.mode("append").partitionBy(PARTITION_COL).parquet(sink_path)
         return int(obs.get["n"])
     finally:
-        deduped.unpersist()
+        rows.unpersist()
 
 
 def compact_partitions(

@@ -116,12 +116,13 @@ def stream_corpus_ingest(
         if near_dedup_buckets_path is not None:
             bspark = df.sparkSession
             if path_exists(bspark, near_dedup_buckets_path):
+                # the side table's schema is the bucket projection's, known
+                # from the plan: no per-batch schema-inference job
+                buckets = bspark.read.schema(
+                    minhash_band_buckets(batch).schema
+                ).parquet(near_dedup_buckets_path)
                 batch = incremental_novel_docs(
-                    batch,
-                    None,
-                    corpus_buckets=bspark.read.parquet(
-                        near_dedup_buckets_path
-                    ),
+                    batch, None, corpus_buckets=buckets
                 )
             batch = batch.persist()
         try:

@@ -3,11 +3,22 @@ idempotency under replayed/duplicate input, watermarked windowed rollup."""
 
 from __future__ import annotations
 
+import datetime
 import json
+import pathlib
+import uuid
 
 import pytest
 from pyspark.sql import functions as F
+from pyspark.sql.types import DateType, StructField, StructType
 
+from riot_graphs_spark.plans.riot import build_sizes_from_raw
+from riot_graphs_spark.schemas import BUILD_SIZES, SIZES_RAW
+from riot_graphs_spark.sources.sinks import (
+    PARTITION_COL,
+    _existing_keys,
+    merge_append,
+)
 from riot_graphs_spark.streaming.ingest import (
     incremental_refresh,
     stream_events_rollup,
@@ -33,6 +44,31 @@ def dirs(tmp_path):
         "sink": str(tmp_path / "sink"),
         "ckpt": str(tmp_path / "ckpt"),
     }
+
+
+KEY = ["test", "board", "ts"]
+_SINK_SCHEMA = StructType(
+    [*BUILD_SIZES.fields, StructField(PARTITION_COL, DateType())]
+)
+
+
+def _land_days(spark, dirs, days) -> None:
+    """Land one single-board document per day and ingest them with /update."""
+    b = {"bss": 1, "text": 2, "data": 3, "count": 0}
+    for day in days:
+        with open(f"{dirs['landing']}/day{day}.json", "w") as f:
+            f.write(_doc(day, f"sha{day}", {"native": b}))
+    incremental_refresh(spark, dirs["landing"], dirs["sink"], dirs["ckpt"])
+
+
+def _sizes_batch(spark, tmp_path, docs: list[str]):
+    """A batch ``build_sizes`` frame over *docs*, read the way ``fetch`` does."""
+    src = tmp_path / "batch_docs"
+    src.mkdir()
+    for i, doc in enumerate(docs):
+        (src / f"doc{i}.json").write_text(doc)
+    raw = spark.read.schema(SIZES_RAW).option("multiLine", "true").json(str(src))
+    return build_sizes_from_raw(raw)
 
 
 def test_incremental_refresh_and_idempotency(spark, dirs):
@@ -71,21 +107,12 @@ def test_merge_sink_read_is_partition_pruned(spark, dirs, tmp_path):
     """The anti-join's sink-side read must carry a partition filter on the
     batch's dates — at a 100-TB sink the merge touches only the named date
     partitions, never the whole table (VERDICT r01 'What's wrong' #1)."""
-    import datetime
-
-    from riot_graphs_spark.sources.sinks import PARTITION_COL, _existing_keys
-
-    landing = dirs["landing"]
-    b = {"bss": 1, "text": 2, "data": 3, "count": 0}
-    for day in (1, 2, 3):
-        with open(f"{landing}/day{day}.json", "w") as f:
-            f.write(_doc(day, f"sha{day}", {"native": b}))
-    incremental_refresh(spark, landing, dirs["sink"], dirs["ckpt"])
+    _land_days(spark, dirs, (1, 2, 3))
 
     # Sink is laid out one directory per date.
     dirs_on_disk = {
         p.name
-        for p in __import__("pathlib").Path(dirs["sink"]).iterdir()
+        for p in pathlib.Path(dirs["sink"]).iterdir()
         if p.is_dir()
     }
     assert dirs_on_disk == {
@@ -93,12 +120,153 @@ def test_merge_sink_read_is_partition_pruned(spark, dirs, tmp_path):
     }
 
     existing = _existing_keys(
-        spark, dirs["sink"], ["test", "board", "ts"], [datetime.date(2024, 1, 2)]
+        spark, dirs["sink"], KEY, [datetime.date(2024, 1, 2)], _SINK_SCHEMA
     )
     plan = existing._jdf.queryExecution().executedPlan().toString()
     assert "PartitionFilters" in plan and PARTITION_COL in plan
     # Only the named partition survives pruning.
     assert existing.count() == 1
+
+
+def _file_index_roots(df) -> list[str]:
+    """Root paths of the file index behind *df*'s (single) parquet scan."""
+    leaves = df._jdf.queryExecution().analyzed().collectLeaves()
+    assert leaves.size() == 1
+    roots = leaves.head().relation().location().rootPaths()
+    return [roots.apply(i).toString() for i in range(roots.size())]
+
+
+def test_stored_key_read_lists_only_batch_partitions(spark, dirs):
+    """Listing is bounded by the batch, not the sink: the stored-key read for
+    one date is rooted at that date's directory alone — never at the sink
+    root, whose listing walks every partition on each append — and a date
+    with no directory yet is skipped, not read."""
+    _land_days(spark, dirs, (1, 2, 3))
+    existing = _existing_keys(
+        spark, dirs["sink"], KEY, [datetime.date(2024, 1, 2)], _SINK_SCHEMA
+    )
+    roots = _file_index_roots(existing)
+    assert len(roots) == 1
+    assert roots[0].endswith(f"/{PARTITION_COL}=2024-01-02"), roots
+    assert existing.count() == 1
+
+    both = _existing_keys(
+        spark,
+        dirs["sink"],
+        KEY,
+        [datetime.date(2024, 1, 3), datetime.date(2024, 1, 9)],
+        _SINK_SCHEMA,
+    )
+    assert [r.rsplit("/", 1)[-1] for r in _file_index_roots(both)] == [
+        f"{PARTITION_COL}=2024-01-03"
+    ]
+    assert _existing_keys(
+        spark, dirs["sink"], KEY, [datetime.date(2024, 1, 9)], _SINK_SCHEMA
+    ) is None
+
+
+def test_merge_append_batch_spanning_stored_and_new_date(spark, dirs, tmp_path):
+    """A batch with one stored date and one new date: the stored date's
+    replayed key is dropped, its new key and the new date's rows land, and
+    the new date's missing directory is never read (no PATH_NOT_FOUND)."""
+    _land_days(spark, dirs, (1,))
+    b = {"bss": 1, "text": 2, "data": 3, "count": 0}
+    batch = _sizes_batch(
+        spark,
+        tmp_path,
+        [
+            _doc(1, "sha1", {"native": b, "esp32": b}),  # native is stored
+            _doc(5, "sha5", {"native": b, "esp32": b}),  # date not in the sink
+        ],
+    )
+    assert merge_append(batch, dirs["sink"], KEY) == 3
+    sink = spark.read.parquet(dirs["sink"])
+    assert sink.count() == 4
+    assert sink.select(*KEY).distinct().count() == 4
+    # Replaying the same batch lands nothing.
+    assert merge_append(batch, dirs["sink"], KEY) == 0
+
+
+def _group_jobs(spark, group: str, fn):
+    """Run *fn* under job group *group*; return (its result, its job count)."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_merge_append_job_budget(spark, dirs, tmp_path):
+    """One append against an existing sink runs at most four Spark jobs:
+    the exchange-free cache fill that also observes the batch's count and
+    dates, the dedupe and stored-key exchanges, and the write. The previous
+    body ran seven (dedupe + distinct-dates collect, a schema-inference job
+    for the sink read, then the append). An empty batch runs only the
+    first job, returns 0 and writes nothing."""
+    _land_days(spark, dirs, (1, 2, 3))
+    b = {"bss": 1, "text": 2, "data": 3, "count": 0}
+    batch = _sizes_batch(
+        spark, tmp_path, [_doc(2, "sha2", {"native": b, "esp32": b})]
+    )
+    n, jobs = _group_jobs(
+        spark,
+        f"merge-{uuid.uuid4()}",
+        lambda: merge_append(batch, dirs["sink"], KEY),
+    )
+    assert n == 1
+    assert jobs <= 4, jobs
+
+    def files():
+        return sorted(
+            str(p) for p in pathlib.Path(dirs["sink"]).rglob("*") if p.is_file()
+        )
+
+    before = files()
+    empty = batch.where(F.col("ts") < F.lit(datetime.datetime(2000, 1, 1)))
+    n0, jobs0 = _group_jobs(
+        spark,
+        f"empty-{uuid.uuid4()}",
+        lambda: merge_append(empty, dirs["sink"], KEY),
+    )
+    assert (n0, jobs0) == (0, 1)
+    assert files() == before
+
+
+def test_merge_append_null_ts_rows_are_appended(spark, tmp_path):
+    """Rows with a null ``ts`` have no date, and ``collect_set`` drops the
+    null, so emptiness is tested on the row count, not the date set: such a
+    batch is appended (into the default partition), deduped on the key.
+    Null keys never match a stored key, so a replay appends them again."""
+    sink = str(tmp_path / "sink")
+    ts = datetime.datetime(2024, 1, 1, 4)
+
+    def batch(rows):
+        return spark.createDataFrame(rows, BUILD_SIZES)
+
+    only_null = batch(
+        [(None, "t", "native", 1, 2, 3, 6), (None, "t", "native", 1, 2, 3, 6)]
+    )
+    assert merge_append(only_null, sink, KEY) == 1
+
+    mixed = batch(
+        [
+            (None, "t", "native", 1, 2, 3, 6),
+            (None, "t", "esp32", 1, 2, 3, 6),
+            (ts, "t", "native", 1, 2, 3, 6),
+        ]
+    )
+    assert merge_append(mixed, sink, KEY) == 3
+    assert merge_append(mixed, sink, KEY) == 2  # the dated row is stored
+
+    got = spark.read.parquet(sink)
+    assert got.count() == 6
+    assert got.where(F.col("ts").isNull()).count() == 5
+    dated = got.where(F.col("ts").isNotNull()).select(*KEY).collect()
+    assert [tuple(r) for r in dated] == [("t", "native", ts)]
 
 
 def test_streaming_rollup_matches_batch(spark, sf_dir, tmp_path):
