@@ -101,6 +101,9 @@ _WINDOW_FUNCS = {
 #: timestamps), per bucket/tag series — not one row per group.
 _SELECTOR_FUNCS = {"top", "bottom"}
 
+#: Functions that must be the only select item, in dispatch order.
+_SOLO_FUNCS = ("distinct", "mode", "holt_winters", "top", "bottom", "elapsed")
+
 
 class InfluxQLError(ValueError):
     """Raised for queries outside the supported subset."""
@@ -206,14 +209,8 @@ def _split_top_level(s: str, sep: str) -> list[str]:
     return parts
 
 
-_ITEM_RE = re.compile(
-    r"^\s*(?P<func>[a-zA-Z_]+)\s*\(\s*(?P<args>.*)\)\s*"
-    r"(?:\s+[aA][sS]\s+(?P<alias>\"[^\"]+\"|\w+)\s*)?$"
-)
-_BARE_RE = re.compile(
-    r"^\s*(?P<field>\"[^\"]+\"|\*|\w+)\s*"
-    r"(?:\s+[aA][sS]\s+(?P<alias>\"[^\"]+\"|\w+)\s*)?$"
-)
+_ITEM_RE = re.compile(r"^\s*(?P<func>[a-zA-Z_]+)\s*\(\s*(?P<args>.*)\)\s*$")
+_BARE_RE = re.compile(r"^\s*(?P<field>\"[^\"]+\"|\*|\w+)\s*$")
 
 
 _POST_RE = re.compile(
@@ -227,16 +224,17 @@ def _parse_item(raw: str) -> _Item:
     # operator, then the base item (one trailing op, numeric literal RHS).
     am = re.search(r"\s+[aA][sS]\s+(?P<alias>\"[^\"]+\"|\w+)\s*$", raw)
     body = raw[: am.start()] if am else raw
+    alias = _unquote(am.group("alias")) if am else None
     pm = _POST_RE.match(body.strip())
     if pm and not re.fullmatch(r"\d+(?:\.\d+)?", pm.group("base").strip()):
         item = _parse_item(pm.group("base"))
         if item.func is None and item.field == "*":
             raise InfluxQLError("cannot apply arithmetic to *")
         item.post = (pm.group("op"), float(pm.group("num")))
-        if am:
-            item.alias = _unquote(am.group("alias"))
+        if alias:
+            item.alias = alias
         return item
-    m = _ITEM_RE.match(raw)
+    m = _ITEM_RE.match(body)
     if m:
         func = m.group("func").lower()
         if func in _WINDOW_FUNCS:
@@ -246,7 +244,6 @@ def _parse_item(raw: str) -> _Item:
                 raise InfluxQLError(
                     f"{func}() wraps an aggregate, e.g. {func}(mean(value))"
                 )
-            alias = _unquote(m.group("alias")) if m.group("alias") else None
             item = _Item(func, inner.field, None, alias, inner=inner)
             if func in ("moving_average", "kaufmans_efficiency_ratio"):
                 if len(args) != 2:
@@ -286,13 +283,11 @@ def _parse_item(raw: str) -> _Item:
             n = _num(args[1], f"{func}() N")
             if n < 1 or n != int(n):
                 raise InfluxQLError(f"{func}() N must be a positive int")
-            alias = _unquote(m.group("alias")) if m.group("alias") else None
             return _Item(func, _unquote(args[0]), n, alias)
         if func == "elapsed":
             args = [a.strip() for a in m.group("args").split(",")]
             if len(args) not in (1, 2):
                 raise InfluxQLError("elapsed(field[, unit]) takes one or two args")
-            alias = _unquote(m.group("alias")) if m.group("alias") else None
             item = _Item(func, _unquote(args[0]), None, alias)
             item.unit_ns = _parse_duration_ns(args[1]) if len(args) == 2 else 1
             return item
@@ -300,14 +295,12 @@ def _parse_item(raw: str) -> _Item:
             args = [a.strip() for a in m.group("args").split(",")]
             if len(args) != 1:
                 raise InfluxQLError("distinct(field) takes one argument")
-            alias = _unquote(m.group("alias")) if m.group("alias") else None
             return _Item("distinct", _unquote(args[0]), None, alias)
         if func == "count":
             dm = re.fullmatch(
                 r"distinct\(\s*(\"[^\"]+\"|\w+)\s*\)", m.group("args").strip()
             )
             if dm:
-                alias = _unquote(m.group("alias")) if m.group("alias") else None
                 return _Item(
                     "count_distinct", _unquote(dm.group(1)), None, alias or "count"
                 )
@@ -327,17 +320,14 @@ def _parse_item(raw: str) -> _Item:
                 unit_s = 1
             else:
                 raise InfluxQLError("integral(field[, unit]) takes one or two args")
-            alias = _unquote(m.group("alias")) if m.group("alias") else None
             item = _Item(func, fld, None, alias)
             item.unit_s = unit_s
             return item
         elif len(args) != 1:
             raise InfluxQLError(f"{func}() takes one argument")
-        alias = _unquote(m.group("alias")) if m.group("alias") else None
         return _Item(func, fld, arg, alias)
-    m = _BARE_RE.match(raw)
+    m = _BARE_RE.match(body)
     if m:
-        alias = _unquote(m.group("alias")) if m.group("alias") else None
         return _Item(None, _unquote(m.group("field")), None, alias)
     raise InfluxQLError(f"cannot parse select item: {raw!r}")
 
@@ -412,7 +402,9 @@ def parse_influxql(q: str) -> _Query:
     out.tz = tz
     out.subquery = sub
     if sub is not None:
-        parse_influxql(sub)  # recognition: inner text must itself parse
+        # the inner text must itself parse; its measurement names the
+        # outer statement's series (the placeholder is never user-visible)
+        out.measurement = parse_influxql(sub).measurement
 
     if m.group("where"):
         for raw in re.split(r"\s+AND\s+", m.group("where"), flags=re.I):
@@ -582,70 +574,62 @@ def parse_show(q: str):
     )
 
 
-def _show(source, query: str, ts_col: str) -> DataFrame:
+def _tag_keys(df: DataFrame, ts_col: str) -> list[str]:
+    """A measurement's tag keys: its string columns other than time."""
+    return [
+        f.name for f in df.schema.fields
+        if f.dataType.simpleString() == "string" and f.name != ts_col
+    ]
+
+
+def _show(source, shown: tuple, ts_col: str) -> DataFrame:
     """Grafana template-variable queries (SHOW MEASUREMENTS / TAG KEYS /
     TAG VALUES FROM m WITH KEY = k / FIELD KEYS) over the session catalog:
     tag keys = string columns, field keys = numeric columns, tag values =
     ``SELECT DISTINCT`` (the G7 operator). Catalog-sized except TAG VALUES
     (one distinct shuffle — exactly what a dashboard variable refresh
-    costs)."""
-    parsed = parse_show(query)
-    what, measurement, key, key_is_regex = parsed
+    costs). ``shown`` is the :func:`parse_show` tuple."""
+    what, measurement, key, key_is_regex = shown
     is_session = callable(getattr(source, "table", None))
-    if what in ("DATABASES", "RETENTION POLICIES"):
+    if not is_session and (
+        what in ("DATABASES", "RETENTION POLICIES", "MEASUREMENTS")
+        or (what == "SERIES" and measurement is None)
+    ):
+        raise InfluxQLError(f"SHOW {what} needs a SparkSession source")
+    if what == "DATABASES":
         # Grafana's InfluxQL datasource issues these on "Save & test" /
         # connect — answer the handshake instead of erroring the dialog
-        spark = source if is_session else (
-            source.sparkSession if isinstance(source, DataFrame) else None
+        return source.createDataFrame(
+            [(source.catalog.currentDatabase(),)], "name string"
         )
-        if what == "DATABASES":
-            name = (
-                spark.catalog.currentDatabase() if spark is not None else "default"
-            )
-            src = spark
-            if src is None:
-                raise InfluxQLError("SHOW DATABASES needs a SparkSession source")
-            return src.createDataFrame([(name,)], "name string")
-        if spark is None:
-            raise InfluxQLError(
-                "SHOW RETENTION POLICIES needs a SparkSession source"
-            )
-        return spark.createDataFrame(
+    if what == "RETENTION POLICIES":
+        return source.createDataFrame(
             [("autogen", "0s", "168h0m0s", 1, True)],
             "name string, duration string, shardGroupDuration string, "
             "replicaN int, `default` boolean",
         )
     if what == "MEASUREMENTS":
-        if not is_session:
-            raise InfluxQLError("SHOW MEASUREMENTS needs a SparkSession source")
         names = sorted(t.name for t in source.catalog.listTables())
         return source.createDataFrame([(n,) for n in names], "name string")
     if what == "SERIES" and measurement is None:
         # InfluxDB's bare SHOW SERIES spans every measurement; the catalog
         # loop is catalog-sized, each per-table branch one distinct.
-        if not is_session:
-            raise InfluxQLError("bare SHOW SERIES needs a SparkSession source")
         names = sorted(t.name for t in source.catalog.listTables())
         out = None
         for n in names:
-            part = _show(source, f"SHOW SERIES FROM {n}", ts_col)
+            part = _show(source, ("SERIES", n, None, False), ts_col)
             out = part if out is None else out.unionByName(part)
         if out is None:
             raise InfluxQLError("SHOW SERIES: empty catalog")
         return out
     if measurement is None:
         raise InfluxQLError(f"SHOW {what} requires FROM <measurement>")
-    df = source.table(measurement) if is_session else (
-        source(measurement) if callable(source) and not isinstance(source, DataFrame)
-        else source
-    )
+    df = source.table(measurement) if is_session else source(measurement)
     spark = df.sparkSession
     if what == "TAG KEYS":
-        tags = [
-            f.name for f in df.schema.fields
-            if f.dataType.simpleString() == "string" and f.name != ts_col
-        ]
-        return spark.createDataFrame([(t,) for t in tags], "tagKey string")
+        return spark.createDataFrame(
+            [(t,) for t in _tag_keys(df, ts_col)], "tagKey string"
+        )
     if what == "FIELD KEYS":
         fields = [
             (f.name, f.dataType.simpleString())
@@ -657,10 +641,7 @@ def _show(source, query: str, ts_col: str) -> DataFrame:
         # one "key" string per distinct tag combination, InfluxDB's
         # measurement,tag1=v1,tag2=v2 format with tags in name order —
         # one distinct shuffle over the tag columns only
-        tags = sorted(
-            f.name for f in df.schema.fields
-            if f.dataType.simpleString() == "string" and f.name != ts_col
-        )
+        tags = sorted(_tag_keys(df, ts_col))
         if not tags:
             return spark.createDataFrame([(measurement,)], "key string")
         series_key = F.concat_ws(
@@ -686,11 +667,7 @@ def _show(source, query: str, ts_col: str) -> DataFrame:
             pat = re.compile(key)
         except re.error as exc:
             raise InfluxQLError(f"bad WITH KEY regex: {exc}") from exc
-        tags = [
-            f.name for f in df.schema.fields
-            if f.dataType.simpleString() == "string" and f.name != ts_col
-            and pat.search(f.name)
-        ]
+        tags = [t for t in _tag_keys(df, ts_col) if pat.search(t)]
         if not tags:
             raise InfluxQLError(f"WITH KEY =~ /{key}/ matches no tag key")
         out = None
@@ -715,16 +692,17 @@ def influxql(
     time_range: tuple | None = None,
 ) -> DataFrame:
     """Run an InfluxQL query (supported subset — module docstring) against
-    ``source``: a DataFrame, a ``SparkSession`` (measurement = temp view),
-    or a callable ``measurement -> DataFrame``.
+    ``source``: a ``SparkSession`` (measurement = temp view) or a callable
+    ``measurement -> DataFrame``.
 
     ``time_range=(start, end)`` substitutes Grafana's ``$timeFilter``;
     ``now`` anchors ``now()`` arithmetic. SHOW MEASUREMENTS / TAG KEYS /
     TAG VALUES / FIELD KEYS (Grafana template variables) are dispatched to
     the catalog/distinct forms.
     """
-    if parse_show(query) is not None:
-        return _show(source, query, ts_col)
+    shown = parse_show(query)
+    if shown is not None:
+        return _show(source, shown, ts_col)
     q = parse_influxql(query)
 
     if q.subquery is not None:
@@ -766,10 +744,8 @@ def influxql(
                     q.group_tags.append("measurement")
         else:
             df = source.table(q.measurement)
-    elif callable(source) and not isinstance(source, DataFrame):
-        df = source(q.measurement)
     else:
-        df = source
+        df = source(q.measurement)
 
     ts = F.col(ts_col)
     lo = hi = None
@@ -874,15 +850,15 @@ def influxql(
             res = res.limit(q.limit)
         return res
 
-    distincts = [i for i in q.items if i.func == "distinct"]
-    if distincts:
-        if len(q.items) != 1:
-            raise InfluxQLError(
-                "distinct() cannot be combined with other select items"
-            )
+    solo = [f for f in _SOLO_FUNCS if any(i.func == f for i in q.items)]
+    if solo and len(q.items) != 1:
+        name = "top()/bottom()" if solo[0] in _SELECTOR_FUNCS else f"{solo[0]}()"
+        raise InfluxQLError(f"{name} cannot be combined with other select items")
+    i = q.items[0]
+
+    if i.func == "distinct":
         if q.group_interval_s:
             raise InfluxQLError("distinct() under GROUP BY time is not supported")
-        i = distincts[0]
         out = (
             df.select(*q.group_tags, F.col(i.field).alias(i.out))
             .distinct()
@@ -890,13 +866,7 @@ def influxql(
         )
         return _row_tail(out)
 
-    modes = [i for i in q.items if i.func == "mode"]
-    if modes:
-        if len(q.items) != 1:
-            raise InfluxQLError(
-                "mode() cannot be combined with other select items"
-            )
-        i = modes[0]
+    if i.func == "mode":
         keys: list[Column] = []
         if q.group_interval_s:
             keys.append(_floor_ts(ts).alias("time"))
@@ -922,15 +892,9 @@ def influxql(
             )
         return _row_tail(out)
 
-    hw = [i for i in q.items if i.func == "holt_winters"]
-    if hw:
-        if len(q.items) != 1:
-            raise InfluxQLError(
-                "holt_winters() cannot be combined with other select items"
-            )
+    if i.func == "holt_winters":
         if not q.group_interval_s:
             raise InfluxQLError("holt_winters() requires GROUP BY time(<d>)")
-        i = hw[0]
         from ..operators.timeseries import holt_forecast
 
         keys = [_floor_ts(ts).alias("time")] + [F.col(t) for t in q.group_tags]
@@ -952,13 +916,7 @@ def influxql(
             out = out.orderBy(F.desc("time") if q.order_desc else F.asc("time"))
         return _row_tail(out)
 
-    selectors = [i for i in q.items if i.func in _SELECTOR_FUNCS]
-    if selectors:
-        if len(q.items) != 1:
-            raise InfluxQLError(
-                "top()/bottom() cannot be combined with other select items"
-            )
-        i = selectors[0]
+    if i.func in _SELECTOR_FUNCS:
         part: list[Column] = [F.col(t) for t in q.group_tags]
         if q.group_interval_s:
             part.append(_floor_ts(ts))
@@ -976,15 +934,9 @@ def influxql(
         )
         return _row_tail(out)
 
-    elapsed_items = [i for i in q.items if i.func == "elapsed"]
-    if elapsed_items:
-        if len(q.items) != 1:
-            raise InfluxQLError(
-                "elapsed() cannot be combined with other select items"
-            )
+    if i.func == "elapsed":
         if q.group_interval_s:
             raise InfluxQLError("elapsed() is a raw transform, not GROUP BY time")
-        i = elapsed_items[0]
         w = Window.partitionBy(*[F.col(t) for t in q.group_tags]).orderBy(ts)
         us = F.unix_micros(ts.cast("timestamp"))
         out = (
@@ -1041,10 +993,7 @@ def influxql(
     # Grafana's GROUP BY time($interval), * — expand * to every tag
     # (string) column of the measurement
     if "*" in q.group_tags:
-        all_tags = [
-            f.name for f in df.schema.fields
-            if f.dataType.simpleString() == "string" and f.name != ts_col
-        ]
+        all_tags = _tag_keys(df, ts_col)
         q.group_tags = [t for t in q.group_tags if t != "*"] + [
             t for t in all_tags if t not in q.group_tags
         ]

@@ -33,7 +33,3 @@ def l2_norm(a: Column | str) -> Column:
             lambda acc, x: acc + x.cast("double") * x.cast("double"),
         )
     )
-
-
-def cosine_similarity(a: Column | str, b: Column | str) -> Column:
-    return dot(a, b) / (l2_norm(a) * l2_norm(b))

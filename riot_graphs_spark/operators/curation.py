@@ -1044,194 +1044,6 @@ def mixture_effective_sample_size(
     )
 
 
-def mixture_epoch_plan(
-    docs: DataFrame,
-    group_col: str = "source",
-    size_col: str = "n_chars",
-    temperature: float = 0.5,
-) -> DataFrame:
-    """Epoch/repeat plan for a temperature-tilted training mixture —
-    the operational translation of :func:`temperature_mixture`'s target
-    shares: given target ∝ size^τ and a one-epoch total budget, how
-    many FULL passes over each source does the sampler owe, and what
-    fraction of one more — the number the data-loader config actually
-    takes (a source with target > its natural share repeats; τ=0.5
-    up-weights small sources the standard way).
-
-        target_s = size_s^τ / Σ size^τ
-        required_s = target_s · Σ size
-        epochs_s = required_s / size_s  → (full, remainder)
-
-    One group reduction; the tilt/shares compute on the k-group axis
-    with 9-dp-rounded powers decimal-summed (engine-identical).
-    Output: one row per group — ``(group, size bigint, natural_share
-    double, target_share double, required bigint, full_epochs bigint,
-    remainder_frac double, oversampled boolean)``.
-    """
-    per = docs.filter(
-        F.col(group_col).isNotNull() & F.col(size_col).isNotNull()
-    ).groupBy(F.col(group_col).alias("group")).agg(
-        F.sum(F.col(size_col).cast("decimal(28,0)")).alias("_sz")
-    )
-    tilt = F.round(
-        F.pow(F.col("_sz").cast("double"), F.lit(float(temperature))), 9
-    )
-    tilted = per.select("group", "_sz", tilt.cast("decimal(28,9)").alias("_w"))
-    tots = tilted.agg(
-        F.sum("_sz").alias("_tot"), F.sum("_w").alias("_wtot")
-    )
-    out = tilted.crossJoin(F.broadcast(tots))
-    target = F.col("_w").cast("double") / F.col("_wtot").cast("double")
-    natural = F.col("_sz").cast("double") / F.col("_tot").cast("double")
-    required = F.round(target * F.col("_tot").cast("double"), 0)
-    epochs = required / F.col("_sz").cast("double")
-    return out.select(
-        "group",
-        F.col("_sz").cast("long").alias("size"),
-        F.round(natural, 9).alias("natural_share"),
-        F.round(target, 9).alias("target_share"),
-        required.cast("long").alias("required"),
-        F.floor(epochs).cast("long").alias("full_epochs"),
-        F.round(epochs - F.floor(epochs), 9).alias("remainder_frac"),
-        (target > natural).alias("oversampled"),
-    )
-
-
-def l_diversity_report(
-    docs: DataFrame,
-    quasi_cols: Sequence[str] = ("lang",),
-    band_col: str = "n_chars",
-    band_width: int = 500,
-    sensitive_col: str = "source",
-    l_req: int = 3,
-) -> DataFrame:
-    """l-diversity audit — the attribute-disclosure check k-anonymity
-    misses (:func:`~.profile.k_anonymity_report` counts how many rows
-    share a quasi-identifier combo; if ALL of them share one sensitive
-    value, size protected nothing): per (quasi…, size band) class,
-    the number of DISTINCT sensitive values, with entropy-l (the
-    effective number, exp of the class entropy) and the failing-class
-    tally at *l_req*.
-
-    One (class, sensitive) reduction; entropy terms quantize to decimal
-    on the class axis.  Output: one summary row — ``(l_req bigint,
-    n_rows bigint, n_classes bigint, classes_below_l bigint,
-    rows_below_l bigint, share_rows_below_l double, min_l bigint,
-    min_entropy_l double)``.
-    """
-    q = [
-        F.coalesce(F.col(c).cast("string"), F.lit("\x00null")).alias(
-            f"_q{i}"
-        )
-        for i, c in enumerate(quasi_cols)
-    ]
-    band = F.coalesce(
-        (F.col(band_col) / band_width).cast("long").cast("string"),
-        F.lit("\x00null"),
-    ).alias("_qb")
-    cells = docs.groupBy(
-        *q, band, F.col(sensitive_col).alias("_s")
-    ).agg(F.count(F.lit(1)).alias("_n"))
-    qcols = [f"_q{i}" for i in range(len(list(quasi_cols)))] + ["_qb"]
-    share = F.col("_n").cast("double") / F.col("_tot").cast("double")
-    classes = (
-        cells.withColumn(
-            "_tot", F.sum("_n").over(Window.partitionBy(*qcols))
-        )
-        .select(
-            *qcols,
-            "_n",
-            F.round(-share * F.log(share), 9)
-            .cast("decimal(28,9)")
-            .alias("_e"),
-        )
-        .groupBy(*qcols)
-        .agg(
-            F.sum("_n").alias("_rows"),
-            F.count(F.lit(1)).alias("_l"),
-            F.sum("_e").alias("_ent"),
-        )
-    )
-    summary = classes.agg(
-        F.sum("_rows").alias("_nr"),
-        F.count(F.lit(1)).alias("_nc"),
-        F.sum(F.when(F.col("_l") < l_req, 1).otherwise(0)).alias("_cb"),
-        F.sum(
-            F.when(F.col("_l") < l_req, F.col("_rows")).otherwise(0)
-        ).alias("_rb"),
-        F.min("_l").alias("_minl"),
-        F.min(
-            F.round(F.exp(F.col("_ent").cast("double")), 9)
-        ).alias("_minel"),
-    )
-    return summary.select(
-        F.lit(l_req).cast("long").alias("l_req"),
-        F.col("_nr").cast("long").alias("n_rows"),
-        F.col("_nc").cast("long").alias("n_classes"),
-        F.col("_cb").cast("long").alias("classes_below_l"),
-        F.col("_rb").cast("long").alias("rows_below_l"),
-        F.round(
-            F.col("_rb").cast("double") / F.col("_nr").cast("double"), 9
-        ).alias("share_rows_below_l"),
-        F.col("_minl").cast("long").alias("min_l"),
-        F.col("_minel").alias("min_entropy_l"),
-    )
-
-
-def dp_noisy_counts(
-    docs: DataFrame,
-    group_col: str = "lang",
-    epsilon: float = 0.5,
-    seed_tag: str = "noise:v1:",
-) -> DataFrame:
-    """Deterministically-seeded Laplace-noised group counts — the
-    differential-privacy RELEASE SHAPE for a histogram (sensitivity 1 →
-    Laplace(1/ε) noise per cell), with the noise drawn from the
-    md5-uniform of (seed_tag ‖ group) through the inverse Laplace CDF:
-
-        u ∈ (0,1),  noise = −(1/ε)·sgn(u−½)·ln(1 − 2|u−½|)
-
-    The md5 seeding makes the draw REPRODUCIBLE — the property a
-    release pipeline needs for idempotent re-runs (and what makes this
-    oracle-checkable; a production deployment would rotate seed_tag per
-    release, which is the privacy-relevant secret).  ln/round(6) keeps
-    the two engines identical.  One count groupBy.
-
-    Output: one row per group — ``(group, true_n bigint, noise double,
-    noisy_n double, epsilon double)``.  true_n ships here for the
-    audit; a real release drops it.
-    """
-    from .dedup import hash32
-
-    per = docs.filter(F.col(group_col).isNotNull()).groupBy(
-        F.col(group_col).cast("string").alias("group")
-    ).agg(F.count(F.lit(1)).alias("true_n"))
-    u = (
-        (
-            hash32(F.concat(F.lit(seed_tag), F.col("group")))
-            % F.lit(1000000)
-        ).cast("double")
-        + F.lit(0.5)
-    ) / F.lit(1000000.0)
-    b = 1.0 / float(epsilon)
-    dev = u - F.lit(0.5)
-    noise = F.round(
-        -F.lit(b)
-        * F.signum(dev)
-        * F.log(F.lit(1.0) - 2 * F.abs(dev)),
-        6,
-    )
-    return per.select(
-        "group",
-        F.col("true_n").cast("long").alias("true_n"),
-        noise.alias("noise"),
-        F.round(F.col("true_n").cast("double") + noise, 6).alias(
-            "noisy_n"
-        ),
-        F.lit(float(epsilon)).alias("epsilon"),
-    )
-
-
 def neyman_allocation(
     df: DataFrame,
     stratum_col: str,

@@ -61,7 +61,6 @@ def hash56(s: Column) -> Column:
 
 #: Shingle-hash composition base (prime; B² < 2^31 keeps h·B² < 2^63).
 SHINGLE_B = 40009
-SHINGLE_B2 = SHINGLE_B * SHINGLE_B
 
 
 def bind_array(arr: Column, fn) -> Column:

@@ -3132,165 +3132,6 @@ def snis_mean(
     )
 
 
-def map_at_k(
-    run: DataFrame,
-    qrels: DataFrame,
-    k: int,
-    rel_threshold: int = 1,
-    query_col: str = "query_id",
-    doc_col: str = "doc_id",
-    rank_col: str = "rank",
-    rel_col: str = "rel",
-) -> DataFrame:
-    """Mean-average-precision@k per query — the order-sensitive
-    binary-relevance grade between :func:`retrieval_recall_mrr`'s
-    set-level recall and :func:`ndcg_at_k`'s graded gains: AP averages
-    precision at each relevant hit, so ONE mis-ordered pair moves it
-    (recall@k can't see order at all):
-
-        AP@k = Σ_{r≤k, rel_r} P@r / min(n_rel, k)
-
-    Pure window arithmetic over the ≤k-row-per-query run (cumulative
-    hit counts ordered by rank); ``n_rel`` counts all relevant
-    judgments.  Output: one row per query — ``(query_id, n_rel bigint,
-    hits bigint, ap double)``; queries with no relevant judgment NULL
-    ap.
-    """
-    rel = qrels.select(
-        F.col(query_col),
-        F.col(doc_col),
-        (F.col(rel_col) >= rel_threshold).alias("_is_rel"),
-    )
-    tot = rel.filter(F.col("_is_rel")).groupBy(query_col).agg(
-        F.count(F.lit(1)).alias("_n_rel")
-    )
-    joined = (
-        run.filter(F.col(rank_col) <= k)
-        .join(rel, [query_col, doc_col], "left")
-        .select(
-            query_col,
-            rank_col,
-            F.coalesce(F.col("_is_rel"), F.lit(False))
-            .cast("int")
-            .alias("_r"),
-        )
-    )
-    w = Window.partitionBy(query_col).orderBy(rank_col)
-    per = joined.withColumn("_cum", F.sum("_r").over(w)).groupBy(
-        query_col
-    ).agg(
-        F.sum("_r").cast("long").alias("hits"),
-        F.sum(
-            F.when(
-                F.col("_r") == 1,
-                F.round(
-                    F.col("_cum").cast("double")
-                    / F.col(rank_col).cast("double"),
-                    9,
-                ),
-            )
-            .otherwise(F.lit(0.0))
-            .cast("decimal(28,9)")
-        ).alias("_psum"),
-    )
-    out = per.join(tot, query_col, "left")
-    n_rel = F.coalesce(F.col("_n_rel"), F.lit(0))
-    ap = F.when(
-        n_rel > 0,
-        F.col("_psum").cast("double")
-        / F.least(n_rel, F.lit(k)).cast("double"),
-    )
-    return out.select(
-        query_col,
-        n_rel.cast("long").alias("n_rel"),
-        "hits",
-        F.round(ap, 9).alias("ap"),
-    )
-
-
-def err_at_k(
-    run: DataFrame,
-    qrels: DataFrame,
-    k: int,
-    g_max: int = 3,
-    query_col: str = "query_id",
-    doc_col: str = "doc_id",
-    rank_col: str = "rank",
-    rel_col: str = "rel",
-) -> DataFrame:
-    """Expected reciprocal rank@k per query — the cascade-model grade
-    that :func:`ndcg_at_k` (position-discount only) can't express: a
-    user scans down and STOPS at the first satisfying result, so a
-    highly-relevant doc at rank 1 shadows everything below it:
-
-        R_r    = (2^g_r − 1) / 2^g_max        (g capped at g_max)
-        ERR@k  = Σ_{r≤k} (1/r) · R_r · Π_{s<r}(1 − R_s)
-
-    The stopping product is a cumulative window product implemented as
-    exp-of-sum-of-logs?  NO — R takes only g_max+1 distinct dyadic
-    values (0, 1/8, 3/8, 7/8 at g_max=3), so Π(1−R_s) is evaluated
-    EXACTLY as a product of window-collected values via ``aggregate``
-    over the ordered (rank, R) array — engine-stable double arithmetic
-    in rank order, no logs.  Output: one row per query — ``(query_id,
-    err double)``.
-    """
-    rel = qrels.select(
-        F.col(query_col),
-        F.col(doc_col),
-        F.least(F.col(rel_col).cast("int"), F.lit(g_max)).alias("_g"),
-    )
-    denom = float(2**g_max)
-    joined = (
-        run.filter(F.col(rank_col) <= k)
-        .join(rel, [query_col, doc_col], "left")
-        .select(
-            query_col,
-            rank_col,
-            (
-                (
-                    F.pow(
-                        F.lit(2.0),
-                        F.coalesce(F.col("_g"), F.lit(0)).cast("double"),
-                    )
-                    - F.lit(1.0)
-                )
-                / F.lit(denom)
-            ).alias("_rr"),
-        )
-    )
-    w = (
-        Window.partitionBy(query_col)
-        .orderBy(rank_col)
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow - 1)
-    )
-    stopped = joined.withColumn(
-        "_prev", F.collect_list(F.struct(rank_col, "_rr")).over(w)
-    ).select(
-        query_col,
-        rank_col,
-        "_rr",
-        F.aggregate(
-            F.col("_prev"),
-            F.lit(1.0),
-            lambda acc, s: acc * (F.lit(1.0) - s["_rr"]),
-        ).alias("_stop"),
-    )
-    per = stopped.groupBy(query_col).agg(
-        F.sum(
-            F.round(
-                F.col("_rr")
-                * F.col("_stop")
-                / F.col(rank_col).cast("double"),
-                9,
-            ).cast("decimal(28,9)")
-        ).alias("_err")
-    )
-    return per.select(
-        query_col,
-        F.round(F.col("_err").cast("double"), 9).alias("err"),
-    )
-
-
 def friedman_test(
     df: DataFrame,
     block_col: str,

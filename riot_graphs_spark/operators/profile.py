@@ -1946,137 +1946,6 @@ def ols_inference(
     )
 
 
-def freshness_by_group(
-    df: DataFrame,
-    ts_col: str = "ts",
-    group_col: str = "event_type",
-    stale_after_sec: int = 86400,
-) -> DataFrame:
-    """Per-stream freshness audit — "which feeds have stopped": each
-    group's newest timestamp against the global newest, with a staleness
-    flag at *stale_after_sec* — the first dashboard any ingest pipeline
-    owner reads, and the operational sibling of the streaming
-    baseline-staleness guard in :mod:`~..streaming.drift`.
-
-    Two partial-aggregable reductions (per-group max, global max) and
-    exact epoch-second arithmetic.  Output: one row per group —
-    ``(group, n bigint, latest_ts timestamp, lag_seconds bigint,
-    stale boolean)``.
-    """
-    per = df.filter(
-        F.col(ts_col).isNotNull() & F.col(group_col).isNotNull()
-    ).groupBy(F.col(group_col).alias("group")).agg(
-        F.count(F.lit(1)).alias("n"),
-        F.max(ts_col).alias("latest_ts"),
-    )
-    glob = per.agg(F.max("latest_ts").alias("_gmax"))
-    out = per.crossJoin(F.broadcast(glob))
-    lag = F.unix_timestamp("_gmax") - F.unix_timestamp("latest_ts")
-    return out.select(
-        "group",
-        F.col("n").cast("long").alias("n"),
-        "latest_ts",
-        lag.cast("long").alias("lag_seconds"),
-        (lag > stale_after_sec).alias("stale"),
-    )
-
-
-def profile_drift(
-    df: DataFrame,
-    ts_col: str = "ts",
-    value_col: str = "value",
-    group_col: str = "event_type",
-    split_at: str = "2024-01-16",
-    null_cols: tuple[str, ...] = ("user_id", "props"),
-) -> DataFrame:
-    """Schema-level profile drift between two time halves — the "did
-    the FEED change shape" audit that value-distribution tests (PSI/KS)
-    don't cover: per group, row-share drift, mean drift, and null-rate
-    drift of the operational columns between before/after *split_at*.
-    A null-rate jump is an upstream contract break long before it is a
-    statistics question.
-
-    One scan, one (group, half) reduction; means ride exact decimal
-    sums.  Output: one row per group — ``(group, n_before bigint,
-    n_after bigint, share_drift double, mean_before double, mean_after
-    double, mean_ratio double, null_drift_<col> double...)``.
-    """
-    dec = "decimal(28,6)"
-    half = (F.col(ts_col) >= F.lit(split_at).cast("timestamp")).cast(
-        "int"
-    )
-    aggs = [
-        F.count(F.lit(1)).alias("_n"),
-        F.sum(F.col(value_col).cast(dec)).alias("_sv"),
-    ]
-    for c in null_cols:
-        aggs.append(
-            F.sum(F.col(c).isNull().cast("int")).alias(f"_nn_{c}")
-        )
-    per = (
-        df.filter(F.col(ts_col).isNotNull() & F.col(group_col).isNotNull())
-        .groupBy(F.col(group_col).alias("group"), half.alias("_h"))
-        .agg(*aggs)
-    )
-    b = per.filter(F.col("_h") == 0).drop("_h")
-    a = per.filter(F.col("_h") == 1).drop("_h")
-    b = b.select(
-        "group",
-        F.col("_n").alias("_n_b"),
-        F.col("_sv").alias("_sv_b"),
-        *[F.col(f"_nn_{c}").alias(f"_nn_{c}_b") for c in null_cols],
-    )
-    a = a.select(
-        "group",
-        F.col("_n").alias("_n_a"),
-        F.col("_sv").alias("_sv_a"),
-        *[F.col(f"_nn_{c}").alias(f"_nn_{c}_a") for c in null_cols],
-    )
-    tot = per.agg(
-        F.sum(F.when(F.col("_h") == 0, F.col("_n")).otherwise(0)).alias(
-            "_tb"
-        ),
-        F.sum(F.when(F.col("_h") == 1, F.col("_n")).otherwise(0)).alias(
-            "_ta"
-        ),
-    )
-    out = b.join(a, "group", "full").crossJoin(F.broadcast(tot))
-    nb = F.coalesce(F.col("_n_b"), F.lit(0))
-    na = F.coalesce(F.col("_n_a"), F.lit(0))
-    mean_b = F.try_divide(
-        F.col("_sv_b").cast("double"), nb.cast("double")
-    )
-    mean_a = F.try_divide(
-        F.col("_sv_a").cast("double"), na.cast("double")
-    )
-    cols = [
-        F.col("group"),
-        nb.cast("long").alias("n_before"),
-        na.cast("long").alias("n_after"),
-        F.round(
-            F.try_divide(na.cast("double"), F.col("_ta").cast("double"))
-            - F.try_divide(
-                nb.cast("double"), F.col("_tb").cast("double")
-            ),
-            9,
-        ).alias("share_drift"),
-        F.round(mean_b, 9).alias("mean_before"),
-        F.round(mean_a, 9).alias("mean_after"),
-        F.round(F.try_divide(mean_a, mean_b), 9).alias("mean_ratio"),
-    ]
-    for c in null_cols:
-        nr_b = F.try_divide(
-            F.coalesce(F.col(f"_nn_{c}_b"), F.lit(0)).cast("double"),
-            nb.cast("double"),
-        )
-        nr_a = F.try_divide(
-            F.coalesce(F.col(f"_nn_{c}_a"), F.lit(0)).cast("double"),
-            na.cast("double"),
-        )
-        cols.append(F.round(nr_a - nr_b, 9).alias(f"null_drift_{c}"))
-    return out.select(*cols)
-
-
 def hellinger_by_group(
     df: DataFrame, key_col: str, group_col: str
 ) -> DataFrame:

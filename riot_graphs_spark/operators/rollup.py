@@ -32,9 +32,6 @@ from pyspark.sql import functions as F
 
 _DEC = "decimal(28,6)"
 
-#: State columns produced by :func:`daily_partials` / consumed by merges.
-STATE_COLS = ("n_rows", "sum_value", "min_value", "max_value")
-
 
 def daily_partials(
     df: DataFrame,

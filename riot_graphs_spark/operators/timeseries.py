@@ -1731,20 +1731,7 @@ def mann_kendall_trend(
     for n < 2 or all-tied series → 'no_trend').
     """
     gcols = list(dims)
-    dec = "decimal(28,6)"
-    keep = F.col(ts).isNotNull() & F.col(value).isNotNull()
-    for g in gcols:
-        keep = keep & F.col(g).isNotNull()
-    buckets = (
-        df.filter(keep)
-        .groupBy(*gcols, F.date_trunc(unit, F.col(ts)).alias("_b"))
-        .agg(
-            (
-                F.sum(F.col(value).cast(dec)).cast("double")
-                / F.count(F.lit(1)).cast("double")
-            ).cast(dec).alias("_m")
-        )
-    )
+    buckets = _bucket_means(df, ts, value, gcols, unit)
     a = buckets.select(
         *gcols, F.col("_b").alias("_ba"), F.col("_m").alias("_ma")
     )
@@ -1903,7 +1890,6 @@ def theil_sen_slope(
     is absent.
     """
     gcols = list(dims)
-    dec = "decimal(28,6)"
     # Slope denominators are computed in BUCKET units via the exact
     # unix-timestamp difference (session TZ is pinned UTC, so bucket
     # deltas are exact multiples of the unit length).  datediff() would
@@ -1923,19 +1909,7 @@ def theil_sen_slope(
             "use one of " + ", ".join(sorted(_unit_seconds))
         )
     unit_sec = _unit_seconds[unit]
-    keep = F.col(ts).isNotNull() & F.col(value).isNotNull()
-    for g in gcols:
-        keep = keep & F.col(g).isNotNull()
-    buckets = (
-        df.filter(keep)
-        .groupBy(*gcols, F.date_trunc(unit, F.col(ts)).alias("_b"))
-        .agg(
-            (
-                F.sum(F.col(value).cast(dec)).cast("double")
-                / F.count(F.lit(1)).cast("double")
-            ).cast(dec).alias("_m")
-        )
-    )
+    buckets = _bucket_means(df, ts, value, gcols, unit)
     nb = buckets.groupBy(*gcols).agg(
         F.count(F.lit(1)).alias("n_buckets")
     )
@@ -2029,21 +2003,8 @@ def cusum_changepoint(
     if b < 1:
         raise ValueError("need b >= 1 replicates")
     gcols = list(dims)
-    dec = "decimal(28,6)"
-    keep = F.col(ts).isNotNull() & F.col(value).isNotNull()
-    for g in gcols:
-        keep = keep & F.col(g).isNotNull()
     buckets = (
-        df.filter(keep)
-        .groupBy(*gcols, F.date_trunc(unit, F.col(ts)).alias("_b"))
-        .agg(
-            (
-                F.sum(F.col(value).cast(dec)).cast("double")
-                / F.count(F.lit(1)).cast("double")
-            )
-            .cast(dec)
-            .alias("_m")
-        )
+        _bucket_means(df, ts, value, gcols, unit)
         # ×10⁶ onto the integer axis: decimal(28,6) → exact int64
         .withColumn(
             "_m6", (F.col("_m") * F.lit(1000000)).cast("long")
@@ -2202,23 +2163,8 @@ def forecast_backtest(
     are excluded from that method's h.
     """
     gcols = list(dims)
-    dec6 = "decimal(28,6)"
     dec12 = "decimal(28,12)"
-    keep = F.col(ts).isNotNull() & F.col(value).isNotNull()
-    for g in gcols:
-        keep = keep & F.col(g).isNotNull()
-    buckets = (
-        df.filter(keep)
-        .groupBy(*gcols, F.date_trunc(unit, F.col(ts)).alias("_b"))
-        .agg(
-            (
-                F.sum(F.col(value).cast(dec6)).cast("double")
-                / F.count(F.lit(1)).cast("double")
-            )
-            .cast(dec6)
-            .alias("_m")
-        )
-    )
+    buckets = _bucket_means(df, ts, value, gcols, unit)
     w_ord = Window.partitionBy(*gcols).orderBy("_b")
     w_all = Window.partitionBy(*gcols)
     rows = buckets.select(
@@ -2338,24 +2284,9 @@ def dominant_period(
     if max_period < 2:
         raise ValueError("need max_period >= 2")
     gcols = list(dims)
-    dec6 = "decimal(28,6)"
     dec12 = "decimal(28,12)"
     tau = 6.283185307179586
-    keep = F.col(ts).isNotNull() & F.col(value).isNotNull()
-    for g in gcols:
-        keep = keep & F.col(g).isNotNull()
-    buckets = (
-        df.filter(keep)
-        .groupBy(*gcols, F.date_trunc(unit, F.col(ts)).alias("_b"))
-        .agg(
-            (
-                F.sum(F.col(value).cast(dec6)).cast("double")
-                / F.count(F.lit(1)).cast("double")
-            )
-            .cast(dec6)
-            .alias("_m")
-        )
-    )
+    buckets = _bucket_means(df, ts, value, gcols, unit)
     w_all = Window.partitionBy(*gcols)
     w_ord = Window.partitionBy(*gcols).orderBy("_b")
     idx = buckets.select(
@@ -2621,7 +2552,7 @@ def _bucket_means(
     unit: str,
 ) -> DataFrame:
     """Shared per-series bucket-mean reduction for the statistical TS
-    tests below: one partial-aggregable groupBy to ``(dims…, _b, _m)``
+    tests: one partial-aggregable groupBy to ``(dims…, _b, _m)``
     with decimal(28,6)-quantized means (the :func:`theil_sen_slope`
     convention) — every downstream window then runs on the BUCKET axis
     (days per series), never the fact table."""

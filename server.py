@@ -77,13 +77,11 @@ def _influx_results(query_runner, q: str, epoch: str | None) -> list[dict]:
     results = []
     for sid, stmt in enumerate(_split_statements(q)):
         try:
-            out = query_runner(stmt)
-            df, measurement = out[0], out[1]
-            # GROUP BY tags (3-tuple runners): InfluxDB splits the
-            # response into one series PER TAG COMBINATION with the tag
-            # values in a "tags" object, not flattened into columns —
-            # Grafana's alias-by-series ($tag_x) panels depend on it
-            group_tags = list(out[2]) if len(out) > 2 and out[2] else []
+            # GROUP BY tags: InfluxDB splits the response into one series
+            # PER TAG COMBINATION with the tag values in a "tags" object,
+            # not flattened into columns — Grafana's alias-by-series
+            # ($tag_x) panels depend on it
+            df, measurement, group_tags = query_runner(stmt)
             # collect cap+1 so truncation is detectable; InfluxDB marks a
             # clipped response with "partial": true and Grafana surfaces it
             rows = df.limit(QUERY_ROW_CAP + 1).collect()
@@ -132,18 +130,13 @@ def _influx_results(query_runner, q: str, epoch: str | None) -> list[dict]:
     return results
 
 
-def _influx_payload_multi(
-    query_runner, q: str, epoch: str | None = None
-) -> str:
-    """The InfluxDB ``/query`` response body for ``q``."""
-    return json.dumps({"results": _influx_results(query_runner, q, epoch)})
-
-
 def make_handler(refresh, query_runner=None):
     """Build a request handler bound to a zero-arg ``refresh() -> int``
     callable (returns rows ingested, raises on failure) and an optional
-    ``query_runner(influxql_str) -> (DataFrame, measurement)`` enabling the
-    InfluxDB-compatible ``GET /query?q=...`` endpoint."""
+    ``query_runner(influxql_str) -> (DataFrame, measurement, group_tags)``
+    enabling the InfluxDB-compatible ``GET``/``POST /query?q=...``
+    endpoint: the response carries one series per distinct combination of
+    the ``group_tags`` columns' values (one untagged series when empty)."""
     lock = threading.Lock()
 
     class Handler(BaseHTTPRequestHandler):
@@ -218,28 +211,29 @@ def serve(
 
 
 def make_query_runner(spark):
-    """``query_runner`` over the session's temp views: parses the InfluxQL
-    string once for the measurement name + GROUP BY tags, then translates
-    via :func:`riot_graphs_spark.functions.influxql.influxql`.  Returns
-    ``(df, measurement, group_tags)`` — the tags drive the per-tag series
-    split in the wire response (InfluxDB emits one series per tag
+    """``query_runner`` over the session's temp views: translates each
+    statement via :func:`riot_graphs_spark.functions.influxql.influxql` and
+    returns ``(df, measurement, group_tags)``. The tags are read off the
+    translated frame — every column but ``time`` and the select items'
+    output names, when every item is a function call — so they include
+    what the translator adds (``GROUP BY *`` expanded to every tag, the
+    ``measurement`` tag of a ``FROM /regex/``). They drive the per-tag
+    series split in the wire response (InfluxDB emits one series per tag
     combination; Grafana's ``$tag_x`` aliasing reads it)."""
-    from riot_graphs_spark.functions.influxql import (
-        influxql,
-        parse_influxql,
-        parse_show,
-    )
+    from riot_graphs_spark.functions import influxql as iql
 
     def run(q: str):
-        shown = parse_show(q)
+        shown = iql.parse_show(q)
         if shown is not None:
             name = shown[1] or shown[0].lower().replace(" ", "_")
-            tags: list[str] = []
-        else:
-            parsed = parse_influxql(q)
-            name = parsed.measurement
-            tags = list(parsed.group_tags)
-        return influxql(spark, q), name, tags
+            return iql.influxql(spark, q), name, []
+        parsed = iql.parse_influxql(q)
+        df = iql.influxql(spark, q)
+        tags: list[str] = []
+        if all(i.func for i in parsed.items):
+            values = {"time", *(i.out for i in parsed.items)}
+            tags = [c for c in df.columns if c not in values]
+        return df, parsed.measurement, tags
 
     return run
 

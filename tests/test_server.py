@@ -219,7 +219,7 @@ def test_split_statements_respects_regex_matchers():
 
 def test_query_payload_marks_truncation_partial(spark, sf_dir):
     import server as srv
-    from server import _influx_payload_multi, make_query_runner
+    from server import _influx_results, make_query_runner
     from riot_graphs_spark.sources.tables import register_tables
 
     register_tables(spark, sf_dir)
@@ -227,18 +227,18 @@ def test_query_payload_marks_truncation_partial(spark, sf_dir):
     old = srv.QUERY_ROW_CAP
     srv.QUERY_ROW_CAP = 5
     try:
-        body = json.loads(
-            _influx_payload_multi(runner, "SELECT event_id FROM events LIMIT 100")
+        results = _influx_results(
+            runner, "SELECT event_id FROM events LIMIT 100", None
         )
-        series = body["results"][0]["series"][0]
+        series = results[0]["series"][0]
         assert len(series["values"]) == 5
         assert series["partial"] is True
-        assert body["results"][0]["partial"] is True
+        assert results[0]["partial"] is True
         # an un-truncated statement carries no partial flag
-        body2 = json.loads(
-            _influx_payload_multi(runner, "SELECT event_id FROM events LIMIT 3")
+        results2 = _influx_results(
+            runner, "SELECT event_id FROM events LIMIT 3", None
         )
-        assert "partial" not in body2["results"][0]["series"][0]
+        assert "partial" not in results2[0]["series"][0]
     finally:
         srv.QUERY_ROW_CAP = old
 
@@ -247,20 +247,24 @@ def test_query_endpoint_splits_series_per_tag_combination(spark, sf_dir):
     """InfluxDB emits one series object PER GROUP BY tag combination with
     the tag values in a "tags" dict (not flattened into columns) —
     Grafana's $tag_x alias-by-series panels consume exactly this shape
-    (r12 verdict item 5; closes the docs/INFLUXQL.md flatten deviation)."""
-    from server import _influx_payload_multi, make_query_runner
+    (r12 verdict item 5; closes the docs/INFLUXQL.md flatten deviation).
+    The tag set is the translated statement's: ``GROUP BY *`` expands to
+    every tag, ``FROM /regex/`` adds the ``measurement`` tag, and a
+    subquery's series is named after its inner measurement."""
+    import datetime as dt
+
+    from server import _influx_results, make_query_runner
     from riot_graphs_spark.sources.tables import register_tables
 
     register_tables(spark, sf_dir)
     runner = make_query_runner(spark)
-    body = json.loads(
-        _influx_payload_multi(
-            runner,
-            "SELECT count(value) AS n FROM events "
-            "GROUP BY time(1d), event_type ORDER BY time ASC",
-        )
+    results = _influx_results(
+        runner,
+        "SELECT count(value) AS n FROM events "
+        "GROUP BY time(1d), event_type ORDER BY time ASC",
+        None,
     )
-    series = body["results"][0]["series"]
+    series = results[0]["series"]
     assert len(series) > 1  # one per event_type, not one flattened table
     names = [s["tags"]["event_type"] for s in series]
     assert names == sorted(names)  # deterministic series order
@@ -272,12 +276,65 @@ def test_query_endpoint_splits_series_per_tag_combination(spark, sf_dir):
         assert len(s["values"]) >= 1
         assert s["values"][0][0].endswith("Z")
     # tagless GROUP BY time stays a single series with no tags object
-    body2 = json.loads(
-        _influx_payload_multi(
-            runner,
-            "SELECT count(value) AS n FROM events "
-            "GROUP BY time(1d) ORDER BY time ASC LIMIT 2",
-        )
+    results2 = _influx_results(
+        runner,
+        "SELECT count(value) AS n FROM events "
+        "GROUP BY time(1d) ORDER BY time ASC LIMIT 2",
+        None,
     )
-    s2 = body2["results"][0]["series"]
+    s2 = results2[0]["series"]
     assert len(s2) == 1 and "tags" not in s2[0]
+
+    # two small measurements of (ts, board, test, value)
+    day = dt.datetime(2024, 1, 1, 4)
+    rows_a = [
+        (day + dt.timedelta(days=d), b, t, float(d))
+        for d in range(2) for b in ("native", "iotlab-m3") for t in ("t1", "t2")
+    ]
+    schema = "ts timestamp, board string, test string, value double"
+    views = {"srv_sizes_a": rows_a, "srv_sizes_b": rows_a[:3]}
+    for name, rows in views.items():
+        spark.createDataFrame(rows, schema).createOrReplaceTempView(name)
+    try:
+        # GROUP BY time(1d), *: one series per (board, test) tag set
+        star = _influx_results(
+            runner,
+            "SELECT count(value) AS n FROM srv_sizes_a GROUP BY time(1d), *",
+            None,
+        )[0]
+        assert "error" not in star, star
+        tag_sets = [s["tags"] for s in star["series"]]
+        assert len(tag_sets) == 4
+        assert {(t["board"], t["test"]) for t in tag_sets} == {
+            (b, t) for b in ("native", "iotlab-m3") for t in ("t1", "t2")
+        }
+        for s in star["series"]:
+            assert s["columns"] == ["time", "n"] and len(s["values"]) == 2
+
+        # FROM /regex/: one series per matched measurement
+        rx = _influx_results(
+            runner,
+            "SELECT count(value) AS n FROM /^srv_sizes_/ GROUP BY time(1d)",
+            None,
+        )[0]
+        assert "error" not in rx, rx
+        assert [s["tags"] for s in rx["series"]] == [
+            {"measurement": "srv_sizes_a"}, {"measurement": "srv_sizes_b"}
+        ]
+        for s in rx["series"]:
+            assert s["columns"] == ["time", "n"]
+
+        # FROM (SELECT …): named after the inner measurement
+        sub = _influx_results(
+            runner,
+            "SELECT max(n) AS m FROM (SELECT count(value) AS n "
+            "FROM srv_sizes_a GROUP BY time(1d), board) GROUP BY time(1d)",
+            None,
+        )[0]
+        assert "error" not in sub, sub
+        assert [s["name"] for s in sub["series"]] == ["srv_sizes_a"]
+        assert sub["series"][0]["columns"] == ["time", "m"]
+        assert [v[1] for v in sub["series"][0]["values"]] == [2, 2]
+    finally:
+        for name in views:
+            spark.catalog.dropTempView(name)
