@@ -71,7 +71,8 @@ grids — identical to the hand-written operators in
 from __future__ import annotations
 
 import re
-from dataclasses import dataclass, field
+from dataclasses import dataclass, replace
+from functools import lru_cache
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
@@ -109,7 +110,15 @@ class InfluxQLError(ValueError):
     """Raised for queries outside the supported subset."""
 
 
-@dataclass
+#: Distinct statement texts whose parse is kept. Grafana re-sends the same
+#: panel text on every refresh, and the server's ``/query`` runner and
+#: :func:`influxql` both parse every statement the server answers.
+_PARSE_CACHE = 256
+
+
+# Parsed statements are frozen: parses are cached by text and shared by
+# every caller, so a translation must never rewrite one in place.
+@dataclass(frozen=True)
 class _Item:
     func: str | None  # None = bare field projection
     field: str
@@ -126,18 +135,18 @@ class _Item:
         return self.alias or (self.func if self.func else self.field)
 
 
-@dataclass
+@dataclass(frozen=True)
 class _Query:
-    items: list[_Item]
+    items: tuple[_Item, ...]
     measurement: str
     time_lo: tuple[str, object] | None = None  # (op, value)
     time_hi: tuple[str, object] | None = None
-    tag_conds: list[tuple[str, str, str]] = field(default_factory=list)
-    field_conds: list[tuple[str, str, float]] = field(default_factory=list)
+    tag_conds: tuple[tuple[str, str, str], ...] = ()
+    field_conds: tuple[tuple[str, str, float], ...] = ()
     uses_time_filter: bool = False
     group_interval_s: int | None = None
     group_offset_s: int = 0  # time(1d, 3h) — the reference's 03:00 anchor
-    group_tags: list[str] = field(default_factory=list)
+    group_tags: tuple[str, ...] = ()  # may hold "*": every tag
     fill: str | None = None  # "null" | "none" | "previous" | numeric string
     order_desc: bool | None = None
     limit: int | None = None
@@ -230,10 +239,11 @@ def _parse_item(raw: str) -> _Item:
         item = _parse_item(pm.group("base"))
         if item.func is None and item.field == "*":
             raise InfluxQLError("cannot apply arithmetic to *")
-        item.post = (pm.group("op"), float(pm.group("num")))
-        if alias:
-            item.alias = alias
-        return item
+        return replace(
+            item,
+            post=(pm.group("op"), float(pm.group("num"))),
+            alias=alias or item.alias,
+        )
     m = _ITEM_RE.match(body)
     if m:
         func = m.group("func").lower()
@@ -244,12 +254,12 @@ def _parse_item(raw: str) -> _Item:
                 raise InfluxQLError(
                     f"{func}() wraps an aggregate, e.g. {func}(mean(value))"
                 )
-            item = _Item(func, inner.field, None, alias, inner=inner)
+            arg = arg2 = unit_s = None
             if func in ("moving_average", "kaufmans_efficiency_ratio"):
                 if len(args) != 2:
                     raise InfluxQLError(f"{func}(agg(f), N) takes two args")
-                item.arg = _num(args[1], f"{func} window")
-                if item.arg < 1 or item.arg != int(item.arg):
+                arg = _num(args[1], f"{func} window")
+                if arg < 1 or arg != int(arg):
                     raise InfluxQLError(f"{func} window must be a positive int")
             elif func in (
                 "cumulative_sum", "difference", "non_negative_difference"
@@ -261,21 +271,23 @@ def _parse_item(raw: str) -> _Item:
                     raise InfluxQLError(
                         "holt_winters(agg(field), N, S) takes three args"
                     )
-                item.arg = _num(args[1], "holt_winters N")
-                if item.arg < 1 or item.arg != int(item.arg):
+                arg = _num(args[1], "holt_winters N")
+                if arg < 1 or arg != int(arg):
                     raise InfluxQLError("holt_winters N must be a positive int")
-                s = _num(args[2], "holt_winters S")
-                if s < 0 or s != int(s):
+                arg2 = _num(args[2], "holt_winters S")
+                if arg2 < 0 or arg2 != int(arg2):
                     raise InfluxQLError(
                         "holt_winters S must be a non-negative int "
                         "(seasonal pattern length; 0 = non-seasonal)"
                     )
-                item.arg2 = s
             elif len(args) == 2:
-                item.unit_s = _parse_duration(args[1])
+                unit_s = _parse_duration(args[1])
             elif len(args) != 1:
                 raise InfluxQLError(f"{func}() takes one or two args")
-            return item
+            return _Item(
+                func, inner.field, arg, alias, inner=inner, unit_s=unit_s,
+                arg2=arg2,
+            )
         if func in _SELECTOR_FUNCS:
             args = [a.strip() for a in m.group("args").split(",")]
             if len(args) != 2:
@@ -288,9 +300,8 @@ def _parse_item(raw: str) -> _Item:
             args = [a.strip() for a in m.group("args").split(",")]
             if len(args) not in (1, 2):
                 raise InfluxQLError("elapsed(field[, unit]) takes one or two args")
-            item = _Item(func, _unquote(args[0]), None, alias)
-            item.unit_ns = _parse_duration_ns(args[1]) if len(args) == 2 else 1
-            return item
+            unit_ns = _parse_duration_ns(args[1]) if len(args) == 2 else 1
+            return _Item(func, _unquote(args[0]), None, alias, unit_ns=unit_ns)
         if func == "distinct":
             args = [a.strip() for a in m.group("args").split(",")]
             if len(args) != 1:
@@ -320,9 +331,7 @@ def _parse_item(raw: str) -> _Item:
                 unit_s = 1
             else:
                 raise InfluxQLError("integral(field[, unit]) takes one or two args")
-            item = _Item(func, fld, None, alias)
-            item.unit_s = unit_s
-            return item
+            return _Item(func, fld, None, alias, unit_s=unit_s)
         elif len(args) != 1:
             raise InfluxQLError(f"{func}() takes one argument")
         return _Item(func, fld, arg, alias)
@@ -358,7 +367,15 @@ _FIELD_COND_RE = re.compile(
 _NOW_RE = re.compile(r"^now\(\)\s*(?:-\s*(?P<dur>\d+[smhdw]))?$", re.I)
 
 
+@lru_cache(maxsize=_PARSE_CACHE)
 def parse_influxql(q: str) -> _Query:
+    """Parse one SELECT statement; :class:`InfluxQLError` when it is
+    outside the subset. Cached by text: parsing is pure and the result is
+    frozen."""
+    return _parse_influxql(q)
+
+
+def _parse_influxql(q: str) -> _Query:
     tz = None
     tzm = re.search(r"\s+tz\(\s*'([^']+)'\s*\)\s*;?\s*$", q, re.I)
     if tzm:
@@ -398,27 +415,29 @@ def parse_influxql(q: str) -> _Query:
     # recognized as not-InfluxQL and callers can fall back to SQL
     if any(i.func for i in items) and any(not i.func for i in items):
         raise InfluxQLError("cannot mix aggregated and bare select items")
-    out = _Query(items=items, measurement=_unquote(m.group("from")))
-    out.tz = tz
-    out.subquery = sub
+    out: dict = {"tz": tz, "subquery": sub}
+    measurement = _unquote(m.group("from"))
     if sub is not None:
         # the inner text must itself parse; its measurement names the
         # outer statement's series (the placeholder is never user-visible)
-        out.measurement = parse_influxql(sub).measurement
+        measurement = parse_influxql(sub).measurement
+    tag_conds: list[tuple[str, str, str]] = []
+    field_conds: list[tuple[str, str, float]] = []
+    group_tags: list[str] = []
 
     if m.group("where"):
         for raw in re.split(r"\s+AND\s+", m.group("where"), flags=re.I):
             raw = raw.strip()
             if raw == "$timeFilter":
-                out.uses_time_filter = True
+                out["uses_time_filter"] = True
                 continue
             tm = _TIME_COND_RE.match(raw)
             if tm:
                 op, expr = tm.group("op"), tm.group("expr").strip()
                 if op in (">", ">="):
-                    out.time_lo = (op, expr)
+                    out["time_lo"] = (op, expr)
                 elif op in ("<", "<="):
-                    out.time_hi = (op, expr)
+                    out["time_hi"] = (op, expr)
                 else:
                     raise InfluxQLError("time = <t> is not supported")
                 continue
@@ -430,11 +449,11 @@ def parse_influxql(q: str) -> _Query:
                     raise InfluxQLError(
                         f"{op} expects {'/regex/' if op in ('=~', '!~') else 'a quoted string'}: {raw!r}"
                     )
-                out.tag_conds.append((_unquote(gm.group("tag")), op, val))
+                tag_conds.append((_unquote(gm.group("tag")), op, val))
                 continue
             fm2 = _FIELD_COND_RE.match(raw)
             if fm2:
-                out.field_conds.append(
+                field_conds.append(
                     (
                         _unquote(fm2.group("f")),
                         fm2.group("op"),
@@ -448,7 +467,7 @@ def parse_influxql(q: str) -> _Query:
         group = m.group("group")
         fm = re.search(r"fill\(\s*([\w.]+)\s*\)\s*$", group, re.I)
         if fm:
-            out.fill = fm.group(1).lower()
+            out["fill"] = fm.group(1).lower()
             group = group[: fm.start()]
         for part in _split_top_level(group, ","):
             part = part.strip().rstrip(",").strip()
@@ -459,23 +478,25 @@ def parse_influxql(q: str) -> _Query:
                 part, re.I,
             )
             if tg:
-                out.group_interval_s = _parse_duration(tg.group(1))
+                out["group_interval_s"] = _parse_duration(tg.group(1))
                 if tg.group(2):
-                    out.group_offset_s = _parse_duration(tg.group(2))
+                    out["group_offset_s"] = _parse_duration(tg.group(2))
             else:
-                out.group_tags.append(_unquote(part))  # may be "*": all tags
+                group_tags.append(_unquote(part))  # may be "*": all tags
 
     if m.group("order"):
-        out.order_desc = bool(re.search(r"DESC", m.group("order"), re.I))
-    if m.group("limit"):
-        out.limit = int(m.group("limit"))
-    if m.group("offset"):
-        out.offset = int(m.group("offset"))
-    if m.group("slimit"):
-        out.slimit = int(m.group("slimit"))
-    if m.group("soffset"):
-        out.soffset = int(m.group("soffset"))
-    return out
+        out["order_desc"] = bool(re.search(r"DESC", m.group("order"), re.I))
+    for clause in ("limit", "offset", "slimit", "soffset"):
+        if m.group(clause):
+            out[clause] = int(m.group(clause))
+    return _Query(
+        items=tuple(items),
+        measurement=measurement,
+        tag_conds=tuple(tag_conds),
+        field_conds=tuple(field_conds),
+        group_tags=tuple(group_tags),
+        **out,
+    )
 
 
 def _time_value(expr: str, now) -> Column:
@@ -552,10 +573,16 @@ _SHOW_RE = re.compile(
 _NUMERIC_TYPES = {"int", "bigint", "smallint", "tinyint", "float", "double"}
 
 
+@lru_cache(maxsize=_PARSE_CACHE)
 def parse_show(q: str):
     """Parse a Grafana template-variable SHOW query; None if not one.
     Returns ``(what, from, key, key_is_regex)`` — ``key`` is the tag name
-    for ``WITH KEY =`` or the bare regex body for ``WITH KEY =~ /re/``."""
+    for ``WITH KEY =`` or the bare regex body for ``WITH KEY =~ /re/``.
+    Cached by text, like :func:`parse_influxql`."""
+    return _parse_show(q)
+
+
+def _parse_show(q: str):
     m = _SHOW_RE.match(q)
     if not m:
         return None
@@ -704,6 +731,9 @@ def influxql(
     if shown is not None:
         return _show(source, shown, ts_col)
     q = parse_influxql(query)
+    # the parse is shared (cached), so the tag list this translation grows
+    # (FROM /regex/'s measurement tag, GROUP BY *) is its own copy
+    group_tags = list(q.group_tags)
 
     if q.subquery is not None:
         # compile the inner query against the same source (its own WHERE /
@@ -738,10 +768,10 @@ def influxql(
             for p in parts[1:]:
                 df = df.unionByName(p)
             if any(i.func for i in q.items) and (
-                q.group_interval_s or q.group_tags
+                q.group_interval_s or group_tags
             ):
-                if "measurement" not in q.group_tags:
-                    q.group_tags.append("measurement")
+                if "measurement" not in group_tags:
+                    group_tags.append("measurement")
         else:
             df = source.table(q.measurement)
     else:
@@ -860,9 +890,9 @@ def influxql(
         if q.group_interval_s:
             raise InfluxQLError("distinct() under GROUP BY time is not supported")
         out = (
-            df.select(*q.group_tags, F.col(i.field).alias(i.out))
+            df.select(*group_tags, F.col(i.field).alias(i.out))
             .distinct()
-            .orderBy(*q.group_tags, i.out)
+            .orderBy(*group_tags, i.out)
         )
         return _row_tail(out)
 
@@ -870,8 +900,8 @@ def influxql(
         keys: list[Column] = []
         if q.group_interval_s:
             keys.append(_floor_ts(ts).alias("time"))
-        keys += [F.col(t) for t in q.group_tags]
-        key_names = (["time"] if q.group_interval_s else []) + list(q.group_tags)
+        keys += [F.col(t) for t in group_tags]
+        key_names = (["time"] if q.group_interval_s else []) + list(group_tags)
         # two partial-aggregable groupBys — count per value, then argmax;
         # InfluxDB's tie rule: the LOWEST value wins
         counted = df.groupBy(*keys, F.col(i.field)).agg(
@@ -897,19 +927,19 @@ def influxql(
             raise InfluxQLError("holt_winters() requires GROUP BY time(<d>)")
         from ..operators.timeseries import holt_forecast
 
-        keys = [_floor_ts(ts).alias("time")] + [F.col(t) for t in q.group_tags]
+        keys = [_floor_ts(ts).alias("time")] + [F.col(t) for t in group_tags]
         series = df.groupBy(*keys).agg(
             _agg_column(
                 _Item(i.inner.func, i.inner.field, i.inner.arg, i.out), ts_col
             )
         )
         fc = holt_forecast(
-            series, dims=list(q.group_tags), ts="time", value=i.out,
+            series, dims=list(group_tags), ts="time", value=i.out,
             horizon=int(i.arg), season_length=int(i.arg2 or 0),
         )
         out = fc.select(
             F.col("forecast_ts").alias("time"),
-            *q.group_tags,
+            *group_tags,
             F.col("forecast").alias(i.out),
         )
         if q.order_desc is not None:
@@ -917,7 +947,7 @@ def influxql(
         return _row_tail(out)
 
     if i.func in _SELECTOR_FUNCS:
-        part: list[Column] = [F.col(t) for t in q.group_tags]
+        part: list[Column] = [F.col(t) for t in group_tags]
         if q.group_interval_s:
             part.append(_floor_ts(ts))
         val = F.col(i.field).asc() if i.func == "bottom" else F.col(i.field).desc()
@@ -927,17 +957,17 @@ def influxql(
             .filter(F.col("_rn") <= int(i.arg))
             # selectors keep the POINT's own timestamp (InfluxDB semantics),
             # even under GROUP BY time()
-            .select(ts.alias("time"), *q.group_tags, F.col(i.field).alias(i.out))
+            .select(ts.alias("time"), *group_tags, F.col(i.field).alias(i.out))
         )
         out = out.orderBy(
-            F.desc("time") if q.order_desc else F.asc("time"), *q.group_tags
+            F.desc("time") if q.order_desc else F.asc("time"), *group_tags
         )
         return _row_tail(out)
 
     if i.func == "elapsed":
         if q.group_interval_s:
             raise InfluxQLError("elapsed() is a raw transform, not GROUP BY time")
-        w = Window.partitionBy(*[F.col(t) for t in q.group_tags]).orderBy(ts)
+        w = Window.partitionBy(*[F.col(t) for t in group_tags]).orderBy(ts)
         us = F.unix_micros(ts.cast("timestamp"))
         out = (
             df.withColumn("_dns", (us - F.lag(us, 1).over(w)) * 1000)
@@ -945,7 +975,7 @@ def influxql(
             # integer `div` in ns space — exact on every engine
             .select(
                 ts.alias("time"),
-                *q.group_tags,
+                *group_tags,
                 F.expr(f"_dns div {int(i.unit_ns)}").alias(i.out),
             )
         )
@@ -956,7 +986,7 @@ def influxql(
     has_agg = any(i.func for i in q.items)
 
     if not has_agg:  # raw projection (the reference's readback shape)
-        if q.group_interval_s or q.group_tags:
+        if q.group_interval_s or group_tags:
             # InfluxDB rejects GROUP BY without an aggregate; silently
             # returning ungrouped raw rows would mask the user error
             raise InfluxQLError(
@@ -992,10 +1022,10 @@ def influxql(
 
     # Grafana's GROUP BY time($interval), * — expand * to every tag
     # (string) column of the measurement
-    if "*" in q.group_tags:
+    if "*" in group_tags:
         all_tags = _tag_keys(df, ts_col)
-        q.group_tags = [t for t in q.group_tags if t != "*"] + [
-            t for t in all_tags if t not in q.group_tags
+        group_tags = [t for t in group_tags if t != "*"] + [
+            t for t in all_tags if t not in group_tags
         ]
 
     # integral(field[, unit]): trapezoid areas need consecutive-point lags —
@@ -1004,7 +1034,7 @@ def influxql(
     integral_items = [i for i in q.items if i.func == "integral"]
     integral_aggs: dict[int, Column] = {}
     if integral_items:
-        part: list[Column] = [F.col(t) for t in q.group_tags]
+        part: list[Column] = [F.col(t) for t in group_tags]
         if q.group_interval_s:
             part.append(_floor_ts(ts))
         w_i = Window.partitionBy(*part).orderBy(ts)
@@ -1033,7 +1063,7 @@ def influxql(
     keys: list[Column] = []
     if q.group_interval_s:
         keys.append(_floor_ts(ts).alias("time"))
-    keys += [F.col(t) for t in q.group_tags]
+    keys += [F.col(t) for t in group_tags]
 
     out = df.groupBy(*keys).agg(*aggs) if keys else df.agg(*aggs)
 
@@ -1071,14 +1101,14 @@ def influxql(
                 ).alias("time")
             )
         )
-        if q.group_tags:
-            tags = df.select(*q.group_tags).distinct()
+        if group_tags:
+            tags = df.select(*group_tags).distinct()
             spine = spine.crossJoin(F.broadcast(tags))
-        out = spine.join(out, ["time", *q.group_tags], "left")
+        out = spine.join(out, ["time", *group_tags], "left")
         value_cols = [i.out for i in q.items]
         if q.fill == "previous":
             w = (
-                Window.partitionBy(*q.group_tags)
+                Window.partitionBy(*group_tags)
                 .orderBy("time")
                 .rowsBetween(Window.unboundedPreceding, 0)
             )
@@ -1090,12 +1120,12 @@ def influxql(
             # Two frames per series (prev/next anchor + its time), pure
             # column math — same shape as the native gap_fill_linear (G3).
             wp = (
-                Window.partitionBy(*q.group_tags)
+                Window.partitionBy(*group_tags)
                 .orderBy("time")
                 .rowsBetween(Window.unboundedPreceding, 0)
             )
             wn = (
-                Window.partitionBy(*q.group_tags)
+                Window.partitionBy(*group_tags)
                 .orderBy("time")
                 .rowsBetween(0, Window.unboundedFollowing)
             )
@@ -1120,7 +1150,7 @@ def influxql(
 
     window_items = [i for i in q.items if i.func in _WINDOW_FUNCS]
     if window_items:
-        w = Window.partitionBy(*q.group_tags).orderBy("time")
+        w = Window.partitionBy(*group_tags).orderBy("time")
         tsec = F.unix_timestamp(F.col("time"))
         for i in window_items:
             c = F.col(i.out)
@@ -1193,13 +1223,13 @@ def influxql(
 
     if q.order_desc is not None and q.group_interval_s:
         out = out.orderBy(F.desc("time") if q.order_desc else F.asc("time"))
-    if (q.slimit is not None or q.soffset) and q.group_tags:
+    if (q.slimit is not None or q.soffset) and group_tags:
         # SLIMIT/SOFFSET page SERIES (distinct tag sets), not rows; the
         # page of tag tuples is slimit-bounded → broadcast semi-join
-        tags = out.select(*q.group_tags).distinct().orderBy(*q.group_tags)
+        tags = out.select(*group_tags).distinct().orderBy(*group_tags)
         if q.soffset:
             tags = tags.offset(q.soffset)
         if q.slimit is not None:
             tags = tags.limit(q.slimit)
-        out = out.join(F.broadcast(tags), list(q.group_tags), "left_semi")
+        out = out.join(F.broadcast(tags), list(group_tags), "left_semi")
     return _row_tail(out)

@@ -20,7 +20,9 @@ sink's layout and upsert key:
 - The append costs four Spark jobs against an existing sink, whatever its
   size: one exchange-free pass caches the batch and observes its row count
   and dates, and the stored-key read lists and scans only the batch's own
-  ``p_date=`` directories, with a known schema (no inference job).
+  ``p_date=`` directories, with a known schema (no inference job). Whole-
+  sink readers (:func:`..sources.tables.load_table`) pass
+  :data:`SINK_SCHEMA` for the same reason.
 - Batching (reference ``batch_size=20``) is the file-sizing concern Spark
   already owns; writers emit one file per task, and
   :func:`compact_partitions` rewrites the small files appends accumulate.
@@ -35,8 +37,9 @@ from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import StructType
+from pyspark.sql.types import DateType, StructField, StructType
 
+from ..schemas import BUILD_SIZES
 from .fs import path_exists
 
 #: InfluxDB point key of a ``build_sizes`` row (reference ``rg.py:301-315``).
@@ -45,6 +48,12 @@ BUILD_SIZES_KEY = ["test", "board", "ts"]
 #: Sink layout: one directory per event date, so the per-batch merge and any
 #: time-ranged readback touch only the partitions they name.
 PARTITION_COL = "p_date"
+
+#: Read schema of the ``build_sizes`` sink: the rows :func:`merge_append`
+#: writes plus the partition column. Readers pass it, so no job infers it.
+SINK_SCHEMA = StructType(
+    [*BUILD_SIZES.fields, StructField(PARTITION_COL, DateType())]
+)
 
 
 def _date_partition(df: DataFrame) -> DataFrame:

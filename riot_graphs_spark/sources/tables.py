@@ -15,6 +15,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..session import apply_runtime_confs
+from .sinks import SINK_SCHEMA
 
 TABLE_NAMES = (
     "region",
@@ -35,6 +36,12 @@ DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Read one table; normalizes nanosecond parquet timestamps.
 
+    ``build_sizes`` is the sink ``/update`` writes
+    (:mod:`.sinks`): it is read with the sink's known schema,
+    :data:`.sinks.SINK_SCHEMA`, so re-pointing it runs no schema-inference
+    job. The driver tables are inferred, which the ``events.ts`` path below
+    needs.
+
     The driver writes ``events.ts`` as parquet TIMESTAMP(NANOS), which Spark's
     vectorized reader rejects. With ``spark.sql.legacy.parquet.nanosAsLong``
     the column arrives as LongType nanoseconds; ``ts div 1000`` (integer
@@ -43,7 +50,10 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     matching what DuckDB/pandas see.
     """
     apply_runtime_confs(spark)
-    df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    path = f"{sf_dir}/{name}.parquet"
+    if name == "build_sizes":
+        return spark.read.schema(SINK_SCHEMA).parquet(path)
+    df = spark.read.parquet(path)
     if name == "events" and dict(df.dtypes).get("ts") == "bigint":
         # Keep the raw nanos column (`_ts_ns`): predicates on the *derived*
         # ts can't reach the parquet scan (Catalyst won't invert

@@ -7,7 +7,12 @@ Deliberately OUTSIDE the engine package: the engine stays a library; this is
 the ops-facing shell. Uses only stdlib ``http.server`` (no Flask in the
 container). ``/update`` runs one availableNow streaming pass and reports the
 number of NEW rows ingested by that call (reference ``rg.py:156`` returns
-the delta, not the sink total); a no-op refresh reports 0.
+the delta, not the sink total); a no-op refresh reports 0. The stream's plan
+is built on the first ``/update`` and reused by every later one, and each
+call logs one JSON progress record
+(:func:`riot_graphs_spark.streaming.ingest.incremental_refresh`).
+``/query`` statements are parsed once per distinct text: the runner and the
+translator share the cached parse.
 
 Run: ``python server.py --landing DIR --sink DIR --checkpoint DIR
 [--host H] [--port P]``. Updates are serialized with a lock — concurrent
@@ -219,7 +224,8 @@ def make_query_runner(spark):
     what the translator adds (``GROUP BY *`` expanded to every tag, the
     ``measurement`` tag of a ``FROM /regex/``). They drive the per-tag
     series split in the wire response (InfluxDB emits one series per tag
-    combination; Grafana's ``$tag_x`` aliasing reads it)."""
+    combination; Grafana's ``$tag_x`` aliasing reads it). Parses are cached
+    by text, so the runner's parse is the one ``influxql()`` reuses."""
     from riot_graphs_spark.functions import influxql as iql
 
     def run(q: str):

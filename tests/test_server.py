@@ -338,3 +338,56 @@ def test_query_endpoint_splits_series_per_tag_combination(spark, sf_dir):
     finally:
         for name in views:
             spark.catalog.dropTempView(name)
+
+
+def test_query_runner_parses_each_statement_once(spark, monkeypatch):
+    """A /query statement is parsed once, by text, and shared by the runner
+    and the translator: a batch of distinct statements costs one real parse
+    each, and re-sending it (a Grafana refresh) costs none. Translating
+    ``GROUP BY *`` leaves the shared parse as written."""
+    import datetime as dt
+
+    from server import _influx_results, make_query_runner
+    from riot_graphs_spark.functions import influxql as iql
+
+    real = {"select": 0, "show": 0}
+
+    def counted(kind, fn):
+        def wrapper(q):
+            real[kind] += 1
+            return fn(q)
+
+        return wrapper
+
+    monkeypatch.setattr(
+        iql, "_parse_influxql", counted("select", iql._parse_influxql)
+    )
+    monkeypatch.setattr(iql, "_parse_show", counted("show", iql._parse_show))
+    iql.parse_influxql.cache_clear()
+    iql.parse_show.cache_clear()
+
+    day = dt.datetime(2024, 1, 1, 4)
+    rows = [(day + dt.timedelta(days=d), b, float(d))
+            for d in range(2) for b in ("native", "esp32")]
+    spark.createDataFrame(
+        rows, "ts timestamp, board string, value double"
+    ).createOrReplaceTempView("srv_parse_m")
+    star = "SELECT count(value) AS n FROM srv_parse_m GROUP BY time(1d), *"
+    batch = (
+        f"{star}; SELECT last(value) AS v FROM srv_parse_m GROUP BY board; "
+        "SHOW TAG VALUES FROM srv_parse_m WITH KEY = board"
+    )
+    runner = make_query_runner(spark)
+    try:
+        first = _influx_results(runner, batch, None)
+        assert all("error" not in r for r in first), first
+        assert real == {"select": 2, "show": 3}
+        again = _influx_results(runner, batch, None)
+        assert all("error" not in r for r in again), again
+        assert real == {"select": 2, "show": 3}
+        assert [len(r["series"]) for r in first] == [2, 2, 1]
+        assert iql.parse_influxql(star).group_tags == ("*",)
+    finally:
+        spark.catalog.dropTempView("srv_parse_m")
+        iql.parse_influxql.cache_clear()
+        iql.parse_show.cache_clear()

@@ -5,20 +5,22 @@ from __future__ import annotations
 
 import datetime
 import json
+import logging
 import pathlib
 import uuid
 
 import pytest
 from pyspark.sql import functions as F
-from pyspark.sql.types import DateType, StructField, StructType
 
 from riot_graphs_spark.plans.riot import build_sizes_from_raw
 from riot_graphs_spark.schemas import BUILD_SIZES, SIZES_RAW
 from riot_graphs_spark.sources.sinks import (
     PARTITION_COL,
+    SINK_SCHEMA,
     _existing_keys,
     merge_append,
 )
+from riot_graphs_spark.streaming import ingest
 from riot_graphs_spark.streaming.ingest import (
     incremental_refresh,
     stream_events_rollup,
@@ -47,9 +49,6 @@ def dirs(tmp_path):
 
 
 KEY = ["test", "board", "ts"]
-_SINK_SCHEMA = StructType(
-    [*BUILD_SIZES.fields, StructField(PARTITION_COL, DateType())]
-)
 
 
 def _land_days(spark, dirs, days) -> None:
@@ -103,6 +102,136 @@ def test_incremental_refresh_and_idempotency(spark, dirs):
     }
 
 
+def _land_refresh_cycle(spark, dirs) -> list[int]:
+    """The three /update calls of ``test_incremental_refresh_and_idempotency``
+    (two new keys; nothing new; one new key beside a replayed one), with
+    the delta each call returns."""
+    landing = dirs["landing"]
+    b = {"bss": 1, "text": 2, "data": 3, "count": 0}
+    with open(f"{landing}/day1.json", "w") as f:
+        f.write(_doc(1, "sha1", {"native": b, "samr21-xpro": b}))
+    out = [incremental_refresh(spark, landing, dirs["sink"], dirs["ckpt"])]
+    out.append(incremental_refresh(spark, landing, dirs["sink"], dirs["ckpt"]))
+    with open(f"{landing}/day1b.json", "w") as f:
+        f.write(_doc(1, "sha1", {"native": b, "esp32": b}))
+    out.append(incremental_refresh(spark, landing, dirs["sink"], dirs["ckpt"]))
+    return out
+
+
+@pytest.fixture()
+def builds(monkeypatch):
+    """Count the stream plans ``incremental_refresh`` builds."""
+    calls: list[int] = []
+
+    def spy(df):
+        calls.append(1)
+        return build_sizes_from_raw(df)
+
+    monkeypatch.setattr(ingest, "build_sizes_from_raw", spy)
+    return calls
+
+
+def test_incremental_refresh_builds_the_stream_once(spark, dirs, builds):
+    """Calls on the same session and paths reuse one analyzed writer: three
+    /update calls build the stream plan once and return the same deltas as
+    a fresh build each time. A new checkpoint directory builds again."""
+    assert _land_refresh_cycle(spark, dirs) == [2, 0, 1]
+    assert len(builds) == 1
+
+    other = str(pathlib.Path(dirs["ckpt"]).parent / "ckpt2")
+    assert incremental_refresh(spark, dirs["landing"], dirs["sink"], other) == 0
+    assert len(builds) == 2
+
+
+def test_incremental_refresh_recovers_after_a_failed_batch(
+    spark, dirs, builds, monkeypatch
+):
+    """A call whose ``foreachBatch`` raises leaves its batch uncommitted and
+    no count behind: the next call on the kept writer reruns the batch and
+    returns its true delta."""
+    b = {"bss": 1, "text": 2, "data": 3, "count": 0}
+    with open(f"{dirs['landing']}/day1.json", "w") as f:
+        f.write(_doc(1, "sha1", {"native": b, "samr21-xpro": b}))
+
+    def failing(*_args):
+        raise RuntimeError("sink unavailable")
+
+    monkeypatch.setattr(ingest, "merge_append", failing)
+    with pytest.raises(Exception):
+        incremental_refresh(spark, dirs["landing"], dirs["sink"], dirs["ckpt"])
+    monkeypatch.setattr(ingest, "merge_append", merge_append)
+    assert incremental_refresh(spark, dirs["landing"], dirs["sink"], dirs["ckpt"]) == 2
+    assert incremental_refresh(spark, dirs["landing"], dirs["sink"], dirs["ckpt"]) == 0
+    assert len(builds) == 1
+
+
+def test_incremental_refresh_logs_one_record_per_call(spark, dirs, caplog):
+    """Every /update leaves one JSON record built from the pass's progress;
+    a call with nothing new ran no micro-batch and ingested no row."""
+    caplog.set_level(logging.INFO, logger=ingest.__name__)
+    deltas = _land_refresh_cycle(spark, dirs)
+    records = [
+        json.loads(r.getMessage())
+        for r in caplog.records
+        if r.name == ingest.__name__
+    ]
+    assert len(records) == 3
+    for rec, delta in zip(records, deltas):
+        assert set(rec) == {
+            "rows", "micro_batches", "input_rows", "duration_ms", "watermark"
+        }
+        assert set(rec["duration_ms"]) == {
+            "triggerExecution", "addBatch", "latestOffset", "walCommit",
+            "commitOffsets", "queryPlanning",
+        }
+        assert rec["rows"] == delta
+    first, noop, third = records
+    assert (first["micro_batches"], first["input_rows"]) == (1, 1)
+    assert first["duration_ms"]["addBatch"] > 0
+    assert (noop["micro_batches"], noop["rows"], noop["input_rows"]) == (0, 0, 0)
+    assert noop["duration_ms"]["addBatch"] == 0
+    # the third pass's watermark trails the first document's event time
+    # by WATERMARK (2 days)
+    assert third["micro_batches"] == 1
+    assert third["watermark"].startswith("2023-12-30T04:00:00")
+
+
+def test_sink_schema_is_what_update_writes(spark, dirs):
+    """The sink's read schema is the schema of the files /update writes: a
+    column change in ``build_sizes_from_raw`` fails here, not as a silently
+    null column in every re-pointed view. Field metadata is not compared:
+    the stream writes its watermark delay into the files' ``ts`` field."""
+    _land_days(spark, dirs, (1, 2))
+
+    def fields(schema):
+        return [(f.name, f.dataType, f.nullable) for f in schema.fields]
+
+    assert fields(SINK_SCHEMA) == fields(spark.read.parquet(dirs["sink"]).schema)
+
+
+def test_load_table_reads_the_sink_without_a_job(spark, tmp_path):
+    """Re-pointing ``build_sizes`` reads the sink with its known schema: no
+    Spark job infers it, and the rows are those of the inferred read."""
+    from riot_graphs_spark.sources.tables import load_table
+
+    tables = tmp_path / "tables"
+    landing = tmp_path / "landing"
+    landing.mkdir()
+    sink = str(tables / "build_sizes.parquet")
+    _land_days(
+        spark,
+        {"landing": str(landing), "sink": sink, "ckpt": str(tmp_path / "ckpt")},
+        (1, 2, 3),
+    )
+    df, jobs = _group_jobs(
+        spark,
+        f"repoint-{uuid.uuid4()}",
+        lambda: load_table(spark, str(tables), "build_sizes"),
+    )
+    assert jobs == 0
+    assert sorted(df.collect()) == sorted(spark.read.parquet(sink).collect())
+
+
 def test_merge_sink_read_is_partition_pruned(spark, dirs, tmp_path):
     """The anti-join's sink-side read must carry a partition filter on the
     batch's dates — at a 100-TB sink the merge touches only the named date
@@ -120,7 +249,7 @@ def test_merge_sink_read_is_partition_pruned(spark, dirs, tmp_path):
     }
 
     existing = _existing_keys(
-        spark, dirs["sink"], KEY, [datetime.date(2024, 1, 2)], _SINK_SCHEMA
+        spark, dirs["sink"], KEY, [datetime.date(2024, 1, 2)], SINK_SCHEMA
     )
     plan = existing._jdf.queryExecution().executedPlan().toString()
     assert "PartitionFilters" in plan and PARTITION_COL in plan
@@ -143,7 +272,7 @@ def test_stored_key_read_lists_only_batch_partitions(spark, dirs):
     with no directory yet is skipped, not read."""
     _land_days(spark, dirs, (1, 2, 3))
     existing = _existing_keys(
-        spark, dirs["sink"], KEY, [datetime.date(2024, 1, 2)], _SINK_SCHEMA
+        spark, dirs["sink"], KEY, [datetime.date(2024, 1, 2)], SINK_SCHEMA
     )
     roots = _file_index_roots(existing)
     assert len(roots) == 1
@@ -155,13 +284,13 @@ def test_stored_key_read_lists_only_batch_partitions(spark, dirs):
         dirs["sink"],
         KEY,
         [datetime.date(2024, 1, 3), datetime.date(2024, 1, 9)],
-        _SINK_SCHEMA,
+        SINK_SCHEMA,
     )
     assert [r.rsplit("/", 1)[-1] for r in _file_index_roots(both)] == [
         f"{PARTITION_COL}=2024-01-03"
     ]
     assert _existing_keys(
-        spark, dirs["sink"], KEY, [datetime.date(2024, 1, 9)], _SINK_SCHEMA
+        spark, dirs["sink"], KEY, [datetime.date(2024, 1, 9)], SINK_SCHEMA
     ) is None
 
 
