@@ -4,7 +4,7 @@ data-processing capabilities of bergzand/RIOT-graphs.
 Layout (see SURVEY.md for the operator inventory these modules implement):
 
 - :mod:`riot_graphs_spark.session`    — SparkSession factory with scale-ready defaults.
-- :mod:`riot_graphs_spark.schemas`    — explicit StructTypes for every table (schema-on-write).
+- :mod:`riot_graphs_spark.schemas`    — explicit StructTypes for the RIOT-domain tables.
 - :mod:`riot_graphs_spark.sources`    — batch/streaming readers for the parquet tables,
   JSON landing zones, and git-log text parsing (SURVEY §2.1).
 - :mod:`riot_graphs_spark.functions`  — scalar/array function library (SURVEY §2.2).
@@ -24,8 +24,8 @@ import sys as _sys
 def _register_pickle_by_value() -> None:
     """Ship UDF closures by value, not by module reference.
 
-    Pandas-UDF kernels defined in this package (multimodal decode, text wrap,
-    stateful streaming) are serialized with cloudpickle. By default cloudpickle
+    Pandas-UDF kernels defined in this package (multimodal decode, text
+    wrap) are serialized with cloudpickle. By default cloudpickle
     pickles functions from an importable module *by reference*, which breaks on
     executors whose Python workers don't have this repo on ``sys.path`` (an
     external driver that ``sys.path.insert``s the repo only in its own process,

@@ -28,9 +28,7 @@ This module computes the *same exact value* over plain LONG buffers:
    headroom: with per-term ``|v| ≤ 10^6`` at s = 9, ``|hi| ≤ 10^9`` and
    ``Σhi`` stays inside int64 up to ~9·10^9 rows *per group*; ``Σlo``
    up to ~9·10^12 rows.  (A single un-split long sum would cap at
-   ~9·10^3 fewer rows.)  For 10^12-row groups of money-scale terms use
-   ``parts3``/``value3`` — a base-10^6 three-way split with another
-   10^6× headroom.
+   ~9·10^3 fewer rows.)
 3. Recombine once per group in decimal and divide by 10^s exactly:
    ``(hi·10^6 + lo) :: decimal(28,0) × 1e-s :: decimal(s,s)`` →
    decimal(38,s), the same exact rational as the decimal-buffer sum,
@@ -138,7 +136,7 @@ def parts3_int(expr: Column, tag: str) -> list[Column]:
     # division to double, and past 2^53 the dividend `u - r1` is not
     # exactly representable — the truncating cast could come back off by
     # one anywhere in the advertised ~9·10^18 per-term range.  (parts /
-    # parts3 / parts_int keep the double form: their dividends are
+    # parts_int keep the double form: their dividends are
     # bounded ≤ 4·10^15 by _unscaled / the 10^12 contract, inside 2^53
     # where correctly-rounded division of an exact dividend is exact.)
     q1 = F.call_function("div", u - r1, F.lit(_M))
@@ -164,38 +162,3 @@ def value3_int(tag: str, out: str = "decimal(38,0)") -> Column:
         * F.lit(_M).cast("decimal(7,0)")
         + F.col(f"_fs_{tag}_lo").cast("decimal(30,0)")
     ).cast(out)
-
-
-def parts3(expr: Column, tag: str, scale: int = 9) -> list[Column]:
-    """Three-way split (3 long sums): 10^6× more per-group row headroom
-    than :func:`parts` — for money-scale terms in 10^12-row groups."""
-    u = _unscaled(expr, scale)
-    r1 = u % _M
-    q1 = ((u - r1) / F.lit(_M)).cast("long")
-    r2 = q1 % _M
-    q2 = ((q1 - r2) / F.lit(_M)).cast("long")
-    return [
-        F.sum(q2).alias(f"_fs_{tag}_h2"),
-        F.sum(r2).alias(f"_fs_{tag}_h1"),
-        F.sum(r1).alias(f"_fs_{tag}_lo"),
-    ]
-
-
-def value3(tag: str, scale: int = 9) -> Column:
-    """Reconstruct the exact sum (as double) from :func:`parts3`."""
-    total = (
-        (
-            F.col(f"_fs_{tag}_h2").cast("decimal(22,0)")
-            * F.lit(_M).cast("decimal(7,0)")
-            + F.col(f"_fs_{tag}_h1").cast("decimal(22,0)")
-        ).cast("decimal(28,0)")
-        * F.lit(_M).cast("decimal(7,0)")
-        + F.col(f"_fs_{tag}_lo").cast("decimal(28,0)")
-    ).cast("decimal(38,0)")
-    # (38,0)×(s,s) would overflow precision 38 (the allowPrecisionLoss
-    # scale-drop trap) — narrow to (28,0): Σ|unscaled| ≤ 10^27 for
-    # 10^12-row groups of money-scale terms, still exact.
-    total = total.cast("decimal(28,0)")
-    return (
-        total * F.expr(f"CAST(1e-{scale} AS DECIMAL({scale},{scale}))")
-    ).cast("double")

@@ -182,66 +182,6 @@ def asof_join_forward(
     return carried.filter(is_left).select(*left.columns, *out_payload)
 
 
-def asof_join_nearest(
-    left: DataFrame,
-    right: DataFrame,
-    on: str | Sequence[str],
-    left_ts: str = "ts",
-    right_ts: str = "ts",
-    right_payload: Sequence[str] = (),
-    suffix: str = "_asof",
-    tolerance_seconds: float | None = None,
-) -> DataFrame:
-    """Nearest as-of join: the right row (same key) whose timestamp is
-    CLOSEST to the left row's, in either direction; ties go to the backward
-    (earlier) candidate. ``tolerance_seconds`` nulls out matches farther
-    than the tolerance (pandas ``merge_asof(direction="nearest")``
-    semantics).
-
-    Both directional candidates come from two mirrored window passes over
-    ONE union and ONE shuffle — an equal-ts right row is captured by the
-    backward pass with distance 0, so the forward frame not seeing it is
-    irrelevant.
-    """
-    keys = [on] if isinstance(on, str) else list(on)
-    payload = list(right_payload) or [
-        c for c in right.columns if c not in (*keys, right_ts)
-    ]
-    unioned = _tagged_union(left, right, keys, left_ts, right_ts, payload, 0)
-    order = [F.col("_ts"), F.col("_side")]
-    wb = (
-        Window.partitionBy(*keys)
-        .orderBy(*order)
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    wf = (
-        Window.partitionBy(*keys)
-        .orderBy(*order)
-        .rowsBetween(0, Window.unboundedFollowing)
-    )
-    obs = F.when(F.col("_side") == 0, F.struct(F.col("_ts"), F.col("_payload")))
-    sec = lambda c: c.cast("timestamp").cast("double")  # noqa: E731  NTZ-safe
-    carried = (
-        unioned.withColumn("_b", F.last(obs, ignorenulls=True).over(wb))
-        .withColumn("_f", F.first(obs, ignorenulls=True).over(wf))
-        .filter(F.col("_side") == 1)
-    )
-    d_b = sec(F.col("_ts")) - sec(F.col("_b._ts"))
-    d_f = sec(F.col("_f._ts")) - sec(F.col("_ts"))
-    tol = F.lit(tolerance_seconds) if tolerance_seconds is not None else None
-    b_ok = F.col("_b").isNotNull() & ((d_b <= tol) if tol is not None else F.lit(True))
-    f_ok = F.col("_f").isNotNull() & ((d_f <= tol) if tol is not None else F.lit(True))
-    chosen = (
-        F.when(b_ok & (~f_ok | (d_b <= d_f)), F.col("_b._payload"))
-        .when(f_ok, F.col("_f._payload"))
-    )
-    picked = carried.withColumn("_chosen", chosen)
-    out_payload = [
-        F.col(f"_chosen.{c}").alias(f"{c}{suffix}") for c in payload
-    ]
-    return picked.select(*left.columns, *out_payload)
-
-
 def asof_join_interpolated(
     left: DataFrame,
     right: DataFrame,

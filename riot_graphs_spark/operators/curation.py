@@ -58,13 +58,6 @@ def redact_pii(text: Column | str) -> tuple[Column, Column]:
     return clean, n.cast("long")
 
 
-def redact_pii_df(
-    df: DataFrame, text_col: str = "text", out_col: str = "clean_text"
-) -> DataFrame:
-    clean, n = redact_pii(text_col)
-    return df.withColumn(out_col, clean).withColumn("n_redacted", n)
-
-
 # --------------------------------------------------------------------------
 # Benchmark-contamination check
 # --------------------------------------------------------------------------

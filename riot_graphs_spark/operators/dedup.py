@@ -1135,13 +1135,12 @@ def keep_best_per_cluster(
 
 def incremental_novel_docs(
     new_docs: DataFrame,
-    corpus_docs: DataFrame | None,
+    corpus_docs: DataFrame,
     id_col: str = "doc_id",
     text_col: str = "text",
     num_hashes: int = MINHASH_K,
     band_rows: int = MINHASH_BAND_ROWS,
     shingle_n: int = 3,
-    corpus_buckets: DataFrame | None = None,
 ) -> DataFrame:
     """Incremental (batch-vs-corpus) near-dup filter: the rows of
     ``new_docs`` that do NOT collide with any existing corpus document in
@@ -1155,27 +1154,13 @@ def incremental_novel_docs(
     on ``(band, band_key)`` that never expands pairs (a batch doc colliding
     with a million-doc boilerplate bucket contributes ONE semi-join hit,
     not a million rows), followed by a LEFT ANTI join back to the batch.
-    Cost is O(batch + corpus-scan); in production the corpus side is the
-    PRECOMPUTED band-bucket table appended on every accepted batch (write
-    it bucketed on band_key — sources/sinks.write_bucketed_table — and the
-    semi-join needs no shuffle at all), so each day pays O(batch), never
-    O(corpus).
+    Cost is O(batch + corpus-scan).
     """
-    if (corpus_docs is None) == (corpus_buckets is None):
-        raise ValueError(
-            "pass exactly one of corpus_docs (raw text, buckets computed "
-            "here) or corpus_buckets (the precomputed (band, band_key) "
-            "side table the steady-state pipeline maintains)"
-        )
     new_b = minhash_band_buckets(
         new_docs, id_col, text_col, num_hashes, band_rows, shingle_n
     )
-    old_b = (
-        corpus_buckets
-        if corpus_buckets is not None
-        else minhash_band_buckets(
-            corpus_docs, id_col, text_col, num_hashes, band_rows, shingle_n
-        )
+    old_b = minhash_band_buckets(
+        corpus_docs, id_col, text_col, num_hashes, band_rows, shingle_n
     )
     dup_ids = (
         new_b.join(old_b, ["band", "band_key"], "left_semi")
@@ -1329,43 +1314,6 @@ def repeated_span_ranges(
         )
         .drop("_island")
     )
-
-
-def lsh_tuning(
-    threshold: float,
-    num_hashes: int = MINHASH_K,
-) -> dict:
-    """Banding-parameter helper: for a target Jaccard ``threshold``, pick
-    the (bands, rows) factorization of ``num_hashes`` whose S-curve
-    threshold ``(1/b)^(1/r)`` sits closest to it, and report the collision
-    probability ``1 − (1 − s^r)^b`` at s = threshold ± 0.1 — the
-    false-negative/false-positive trade the banding choice encodes. Pure
-    arithmetic (use it to pick arguments for :func:`minhash_lsh_pairs`,
-    then MEASURE with the ``lsh_recall_vs_exact`` query)."""
-    if not 0 < threshold < 1:
-        raise ValueError("threshold must be in (0, 1)")
-    best = None
-    for rows in range(1, num_hashes + 1):
-        if num_hashes % rows:
-            continue
-        bands = num_hashes // rows
-        s_curve_thr = (1.0 / bands) ** (1.0 / rows)
-        cand = (abs(s_curve_thr - threshold), rows, bands, s_curve_thr)
-        if best is None or cand < best:
-            best = cand
-
-    def p_collide(s: float, r: int, b: int) -> float:
-        return 1.0 - (1.0 - s**r) ** b
-
-    _, rows, bands, s_thr = best
-    return {
-        "bands": bands,
-        "rows": rows,
-        "s_curve_threshold": round(s_thr, 4),
-        "p_at_threshold": round(p_collide(threshold, rows, bands), 4),
-        "p_below": round(p_collide(max(threshold - 0.1, 0.0), rows, bands), 4),
-        "p_above": round(p_collide(min(threshold + 0.1, 1.0), rows, bands), 4),
-    }
 
 
 # --------------------------------------------------------------------------

@@ -36,19 +36,6 @@ from pyspark.sql.types import (
     StructType,
 )
 
-#: A multimodal document: opaque payload + typed metadata. The metadata
-#: struct is what queries touch; the payload is only read inside decode.
-MEDIA_SCHEMA = StructType(
-    [
-        StructField("media_id", LongType()),
-        StructField("payload", BinaryType()),
-        StructField("media_type", StringType()),  # image|audio|video
-        StructField("width", IntegerType()),
-        StructField("height", IntegerType()),
-        StructField("duration_ms", LongType()),
-    ]
-)
-
 IMAGE_FEATURES_SCHEMA = StructType(
     [
         StructField("media_id", LongType()),
@@ -174,8 +161,10 @@ def audio_window_features(
 
 
 def media_from_documents(docs: DataFrame) -> DataFrame:
-    """Derive a deterministic MEDIA_SCHEMA table from the driver's
-    ``documents`` fixture (payload = UTF-8 bytes of the first 16 chars),
+    """Derive a deterministic media table — ``media_id``, binary
+    ``payload``, ``media_type`` (image|audio|video), ``width``, ``height``,
+    ``duration_ms`` — from the driver's ``documents`` fixture
+    (payload = UTF-8 bytes of the first 16 chars),
     so multimodal stages are exercised against driver data and remain
     oracle-checkable on the metadata columns."""
     return docs.select(
@@ -190,130 +179,6 @@ def media_from_documents(docs: DataFrame) -> DataFrame:
         (F.lit(32) + F.col("doc_id") % 97).cast("int").alias("width"),
         (F.lit(32) + F.col("doc_id") % 61).cast("int").alias("height"),
         F.col("n_chars").alias("duration_ms"),
-    )
-
-
-def synthetic_media(spark, n: int = 64) -> DataFrame:
-    """Deterministic in-memory media table for tests (payload = repeatable
-    bytes derived from the id)."""
-    rows = [
-        (
-            i,
-            bytes([(i * 7 + k) % 256 for k in range(16)]),
-            ["image", "audio", "video"][i % 3],
-            64 + i % 32,
-            64 + i % 16,
-            1000 * (1 + i % 10),
-        )
-        for i in range(n)
-    ]
-    return spark.createDataFrame(rows, MEDIA_SCHEMA)
-
-
-MEDIA_HEADER_SCHEMA = StructType(
-    [
-        StructField("media_id", LongType()),
-        StructField("detected_format", StringType()),
-        StructField("detected_width", IntegerType()),
-        StructField("detected_height", IntegerType()),
-        StructField("sample_rate", IntegerType()),
-        StructField("channels", IntegerType()),
-    ]
-)
-
-
-def _sniff_header(payload: bytes | None) -> tuple:
-    """REAL (non-stub) container-header parser — pure stdlib byte peeking,
-    no codec needed: PNG IHDR (fixed offsets), JPEG SOF marker scan, GIF
-    logical screen, ISO-BMFF ftyp (mp4), MP3 frame-sync/ID3, WAV RIFF fmt
-    chunk. Returns (format, width, height, sample_rate, channels);
-    unknown/truncated payloads classify as ('unknown', None, ...) rather
-    than raising — a corrupt-header census is one of this stage's jobs.
-
-    This is the pass a 100 TB media pipeline runs FIRST: dimensions/sample
-    rates for filtering and partition planning at ~ two hundred bytes read
-    per object, before any full decode is scheduled.
-    """
-    import struct
-
-    if not payload:
-        return ("unknown", None, None, None, None)
-    b = payload
-    # PNG: 8-byte signature, then IHDR length+type, width/height at 16/20
-    if b[:8] == b"\x89PNG\r\n\x1a\n" and len(b) >= 24 and b[12:16] == b"IHDR":
-        w, h = struct.unpack(">II", b[16:24])
-        return ("png", w, h, None, None)
-    # JPEG: SOI then marker segments; SOF0-SOF15 (excluding DHT/DAC/RST)
-    if b[:2] == b"\xff\xd8":
-        i = 2
-        while i + 9 <= len(b):
-            if b[i] != 0xFF:
-                break
-            marker = b[i + 1]
-            if 0xC0 <= marker <= 0xCF and marker not in (0xC4, 0xC8, 0xCC):
-                h, w = struct.unpack(">HH", b[i + 5 : i + 9])
-                return ("jpeg", w, h, None, None)
-            seg_len = struct.unpack(">H", b[i + 2 : i + 4])[0]
-            i += 2 + seg_len
-        return ("jpeg", None, None, None, None)  # truncated before SOF
-    # GIF: 6-byte signature, logical-screen width/height LE at 6/8
-    if b[:6] in (b"GIF87a", b"GIF89a") and len(b) >= 10:
-        w, h = struct.unpack("<HH", b[6:10])
-        return ("gif", w, h, None, None)
-    # ISO-BMFF (mp4/mov/...): size + 'ftyp' box; dims live in moov, which
-    # a header peek deliberately does not chase
-    if len(b) >= 12 and b[4:8] == b"ftyp":
-        return ("mp4", None, None, None, None)
-    # MP3: ID3 tag or an MPEG-1 Layer III frame sync (sample rate +
-    # channel mode decode straight from the frame header)
-    if b[:3] == b"ID3":
-        return ("mp3", None, None, None, None)
-    if len(b) >= 4 and b[0] == 0xFF and (b[1] & 0xE0) == 0xE0:
-        version = (b[1] >> 3) & 0x3  # 3 = MPEG-1
-        layer = (b[1] >> 1) & 0x3  # 1 = Layer III
-        if version == 3 and layer == 1:
-            rate = {0: 44100, 1: 48000, 2: 32000}.get((b[2] >> 2) & 0x3)
-            channels = 1 if (b[3] >> 6) & 0x3 == 3 else 2
-            return ("mp3", None, None, rate, channels)
-        return ("mp3", None, None, None, None)
-    # WAV: RIFF container, fmt chunk holds channels + sample rate
-    if b[:4] == b"RIFF" and len(b) >= 36 and b[8:12] == b"WAVE":
-        i = 12
-        while i + 8 <= len(b):
-            cid = b[i : i + 4]
-            clen = struct.unpack("<I", b[i + 4 : i + 8])[0]
-            if cid == b"fmt " and i + 16 <= len(b):
-                channels = struct.unpack("<H", b[i + 10 : i + 12])[0]
-                rate = struct.unpack("<I", b[i + 12 : i + 16])[0]
-                return ("wav", None, None, rate, channels)
-            i += 8 + clen + (clen % 2)
-        return ("wav", None, None, None, None)
-    return ("unknown", None, None, None, None)
-
-
-def sniff_media_headers(media: DataFrame) -> DataFrame:
-    """Container-header census over a media table: detected format and
-    dimensions/audio params parsed from the payload's FIRST bytes
-    (:func:`_sniff_header` — real parsing, not a stub). Narrow mapInPandas
-    over the scan; the heavy payload column never shuffles and is dropped
-    from the output immediately."""
-
-    def sniff_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            parsed = pdf["payload"].map(_sniff_header)
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"],
-                    "detected_format": parsed.map(lambda t: t[0]),
-                    "detected_width": parsed.map(lambda t: t[1]),
-                    "detected_height": parsed.map(lambda t: t[2]),
-                    "sample_rate": parsed.map(lambda t: t[3]),
-                    "channels": parsed.map(lambda t: t[4]),
-                }
-            )
-
-    return media.select("media_id", "payload").mapInPandas(
-        sniff_batches, schema=MEDIA_HEADER_SCHEMA
     )
 
 

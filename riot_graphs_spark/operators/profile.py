@@ -463,9 +463,7 @@ def heavy_hitters_grouped(
     """Per-group EXACT frequent items — :func:`heavy_hitters` with the
     Misra-Gries guarantee applied WITHIN each group (a time window, a
     source, a shard): every key whose count strictly exceeds ``min_share``
-    of its group's rows. This is the windowed/trending form — the batch
-    twin of ``streaming.stateful.stream_heavy_hitters`` (which keeps the
-    same per-bucket MG summaries as state).
+    of its group's rows. This is the windowed/trending form.
 
     Phase 1 keeps one capped MG summary PER GROUP seen in the partition
     (memory O(groups-in-partition × capacity) — groups are time windows or

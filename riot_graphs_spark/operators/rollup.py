@@ -211,8 +211,7 @@ def upsert_partials(
     ``fresh`` REPLACE their rows in ``existing``; all other rows pass
     through.  Replaying the same day twice is a no-op; a corrected day
     overwrites.  One anti-join on the grain key — at scale, write the result
-    with a dynamic partition overwrite of only the touched date partitions
-    (as ``sources/sinks.merge_upsert_partitions`` does).
+    with a dynamic partition overwrite of only the touched date partitions.
     """
     keys = ["bucket", *dims]
     kept = existing.join(fresh.select(*keys).distinct(), keys, "left_anti")
@@ -391,53 +390,3 @@ def quantile_sketch_percentiles(
         )
         aggs.append(interp.alias(f"p{int(q)}"))
     return c.groupBy(*keys).agg(*aggs)
-
-
-def quantile_sketch_compact(
-    partials: DataFrame,
-    dims: Sequence[str],
-    grain: str = "week",
-    k: int = 64,
-) -> DataFrame:
-    """Re-compact merged states back to ``k`` anchors at ``grain`` — the
-    KLL compaction step that keeps state CONSTANT-size across a rollup
-    hierarchy (day → week → month → year: without this, month-from-days
-    state is 31 × k points; with it, every level is k).  Anchor ``i`` of
-    the compacted sketch is the lower weighted quantile at mid-rank
-    ``(2i+1)/(2k)`` of the merged point set; each level adds ≤ ``1/(2k)``
-    rank error (k = 64 → 0.8% per level).  Output schema matches
-    :func:`quantile_sketch_partials`, so the same merge/read functions
-    apply at every level.
-    """
-    from pyspark.sql import Window
-
-    if k < 2:
-        raise ValueError("need k >= 2 anchors")
-    keys = ["bucket", *dims]
-    pts = _weighted_points(partials, dims, grain)
-    w_cum = (
-        Window.partitionBy(*keys)
-        .orderBy("v")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    w_tot = Window.partitionBy(*keys)
-    c = pts.withColumn("cum", F.sum("w").over(w_cum)).withColumn(
-        "tot", F.sum("w").over(w_tot)
-    )
-    bounds = _arcsine_bounds(k)
-    aggs = [F.round(F.max("tot")).cast("bigint").alias("n")]
-    for i in range(k):
-        # re-sample at the same arcsine mid-ranks the partials use, so the
-        # compacted state honors the grid _weighted_points re-derives
-        mid = (bounds[i] + bounds[i + 1]) / 2.0
-        aggs.append(
-            F.min(
-                F.when(F.col("cum") >= F.lit(mid) * F.col("tot"), F.col("v"))
-            ).alias(f"_a{i}")
-        )
-    g = c.groupBy(*keys).agg(*aggs)
-    return g.select(
-        "bucket", *dims,
-        F.array(*[F.col(f"_a{i}") for i in range(k)]).alias("anchors"),
-        "n",
-    )

@@ -490,43 +490,6 @@ def bpe_pair_counts(
     return pairs.orderBy(F.desc("n"), F.asc("pair")).limit(top_n)
 
 
-def _merge_adjacent(sym: Column, a: str, b: str) -> Column:
-    """Greedy left-to-right merge of adjacent symbols ``(a, b)`` into one —
-    standard BPE application semantics ('aaa' + merge(a,a) → ['aa','a']) —
-    as a pure Catalyst ``aggregate`` over the symbol array (state: output
-    array + one lookbehind symbol). No UDF: the merge runs inside
-    whole-stage codegen on every engine thread."""
-    return F.aggregate(
-        sym,
-        F.struct(
-            F.array().cast("array<string>").alias("out"),
-            F.lit(None).cast("string").alias("prev"),
-        ),
-        lambda acc, x: F.when(
-            acc["prev"].isNotNull()
-            & (acc["prev"] == F.lit(a))
-            & (x == F.lit(b)),
-            F.struct(
-                F.concat(acc["out"], F.array(F.lit(a + b))).alias("out"),
-                F.lit(None).cast("string").alias("prev"),
-            ),
-        ).otherwise(
-            F.struct(
-                F.when(
-                    acc["prev"].isNotNull(),
-                    F.concat(acc["out"], F.array(acc["prev"])),
-                )
-                .otherwise(acc["out"])
-                .alias("out"),
-                x.alias("prev"),
-            )
-        ),
-        lambda acc: F.when(
-            acc["prev"].isNotNull(), F.concat(acc["out"], F.array(acc["prev"]))
-        ).otherwise(acc["out"]),
-    )
-
-
 def _batch_compatible(
     ranked: list[tuple[str, str]], limit: int
 ) -> list[tuple[str, str]]:
@@ -581,7 +544,7 @@ def bpe_train(
     '(?<= )a b(?= )', 'ab')`` — Java's ``replaceAll`` scans left-to-right,
     resumes after each replacement, and the zero-width boundary assertions
     never consume the separating spaces, so successive matches are exactly
-    the greedy non-overlapping adjacent merge of :func:`_merge_adjacent`
+    the greedy left-to-right non-overlapping adjacent merge
     ('a a a' → 'aa a'; tokens are ``[a-z0-9]+`` so neither pattern nor
     replacement needs escaping).  The array form re-analyzed and
     re-compiled a ~60-node aggregate-HOF tree per round (~0.2 s/round of
@@ -651,85 +614,6 @@ def bpe_train(
         # lineage cut, half the per-round jobs (r13-opt).
         vocab = vocab.withColumn("sym", col).localCheckpoint(eager=False)
     return merges
-
-
-def bpe_apply(
-    docs: DataFrame,
-    merges: list[tuple[str, str]],
-    text_col: str = "text",
-    out_col: str = "bpe_tokens",
-    codegen_threshold: int = 64,
-) -> DataFrame:
-    """Apply learned BPE merges to every document: words → char symbols →
-    merges in learned order → flat token array. Both paths are row-local
-    (zero shuffles):
-
-    - ≤ ``codegen_threshold`` merges: one Catalyst expression per merge —
-      whole-stage-codegen, no Python. Right for small experimental vocabs.
-    - above it: a production tokenizer's merge table (30k+ rules) would
-      explode the expression tree, so the rules ship to an Arrow-batched
-      ``mapInPandas`` worker instead and apply per word with the standard
-      rank-priority loop. Identical output (parity-tested).
-    """
-    if len(merges) <= codegen_threshold:
-        # NULL text encodes to [] (matching the pandas path), not NULL
-        safe = F.coalesce(F.col(text_col), F.lit(""))
-        word_syms = F.transform(tokens(safe), lambda w: F.split(w, ""))
-
-        def apply_all(ws: Column) -> Column:
-            out = ws
-            for a, b in merges:
-                out = F.transform(out, lambda s: _merge_adjacent(s, a, b))
-            return F.flatten(out)
-
-        return docs.withColumn(out_col, apply_all(word_syms))
-
-    import re as _re
-    from collections.abc import Iterator
-
-    import pandas as pd
-
-    from pyspark.sql.types import ArrayType, StringType, StructField, StructType
-
-    rank = {pair: i for i, pair in enumerate(merges)}
-    token_re = _re.compile(r"[a-z0-9]+")
-
-    def encode_word(word: str) -> list[str]:
-        sym = list(word)
-        # standard BPE application: repeatedly merge the lowest-rank
-        # adjacent pair present (equivalent to replaying merges in order)
-        while len(sym) > 1:
-            best_i, best_r = -1, None
-            for i in range(len(sym) - 1):
-                r = rank.get((sym[i], sym[i + 1]))
-                if r is not None and (best_r is None or r < best_r):
-                    best_i, best_r = i, r
-            if best_r is None:
-                break
-            sym[best_i : best_i + 2] = [sym[best_i] + sym[best_i + 1]]
-        return sym
-
-    out_schema = StructType(
-        [*docs.schema.fields, StructField(out_col, ArrayType(StringType()))]
-    )
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cache: dict[str, list[str]] = {}
-
-        def encode_doc(text) -> list[str]:
-            out: list[str] = []
-            for w in token_re.findall((text or "").lower()):
-                if w not in cache:
-                    cache[w] = encode_word(w)
-                out.extend(cache[w])
-            return out
-
-        for pdf in batches:
-            pdf = pdf.copy()
-            pdf[out_col] = pdf[text_col].map(encode_doc)
-            yield pdf
-
-    return docs.mapInPandas(run, schema=out_schema)
 
 
 _UNIGRAM_LOGP_FLOOR = -100.0  # unseen-symbol fallback, far below any real piece
@@ -804,8 +688,8 @@ def unigram_train(
        character (coverage).
     2. EM ×``n_iter``: E-step Viterbi-segments each vocabulary word under
        the current piece log-probs (an Arrow-batched ``mapInPandas`` over
-       the word table — the model rides in the closure like
-       :func:`bpe_apply`'s rank table; per-word DP is row-local) and
+       the word table — the model rides in the closure; per-word DP is
+       row-local) and
        accumulates freq-weighted piece counts; M-step renormalizes counts
        into probabilities on the driver (vocab-sized collect, the same
        bounded-state class as ``bpe_train``'s top-pairs collect).
@@ -916,58 +800,6 @@ def unigram_train(
         ((p, c / tot) for p, c in counts.items()),
         key=lambda pc: (-pc[1], pc[0]),
     )
-
-
-def unigram_apply(
-    docs: DataFrame,
-    pieces: list[tuple[str, float]],
-    text_col: str = "text",
-    out_col: str = "unigram_tokens",
-) -> DataFrame:
-    """Apply a trained unigram model: words → Viterbi best segmentation
-    under the piece log-probs → flat token array.  Row-local (zero
-    shuffles): the model ships in the ``mapInPandas`` closure exactly like
-    :func:`bpe_apply`'s big-vocab path, with a per-word memo cache per
-    Arrow batch.  Unseen characters fall back to themselves at the floor
-    log-prob, so every word round-trips (``concat(pieces) == word`` — the
-    property test)."""
-    import re as _re
-    from collections.abc import Iterator as _Iterator
-
-    import pandas as pd
-    from pyspark.sql.types import (
-        ArrayType,
-        StringType,
-        StructField,
-        StructType,
-    )
-
-    import math as _m
-
-    logp = {p: _m.log(pr) for p, pr in pieces if pr > 0}
-    max_len = max((len(p) for p in logp), default=1)
-    token_re = _re.compile(r"[a-z0-9]+")
-    out_schema = StructType(
-        [*docs.schema.fields, StructField(out_col, ArrayType(StringType()))]
-    )
-
-    def run(batches: _Iterator[pd.DataFrame]) -> _Iterator[pd.DataFrame]:
-        cache: dict[str, list[str]] = {}
-
-        def encode_doc(text) -> list[str]:
-            out: list[str] = []
-            for w in token_re.findall((text or "").lower()):
-                if w not in cache:
-                    cache[w] = _viterbi_segment(w, logp, max_len)
-                out.extend(cache[w])
-            return out
-
-        for pdf in batches:
-            pdf = pdf.copy()
-            pdf[out_col] = pdf[text_col].map(encode_doc)
-            yield pdf
-
-    return docs.mapInPandas(run, schema=out_schema)
 
 
 def lexical_diversity(docs: DataFrame, text_col: str = "text") -> DataFrame:

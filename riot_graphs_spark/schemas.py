@@ -1,24 +1,19 @@
-"""Explicit StructType schemas for every table the engine touches.
+"""Explicit StructType schemas for the RIOT-domain tables — the reference's
+own data model (SURVEY §1.1, FIXTURES.md §A).
 
 The reference has no schema system — types live in constructor signatures and
 ``int()`` casts (reference ``riot_graphs/rg.py:292-299, 319-320``); InfluxDB
-applies schema-on-write. We invert that: every table has a fixed, explicit
-schema here, and readers always pass it (schema inference on a 100 TB landing
-zone is a full extra scan).
-
-Two groups:
-
-- ``RIOT-domain`` — the reference's own data model (SURVEY §1.1, FIXTURES.md §A).
-- ``DRIVER`` — the synthetic TPC-H-ish tables under /root/testdata (FIXTURES.md §B).
+applies schema-on-write. We invert that: these tables have a fixed, explicit
+schema here, and their readers pass it (schema inference on a 100 TB landing
+zone is a full extra scan). The driver's synthetic tables are read with
+inference (``sources.tables.load_table``), which the nanosecond
+``events.ts`` path needs; only their ``events.props`` JSON payload has a
+schema here.
 """
 
 from __future__ import annotations
 
 from pyspark.sql.types import (
-    ArrayType,
-    DoubleType,
-    FloatType,
-    IntegerType,
     LongType,
     MapType,
     StringType,
@@ -94,120 +89,5 @@ PR_EVENTS = StructType(
     ]
 )
 
-# --------------------------------------------------------------------------
-# Driver-provided synthetic tables (FIXTURES.md §B)
-# --------------------------------------------------------------------------
-
-REGION = StructType(
-    [StructField("r_regionkey", IntegerType()), StructField("r_name", StringType())]
-)
-
-NATION = StructType(
-    [
-        StructField("n_nationkey", IntegerType()),
-        StructField("n_name", StringType()),
-        StructField("n_regionkey", IntegerType()),
-    ]
-)
-
-CUSTOMER = StructType(
-    [
-        StructField("c_custkey", LongType()),
-        StructField("c_name", StringType()),
-        StructField("c_nationkey", IntegerType()),
-        StructField("c_acctbal", DoubleType()),
-        StructField("c_mktsegment", StringType()),
-    ]
-)
-
-SUPPLIER = StructType(
-    [
-        StructField("s_suppkey", LongType()),
-        StructField("s_name", StringType()),
-        StructField("s_nationkey", IntegerType()),
-        StructField("s_acctbal", DoubleType()),
-    ]
-)
-
-PART = StructType(
-    [
-        StructField("p_partkey", LongType()),
-        StructField("p_name", StringType()),
-        StructField("p_brand", StringType()),
-        StructField("p_type", StringType()),
-        StructField("p_size", IntegerType()),
-        StructField("p_retailprice", DoubleType()),
-    ]
-)
-
-ORDERS = StructType(
-    [
-        StructField("o_orderkey", LongType()),
-        StructField("o_custkey", LongType()),
-        StructField("o_orderstatus", StringType()),
-        StructField("o_totalprice", DoubleType()),
-        StructField("o_orderdate", TimestampType()),
-        StructField("o_orderpriority", StringType()),
-    ]
-)
-
-LINEITEM = StructType(
-    [
-        StructField("l_orderkey", LongType()),
-        StructField("l_partkey", LongType()),
-        StructField("l_suppkey", LongType()),
-        StructField("l_linenumber", IntegerType()),
-        StructField("l_quantity", DoubleType()),
-        StructField("l_extendedprice", DoubleType()),
-        StructField("l_discount", DoubleType()),
-        StructField("l_tax", DoubleType()),
-        StructField("l_returnflag", StringType()),
-        StructField("l_linestatus", StringType()),
-        StructField("l_shipdate", TimestampType()),
-    ]
-)
-
-EVENTS = StructType(
-    [
-        StructField("event_id", LongType()),
-        StructField("ts", TimestampType()),
-        StructField("user_id", LongType()),
-        StructField("event_type", StringType()),
-        StructField("value", DoubleType()),
-        StructField("props", StringType()),  # JSON string → from_json (P1 analogue)
-    ]
-)
-
 #: Schema for the ``events.props`` JSON payload.
 EVENT_PROPS = StructType([StructField("k", LongType())])
-
-DOCUMENTS = StructType(
-    [
-        StructField("doc_id", LongType()),
-        StructField("text", StringType()),
-        StructField("lang", StringType()),
-        StructField("source", StringType()),
-        StructField("n_chars", LongType()),
-    ]
-)
-
-EMBEDDINGS = StructType(
-    [
-        StructField("vec_id", LongType()),
-        StructField("embedding", ArrayType(FloatType())),
-        StructField("label", IntegerType()),
-    ]
-)
-
-DRIVER_TABLES: dict[str, StructType] = {
-    "region": REGION,
-    "nation": NATION,
-    "customer": CUSTOMER,
-    "supplier": SUPPLIER,
-    "part": PART,
-    "orders": ORDERS,
-    "lineitem": LINEITEM,
-    "events": EVENTS,
-    "documents": DOCUMENTS,
-    "embeddings": EMBEDDINGS,
-}

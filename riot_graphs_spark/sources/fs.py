@@ -1,14 +1,11 @@
 """Filesystem primitives for non-transactional parquet sinks.
 
-Plain-parquet upsert/compaction paths need two things a transactional table
-format would give for free: an explicit "does the sink exist yet" probe
+The plain-parquet keyed append needs what a transactional table format
+would give for free: an explicit "does the partition exist yet" probe
 (instead of catching every read error as first-batch — a corrupt footer or
-permission failure must FAIL the batch, not silently reset state), and an
-atomic-ish directory swap for read-modify-write state tables (write to a
-temp dir, then delete+rename, so a mid-write executor loss can never
-destroy the only copy of the state).
+permission failure must FAIL the batch, not silently reset state).
 
-Both go through Hadoop's ``FileSystem`` API so they work on any scheme the
+It goes through Hadoop's ``FileSystem`` API so it works on any scheme the
 cluster mounts (HDFS, s3a, abfss, local), not just the local FS.
 """
 
@@ -28,18 +25,3 @@ def path_exists(spark: SparkSession, path_str: str) -> bool:
     """True iff *path_str* exists on its filesystem (any Hadoop scheme)."""
     fs, path = _fs_and_path(spark, path_str)
     return bool(fs.exists(path))
-
-
-def replace_dir(spark: SparkSession, tmp_path: str, final_path: str) -> None:
-    """Swap *tmp_path* into place at *final_path* (delete + rename).
-
-    The rename is atomic on HDFS/local; on object stores it is a copy, but
-    the invariant that matters is preserved everywhere: the new state is
-    fully written and durable before the old state is touched.
-    """
-    fs, final = _fs_and_path(spark, final_path)
-    _, tmp = _fs_and_path(spark, tmp_path)
-    if fs.exists(final):
-        fs.delete(final, True)
-    if not fs.rename(tmp, final):
-        raise IOError(f"rename {tmp_path} -> {final_path} failed")

@@ -1,5 +1,5 @@
-"""Per-ingest drift monitoring: PSI of every arriving micro-batch against a
-recorded baseline snapshot, appended to a monitor table.
+"""Per-ingest drift scoring: a recorded baseline snapshot that each
+arriving batch is scored against.
 
 The operational loop the reference's nightly cron implies (each ingest run
 should answer "does today's data look like the corpus I calibrated on?",
@@ -9,23 +9,19 @@ drift operators:
 1. calibrate ONCE: :func:`record_baseline` computes the baseline's fixed
    equi-depth bin edges (``profile.equi_depth_edges`` — equal mass per bin
    maximizes PSI sensitivity) and its bin counts, and stores both;
-2. monitor FOREVER: :func:`drift_monitor_writer` wraps a ``foreachBatch``
-   sink that bins each micro-batch and scores its counts against the
-   stored baseline (``profile.psi_from_counts``), appending one row per
-   (batch, group) to the monitor table — the dashboard reads that table,
-   never the raw stream.
+2. score every batch: bin it and compare its counts against the stored
+   baseline (``profile.psi_from_counts``), or its values against the
+   stored CDF (:func:`ks_against_baseline_cdf`).
 
 Scale: the baseline table is (groups × bins) rows — broadcast-sized
-forever; each batch pays one count aggregate over ITSELF (O(batch)), and
-the monitor table grows one row per group per batch.  Alert thresholds are
-the standard PSI bands (0.1 drifting / 0.25 shifted).
+forever; each batch pays one count aggregate over ITSELF (O(batch)).
+Alert thresholds are the standard PSI bands (0.1 drifting / 0.25 shifted).
 """
 
 from __future__ import annotations
 
 from collections.abc import Sequence
 
-from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -50,8 +46,7 @@ def record_baseline(
     implicit wall-clock, so re-runs are reproducible) to stamp the
     artifact with WHEN it was calibrated: a baseline recorded before an
     upstream shift silently degrades into scoring drift against drift,
-    and the stamp is what lets the monitor flag its own staleness
-    (:func:`drift_monitor_writer` ``max_age_sec``).
+    and the stamp is what lets a reader flag the baseline as stale.
 
     Output: ``(*group_cols, bin int, n bigint[, recorded_at timestamp])``.
     """
@@ -95,7 +90,7 @@ def record_baseline_cdf(
     Edges are the first distinct values to reach each new 1/nbins CDF
     level (≤ nbins rows per group, fewer under heavy ties; the max value
     is always recorded, so both CDFs end at exactly 1).  Scoring a batch
-    against this step-restricted CDF (:func:`drift_monitor_writer`)
+    against this step-restricted CDF (:func:`ks_against_baseline_cdf`)
     yields a D within 1/nbins of the full two-sample D — the standard
     quantile-sketch bound; size ``nbins`` to the alarm resolution needed.
 
@@ -105,7 +100,7 @@ def record_baseline_cdf(
 
     ``recorded_at`` (ISO timestamp string, explicit — see
     :func:`record_baseline`) stamps the artifact with its calibration
-    time for the monitor's staleness flag.
+    time, so a reader can flag the baseline as stale.
 
     Output: ``(*group_cols, _v <value type>, cum bigint, n bigint
     [, recorded_at timestamp])``.
@@ -189,224 +184,3 @@ def ks_against_baseline_cdf(
         0, ["_na", "_nb"]
     )
     return ks_from_counts(joined, gcols)
-
-
-def drift_monitor_writer(
-    baseline_counts: DataFrame,
-    monitor_path: str,
-    value_col: str,
-    lo: float,
-    hi: float,
-    nbuckets: int,
-    group_cols: Sequence[str] = (),
-    baseline_cdf: DataFrame | None = None,
-    max_age_sec: float | None = None,
-):
-    """Return a ``foreachBatch`` function: bins each micro-batch under the
-    SAME fixed clamp bins, scores its counts against the recorded baseline
-    counts with :func:`..operators.profile.psi_from_counts`, and appends
-    ``(batch_id, *group_cols, n_a, n_b, psi[, ks_d])`` to ``monitor_path``
-    (``n_a`` = baseline rows, ``n_b`` = batch rows).
-
-    When ``baseline_cdf`` (a stored :func:`record_baseline_cdf` artifact)
-    is supplied, each row also carries ``ks_d`` — the bin-free
-    cross-check: PSI with fixed bins is blind to a shift WITHIN a bin;
-    KS against the recorded CDF edges sees it (to within the artifact's
-    1/nbins resolution).  Alert on either.
-
-    The stored baselines are consumed AS COUNTS — never re-read from raw
-    data nor re-inflated to rows, so a billion-row calibration set costs
-    the monitor (groups × bins + groups × edges) join rows per batch.
-    Idempotency note: a replayed batch re-appends its monitor rows;
-    readers take the last row per (batch_id, group) or dedup on write
-    with the usual partition-overwrite sink.
-
-    Staleness guard: when the baseline artifact carries a
-    ``recorded_at`` stamp (:func:`record_baseline` ``recorded_at=…``),
-    every monitor row also carries ``baseline_recorded_at`` — a
-    calibration recorded BEFORE an upstream shift silently degrades into
-    scoring drift against drift, and the stamp is the audit trail.  Pass
-    ``max_age_sec`` to additionally emit ``baseline_stale`` (scoring
-    wall-clock minus the stamp exceeds the age budget) so the dashboard
-    alerts on "this monitor needs re-calibration" as loudly as on drift
-    itself.  ``max_age_sec`` without a stamped baseline is a
-    configuration error and raises immediately.
-    """
-    from ..operators.profile import psi_from_counts
-
-    gcols = list(group_cols)
-    recorded_at = None
-    if "recorded_at" in baseline_counts.columns:
-        # constant by construction; one bounded driver read at setup
-        recorded_at = baseline_counts.agg(
-            F.min("recorded_at")
-        ).collect()[0][0]
-        baseline_counts = baseline_counts.drop("recorded_at")
-    elif max_age_sec is not None:
-        raise ValueError(
-            "max_age_sec needs a baseline recorded with recorded_at=…"
-        )
-    base = baseline_counts.withColumnRenamed("n", "_na")
-
-    def _score(batch_df: DataFrame, epoch_id: int) -> None:
-        batch_counts = record_baseline(
-            batch_df, value_col, lo, hi, nbuckets, gcols
-        ).withColumnRenamed("n", "_nb")
-        joined = base.join(
-            batch_counts, [*gcols, "bin"], "full_outer"
-        ).fillna(0, ["_na", "_nb"])
-        report = psi_from_counts(joined, gcols)
-        if baseline_cdf is not None:
-            ks = ks_against_baseline_cdf(
-                baseline_cdf, batch_df, value_col, gcols
-            ).select(*gcols, "ks_d")
-            report = (
-                report.join(ks, gcols, "full_outer")
-                if gcols
-                else report.crossJoin(F.broadcast(ks))
-            )
-        report = report.withColumn("batch_id", F.lit(int(epoch_id)))
-        if recorded_at is not None:
-            stamp = F.lit(recorded_at).cast("timestamp")
-            report = report.withColumn("baseline_recorded_at", stamp)
-            if max_age_sec is not None:
-                age = (
-                    F.unix_timestamp(F.current_timestamp())
-                    - F.unix_timestamp(stamp)
-                ).cast("double")
-                report = report.withColumn(
-                    "baseline_stale", age > F.lit(float(max_age_sec))
-                )
-        report.write.mode("append").parquet(monitor_path)
-
-    return _score
-
-
-def record_baseline_mean(
-    df: DataFrame,
-    value_col: str,
-    group_cols: Sequence[str] = (),
-    recorded_at=None,
-) -> DataFrame:
-    """The Page–Hinkley calibration artifact: per-group baseline MEAN
-    (exact decimal sum / count) plus row count — the μ₀ the cumulative
-    detector drifts against.  Store it next to the count/CDF artifacts;
-    pass ``recorded_at`` for the staleness trail."""
-    gcols = list(group_cols)
-    agg = df.filter(F.col(value_col).isNotNull()).groupBy(*gcols).agg(
-        (
-            F.sum(F.col(value_col).cast("decimal(28,12)")).cast(
-                "double"
-            )
-            / F.count(F.lit(1)).cast("double")
-        ).alias("mu0"),
-        F.count(F.lit(1)).alias("n"),
-    )
-    if recorded_at is not None:
-        agg = agg.withColumn(
-            "recorded_at", F.lit(recorded_at).cast("timestamp")
-        )
-    return agg
-
-
-def ph_monitor_writer(
-    baseline_mean: DataFrame,
-    monitor_path: str,
-    value_col: str,
-    delta: float,
-    lam: float,
-    group_cols: Sequence[str] = (),
-):
-    """Return a ``foreachBatch`` function running a Page–Hinkley
-    CUMULATIVE mean-shift detector beside the per-batch PSI/KS of
-    :func:`drift_monitor_writer`: PSI/KS score each batch in isolation,
-    so a slow creep that never moves one batch far enough stays
-    invisible — PH accumulates it.
-
-    Over the sequence of BATCH MEANS x̄_b (one observation per
-    micro-batch, per group):
-
-        U_b = U_{b−1} + (x̄_b − μ₀ − δ)        (δ = tolerated drift)
-        alarm when U_b − min_{i≤b} U_i > λ
-
-    State is exactly (U, min U) per group — O(groups), carried IN the
-    monitor table itself: each batch reads the latest state row per
-    group with ``batch_id < epoch`` (so a REPLAYED epoch recomputes
-    from the same predecessor instead of double-applying — exactly-once
-    state under at-least-once foreachBatch), then appends
-    ``(batch_id, *group_cols, n_b, batch_mean, ph_u, ph_min,
-    ph_alarm)``.  The state read is a bounded monitor-table scan (rows =
-    batches × groups; compact/TTL the monitor like any sink).
-    """
-    gcols = list(group_cols)
-    base = baseline_mean.select(
-        *gcols, F.col("mu0").alias("_mu0")
-    )
-
-    def _score(batch_df: DataFrame, epoch_id: int) -> None:
-        spark = batch_df.sparkSession
-        means = (
-            batch_df.filter(F.col(value_col).isNotNull())
-            .groupBy(*gcols)
-            .agg(
-                (
-                    F.sum(
-                        F.col(value_col).cast("decimal(28,12)")
-                    ).cast("double")
-                    / F.count(F.lit(1)).cast("double")
-                ).alias("batch_mean"),
-                F.count(F.lit(1)).alias("n_b"),
-            )
-        )
-        # Only a missing/empty monitor path (the first batch) may reset
-        # Page-Hinkley state to zero; any OTHER read failure must propagate
-        # and fail the batch — silently resetting cumulative state would
-        # suppress exactly the slow-creep alarm the detector exists for.
-        try:
-            prior = spark.read.parquet(monitor_path).filter(
-                F.col("batch_id") < F.lit(int(epoch_id))
-            )
-            w = Window.partitionBy(*gcols).orderBy(
-                F.col("batch_id").desc()
-            ) if gcols else Window.orderBy(F.col("batch_id").desc())
-            state = (
-                prior.withColumn("_rk", F.row_number().over(w))
-                .filter(F.col("_rk") == 1)
-                .select(
-                    *gcols,
-                    F.col("ph_u").alias("_u0"),
-                    F.col("ph_min").alias("_m0"),
-                )
-            )
-        except AnalysisException:
-            state = None
-        joined = means.join(F.broadcast(base), gcols) if gcols else (
-            means.crossJoin(F.broadcast(base))
-        )
-        if state is not None:
-            joined = (
-                joined.join(F.broadcast(state), gcols, "left")
-                if gcols
-                else joined.crossJoin(F.broadcast(state))
-            )
-        else:
-            joined = joined.withColumn("_u0", F.lit(None)).withColumn(
-                "_m0", F.lit(None)
-            )
-        u = (
-            F.coalesce(F.col("_u0"), F.lit(0.0))
-            + (F.col("batch_mean") - F.col("_mu0") - F.lit(delta))
-        )
-        mn = F.least(F.coalesce(F.col("_m0"), F.lit(0.0)), u)
-        out = joined.select(
-            F.lit(int(epoch_id)).alias("batch_id"),
-            *gcols,
-            "n_b",
-            F.round("batch_mean", 9).alias("batch_mean"),
-            F.round(u, 9).alias("ph_u"),
-            F.round(mn, 9).alias("ph_min"),
-            ((u - mn) > F.lit(lam)).alias("ph_alarm"),
-        )
-        out.write.mode("append").parquet(monitor_path)
-
-    return _score

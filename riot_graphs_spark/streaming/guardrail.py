@@ -7,9 +7,8 @@ the ramp incident it exists for.  This module wires the batch A/B
 machinery (:func:`~..operators.evaluation.srm_check`'s chi-square
 goodness-of-fit, :func:`~..operators.evaluation.ab_proportion_test`'s
 pooled two-proportion z, :func:`~..operators.evaluation.mcnemar_test`'s
-discordant-pair z) into ``foreachBatch`` as a RUNNING contingency state —
-the :func:`~.drift.drift_monitor_writer` / ``stream_heavy_hitters``
-pattern: per-batch counts land in a tiny ledger, every batch re-derives
+discordant-pair z) into ``foreachBatch`` as a RUNNING contingency state:
+per-batch counts land in a tiny ledger, every batch re-derives
 the cumulative contingency table from the ledger (bounded: one row per
 micro-batch — never event-sized state), and appends one verdict row to
 the monitor.
@@ -19,9 +18,9 @@ ledger row for its ``batch_id``; the cumulative read deduplicates per
 ``batch_id`` (max of each count — the counts of a replayed batch are
 equal by construction), so totals and verdicts are unchanged under
 at-least-once delivery.  Monitor readers take the last row per
-``batch_id`` exactly as with the drift monitor.
+``batch_id``.
 
-Staleness guard (same contract as the drift monitor): pass
+Staleness guard: pass
 ``recorded_at`` (the experiment-design registration stamp) and every
 verdict row carries ``design_recorded_at``; add ``max_age_sec`` and rows
 also carry ``design_stale`` so a dashboard alerts on "this experiment
@@ -36,15 +35,10 @@ driver loop anywhere.
 
 from __future__ import annotations
 
-from collections.abc import Mapping, Sequence
-
-from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..operators.evaluation import Z95, _norm_p_two_sided
-
-__all__ = ["ab_guardrail_writer", "quantile_guardrail_writer"]
 
 
 def ab_guardrail_writer(
@@ -276,131 +270,6 @@ def ab_guardrail_writer(
                 ).cast("double")
                 report = report.withColumn(
                     "design_stale", age > F.lit(float(max_age_sec))
-                )
-        report.write.mode("append").parquet(report_path)
-
-    return _guard
-
-
-def quantile_guardrail_writer(
-    monitor_path: str,
-    value_col: str = "value",
-    ts_col: str = "ts",
-    dims: Sequence[str] = (),
-    k: int = 64,
-    accuracy: int = 10000,
-    percentiles: Sequence[int] = (50, 95, 99),
-    alarm_above: Mapping[int, float] | None = None,
-    recorded_at: str | None = None,
-    max_age_sec: float | None = None,
-):
-    """Return a ``foreachBatch`` function that maintains RUNNING percentile
-    guardrails from mergeable quantile-sketch state — "p99 latency must
-    stay under X" evaluated every micro-batch WITHOUT ever re-scanning
-    past values (the r11 batch sketch,
-    :func:`~..operators.rollup.quantile_sketch_partials`, folded into the
-    ledger-row discipline the A/B guardrail above uses).
-
-    Per micro-batch:
-
-    1. ONE bounded aggregate over the batch produces its day-grain sketch
-       states (``k`` weighted anchors per (day, dims) group — GK sketch
-       underneath, so executor memory stays bounded no matter how large
-       a batch group is), appended to ``ledger/`` with the ``batch_id``.
-    2. The cumulative read merges ALL ledger states (weighted-point union
-       — associative, O(n_batches × groups × k) state rows, never raw
-       values) and reads interpolated percentiles per ``dims`` group.
-    3. One verdict row per (batch, group) lands in ``report/`` with the
-       cumulative n / percentiles and, per ``alarm_above`` entry
-       ``{percentile: ceiling}``, a ``breach_pNN`` flag plus the overall
-       ``breach`` disjunction.
-
-    Replay idempotency: a re-delivered micro-batch re-appends ledger rows
-    for its ``batch_id``; the cumulative read takes one state per
-    (batch_id, bucket, dims) — ``max`` of the anchor array, a
-    deterministic pick — so merged percentiles are unchanged under
-    at-least-once delivery.  Staleness stamps follow the A/B guardrail's
-    contract (``recorded_at`` = the guardrail-config registration stamp;
-    ``max_age_sec`` without it raises).
-
-    100 TB posture: per-trigger cost is O(batch) for the sketch + one
-    reduce over the ledger's constant-size states; no per-value state,
-    no raw-row rescan, no driver loop.  Compact an old monitor with
-    :func:`~..operators.rollup.quantile_sketch_compact` if n_batches
-    grows unbounded.
-    """
-    from ..operators.rollup import (
-        quantile_sketch_partials,
-        quantile_sketch_percentiles,
-    )
-
-    if max_age_sec is not None and recorded_at is None:
-        raise ValueError("max_age_sec needs a config stamp (recorded_at=…)")
-    alarms = {int(p): float(v) for p, v in (alarm_above or {}).items()}
-    pcts = sorted({*map(int, percentiles), *alarms})
-    dims = list(dims)
-    ledger_path = f"{monitor_path}/ledger"
-    report_path = f"{monitor_path}/report"
-
-    def _guard(batch_df: DataFrame, epoch_id: int) -> None:
-        spark = batch_df.sparkSession
-        partial = quantile_sketch_partials(
-            batch_df,
-            dims=dims,
-            ts=ts_col,
-            value=value_col,
-            grain="day",
-            k=k,
-            accuracy=accuracy,
-        ).select(F.lit(int(epoch_id)).alias("batch_id"), "*")
-        partial.write.mode("append").parquet(ledger_path)
-
-        try:
-            ledger = spark.read.parquet(ledger_path)
-        except AnalysisException:
-            return  # nothing landed yet (all-NULL first batch)
-        states = (
-            ledger.groupBy("batch_id", "bucket", *dims)
-            .agg(F.max("anchors").alias("anchors"), F.max("n").alias("n"))
-            # collapse the time axis: the guardrail reads the ALL-DATA
-            # percentiles; (batch, day) states are just finer partials
-            # and the weighted-point union merges them regardless
-            .withColumn("bucket", F.to_timestamp(F.lit("1970-01-01")))
-        )
-        n_batches = states.select(
-            F.count_distinct("batch_id").alias("nb")
-        )
-        cum = quantile_sketch_percentiles(
-            states, dims=dims, grain="day", percentiles=pcts
-        ).drop("bucket")
-        report = cum.crossJoin(F.broadcast(n_batches)).select(
-            F.lit(int(epoch_id)).alias("batch_id"),
-            F.col("nb").cast("long").alias("n_batches"),
-            *dims,
-            F.col("n_rows").cast("long").alias("n_rows"),
-            *[F.round(f"p{p}", 9).alias(f"p{p}") for p in pcts],
-        )
-        breach_cols = [
-            (F.col(f"p{p}") > F.lit(v)).alias(f"breach_p{p}")
-            for p, v in sorted(alarms.items())
-        ]
-        if breach_cols:
-            report = report.select("*", *breach_cols)
-            overall = None
-            for p in sorted(alarms):
-                c = F.coalesce(F.col(f"breach_p{p}"), F.lit(False))
-                overall = c if overall is None else (overall | c)
-            report = report.withColumn("breach", overall)
-        if recorded_at is not None:
-            stamp = F.lit(recorded_at).cast("timestamp")
-            report = report.withColumn("config_recorded_at", stamp)
-            if max_age_sec is not None:
-                age = (
-                    F.unix_timestamp(F.current_timestamp())
-                    - F.unix_timestamp(stamp)
-                ).cast("double")
-                report = report.withColumn(
-                    "config_stale", age > F.lit(float(max_age_sec))
                 )
         report.write.mode("append").parquet(report_path)
 

@@ -39,8 +39,7 @@ from __future__ import annotations
 import json
 import logging
 
-from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
+from pyspark.sql import SparkSession
 
 from ..plans.riot import build_sizes_from_raw
 from ..schemas import SIZES_RAW
@@ -123,29 +122,3 @@ def _progress_record(rows: int, progress) -> dict:
         },
         "watermark": marks[-1] if marks else None,
     }
-
-
-def stream_events_rollup(
-    spark: SparkSession,
-    events_stream: DataFrame,
-    watermark: str = "1 hour",
-    window_len: str = "1 hour",
-):
-    """G1-in-streaming: watermarked tumbling-window rollup per event_type —
-    the InfluxQL ``GROUP BY time(1h)`` continuous query. State is bounded by
-    the watermark (O4); emits finalized windows in append mode."""
-    return (
-        events_stream.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", window_len).alias("w"), "event_type")
-        .agg(
-            F.count("*").alias("n"),
-            F.sum(F.col("value").cast("decimal(18,2)")).cast("double").alias("sum_value"),
-        )
-        .select(
-            F.col("w.start").alias("bucket_start"),
-            F.col("w.end").alias("bucket_end"),
-            "event_type",
-            "n",
-            "sum_value",
-        )
-    )

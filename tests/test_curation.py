@@ -11,9 +11,14 @@ from pyspark.sql import functions as F
 from riot_graphs_spark.operators.curation import (
     contamination_check,
     pack_sequences,
-    redact_pii_df,
+    redact_pii,
     stratified_hash_sample,
 )
+
+
+def _redacted(df):
+    clean, n = redact_pii("text")
+    return df.select("doc_id", "text", clean.alias("clean_text"), n.alias("n_redacted"))
 
 
 def test_redact_pii_all_types_counted_once(spark):
@@ -29,7 +34,7 @@ def test_redact_pii_all_types_counted_once(spark):
             Row(doc_id=2, text="nothing sensitive here 42"),
         ]
     )
-    out = {r.doc_id: r for r in redact_pii_df(df).collect()}
+    out = {r.doc_id: r for r in _redacted(df).collect()}
     assert (
         out[1].clean_text
         == "mail <EMAIL> host <IP> ssn <SSN> call <PHONE> ok"
@@ -42,7 +47,7 @@ def test_redact_pii_email_digits_not_double_counted(spark):
     # the email's local part looks phone-ish; the email rule must consume
     # it first so later rules see only the <EMAIL> tag
     df = spark.createDataFrame([Row(doc_id=1, text="x 555-867-5309@example.com y")])
-    row = redact_pii_df(df).collect()[0]
+    row = _redacted(df).collect()[0]
     assert row.clean_text == "x <EMAIL> y"
     assert row.n_redacted == 1
 
@@ -494,7 +499,7 @@ def _py_bpe_train(word_freqs: dict[str, int], n_merges: int):
 
 
 def test_bpe_train_matches_reference_implementation(spark):
-    from riot_graphs_spark.operators.textstats import bpe_apply, bpe_train
+    from riot_graphs_spark.operators.textstats import bpe_train
 
     texts = [
         "low lower lowest low low",
@@ -511,19 +516,6 @@ def test_bpe_train_matches_reference_implementation(spark):
     want = _py_bpe_train(freqs, 6)
     got = bpe_train(docs, n_merges=6)
     assert got == want
-
-    # application: greedy left-to-right with learned rules, flat token array
-    applied = {
-        r.doc_id: r.bpe_tokens
-        for r in bpe_apply(docs, got).select("doc_id", "bpe_tokens").collect()
-    }
-    assert all(len(v) > 0 for v in applied.values())
-    # every output token is either a single char or a concatenation built
-    # from the learned merges
-    learned = {a + b for a, b in got}
-    for toks_ in applied.values():
-        for t in toks_:
-            assert len(t) == 1 or t in learned
 
 
 def test_bpe_train_batched_rounds_match_sequential(spark):
@@ -555,30 +547,6 @@ def test_bpe_batch_compatibility_filter():
     # (b,c) shares b with (a,b); (ab,z) collides with concat of (a,b)
     assert _batch_compatible(ranked, 5) == [("a", "b"), ("x", "y"), ("p", "q")]
     assert _batch_compatible(ranked, 2) == [("a", "b"), ("x", "y")]
-
-
-def test_bpe_apply_pandas_path_matches_codegen_path(spark):
-    from riot_graphs_spark.operators.textstats import bpe_apply, bpe_train
-
-    docs = spark.createDataFrame(
-        [
-            (1, "low lower lowest low low new newer"),
-            (2, "wide wider widest lowest newer new"),
-            (3, None),
-        ],
-        "doc_id long, text string",
-    )
-    merges = bpe_train(docs, n_merges=6)
-    a = {
-        r.doc_id: r.bpe_tokens
-        for r in bpe_apply(docs, merges, codegen_threshold=64).collect()
-    }
-    b = {
-        r.doc_id: r.bpe_tokens
-        for r in bpe_apply(docs, merges, codegen_threshold=0).collect()
-    }
-    assert a == b and len(a) == 3
-    assert b[3] == []  # NULL text encodes to an empty token list
 
 
 def test_chunk_by_sentences_never_splits_a_sentence(spark):

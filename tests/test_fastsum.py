@@ -144,22 +144,6 @@ def test_parts3_int_exact_at_int64_boundary(spark):
     assert int(got) == sum(multi)
 
 
-def test_parts3_matches_parts(spark):
-    vals = [599999.99, -123456.789012345, 0.5e-9, 42.0]
-    df = spark.createDataFrame([(v,) for v in vals], "x double")
-    v2 = (
-        df.agg(*fs.parts(F.col("x"), "a"))
-        .select(fs.value("a").alias("v"))
-        .collect()[0]["v"]
-    )
-    v3 = (
-        df.agg(*fs.parts3(F.col("x"), "b"))
-        .select(fs.value3("b").alias("v"))
-        .collect()[0]["v"]
-    )
-    assert v2 == v3
-
-
 def test_value_keeps_full_scale(spark):
     # the (38,0)×(9,9) → (38,6) allowPrecisionLoss trap: a value needing
     # all 9 output decimals must survive the reconstruction exactly

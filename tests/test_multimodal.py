@@ -3,11 +3,49 @@ determinism for the mapInPandas stages (SURVEY §7 step 7)."""
 
 from __future__ import annotations
 
+from pyspark.sql.types import (
+    BinaryType,
+    IntegerType,
+    LongType,
+    StringType,
+    StructField,
+    StructType,
+)
+
 from riot_graphs_spark.operators.multimodal import (
     audio_window_features,
     extract_image_features,
-    synthetic_media,
 )
+
+#: A multimodal document: opaque payload + typed metadata, the columns
+#: ``operators.multimodal.media_from_documents`` derives.
+MEDIA_SCHEMA = StructType(
+    [
+        StructField("media_id", LongType()),
+        StructField("payload", BinaryType()),
+        StructField("media_type", StringType()),  # image|audio|video
+        StructField("width", IntegerType()),
+        StructField("height", IntegerType()),
+        StructField("duration_ms", LongType()),
+    ]
+)
+
+
+def synthetic_media(spark, n: int = 64):
+    """Deterministic in-memory media table (payload = repeatable bytes
+    derived from the id)."""
+    rows = [
+        (
+            i,
+            bytes([(i * 7 + k) % 256 for k in range(16)]),
+            ["image", "audio", "video"][i % 3],
+            64 + i % 32,
+            64 + i % 16,
+            1000 * (1 + i % 10),
+        )
+        for i in range(n)
+    ]
+    return spark.createDataFrame(rows, MEDIA_SCHEMA)
 
 
 def test_audio_windows_expand_and_cover_all_samples(spark):
@@ -51,76 +89,10 @@ def test_image_features_null_payload_yields_null_feature(spark):
     assert got[0][0] == 16 and len(got[0][1]) == 8
 
 
-def _png(w: int, h: int) -> bytes:
-    import struct
-
-    return (
-        b"\x89PNG\r\n\x1a\n"
-        + struct.pack(">I", 13)
-        + b"IHDR"
-        + struct.pack(">II", w, h)
-        + b"\x08\x06\x00\x00\x00"
-    )
-
-
-def _jpeg(w: int, h: int) -> bytes:
-    import struct
-
-    # SOI, APP0 (JFIF stub), then SOF0 with dimensions
-    app0 = b"\xff\xe0" + struct.pack(">H", 16) + b"JFIF\x00" + b"\x00" * 9
-    sof0 = (
-        b"\xff\xc0"
-        + struct.pack(">H", 17)
-        + b"\x08"
-        + struct.pack(">HH", h, w)
-        + b"\x03" + b"\x00" * 9
-    )
-    return b"\xff\xd8" + app0 + sof0
-
-
-def _wav(rate: int, channels: int) -> bytes:
-    import struct
-
-    fmt = (
-        b"fmt "
-        + struct.pack("<I", 16)
-        + struct.pack("<HH", 1, channels)
-        + struct.pack("<I", rate)
-        + b"\x00" * 8  # byte rate + block align + bits: 16-byte fmt body
-    )
-    return b"RIFF" + struct.pack("<I", 36) + b"WAVE" + fmt
-
-
-def test_sniff_media_headers_parses_real_containers(spark):
-    from riot_graphs_spark.operators.multimodal import sniff_media_headers
-
-    rows = [
-        (1, bytearray(_png(640, 480)), "image", None, None, None),
-        (2, bytearray(_jpeg(1920, 1080)), "image", None, None, None),
-        (3, bytearray(_wav(44100, 2)), "audio", None, None, None),
-        (4, bytearray(b"\x00garbage"), "image", None, None, None),
-        (5, None, "image", None, None, None),
-    ]
-    media = spark.createDataFrame(
-        rows,
-        "media_id long, payload binary, media_type string, "
-        "width int, height int, duration_ms long",
-    )
-    got = {r.media_id: r for r in sniff_media_headers(media).collect()}
-    assert (got[1].detected_format, got[1].detected_width, got[1].detected_height) == ("png", 640, 480)
-    assert (got[2].detected_format, got[2].detected_width, got[2].detected_height) == ("jpeg", 1920, 1080)
-    assert (got[3].detected_format, got[3].sample_rate, got[3].channels) == ("wav", 44100, 2)
-    assert got[4].detected_format == "unknown"
-    assert got[5].detected_format == "unknown"
-
-
 def test_resize_images_aspect_fit_and_corrupt_raises(spark):
     import pytest as _pytest
 
-    from riot_graphs_spark.operators.multimodal import (
-        resize_images,
-        synthetic_media,
-    )
+    from riot_graphs_spark.operators.multimodal import resize_images
 
     media = synthetic_media(spark, n=12)
     got = {r.media_id: r for r in resize_images(media, 64, 48).collect()}
@@ -139,28 +111,6 @@ def test_resize_images_aspect_fit_and_corrupt_raises(spark):
         resize_images(bad).collect()
 
 
-def test_sniff_extended_containers(spark):
-    import struct
-
-    from riot_graphs_spark.operators.multimodal import _sniff_header
-
-    gif = b"GIF89a" + struct.pack("<HH", 320, 200) + b"\x00" * 8
-    assert _sniff_header(gif) == ("gif", 320, 200, None, None)
-    mp4 = struct.pack(">I", 24) + b"ftypisom" + b"\x00" * 16
-    assert _sniff_header(mp4) == ("mp4", None, None, None, None)
-    # MPEG-1 Layer III, 44100 Hz, joint stereo
-    mp3 = bytes([0xFF, 0xFB, 0b10010000, 0b01000000]) + b"\x00" * 8
-    assert _sniff_header(mp3) == ("mp3", None, None, 44100, 2)
-    # mono (mode bits = 11)
-    mp3m = bytes([0xFF, 0xFB, 0b10010000, 0b11000000]) + b"\x00" * 8
-    assert _sniff_header(mp3m) == ("mp3", None, None, 44100, 1)
-    assert _sniff_header(b"ID3\x04\x00" + b"\x00" * 16) == (
-        "mp3", None, None, None, None,
-    )
-    # existing formats unaffected
-    assert _sniff_header(b"garbage")[0] == "unknown"
-
-
 def test_phash_dct_basis_is_orthonormal():
     import numpy as np
 
@@ -171,7 +121,7 @@ def test_phash_dct_basis_is_orthonormal():
 
 
 def test_phash_deterministic_and_signed64(spark):
-    from riot_graphs_spark.operators.multimodal import phash_images, synthetic_media
+    from riot_graphs_spark.operators.multimodal import phash_images
 
     media = synthetic_media(spark, n=24)
     a = {r.media_id: r.phash for r in phash_images(media).collect()}
@@ -182,10 +132,7 @@ def test_phash_deterministic_and_signed64(spark):
 
 
 def test_phash_pairs_find_exact_duplicates(spark):
-    from riot_graphs_spark.operators.multimodal import (
-        MEDIA_SCHEMA,
-        phash_near_dup_pairs,
-    )
+    from riot_graphs_spark.operators.multimodal import phash_near_dup_pairs
 
     payload = bytes(range(16))
     other = bytes(255 - b for b in range(16))
@@ -203,7 +150,6 @@ def test_phash_banding_has_total_recall_vs_brute_force(spark):
     from riot_graphs_spark.operators.multimodal import (
         phash_images,
         phash_near_dup_pairs,
-        synthetic_media,
     )
 
     media = synthetic_media(spark, n=48)
@@ -226,7 +172,7 @@ def test_phash_banding_has_total_recall_vs_brute_force(spark):
 def test_phash_corrupt_payload_raises(spark):
     import pytest
 
-    from riot_graphs_spark.operators.multimodal import MEDIA_SCHEMA, phash_images
+    from riot_graphs_spark.operators.multimodal import phash_images
 
     media = spark.createDataFrame(
         [(1, None, "image", 8, 8, 0)], MEDIA_SCHEMA
@@ -241,7 +187,6 @@ def test_phash_vectorized_matches_scalar_reference(spark):
         _luma_matrix_stub,
         _phash64,
         phash_images,
-        synthetic_media,
     )
 
     media = synthetic_media(spark, n=24)
@@ -252,10 +197,7 @@ def test_phash_vectorized_matches_scalar_reference(spark):
 
 
 def test_audio_fingerprint_deterministic_and_32bit(spark):
-    from riot_graphs_spark.operators.multimodal import (
-        audio_fingerprints,
-        synthetic_media,
-    )
+    from riot_graphs_spark.operators.multimodal import audio_fingerprints
 
     media = synthetic_media(spark, n=24)
     a = {r.media_id: r.afp for r in audio_fingerprints(media).collect()}
@@ -267,10 +209,8 @@ def test_audio_fingerprint_deterministic_and_32bit(spark):
 
 def test_audio_pairs_find_exact_duplicates_and_recall(spark):
     from riot_graphs_spark.operators.multimodal import (
-        MEDIA_SCHEMA,
         audio_fingerprints,
         audio_near_dup_pairs,
-        synthetic_media,
     )
 
     payload = bytes((i * 13 + 7) % 256 for i in range(64))

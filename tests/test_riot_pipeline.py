@@ -159,29 +159,6 @@ def test_asof_forward_no_following_is_null(spark):
     assert out.v_asof is None  # total: left row kept with NULL
 
 
-def test_asof_nearest_direction_tie_and_tolerance(spark):
-    from riot_graphs_spark.operators.asof import asof_join_nearest
-
-    left = spark.createDataFrame([Row(k="a", ts=ts(10), id=1)])
-    right = spark.createDataFrame(
-        [Row(k="a", ts=ts(7), v=1), Row(k="a", ts=ts(12), v=2)]
-    )
-    near = asof_join_nearest(left, right, on="k", right_payload=["v"]).collect()[0]
-    assert near.v_asof == 2  # forward candidate is closer (2 days vs 3)
-
-    tied = spark.createDataFrame(
-        [Row(k="a", ts=ts(8), v=1), Row(k="a", ts=ts(12), v=2)]
-    )
-    out = asof_join_nearest(left, tied, on="k", right_payload=["v"]).collect()[0]
-    assert out.v_asof == 1  # equidistant: backward wins
-
-    far = spark.createDataFrame([Row(k="a", ts=ts(2), v=1)])
-    out = asof_join_nearest(
-        left, far, on="k", right_payload=["v"], tolerance_seconds=86400.0
-    ).collect()[0]
-    assert out.v_asof is None  # beyond tolerance → NULL
-
-
 def test_gap_fill_leading_nulls_and_fill(spark):
     df = spark.createDataFrame(
         [
@@ -215,6 +192,35 @@ def test_gap_fill_linear_interpolates(spark):
     assert got[("x", 3)] == 2.0 and got[("x", 4)] == 3.0  # linear between
     assert got[("y", 1)] == 5.0
     assert got[("y", 3)] is None  # after last observation stays NULL
+
+
+def test_delta_vs_prev_is_the_step_from_the_series_previous_point(spark):
+    """The size-regression signal: each point minus the previous point of
+    its own series, NULL at a series' first point."""
+    from riot_graphs_spark.operators.timeseries import delta_vs_prev
+
+    series = {
+        "b1": [100 + 7 * d * (-1) ** d for d in range(1, 9)],
+        "b2": [200 + 3 * d for d in range(1, 6)],
+    }
+    rows = [
+        Row(test="t", board=b, ts=dt.datetime(2024, 1, d, 4), text=v)
+        for b, vals in series.items()
+        for d, v in enumerate(vals, start=1)
+    ]
+    # reversed input order: the window orders by ts, not by arrival
+    df = spark.createDataFrame(rows[::-1])
+    got = {
+        (r.board, r.ts.day): r.delta
+        for r in delta_vs_prev(df, dims=["test", "board"], ts="ts", value="text")
+        .collect()
+    }
+    want = {
+        (b, d): None if d == 1 else vals[d - 1] - vals[d - 2]
+        for b, vals in series.items()
+        for d in range(1, len(vals) + 1)
+    }
+    assert got == want
 
 
 def test_build_sizes_idempotent_rerun(spark, sizes_raw, tmp_path):

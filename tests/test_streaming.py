@@ -21,10 +21,7 @@ from riot_graphs_spark.sources.sinks import (
     merge_append,
 )
 from riot_graphs_spark.streaming import ingest
-from riot_graphs_spark.streaming.ingest import (
-    incremental_refresh,
-    stream_events_rollup,
-)
+from riot_graphs_spark.streaming.ingest import incremental_refresh
 
 
 def _doc(day: int, sha: str, boards: dict[str, dict]) -> str:
@@ -196,17 +193,20 @@ def test_incremental_refresh_logs_one_record_per_call(spark, dirs, caplog):
     assert third["watermark"].startswith("2023-12-30T04:00:00")
 
 
-def test_sink_schema_is_what_update_writes(spark, dirs):
-    """The sink's read schema is the schema of the files /update writes: a
-    column change in ``build_sizes_from_raw`` fails here, not as a silently
-    null column in every re-pointed view. Field metadata is not compared:
-    the stream writes its watermark delay into the files' ``ts`` field."""
+def test_sink_schema_is_what_update_writes(spark, dirs, tmp_path):
+    """The sink's read schema, field metadata included, is the schema of the
+    files /update and ``fetch`` write: a column change in
+    ``build_sizes_from_raw`` fails here, not as a silently null column in
+    every re-pointed view, and the stream's watermark delay stays out of the
+    stored ``ts`` field."""
+    from riot_graphs_spark.plans.fetch import batch_fetch
+
     _land_days(spark, dirs, (1, 2))
-
-    def fields(schema):
-        return [(f.name, f.dataType, f.nullable) for f in schema.fields]
-
-    assert fields(SINK_SCHEMA) == fields(spark.read.parquet(dirs["sink"]).schema)
+    fetched = str(tmp_path / "fetched")
+    now = datetime.datetime(2024, 1, 5, 4)
+    assert batch_fetch(spark, dirs["landing"], fetched, history=10, now=now) == 2
+    for sink in (dirs["sink"], fetched):
+        assert spark.read.parquet(sink).schema == SINK_SCHEMA, sink
 
 
 def test_load_table_reads_the_sink_without_a_job(spark, tmp_path):
@@ -398,42 +398,6 @@ def test_merge_append_null_ts_rows_are_appended(spark, tmp_path):
     assert [tuple(r) for r in dated] == [("t", "native", ts)]
 
 
-def test_streaming_rollup_matches_batch(spark, sf_dir, tmp_path):
-    from riot_graphs_spark.sources.tables import load_table
-
-    # Materialize events as a file-stream source, run the watermarked rollup
-    # with availableNow into a memory sink, compare against the batch agg.
-    events = load_table(spark, sf_dir, "events")
-    src = str(tmp_path / "events_src")
-    events.write.parquet(src)
-
-    stream = spark.readStream.schema(events.schema).parquet(src)
-    q = (
-        stream_events_rollup(spark, stream)
-        .writeStream.format("memory")
-        .queryName("rollup_test")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .option("checkpointLocation", str(tmp_path / "ckpt2"))
-        .start()
-    )
-    q.awaitTermination()
-    got = spark.table("rollup_test")
-
-    expected = (
-        events.groupBy(
-            F.window("ts", "1 hour").alias("w"), "event_type"
-        )
-        .agg(F.count("*").alias("n"))
-        .select(F.col("w.start").alias("bucket_start"), "event_type", "n")
-    )
-    diff = got.select("bucket_start", "event_type", "n").exceptAll(expected)
-    # Append mode only emits windows closed by the watermark; everything
-    # emitted must agree with batch, and most windows should have closed.
-    assert diff.count() == 0
-    assert got.count() >= expected.count() - 25  # open tail windows may be held back
-
-
 def test_streaming_session_windows(spark, tmp_path):
     """O6 in streaming: the same session_windows operator body runs under a
     watermark with availableNow — batch/stream operator sharing (SURVEY §7
@@ -549,174 +513,6 @@ def test_drop_duplicates_within_watermark(spark, tmp_path):
     got = spark.read.parquet(out)
     assert got.count() == 3
     assert got.select("test", "board", "ts").distinct().count() == 3
-
-
-def test_stream_stream_interval_join(spark, tmp_path):
-    """J1 with both sides streaming: builds pair with events on hash within
-    the tolerance; an event outside it must not match. Inner stream-stream
-    join with watermarks on both sides (state evictable)."""
-    import datetime as dt
-
-    from pyspark.sql import Row
-
-    from riot_graphs_spark.streaming.joins import stream_interval_join
-
-    t0 = dt.datetime(2024, 1, 1, 10, 0)
-    builds = [
-        Row(hash="aaa", ts=t0, text=100),
-        Row(hash="bbb", ts=t0 + dt.timedelta(hours=5), text=200),
-    ]
-    events = [
-        Row(hash="aaa", ts=t0 + dt.timedelta(minutes=30), pr_num=1),  # in
-        Row(hash="bbb", ts=t0 + dt.timedelta(hours=9), pr_num=2),  # out: 4h gap
-        Row(hash="ccc", ts=t0, pr_num=3),  # no build
-    ]
-    bsrc, esrc = str(tmp_path / "b"), str(tmp_path / "e")
-    bdf, edf = spark.createDataFrame(builds), spark.createDataFrame(events)
-    bdf.write.parquet(bsrc)
-    edf.write.parquet(esrc)
-
-    joined = stream_interval_join(
-        spark.readStream.schema(bdf.schema).parquet(bsrc),
-        spark.readStream.schema(edf.schema).parquet(esrc),
-        key="hash",
-        tolerance="1 hour",
-    )
-    q = (
-        joined.writeStream.format("memory")
-        .queryName("ssj_out")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .option("checkpointLocation", str(tmp_path / "ckpt_ssj"))
-        .start()
-    )
-    q.awaitTermination()
-    got = [(r.hash, r.pr_num) for r in spark.table("ssj_out").collect()]
-    assert got == [("aaa", 1)]
-
-
-def test_streaming_cdc_materialization_matches_batch_compaction(spark, dirs):
-    import json as _json
-
-    from riot_graphs_spark.operators.cdc import apply_changelog
-    from riot_graphs_spark.streaming.cdc import materialize_changelog
-
-    landing, state, ckpt = dirs["landing"], dirs["sink"], dirs["ckpt"]
-    schema = "event_id long, user_id long, ts timestamp, op string, value double"
-
-    def write_changes(name, rows):
-        with open(f"{landing}/{name}.json", "w") as f:
-            for r in rows:
-                f.write(_json.dumps(r) + "\n")
-
-    batch1 = [
-        {"event_id": 1, "user_id": 1, "ts": "2024-01-01 00:00:00", "op": "U", "value": 10.0},
-        {"event_id": 2, "user_id": 2, "ts": "2024-01-01 00:00:00", "op": "U", "value": 20.0},
-    ]
-    write_changes("b1", batch1)
-    n1 = materialize_changelog(
-        spark, landing, state, ckpt, schema,
-        keys=["user_id"], seq=["ts", "event_id"], op_col="op", delete_op="D",
-    )
-    assert n1 == 2
-
-    # batch 2: update user 1, delete user 2, insert user 3
-    batch2 = [
-        {"event_id": 3, "user_id": 1, "ts": "2024-01-01 01:00:00", "op": "U", "value": 11.0},
-        {"event_id": 4, "user_id": 2, "ts": "2024-01-01 01:00:00", "op": "D", "value": 0.0},
-        {"event_id": 5, "user_id": 3, "ts": "2024-01-01 01:00:00", "op": "U", "value": 30.0},
-    ]
-    write_changes("b2", batch2)
-    n2 = materialize_changelog(
-        spark, landing, state, ckpt, schema,
-        keys=["user_id"], seq=["ts", "event_id"], op_col="op", delete_op="D",
-    )
-    assert n2 == 2  # user 2 tombstoned
-
-    from riot_graphs_spark.streaming.cdc import current_state
-
-    got = {
-        r["user_id"]: (r["event_id"], r["value"])
-        for r in current_state(spark, state, "op").collect()
-    }
-    # incremental materialization == one-shot batch compaction of the full log
-    full = spark.createDataFrame(
-        [tuple(r.values()) for r in batch1 + batch2],
-        "event_id long, user_id long, ts string, op string, value double",
-    ).withColumn("ts", F.to_timestamp("ts"))
-    expect = {
-        r["user_id"]: (r["event_id"], r["value"])
-        for r in apply_changelog(
-            full, keys=["user_id"], seq=["ts", "event_id"], op_col="op"
-        ).collect()
-    }
-    assert got == expect == {1: (3, 11.0), 3: (5, 30.0)}
-
-    # replay: no new files -> checkpoint makes the run a no-op
-    n3 = materialize_changelog(
-        spark, landing, state, ckpt, schema,
-        keys=["user_id"], seq=["ts", "event_id"], op_col="op", delete_op="D",
-    )
-    assert n3 == 2
-
-    # batch 3: a LATE change for user 2, older than its tombstone — must NOT
-    # resurrect the key (the state keeps the delete as the LWW winner)
-    write_changes("b3", [
-        {"event_id": 6, "user_id": 2, "ts": "2024-01-01 00:30:00", "op": "U", "value": 21.0},
-    ])
-    n4 = materialize_changelog(
-        spark, landing, state, ckpt, schema,
-        keys=["user_id"], seq=["ts", "event_id"], op_col="op", delete_op="D",
-    )
-    assert n4 == 2
-    assert 2 not in {
-        r["user_id"] for r in current_state(spark, state, "op").collect()
-    }
-
-
-def test_cdc_corrupt_state_fails_batch_instead_of_resetting(spark, dirs):
-    """A corrupt EXISTING state must fail the micro-batch (streaming retry
-    semantics) — NOT be mistaken for first-batch and overwritten, which
-    would silently discard all accumulated CDC state (ADVICE r01)."""
-    import json as _json
-    import pathlib
-
-    from pyspark.errors.exceptions.captured import StreamingQueryException
-
-    from riot_graphs_spark.streaming.cdc import materialize_changelog
-
-    landing, state, ckpt = dirs["landing"], dirs["sink"], dirs["ckpt"]
-    schema = "event_id long, user_id long, ts timestamp, op string, value double"
-
-    with open(f"{landing}/b1.json", "w") as f:
-        f.write(_json.dumps(
-            {"event_id": 1, "user_id": 1, "ts": "2024-01-01 00:00:00",
-             "op": "U", "value": 10.0}) + "\n")
-    n1 = materialize_changelog(
-        spark, landing, state, ckpt, schema,
-        keys=["user_id"], seq=["ts", "event_id"], op_col="op", delete_op="D",
-    )
-    assert n1 == 1
-
-    # Corrupt the state files in place.
-    corrupted = list(pathlib.Path(state).glob("*.parquet"))
-    assert corrupted
-    for p in corrupted:
-        p.write_bytes(b"this is not parquet")
-
-    with open(f"{landing}/b2.json", "w") as f:
-        f.write(_json.dumps(
-            {"event_id": 2, "user_id": 2, "ts": "2024-01-01 01:00:00",
-             "op": "U", "value": 20.0}) + "\n")
-    with pytest.raises(StreamingQueryException):
-        materialize_changelog(
-            spark, landing, state, ckpt, schema,
-            keys=["user_id"], seq=["ts", "event_id"], op_col="op",
-            delete_op="D",
-        )
-    # The (corrupt) state was left untouched — nothing reset/overwrote it.
-    for p in corrupted:
-        assert p.read_bytes() == b"this is not parquet"
 
 
 def test_streaming_m4_downsample_complete_mode(spark, tmp_path):
@@ -847,162 +643,6 @@ def test_streaming_ohlc_complete_mode(spark, tmp_path):
     )
 
 
-def test_streaming_corpus_ingest_normalizes_dedups_and_gates(spark, tmp_path):
-    """Streaming curation pipeline: landed JSONL docs are normalized,
-    markup-only variants collapse to one fingerprint, Gopher rejects are
-    dropped in-stream, and a replayed file ingests nothing new."""
-    from riot_graphs_spark.streaming.corpus import stream_corpus_ingest
-
-    landing = tmp_path / "docs_landing"
-    landing.mkdir()
-    sink = str(tmp_path / "corpus")
-    ckpt = str(tmp_path / "ckpt")
-
-    prose = "the quick brown fox jumps over the lazy dogs again and again"
-
-    def doc(i, text):
-        return json.dumps(
-            {
-                "doc_id": i,
-                "ts": "2024-01-01 04:00:00",
-                "text": text,
-                "lang": "en",
-                "source": "web",
-            }
-        )
-
-    (landing / "a.jsonl").write_text(
-        "\n".join(
-            [
-                doc(1, prose),
-                doc(2, f"<p>{prose}</p><!-- c -->"),  # markup-only dup of 1
-                doc(3, "# # # w1 w2 # # #"),  # symbol soup → gopher reject
-                doc(4, prose + " but this one really is different text here"),
-            ]
-        )
-    )
-    counts: list[int] = []
-    q = stream_corpus_ingest(spark, str(landing), sink, ckpt, batch_counts=counts)
-    q.awaitTermination()
-    got = spark.read.parquet(sink)
-    assert got.count() == 2  # docs 1+2 collapsed, 3 rejected, 4 kept
-    texts = {r.text for r in got.collect()}
-    assert prose in texts  # markup stripped before fingerprinting
-    assert sum(counts) == 2
-
-    # replay: same file again → checkpoint skips it; a NEW file with an
-    # already-seen fingerprint is caught by the sink merge
-    (landing / "b.jsonl").write_text(doc(9, f"<div>{prose}</div>"))
-    counts2: list[int] = []
-    q = stream_corpus_ingest(spark, str(landing), sink, ckpt, batch_counts=counts2)
-    q.awaitTermination()
-    assert sum(counts2) == 0
-    assert spark.read.parquet(sink).count() == 2
-
-
-def test_streaming_corpus_near_dedup_via_bucket_table(spark, tmp_path):
-    """Near-dup filtering against the already-ingested corpus: batch 2's
-    paraphrase-free near-copy (shares most shingles, different fingerprint)
-    is dropped via the maintained band-bucket table; fresh text passes."""
-    import json as _json
-
-    from riot_graphs_spark.streaming.corpus import stream_corpus_ingest
-
-    landing = tmp_path / "docs_landing"
-    landing.mkdir()
-    sink = str(tmp_path / "corpus")
-    ckpt = str(tmp_path / "ckpt")
-    buckets = str(tmp_path / "corpus_buckets")
-
-    base = (
-        "alpha bravo charlie delta echo foxtrot golf hotel india juliett "
-        "kilo lima mike november oscar papa quebec romeo sierra tango"
-    )
-    fresh = (
-        "umbrella vortex willow xylophone yonder zeppelin anchor bridge "
-        "castle dolphin ember forest garden harbor island jungle kettle"
-    )
-
-    def doc(i, text):
-        return _json.dumps(
-            {"doc_id": i, "ts": "2024-01-01 04:00:00", "text": text,
-             "lang": "en", "source": "web"}
-        )
-
-    (landing / "a.jsonl").write_text(doc(1, base))
-    counts: list[int] = []
-    q = stream_corpus_ingest(
-        spark, str(landing), sink, ckpt, batch_counts=counts,
-        near_dedup_buckets_path=buckets,
-    )
-    q.awaitTermination()
-    assert sum(counts) == 1
-    assert spark.read.parquet(buckets).count() > 0
-
-    # batch 2: a near-copy of doc 1 (one word changed → same minhash bands,
-    # different exact fingerprint) and genuinely fresh text
-    (landing / "b.jsonl").write_text(
-        "\n".join([doc(2, base.replace("tango", "waltz")), doc(3, fresh)])
-    )
-    counts2: list[int] = []
-    q = stream_corpus_ingest(
-        spark, str(landing), sink, ckpt, batch_counts=counts2,
-        near_dedup_buckets_path=buckets,
-    )
-    q.awaitTermination()
-    assert sum(counts2) == 1  # near-copy dropped, fresh kept
-    ids = sorted(r.doc_id for r in spark.read.parquet(sink).collect())
-    assert ids == [1, 3]
-
-
-def test_streaming_near_dedup_bucket_table_tolerates_replay(spark, tmp_path):
-    """Crash-replay semantics: re-running the same landing file with a
-    FRESH checkpoint (simulating a lost checkpoint / replayed batch)
-    appends duplicate bucket rows but never corrupts semantics — the
-    semi-join is key-based, and the corpus merge stays idempotent."""
-    import json as _json
-
-    from riot_graphs_spark.streaming.corpus import stream_corpus_ingest
-
-    landing = tmp_path / "docs_landing"
-    landing.mkdir()
-    sink = str(tmp_path / "corpus")
-    buckets = str(tmp_path / "buckets")
-
-    text = (
-        "replay tolerance check sentence with enough distinct words to "
-        "shingle and band reliably across runs"
-    )
-    (landing / "a.jsonl").write_text(
-        _json.dumps(
-            {"doc_id": 1, "ts": "2024-01-01 04:00:00", "text": text,
-             "lang": "en", "source": "web"}
-        )
-    )
-
-    counts: list[int] = []
-    q = stream_corpus_ingest(
-        spark, str(landing), sink, str(tmp_path / "ck1"),
-        batch_counts=counts, near_dedup_buckets_path=buckets,
-    )
-    q.awaitTermination()
-    n_buckets_1 = spark.read.parquet(buckets).count()
-
-    # fresh checkpoint -> the same file replays end-to-end
-    counts2: list[int] = []
-    q = stream_corpus_ingest(
-        spark, str(landing), sink, str(tmp_path / "ck2"),
-        batch_counts=counts2, near_dedup_buckets_path=buckets,
-    )
-    q.awaitTermination()
-
-    assert sum(counts) == 1 and sum(counts2) == 0  # corpus merge idempotent
-    assert spark.read.parquet(sink).count() == 1
-    b = spark.read.parquet(buckets)
-    assert b.count() >= n_buckets_1  # dup rows allowed...
-    assert b.select("band", "band_key").distinct().count() == n_buckets_1
-
-
 def test_streaming_partial_rollup_maintenance_foreachbatch(spark, sf_dir, tmp_path):
     """The incremental-materialization loop end-to-end: a file stream of
     events drives foreachBatch micro-batches, each batch's day-grain
@@ -1098,168 +738,46 @@ def test_streaming_partial_rollup_maintenance_foreachbatch(spark, sf_dir, tmp_pa
     assert after == before
 
 
-def test_stream_stream_left_outer_emits_nulls_only_after_watermark(
-    spark, tmp_path
-):
-    """Outer stream-stream join semantics pin (the Spark subtlety the
-    operator docstring claims is legal): an unmatched LEFT row must emit
-    null-padded only AFTER the watermark passes its time bound
-    (lts + tolerance + delay) — never in the batch that read it, because
-    a match could still arrive within the tolerance."""
-    import datetime as dt
-
-    from pyspark.sql import Row
-
-    from riot_graphs_spark.streaming.joins import stream_interval_join
-
-    t0 = dt.datetime(2024, 1, 1, 10, 0)
-    bsrc, esrc = str(tmp_path / "b"), str(tmp_path / "e")
-    builds1 = [
-        Row(hash="aaa", ts=t0, text=100),   # matches
-        Row(hash="zzz", ts=t0, text=900),   # never matches
-    ]
-    events1 = [Row(hash="aaa", ts=t0 + dt.timedelta(minutes=30), pr_num=1)]
-    bdf = spark.createDataFrame(builds1)
-    edf = spark.createDataFrame(events1)
-    bdf.write.parquet(bsrc)
-    edf.write.parquet(esrc)
-
-    out = str(tmp_path / "out")
-
-    def run():
-        # file sink, not memory: the second phase must RESUME from the
-        # same checkpoint (memory sink is not recovery-capable)
-        joined = stream_interval_join(
-            spark.readStream.schema(bdf.schema).parquet(bsrc),
-            spark.readStream.schema(edf.schema).parquet(esrc),
-            key="hash",
-            tolerance="1 hour",
-            left_watermark="1 minute",
-            right_watermark="1 minute",
-            how="left_outer",
-        )
-        q = (
-            joined.writeStream.format("parquet")
-            .outputMode("append")
-            .option("path", out)
-            .trigger(availableNow=True)
-            .option("checkpointLocation", str(tmp_path / "ckpt"))
-            .start()
-        )
-        q.awaitTermination()
-        return {
-            (r.hash, r.text, r.pr_num)
-            for r in spark.read.parquet(out).collect()
-        }
-
-    # Phase 1: watermark has not passed zzz's bound -> inner match only,
-    # NO premature null row (emitting it now would be wrong: a matching
-    # event could still arrive within the 1h tolerance).
-    got1 = run()
-    assert got1 == {("aaa", 100, 1)}
-
-    # Phase 2: append far-future rows on BOTH sides (the join watermark is
-    # the min across inputs), advancing the watermark past
-    # zzz.ts + tolerance + delay -> the unmatched left row finalizes.
-    far = t0 + dt.timedelta(days=2)
-    spark.createDataFrame([Row(hash="www", ts=far, text=1)]).write.mode(
-        "append"
-    ).parquet(bsrc)
-    spark.createDataFrame([Row(hash="vvv", ts=far, pr_num=9)]).write.mode(
-        "append"
-    ).parquet(esrc)
-    got2 = run()
-    assert ("zzz", 900, None) in got2
-    # the future rows themselves are still within their own bound: no
-    # null emission for them yet
-    assert not any(h == "www" for h, _, _ in got2)
-
-
-def test_streaming_drift_monitor_scores_each_batch_against_baseline(
-    spark, tmp_path
-):
-    """Per-ingest drift loop (streaming/drift.py): a batch drawn from the
-    baseline distribution must score PSI == 0 exactly (identical bin
-    shares), a shifted batch must cross the 0.25 'shifted' band; one
-    monitor row lands per (micro-batch, group)."""
-    import json as _json
-
-    from riot_graphs_spark.streaming.drift import (
-        drift_monitor_writer,
-        record_baseline,
-    )
+def test_record_baseline_counts_fixed_bins_and_carries_its_stamp(spark):
+    """Drift calibration (streaming/drift.py): the baseline artifact is its
+    per-(group, bin) counts under the fixed clamp bins, and a
+    ``recorded_at`` stamp rides along as a column."""
+    from riot_graphs_spark.streaming.drift import record_baseline
 
     spec = dict(value_col="value", lo=0.0, hi=100.0, nbuckets=10,
                 group_cols=["grp"])
-    base_vals = [5.0, 15.0, 25.0, 35.0] * 25  # equal mass in bins 0-3
     baseline = spark.createDataFrame(
-        [("g", v) for v in base_vals], "grp string, value double"
+        [("g", v) for v in [5.0, 15.0, 25.0, 35.0] * 25],
+        "grp string, value double",
     )
     counts = record_baseline(baseline, **spec)
     assert {(r.bin, r.n) for r in counts.collect()} == {
         (0, 25), (1, 25), (2, 25), (3, 25)
     }
-
-    landing = tmp_path / "landing"
-    landing.mkdir()
-    with open(landing / "b1.json", "w") as f:  # same distribution
-        for v in [5.0, 15.0, 25.0, 35.0] * 5:
-            f.write(_json.dumps({"grp": "g", "value": v}) + "\n")
-    with open(landing / "b2.json", "w") as f:  # shifted to bins 8-9
-        for v in [85.0, 95.0] * 8:
-            f.write(_json.dumps({"grp": "g", "value": v}) + "\n")
-
-    stream = (
-        spark.readStream.schema("grp string, value double")
-        .option("maxFilesPerTrigger", 1)
-        .json(str(landing))
+    assert "recorded_at" not in counts.columns
+    stamped = record_baseline(
+        baseline, recorded_at="2020-01-01 00:00:00", **spec
     )
-    monitor = str(tmp_path / "monitor")
-    q = (
-        stream.writeStream.foreachBatch(
-            drift_monitor_writer(counts, monitor, **spec)
-        )
-        .trigger(availableNow=True)
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .start()
-    )
-    q.awaitTermination()
-
-    rows = {
-        r.batch_id: (r.n_a, r.n_b, r.psi)
-        for r in spark.read.parquet(monitor).collect()
+    assert {str(r.recorded_at) for r in stamped.collect()} == {
+        "2020-01-01 00:00:00"
     }
-    assert len(rows) == 2
-    assert {n_a for n_a, _, _ in rows.values()} == {100}
-    # file order into micro-batches is not guaranteed; identify by size
-    by_size = {n_b: psi for (_, n_b, psi) in rows.values()}
-    assert by_size[20] == 0.0   # baseline-distribution batch: exactly zero
-    assert by_size[16] > 0.25   # shifted batch crosses the 'shifted' band
 
 
-def test_streaming_drift_monitor_emits_ks_beside_psi(spark, tmp_path):
-    """KS wiring (streaming/drift.py): with a recorded CDF artifact the
-    monitor emits ks_d beside psi.  The motivating case: a shift WITHIN
-    one PSI bin scores psi == 0 (bin shares identical) but a large ks_d —
-    the bin-free alarm PSI is blind to."""
-    import json as _json
-
+def test_ks_against_baseline_cdf_sees_a_within_bin_shift(spark):
+    """KS drift scoring (streaming/drift.py): the recorded CDF artifact
+    keeps exact cumulative counts at its equi-depth edges, a batch from
+    the baseline distribution scores D == 0, and a shift inside one value
+    range the baseline never reaches scores D == 1."""
     from riot_graphs_spark.streaming.drift import (
-        drift_monitor_writer,
-        record_baseline,
+        ks_against_baseline_cdf,
         record_baseline_cdf,
     )
 
-    # one huge PSI bin [0,100): any within-range shift is PSI-invisible
-    spec = dict(value_col="value", lo=0.0, hi=100.0, nbuckets=1,
-                group_cols=["grp"])
-    base_vals = [10.0, 20.0, 30.0, 40.0] * 25
     baseline = spark.createDataFrame(
-        [("g", v) for v in base_vals], "grp string, value double"
+        [("g", v) for v in [10.0, 20.0, 30.0, 40.0] * 25],
+        "grp string, value double",
     )
-    counts = record_baseline(baseline, **spec)
-    cdf = record_baseline_cdf(baseline, "value", nbins=4,
-                              group_cols=["grp"])
+    cdf = record_baseline_cdf(baseline, "value", nbins=4, group_cols=["grp"])
     got = {(r.grp, r._v): (r.cum, r.n) for r in cdf.collect()}
     # equi-depth edges = the four values; exact cumulative counts; the
     # max value is always recorded so the restricted CDF ends at 1
@@ -1268,81 +786,17 @@ def test_streaming_drift_monitor_emits_ks_beside_psi(spark, tmp_path):
         ("g", 30.0): (75, 100), ("g", 40.0): (100, 100),
     }
 
-    landing = tmp_path / "landing"
-    landing.mkdir()
-    with open(landing / "b1.json", "w") as f:  # baseline distribution
-        for v in [10.0, 20.0, 30.0, 40.0] * 5:
-            f.write(_json.dumps({"grp": "g", "value": v}) + "\n")
-    with open(landing / "b2.json", "w") as f:  # shifted WITHIN the bin
-        for v in [41.0, 45.0, 48.0, 49.0] * 4:
-            f.write(_json.dumps({"grp": "g", "value": v}) + "\n")
-
-    stream = (
-        spark.readStream.schema("grp string, value double")
-        .option("maxFilesPerTrigger", 1)
-        .json(str(landing))
-    )
-    monitor = str(tmp_path / "monitor")
-    q = (
-        stream.writeStream.foreachBatch(
-            drift_monitor_writer(counts, monitor, baseline_cdf=cdf, **spec)
+    def score(values):
+        batch = spark.createDataFrame(
+            [("g", v) for v in values], "grp string, value double"
         )
-        .trigger(availableNow=True)
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .start()
-    )
-    q.awaitTermination()
+        rows = ks_against_baseline_cdf(cdf, batch, "value", ["grp"]).collect()
+        assert len(rows) == 1 and rows[0].n_a == 100
+        return rows[0].n_b, rows[0].ks_d
 
-    rows = spark.read.parquet(monitor).collect()
-    assert len(rows) == 2 and all(r.grp == "g" for r in rows)
-    by_size = {r.n_b: (r.psi, r.ks_d) for r in rows}
-    # identical distribution: BOTH scores exactly zero
-    assert by_size[20] == (0.0, 0.0)
-    # within-bin shift: PSI blind (identical bin shares), KS fires —
+    assert score([10.0, 20.0, 30.0, 40.0] * 5) == (20, 0.0)
     # every batch value sits above the baseline's whole mass: D = 1
-    psi, ks = by_size[16]
-    assert psi == 0.0 and ks == 1.0
-
-
-def test_drift_monitor_replay_reappends_and_dedups_on_read(spark, tmp_path):
-    """A replayed micro-batch (same epoch_id) re-appends identical monitor
-    rows — the documented idempotency contract: readers dedup by taking
-    one row per (batch_id, group)."""
-    from pyspark.sql import functions as F
-
-    from riot_graphs_spark.streaming.drift import (
-        drift_monitor_writer,
-        record_baseline,
-        record_baseline_cdf,
-    )
-
-    spec = dict(value_col="value", lo=0.0, hi=10.0, nbuckets=5,
-                group_cols=["grp"])
-    baseline = spark.createDataFrame(
-        [("g", float(v % 10)) for v in range(100)],
-        "grp string, value double",
-    )
-    counts = record_baseline(baseline, **spec)
-    cdf = record_baseline_cdf(baseline, "value", nbins=5,
-                              group_cols=["grp"])
-    monitor = str(tmp_path / "monitor")
-    writer = drift_monitor_writer(counts, monitor, baseline_cdf=cdf, **spec)
-    batch = spark.createDataFrame(
-        [("g", float(v % 5)) for v in range(20)], "grp string, value double"
-    )
-    writer(batch, 7)
-    writer(batch, 7)  # replay
-    raw = spark.read.parquet(monitor).collect()
-    assert len(raw) == 2
-    assert len({(r.batch_id, r.grp, r.psi, r.ks_d) for r in raw}) == 1
-    deduped = (
-        spark.read.parquet(monitor)
-        .groupBy("batch_id", "grp")
-        .agg(F.first("psi").alias("psi"), F.first("ks_d").alias("ks_d"))
-        .collect()
-    )
-    assert len(deduped) == 1 and deduped[0].psi > 0.0
-    assert deduped[0].ks_d is not None and deduped[0].ks_d > 0.0
+    assert score([41.0, 45.0, 48.0, 49.0] * 4) == (16, 1.0)
 
 
 def test_stream_session_stats_finalizes_on_watermark(spark, tmp_path):
@@ -1423,141 +877,6 @@ def test_stream_session_stats_finalizes_on_watermark(spark, tmp_path):
         10.0,
     ) in got3
     assert len(got3) == 2  # user 1's own session still open
-
-
-def test_drift_monitor_baseline_staleness_guard(spark, tmp_path):
-    """Staleness guard (streaming/drift.py): a baseline recorded with a
-    recorded_at stamp carries it onto every monitor row; max_age_sec
-    flags a too-old calibration as baseline_stale=True (and a fresh-
-    enough one False); max_age_sec without a stamped baseline raises."""
-    import json as _json
-
-    import pytest as _pytest
-
-    from riot_graphs_spark.streaming.drift import (
-        drift_monitor_writer,
-        record_baseline,
-    )
-
-    spec = dict(value_col="value", lo=0.0, hi=100.0, nbuckets=10,
-                group_cols=["grp"])
-    baseline = spark.createDataFrame(
-        [("g", v) for v in [5.0, 15.0, 25.0, 35.0] * 25],
-        "grp string, value double",
-    )
-    stamped = record_baseline(
-        baseline, recorded_at="2020-01-01 00:00:00", **spec
-    )
-    assert "recorded_at" in stamped.columns
-
-    landing = tmp_path / "landing"
-    landing.mkdir()
-    with open(landing / "b1.json", "w") as f:
-        for v in [5.0, 15.0] * 5:
-            f.write(_json.dumps({"grp": "g", "value": v}) + "\n")
-
-    def _run(writer, subdir):
-        stream = (
-            spark.readStream.schema("grp string, value double")
-            .option("maxFilesPerTrigger", 1)
-            .json(str(landing))
-        )
-        q = (
-            stream.writeStream.foreachBatch(writer)
-            .trigger(availableNow=True)
-            .option("checkpointLocation", str(tmp_path / (subdir + "_ck")))
-            .start()
-        )
-        q.awaitTermination()
-        return spark.read.parquet(str(tmp_path / subdir)).collect()
-
-    # 2020 calibration vs a 1-hour age budget: stale, loudly
-    rows = _run(
-        drift_monitor_writer(
-            stamped, str(tmp_path / "m1"), max_age_sec=3600, **spec
-        ),
-        "m1",
-    )
-    assert len(rows) == 1
-    assert str(rows[0].baseline_recorded_at).startswith("2020-01-01")
-    assert bool(rows[0].baseline_stale) is True
-    # same stamp vs a 100-year budget: fresh enough
-    rows = _run(
-        drift_monitor_writer(
-            stamped, str(tmp_path / "m2"),
-            max_age_sec=100 * 365 * 86400, **spec
-        ),
-        "m2",
-    )
-    assert bool(rows[0].baseline_stale) is False
-    # stamp column rides along even without an age budget
-    rows = _run(
-        drift_monitor_writer(stamped, str(tmp_path / "m3"), **spec), "m3"
-    )
-    assert str(rows[0].baseline_recorded_at).startswith("2020-01-01")
-    assert "baseline_stale" not in rows[0].asDict()
-    # age budget without a stamped baseline: configuration error
-    unstamped = record_baseline(baseline, **spec)
-    with _pytest.raises(ValueError):
-        drift_monitor_writer(
-            unstamped, str(tmp_path / "m4"), max_age_sec=60, **spec
-        )
-
-
-def test_ph_monitor_accumulates_and_alarms_on_creep(spark, tmp_path):
-    """Page-Hinkley monitor (streaming/drift.ph_monitor_writer): a slow
-    per-batch creep that PSI would score as individually unremarkable
-    accumulates across batches until U - min(U) crosses lambda; a
-    replayed epoch recomputes from the same predecessor state (no
-    double-apply)."""
-    from riot_graphs_spark.streaming.drift import (
-        ph_monitor_writer,
-        record_baseline_mean,
-    )
-
-    baseline = spark.createDataFrame(
-        [("g", 10.0)] * 50, "grp string, value double"
-    )
-    mu = record_baseline_mean(baseline, "value", ["grp"])
-    monitor = str(tmp_path / "ph")
-    # delta tolerates 0.1 of drift; lambda alarms after ~3 units of
-    # accumulated excess
-    writer = ph_monitor_writer(
-        mu, monitor, "value", delta=0.1, lam=3.0, group_cols=["grp"]
-    )
-
-    def batch(mean):
-        return spark.createDataFrame(
-            [("g", float(mean))] * 10, "grp string, value double"
-        )
-
-    # stable batches: U drifts DOWN by delta each time, min tracks it,
-    # no alarm
-    writer(batch(10.0), 0)
-    writer(batch(10.0), 1)
-    # creep: +1.1 over baseline accumulates 1.0 of excess per batch
-    for i in range(2, 6):
-        writer(batch(11.1), i)
-    rows = {
-        r.batch_id: r
-        for r in spark.read.parquet(monitor).collect()
-    }
-    assert not rows[0].ph_alarm and not rows[1].ph_alarm
-    # after 4 creep batches the excess is 4.0 > lambda=3
-    assert not rows[2].ph_alarm and not rows[3].ph_alarm
-    assert rows[5].ph_alarm
-    # U at batch 5: -0.2 (two stable) + 4 * 1.0 = 3.8 exactly
-    import pytest as _pytest
-
-    assert rows[5].ph_u == _pytest.approx(3.8)
-    assert rows[5].ph_min == _pytest.approx(-0.2)
-
-    # replay of epoch 5: state reads only batch_id < 5, so the
-    # re-appended row is identical, not double-applied
-    writer(batch(11.1), 5)
-    raw = spark.read.parquet(monitor).filter("batch_id = 5").collect()
-    assert len(raw) == 2
-    assert len({(r.ph_u, r.ph_min, r.ph_alarm) for r in raw}) == 1
 
 
 def test_streaming_ab_guardrail_cumulative_verdicts(spark, tmp_path):
@@ -1769,95 +1088,6 @@ def test_streaming_ab_guardrail_cuped_readout_and_replay(spark, tmp_path):
     assert r2.cuped_theta is None and r2.cuped_diff is None
     assert r2.cuped_z is None and r2.var_reduction is None
     assert r2.cuped_significant is None
-
-
-def test_streaming_quantile_guardrail_cumulative_and_breach(spark, tmp_path):
-    """Percentile guardrail from mergeable sketch state
-    (streaming/guardrail.quantile_guardrail_writer): each batch appends
-    bounded sketch rows; the verdict reads CUMULATIVE percentiles (merged
-    across batches, never re-scanning past values) and flags ceilings.
-    Two disjoint uniform batches must read a combined median near their
-    joint midpoint, and a p99 ceiling placed under the data must breach."""
-    from riot_graphs_spark.streaming.guardrail import quantile_guardrail_writer
-
-    monitor = str(tmp_path / "mon")
-    writer = quantile_guardrail_writer(
-        monitor, alarm_above={99: 100.0, 50: 10_000.0}
-    )
-
-    def batch(lo, hi):
-        return spark.createDataFrame(
-            [("2024-01-01 00:00:00", float(v)) for v in range(lo, hi)],
-            "ts string, value double",
-        ).select(F.col("ts").cast("timestamp").alias("ts"), "value")
-
-    writer(batch(1, 1001), 0)
-    writer(batch(1001, 2001), 1)
-
-    reports = {
-        r.batch_id: r for r in spark.read.parquet(f"{monitor}/report").collect()
-    }
-    assert set(reports) == {0, 1}
-    first, final = reports[0], reports[1]
-    assert first.n_rows == 1000 and final.n_rows == 2000
-    assert final.n_batches == 2
-    # merged median sits near the joint midpoint (sketch read ≲ 5% error)
-    assert abs(final.p50 - 1000.0) <= 50.0
-    assert final.p99 >= 1900.0 * 0.95
-    # ceilings: p99 over 100 breaches, p50 under 10k does not
-    assert final.breach_p99 and not final.breach_p50 and final.breach
-    # ledger state is bounded: (batches × days × k) rows, k=64 anchors
-    ledger = spark.read.parquet(f"{monitor}/ledger").collect()
-    assert len(ledger) == 2 and all(len(r.anchors) == 64 for r in ledger)
-
-
-def test_streaming_quantile_guardrail_replay_idempotent(spark, tmp_path):
-    """At-least-once redelivery: a replayed micro-batch re-appends ledger
-    rows for its batch_id, but the cumulative read takes one state per
-    (batch, bucket, dims) — the replayed verdict row must carry
-    IDENTICAL totals and percentiles, and a grouped guardrail keeps one
-    verdict row per dims group."""
-    from riot_graphs_spark.streaming.guardrail import quantile_guardrail_writer
-
-    monitor = str(tmp_path / "mon")
-    writer = quantile_guardrail_writer(
-        monitor,
-        dims=["svc"],
-        percentiles=(50, 95),
-        recorded_at="2024-01-01 00:00:00",
-        max_age_sec=60.0,
-    )
-
-    def batch(rows):
-        return spark.createDataFrame(
-            rows, "ts string, svc string, value double"
-        ).select(F.col("ts").cast("timestamp").alias("ts"), "svc", "value")
-
-    b0 = batch([("2024-01-01 00:00:00", "api", float(v)) for v in range(100)]
-               + [("2024-01-01 00:00:00", "db", 5.0)] * 10)
-    writer(b0, 0)
-    writer(b0, 0)  # redelivery
-
-    reports = spark.read.parquet(f"{monitor}/report").collect()
-    by_run = {}
-    for r in reports:
-        by_run.setdefault((r.batch_id, r.svc), []).append(r)
-    # two identical verdict rows per (batch 0, svc) — replay changed nothing
-    for (bid, svc), rows in by_run.items():
-        assert bid == 0
-        vals = {(r.n_batches, r.n_rows, r.p50, r.p95) for r in rows}
-        assert len(vals) == 1, (svc, vals)
-    svcs = {r.svc for r in reports}
-    assert svcs == {"api", "db"}
-    db = next(r for r in reports if r.svc == "db")
-    assert db.n_rows == 10 and db.p50 == 5.0 and db.p95 == 5.0
-    # 2024 config stamp is long past the 60 s budget
-    assert all(r.config_stale for r in reports)
-
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError):
-        quantile_guardrail_writer(monitor, max_age_sec=5.0)
 
 
 def test_streaming_ab_guardrail_resumes_pre_cuped_ledger(spark, tmp_path):

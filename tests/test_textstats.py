@@ -256,38 +256,6 @@ def test_unigram_train_matches_reference_python(spark):
     assert any(len(p) > 1 for p, _ in got)
 
 
-def test_unigram_apply_round_trips_and_prefers_learned_pieces(spark):
-    from riot_graphs_spark.operators.textstats import (
-        unigram_apply,
-        unigram_train,
-    )
-
-    corpus = [
-        "banana bandana banana bandana",
-        "banana banana bandana cabana",
-    ]
-    docs = spark.createDataFrame(
-        list(enumerate(corpus)), "doc_id long, text string"
-    )
-    pieces = unigram_train(
-        docs, vocab_size=14, n_iter=3, max_piece_len=4, seed_candidates=60
-    )
-    out = unigram_apply(docs, pieces).collect()
-    by_id = {r.doc_id: r.unigram_tokens for r in out}
-    # round-trip: concatenating a doc's pieces reproduces its words
-    import re
-
-    token_re = re.compile(r"[a-z0-9]+")
-    for i, text in enumerate(corpus):
-        assert "".join(by_id[i]) == "".join(token_re.findall(text))
-    # a word with an UNSEEN character still segments (coverage fallback)
-    weird = spark.createDataFrame([(9, "banana zzz")], "doc_id long, text string")
-    w = unigram_apply(weird, pieces).collect()[0].unigram_tokens
-    assert "".join(w) == "bananazzz"
-    # segmentation is not all-singletons: some learned piece is used
-    assert any(len(t) > 1 for t in by_id[0])
-
-
 def test_unigram_train_rejects_bad_params(spark):
     import pytest
 
