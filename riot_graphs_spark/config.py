@@ -4,23 +4,24 @@ reference).
 
 A reference user's existing ``config.ini`` parses unchanged: same sections
 (``[main]``, ``[influxdb]``, ``[github]``, ``[riot]``), same option names,
-same fallbacks, and the same fail-fast behavior on a missing required
-option (the reference raises ``SystemExit``; here that is a catchable
+and the same fail-fast behavior on a missing required option (the
+reference raises ``SystemExit``; here that is a catchable
 :class:`ConfigError` carrying the same message shape).
 
-Spark-first re-mapping: the InfluxDB connection options have no meaning for
-a Spark engine, so an optional ``[spark]`` section supplies what the engine
-actually needs — ``sink_path`` / ``landing_dir`` / ``checkpoint_dir`` and
-``shuffle_partitions``. When absent, paths default relative to
-``repo_path`` so a bare reference config still yields a runnable engine
-layout. Nothing here opens connections or sessions; this is a plain parsed
+Spark-first re-mapping: the reference's options (InfluxDB connection, CI
+URL, GitHub repo) have no meaning for a Spark engine and are checked, not
+kept. An optional ``[spark]`` section supplies what the engine actually
+needs — ``sink_path`` / ``landing_dir`` / ``checkpoint_dir`` and
+``shuffle_partitions``. When absent, paths default relative to ``[riot]
+repo_path`` (fallback ``./RIOT``) so a bare reference config still yields a
+runnable engine layout. Nothing here opens connections or sessions; this is a plain parsed
 record handed to :mod:`riot_graphs_spark.session` / the server wrapper.
 """
 
 from __future__ import annotations
 
 import configparser
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 
 class ConfigError(Exception):
@@ -30,30 +31,18 @@ class ConfigError(Exception):
 
 @dataclass
 class EngineConf:
-    # [main] — which pipelines to run (reference rg.py:391-394)
-    main_events: bool = True
-    main_builds: bool = True
-    # [influxdb] — retained verbatim for reference-config compatibility;
-    # only batch_size is meaningful to the Spark engine (sink batch hints)
-    influx_host: str | None = None
-    influx_port: int | None = None
-    influx_user: str | None = None
-    influx_password: str | None = None
-    influx_database: str | None = None
-    influx_batch_size: int = 20
-    # [github] (reference rg.py:405-406; api_key optional here — the Spark
-    # engine reads landed JSON, it does not call the GitHub API itself)
-    token: str | None = None
-    riot_repo: str = "RIOT-OS/RIOT"
-    # [riot] (reference rg.py:408-412)
-    riot_ci: str | None = None
-    riot_repo_path: str = "./RIOT"
-    data_file: str = "sizes.json"
-    # [spark] — engine-side layout (new; defaults derive from repo_path)
-    sink_path: str = field(default="")
-    landing_dir: str = field(default="")
-    checkpoint_dir: str = field(default="")
+    # [spark] — engine-side layout (defaults derive from [riot] repo_path)
+    sink_path: str
+    landing_dir: str
+    checkpoint_dir: str
     shuffle_partitions: int | None = None
+
+
+#: Options the reference requires whenever their section is present. The
+#: engine reads none of them, but a config the reference rejects fails here
+#: too.
+_REQUIRED = {"influxdb": ("hostname", "port", "database"),
+             "riot": ("ci-url", "size-file")}
 
 
 def load_config(path: str) -> EngineConf:
@@ -63,53 +52,34 @@ def load_config(path: str) -> EngineConf:
     port/database and ``[riot]`` ci-url/size-file are required *when their
     section is present*; a config with no ``[influxdb]`` section at all is
     accepted (pure-Spark deployment — there is nothing to connect to).
-    ``[github] repo`` falls back to the reference's own default repo.
     """
     parser = configparser.ConfigParser()
     read = parser.read(path)
     if not read:
         raise ConfigError(f"Config error in {path}: file not found/readable")
 
-    conf = EngineConf()
     try:
-        conf.main_events = parser.getboolean("main", "events", fallback=True)
-        conf.main_builds = parser.getboolean("main", "builds", fallback=True)
-
+        for section, options in _REQUIRED.items():
+            if parser.has_section(section):
+                for option in options:
+                    parser.get(section, option)
         if parser.has_section("influxdb"):
-            conf.influx_host = parser.get("influxdb", "hostname")
-            conf.influx_port = parser.getint("influxdb", "port")
-            conf.influx_user = parser.get("influxdb", "username", fallback=None)
-            conf.influx_password = parser.get(
-                "influxdb", "password", fallback=None
-            )
-            conf.influx_database = parser.get("influxdb", "database")
-            conf.influx_batch_size = parser.getint(
-                "influxdb", "batch_size", fallback=20
-            )
+            parser.getint("influxdb", "port")
 
-        conf.token = parser.get("github", "api_key", fallback=None)
-        conf.riot_repo = parser.get("github", "repo", fallback="RIOT-OS/RIOT")
-
-        if parser.has_section("riot"):
-            conf.riot_ci = parser.get("riot", "ci-url")
-            conf.riot_repo_path = parser.get(
-                "riot", "repo_path", fallback="./RIOT"
-            )
-            conf.data_file = parser.get("riot", "size-file")
-
-        base = conf.riot_repo_path.rstrip("/")
-        conf.sink_path = parser.get(
-            "spark", "sink_path", fallback=f"{base}/spark/sink"
-        )
-        conf.landing_dir = parser.get(
-            "spark", "landing_dir", fallback=f"{base}/spark/landing"
-        )
-        conf.checkpoint_dir = parser.get(
-            "spark", "checkpoint_dir", fallback=f"{base}/spark/checkpoint"
-        )
+        base = parser.get("riot", "repo_path", fallback="./RIOT").rstrip("/")
         sp = parser.get("spark", "shuffle_partitions", fallback=None)
-        conf.shuffle_partitions = int(sp) if sp is not None else None
+        return EngineConf(
+            sink_path=parser.get(
+                "spark", "sink_path", fallback=f"{base}/spark/sink"
+            ),
+            landing_dir=parser.get(
+                "spark", "landing_dir", fallback=f"{base}/spark/landing"
+            ),
+            checkpoint_dir=parser.get(
+                "spark", "checkpoint_dir", fallback=f"{base}/spark/checkpoint"
+            ),
+            shuffle_partitions=int(sp) if sp is not None else None,
+        )
     except (configparser.NoOptionError, configparser.NoSectionError, ValueError) as e:
         # same message shape as the reference's SystemExit (rg.py:413-414)
         raise ConfigError(f"Config error in {path}: {e}") from e
-    return conf

@@ -35,10 +35,9 @@ def asof_join(
     right_ts: str = "ts",
     right_payload: Sequence[str] = (),
     suffix: str = "_asof",
-    strict: bool = False,
 ) -> DataFrame:
     """Backward as-of join: latest right row with ``right.ts <= left.ts``
-    (``< left.ts`` when ``strict``) per key.
+    per key.
 
     Returns all left columns plus ``{payload}{suffix}`` columns (NULL when no
     right row precedes — total, never drops left rows).
@@ -47,34 +46,8 @@ def asof_join(
     payload = list(right_payload) or [
         c for c in right.columns if c not in (*keys, right_ts)
     ]
-
-    # side: right=0 sorts before left=1 at equal ts for inclusive semantics;
-    # flipped when strict so a tied right row is NOT visible to the left row.
-    right_tagged = right.select(
-        *keys,
-        F.col(right_ts).alias("_ts"),
-        F.lit(0 if not strict else 1).alias("_side"),
-        F.struct(*[F.col(c) for c in payload]).alias("_payload"),
-    )
-    left_tagged = left.select(
-        "*",
-        F.col(left_ts).alias("_ts"),
-        F.lit(1 if not strict else 0).alias("_side"),
-        F.lit(None).cast(right_tagged.schema["_payload"].dataType).alias("_payload"),
-    )
-    unioned = left_tagged.unionByName(
-        right_tagged.select(
-            *[
-                F.lit(None).cast(left.schema[c].dataType).alias(c)
-                for c in left.columns
-                if c not in keys
-            ],
-            *keys,
-            "_ts",
-            "_side",
-            "_payload",
-        )
-    )
+    # a right row sorts before the left row at an equal ts, so it is visible
+    unioned = _tagged_union(left, right, keys, left_ts, right_ts, payload, 0)
 
     w = (
         Window.partitionBy(*keys)
@@ -84,7 +57,7 @@ def asof_join(
     carried = unioned.withColumn(
         "_carried", F.last("_payload", ignorenulls=True).over(w)
     )
-    is_left = F.col("_side") == (1 if not strict else 0)
+    is_left = F.col("_side") == 1
     out_payload = [
         F.col(f"_carried.{c}").alias(f"{c}{suffix}") for c in payload
     ]
@@ -141,11 +114,10 @@ def asof_join_forward(
     right_ts: str = "ts",
     right_payload: Sequence[str] = (),
     suffix: str = "_asof",
-    strict: bool = False,
     right_tiebreak: Sequence[str] = (),
 ) -> DataFrame:
     """Forward as-of join: EARLIEST right row with ``right.ts >= left.ts``
-    (``>`` when strict) per key — the mirror of :func:`asof_join`, same
+    per key — the mirror of :func:`asof_join`, same
     one-shuffle union + window plan with the frame flipped to
     ``(current row, unbounded following)``.
 
@@ -158,11 +130,9 @@ def asof_join_forward(
         c for c in right.columns if c not in (*keys, right_ts)
     ]
     tb = list(right_tiebreak)
-    # inclusive: right sorts AFTER left at equal ts (visible from the
-    # forward frame); strict: right sorts BEFORE left (invisible).
-    unioned = _tagged_union(
-        left, right, keys, left_ts, right_ts, payload, 1 if not strict else 0
-    )
+    # a right row sorts after the left row at an equal ts, so it is visible
+    # from the forward frame
+    unioned = _tagged_union(left, right, keys, left_ts, right_ts, payload, 1)
     w = (
         Window.partitionBy(*keys)
         .orderBy(
@@ -175,7 +145,7 @@ def asof_join_forward(
     carried = unioned.withColumn(
         "_carried", F.first("_payload", ignorenulls=True).over(w)
     )
-    is_left = F.col("_side") == (0 if not strict else 1)
+    is_left = F.col("_side") == 0
     out_payload = [
         F.col(f"_carried.{c}").alias(f"{c}{suffix}") for c in payload
     ]

@@ -24,19 +24,15 @@ def apply_changelog(
     seq: Sequence[str],
     op_col: str,
     delete_op: str = "D",
-    keep_tombstones: bool = False,
 ) -> DataFrame:
     """Last-writer-wins compaction: for each key, keep the change row with
     the highest ``seq`` (a total order — pass a tiebreak column after the
     timestamp to make it one); if that winning row's ``op_col`` equals
     ``delete_op``, the key is a tombstone and is dropped entirely.
 
-    ``keep_tombstones=True`` keeps the winning delete rows in the output
-    instead. Use it whenever the compacted result feeds a LATER compaction
-    (incremental state): dropping a tombstone forgets that the key died, so
-    a late-arriving change with a lower ``seq`` would wrongly resurrect it.
-    With tombstones retained, compaction is associative under any split of
-    the log — filter ``op_col != delete_op`` only at final read time.
+    The result is final, not incremental state: a dropped tombstone forgets
+    that the key died, so compacting it again with a late change of lower
+    ``seq`` would resurrect the key. Compact the whole log instead.
 
     Returns the surviving rows with the original column set.
 
@@ -53,10 +49,7 @@ def apply_changelog(
     compacted = df.groupBy(*[F.col(k) for k in keys]).agg(
         F.max_by(row, order_key).alias("_last")
     )
-    if not keep_tombstones:
-        compacted = compacted.where(
-            F.col(f"_last.{op_col}") != F.lit(delete_op)
-        )
+    compacted = compacted.where(F.col(f"_last.{op_col}") != F.lit(delete_op))
     return compacted.select(*[F.col(f"_last.{c}").alias(c) for c in cols])
 
 

@@ -161,29 +161,17 @@ def cap_per_group(
 # --------------------------------------------------------------------------
 # Mixture reweighting
 # --------------------------------------------------------------------------
-def mixture_weights(
-    df: DataFrame,
-    strata_col: str = "lang",
-    target_shares: Mapping[str, float] | None = None,
-) -> DataFrame:
-    """Per-stratum resampling weights to morph the corpus mixture into a
-    target distribution: ``weight = target_share / actual_share``. With no
-    target given, uniform across observed strata.
+def mixture_weights(df: DataFrame, strata_col: str = "lang") -> DataFrame:
+    """Per-stratum resampling weights to morph the corpus mixture into the
+    uniform distribution over observed strata:
+    ``weight = target_share / actual_share``.
 
     One partial-aggregable groupBy; the total comes from a window over the
     (tiny, #strata-row) aggregate — no second scan of the corpus.
     """
     counts = df.groupBy(strata_col).agg(F.count(F.lit(1)).alias("n"))
     total = F.sum("n").over(Window.partitionBy())
-    if target_shares is None:
-        n_strata = F.count(F.lit(1)).over(Window.partitionBy())
-        target = F.lit(1.0) / n_strata
-    else:
-        target = F.lit(None).cast("double")
-        for stratum, share in sorted(target_shares.items()):
-            target = F.when(
-                F.col(strata_col) == stratum, F.lit(float(share))
-            ).otherwise(target)
+    target = F.lit(1.0) / F.count(F.lit(1)).over(Window.partitionBy())
     actual = F.col("n") / total
     return counts.select(
         strata_col,
@@ -968,12 +956,10 @@ def quantile_normalize(
 
 
 def mixture_effective_sample_size(
-    df: DataFrame,
-    strata_col: str = "lang",
-    target_shares: Mapping[str, float] | None = None,
+    df: DataFrame, strata_col: str = "lang"
 ) -> DataFrame:
     """Effective sample size of a reweighted mixture — the cost readout
-    for :func:`mixture_weights`: upweighting rare strata toward a target
+    for :func:`mixture_weights`: upweighting rare strata toward the uniform
     mix makes a few rows carry outsized weight, and
 
         ESS = (Σᵢ wᵢ)² / Σᵢ wᵢ²    (Kish)
@@ -1001,14 +987,7 @@ def mixture_effective_sample_size(
     )
     w_all = Window.partitionBy()
     total = F.sum("_ns").over(w_all)
-    if target_shares is None:
-        target = F.lit(1.0) / F.count(F.lit(1)).over(w_all)
-    else:
-        target = F.lit(None).cast("double")
-        for stratum, share in sorted(target_shares.items()):
-            target = F.when(
-                F.col(strata_col) == stratum, F.lit(float(share))
-            ).otherwise(target)
+    target = F.lit(1.0) / F.count(F.lit(1)).over(w_all)
     ws = target / (F.col("_ns").cast("double") / total.cast("double"))
     dec = "decimal(28,12)"
     c = counts.select(

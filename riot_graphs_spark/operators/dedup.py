@@ -295,7 +295,6 @@ def minhash_lsh_pairs(
     num_hashes: int = MINHASH_K,
     band_rows: int = MINHASH_BAND_ROWS,
     shingle_n: int = 3,
-    max_bucket_size: int | None = None,
 ) -> DataFrame:
     """End-to-end MinHash-LSH candidate pairs (doc_a < doc_b), deduplicated
     across bands. Signature + banding are shuffle-free (see _minhash_wide);
@@ -305,27 +304,19 @@ def minhash_lsh_pairs(
     quadratic only within a bucket — the property that makes LSH the scale
     path. Caveat: a pathological bucket (mass-duplicated boilerplate)
     concentrates its C(n,2) pairs in one task; run exact dedup first, which
-    collapses identical docs and bounds bucket sizes, and/or set
-    ``max_bucket_size`` to drop oversized buckets outright — at corpus
-    scale a bucket of thousands is near-always template boilerplate whose
-    members every *other* band already pairs up, and the straggler task it
-    would create can stall the whole stage.
+    collapses identical docs and bounds bucket sizes.
     """
     buckets = minhash_band_buckets(
         docs, id_col, text_col, num_hashes, band_rows, shingle_n
     )
-    return _pairs_from_bands(buckets, id_col, max_bucket_size)
+    return _pairs_from_bands(buckets, id_col)
 
 
-def _pairs_from_bands(
-    buckets: DataFrame, id_col: str, max_bucket_size: int | None = None
-) -> DataFrame:
+def _pairs_from_bands(buckets: DataFrame, id_col: str) -> DataFrame:
     """Candidate-pair expansion over an already-built banding table."""
     grouped = buckets.groupBy("band", "band_key").agg(
         F.array_sort(F.collect_list(F.col(id_col))).alias("_ids")
     )
-    if max_bucket_size is not None:
-        grouped = grouped.filter(F.size("_ids") <= max_bucket_size)
     # For 0-based element i, pair with 1-based positions i+2 … end: i<j pairs.
     pair_structs = F.flatten(
         F.transform(
@@ -532,17 +523,15 @@ def simhash_hamming_pairs(
     docs: DataFrame,
     max_hamming: int = 3,
     bits: int = 32,
-    bands: int | None = None,
     id_col: str = "doc_id",
     text_col: str = "text",
-    max_bucket_size: int | None = None,
 ) -> DataFrame:
     """Near-dup pairs by SimHash Hamming distance ≤ ``max_hamming`` — the
     pigeonhole-banded VERIFY step that makes SimHash a complete dedup
     path (signatures alone only hash; this finds the close pairs).
 
-    Pigeonhole: split the ``bits``-bit signature into ``bands`` equal
-    bands (default ``max_hamming + 1``); any pair within ``max_hamming``
+    Pigeonhole: split the ``bits``-bit signature into ``max_hamming + 1``
+    equal bands; any pair within ``max_hamming``
     differs in at most ``max_hamming`` bands, so at least one band matches
     exactly — candidates are a band-key EQUI-join (never all-pairs), then
     ``bit_count(xor)`` verifies row-locally. 100% recall at the stated
@@ -550,8 +539,7 @@ def simhash_hamming_pairs(
 
     Plan: ONE corpus scan (signatures are row-local), one shuffle to
     group (band, key) buckets, i<j expansion inside the bucket array —
-    the same shape as :func:`minhash_lsh_pairs`, including the
-    ``max_bucket_size`` guard for pathological boilerplate buckets.
+    the same shape as :func:`minhash_lsh_pairs`.
     """
     sig = simhash_signatures(docs, id_col, text_col, bits)
     return hamming_banded_pairs(
@@ -560,8 +548,6 @@ def simhash_hamming_pairs(
         id_col=id_col,
         max_hamming=max_hamming,
         bits=bits,
-        bands=bands,
-        max_bucket_size=max_bucket_size,
     )
 
 
@@ -579,8 +565,8 @@ def hamming_banded_pairs(
     ``bits``-bit signature into ``bands`` equal bands (default
     ``max_hamming + 1``), equi-join on any exactly-matching band, verify
     ``bit_count(xor)`` row-locally. 100% recall at the stated radius, never
-    all-pairs; same shape and ``max_bucket_size`` skew guard as
-    :func:`minhash_lsh_pairs`. Output: ``(doc_a, doc_b, hamming)``.
+    all-pairs; same shape as :func:`minhash_lsh_pairs`, plus an optional
+    ``max_bucket_size`` skew guard. Output: ``(doc_a, doc_b, hamming)``.
     """
     if bands is None:
         bands = max_hamming + 1
@@ -1518,30 +1504,14 @@ def minhash_estimate_calibration(
     )
 
 
-def content_units(
-    text_col: str, sep: str | None = None, block_tokens: int = 10
-) -> Column:
-    """Array of content-unit strings for a document — LITERAL ``sep``-split
-    paragraphs (trimmed, non-empty) when ``sep`` is given, else consecutive
+def content_units(text_col: str, block_tokens: int = 10) -> Column:
+    """Array of content-unit strings for a document — consecutive
     non-overlapping ``block_tokens``-token blocks (full blocks only).
     Entirely row-local Catalyst array code; shared by
     :func:`paragraph_dedup_stats` and :func:`cross_source_overlap`.
-
-    ``sep`` is treated as a literal string, not a regex — ``F.split`` takes
-    a Java regex, so the separator is escaped first (``sep="|"`` would
-    otherwise split between every character, ``"***"`` would throw).
     """
     if block_tokens < 1:
         raise ValueError("block_tokens must be >= 1")
-    if sep is not None:
-        import re as _re
-
-        return F.filter(
-            F.transform(
-                F.split(F.col(text_col), _re.escape(sep)), lambda p: F.trim(p)
-            ),
-            lambda p: p != "",
-        )
     w = words(text_col)
     n_blocks = F.floor(F.size(w) / block_tokens).cast("int")
     return F.when(
@@ -1559,7 +1529,6 @@ def paragraph_dedup_stats(
     docs: DataFrame,
     id_col: str = "doc_id",
     text_col: str = "text",
-    sep: str | None = None,
     block_tokens: int = 10,
 ) -> DataFrame:
     """ExactSubstr-style unit-level dedup report (Lee et al., "Deduplicating
@@ -1570,10 +1539,8 @@ def paragraph_dedup_stats(
     repeated spans; this is the cheap non-overlapping form — one explode +
     two keyed aggregations, no sliding windows.
 
-    ``sep`` given → units are the non-empty ``sep``-split paragraphs
-    (classic ``\\n\\n`` paragraph dedup). ``sep=None`` → units are
-    consecutive non-overlapping ``block_tokens``-token blocks (full blocks
-    only), the fallback for single-line corpora.
+    Units are consecutive non-overlapping ``block_tokens``-token blocks
+    (full blocks only), which also serve single-line corpora.
 
     Unit construction is entirely row-local Catalyst array code (slice /
     transform over the token array — no shuffle, no UDF); the only
@@ -1584,7 +1551,7 @@ def paragraph_dedup_stats(
     Output: ``(id_col, n_units bigint, n_dup_units bigint,
     dup_rate double)`` for every document with ≥ 1 unit.
     """
-    units = content_units(text_col, sep=sep, block_tokens=block_tokens)
+    units = content_units(text_col, block_tokens=block_tokens)
     hashed = (
         docs.select(F.col(id_col), F.explode(units).alias("_u"))
         .select(id_col, F.md5("_u").alias("_uh"))
@@ -1612,11 +1579,10 @@ def cross_source_overlap(
     docs: DataFrame,
     group_col: str = "source",
     text_col: str = "text",
-    sep: str | None = None,
     block_tokens: int = 10,
 ) -> DataFrame:
     """Cross-source duplication matrix: for every unordered pair of
-    sources, how many distinct content units (paragraphs or token blocks —
+    sources, how many distinct content units (token blocks —
     :func:`content_units`) appear in BOTH — the curation report that tells
     you which crawls/dumps are re-hosting each other's text, and therefore
     which per-source mixture weights double-count mass.
@@ -1631,7 +1597,7 @@ def cross_source_overlap(
     Output: ``(source_a, source_b, n_shared_units bigint)``, pairs with
     at least one shared unit.
     """
-    units = content_units(text_col, sep=sep, block_tokens=block_tokens)
+    units = content_units(text_col, block_tokens=block_tokens)
     fp = (
         docs.select(F.col(group_col).alias("_g"), F.explode(units).alias("_u"))
         .select("_g", F.md5("_u").alias("_uh"))

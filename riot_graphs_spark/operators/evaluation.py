@@ -2683,7 +2683,7 @@ def chi2_independence(
 def jarque_bera(
     df: DataFrame,
     value_col: str,
-    group_col: str | None = None,
+    group_col: str,
     scale: int = 100,
 ) -> DataFrame:
     """Jarque–Bera normality test per group — the "can I even use the
@@ -2707,20 +2707,12 @@ def jarque_bera(
 
     Output: one row per group — ``(group string, n bigint, skewness
     double, ex_kurtosis double, jb double, p_value double)``; n < 8 or
-    zero variance NULLs the statistics.  `group_col=None` tests the
-    whole column as one group ('all').
+    zero variance NULLs the statistics.
     """
     dec = "decimal(38,0)"
-    g = (
-        F.col(group_col).cast("string")
-        if group_col is not None
-        else F.lit("all")
-    )
-    keep = F.col(value_col).isNotNull()
-    if group_col is not None:
-        keep = keep & F.col(group_col).isNotNull()
+    keep = F.col(value_col).isNotNull() & F.col(group_col).isNotNull()
     base = df.filter(keep).select(
-        g.alias("_g"),
+        F.col(group_col).cast("string").alias("_g"),
         F.round(F.col(value_col).cast("double") * F.lit(float(scale)), 0)
         .cast("long")
         .alias("_s"),

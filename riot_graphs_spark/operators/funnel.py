@@ -574,7 +574,6 @@ def survival_summary(
     df: DataFrame,
     duration_col: str = "duration",
     event_col: str = "event",
-    horizon: int | None = None,
 ) -> DataFrame:
     """Median survival time and RMST — the two SCALARS a
     :func:`km_survival` curve gets asked for in every review: "when has
@@ -586,8 +585,8 @@ def survival_summary(
 
     RMST integrates the step function exactly: S is constant between
     event times, so the area is Σ S(tᵢ)·(min(tᵢ₊₁, H) − tᵢ) plus the
-    S=1 segment before the first time.  ``horizon`` defaults to the
-    largest observed duration.  Composes :func:`km_survival` — the
+    S=1 segment before the first time.  The horizon H is the largest
+    observed duration.  Composes :func:`km_survival` — the
     windows run on its time-axis output only; the final reduction is
     one row.
 
@@ -597,13 +596,7 @@ def survival_summary(
     from pyspark.sql import Window
 
     curve = km_survival(df, duration_col, event_col)
-    if horizon is None:
-        hz = curve.agg(F.max("t").alias("_h"))
-    else:
-        one = curve.limit(1).select(
-            F.lit(int(horizon)).alias("_h")
-        )
-        hz = one
+    hz = curve.agg(F.max("t").alias("_h"))
     w_next = Window.orderBy("t")
     staged = (
         curve.crossJoin(F.broadcast(hz))

@@ -25,15 +25,14 @@ def enrich(
     dim: DataFrame,
     on: str | Sequence[str],
     how: str = "left",
-    broadcast_dim: bool = True,
 ) -> DataFrame:
-    """J2 — attach dimension attributes to a fact table.
+    """J2 — attach dimension attributes to a fact table, broadcasting the
+    dimension.
 
     ``how='left'`` preserves the reference's tolerance of missing PR metadata
     (``rg.py:361-362`` keeps an empty description on a GitHub miss).
     """
-    dim = F.broadcast(dim) if broadcast_dim else dim
-    return fact.join(dim, on=on, how=how)
+    return fact.join(F.broadcast(dim), on=on, how=how)
 
 
 def delta_new_rows(

@@ -346,7 +346,8 @@ def phash_images(media: DataFrame) -> DataFrame:
 def phash_near_dup_pairs(
     media: DataFrame,
     max_hamming: int = 3,
-    bands: int | None = None,
+    *,
+    bands: int,
     max_bucket_size: int | None = None,
 ) -> DataFrame:
     """Image near-duplicate pairs: pHash + the SAME pigeonhole-banded
@@ -459,8 +460,9 @@ def audio_fingerprints(media: DataFrame) -> DataFrame:
 def audio_near_dup_pairs(
     media: DataFrame,
     max_hamming: int = 3,
-    bands: int | None = None,
-    max_bucket_size: int | None = None,
+    *,
+    bands: int,
+    max_bucket_size: int | None,
 ) -> DataFrame:
     """Audio near-duplicate pairs: acoustic fingerprint + the same
     pigeonhole-banded Hamming join as the text (SimHash) and image (pHash)

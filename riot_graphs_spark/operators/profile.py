@@ -17,29 +17,24 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 
-def profile_columns(
-    df: DataFrame, cols: Sequence[str], exact: bool = False
-) -> DataFrame:
+def profile_columns(df: DataFrame, cols: Sequence[str]) -> DataFrame:
     """One row per profiled column: non-null count, null count, distinct
     count, min/max (as strings — uniform output schema).
 
-    ``n_distinct`` is ``approx_count_distinct`` (HLL++, ~2% relative error,
-    fixed-size partial state) by default — at 100 TB an exact per-column
-    distinct keeps every distinct value in the partial aggregate and a
-    high-cardinality column (ids, hashes) blows the aggregation state.
-    Pass ``exact=True`` for the exact count when the table is known-small
-    or the profile feeds an equality gate (the oracle-parity query does).
+    ``n_distinct`` is the exact ``count(DISTINCT)``, which the oracle-parity
+    query compares for equality. Its partial aggregate keeps every distinct
+    value, so a high-cardinality column (ids, hashes) costs aggregation
+    state in proportion to its distinct count.
 
     Keep doubles out of ``cols`` when oracle parity matters: float→string
     formatting differs across engines.
     """
-    ndv = F.count_distinct if exact else F.approx_count_distinct
     aggs = []
     for c in cols:
         aggs += [
             F.count(F.col(c)).alias(f"{c}__n"),
             (F.count(F.lit(1)) - F.count(F.col(c))).alias(f"{c}__n_null"),
-            ndv(F.col(c)).alias(f"{c}__n_distinct"),
+            F.count_distinct(F.col(c)).alias(f"{c}__n_distinct"),
             F.min(F.col(c)).cast("string").alias(f"{c}__min"),
             F.max(F.col(c)).cast("string").alias(f"{c}__max"),
         ]
@@ -326,7 +321,6 @@ def winsorize(
     group_col: str = "event_type",
     lo: float = 0.01,
     hi: float = 0.99,
-    approx: bool = False,
 ) -> DataFrame:
     """Per-group winsorization — clamp a metric to its [lo, hi]
     percentiles, the outlier treatment a feature/reward column gets before
@@ -340,12 +334,9 @@ def winsorize(
     so the clamp threshold (and therefore every output value and flag) is
     engine-stable; interior values pass through untouched.
 
-    ``approx=False`` (default) uses the exact interpolated percentile —
-    its partial state collects per-group values, fine while per-group value
-    mass fits aggregation state, and required for oracle parity.
-    ``approx=True`` swaps in ``approx_percentile`` (KLL-style sketch,
-    fixed-size partial state) — the 100 TB form; the plan shape is
-    identical, only the bound moves within sketch accuracy.
+    Bounds are the exact interpolated percentile — its partial state
+    collects per-group values, fine while per-group value mass fits
+    aggregation state, and required for oracle parity.
 
     Appends ``winsorized`` (double) and ``clipped`` (boolean) to ``df``'s
     columns.
@@ -353,10 +344,9 @@ def winsorize(
     if not 0 <= lo < hi <= 1:
         raise ValueError("need 0 <= lo < hi <= 1")
     v = F.col(value_col)
-    pct = F.approx_percentile if approx else F.percentile
     bounds = df.groupBy(group_col).agg(
-        F.round(pct(v, F.lit(lo)), 6).alias("_p_lo"),
-        F.round(pct(v, F.lit(hi)), 6).alias("_p_hi"),
+        F.round(F.percentile(v, F.lit(lo)), 6).alias("_p_lo"),
+        F.round(F.percentile(v, F.lit(hi)), 6).alias("_p_hi"),
     ).withColumnRenamed(group_col, "_g")
     # eqNullSafe: groupBy emits a NULL-group bounds row, and rows whose
     # group is NULL must match it — a plain equi-join drops them (NULL=NULL
@@ -377,7 +367,6 @@ def heavy_hitters(
     df: DataFrame,
     key_col: str,
     min_share: float = 0.001,
-    capacity: int | None = None,
 ) -> DataFrame:
     """EXACT frequent-items query — every key whose count strictly exceeds
     ``min_share`` of the table — computed without a full-cardinality
@@ -385,14 +374,14 @@ def heavy_hitters(
 
     1. **Candidates** (bounded memory): a batched Misra-Gries summary per
        partition (``mapInPandas``; per-Arrow-batch ``value_counts`` merged
-       into a dict capped at ``capacity ≈ 1/min_share`` counters by the
+       into a dict capped at ``cap = ⌈1/min_share⌉`` counters by the
        subtract-the-(cap+1)th-largest decrement). MG guarantees every key
-       with partition count > N_p/(capacity+1) survives, and by pigeonhole
+       with partition count > N_p/(cap+1) survives, and by pigeonhole
        any key with GLOBAL count > N·min_share exceeds that bound in at
        least one partition — so candidates ⊇ all true heavy hitters.
-       Summary memory is O(capacity + batch distinct), never O(distinct).
+       Summary memory is O(cap + batch distinct), never O(distinct).
     2. **Exact recount**: semi-join the table against the (tiny —
-       ≤ capacity × n_partitions keys) broadcast candidate set, exact
+       ≤ cap × n_partitions keys) broadcast candidate set, exact
        groupBy count, strict ``cnt > N·min_share`` filter.
 
     Phase 2 makes sketch slop irrelevant: the result EXACTLY equals
@@ -410,14 +399,12 @@ def heavy_hitters(
 
     if not 0.0 < min_share < 1.0:
         raise ValueError("need 0 < min_share < 1")
-    # Exactness floor: the per-partition MG guarantee (every key with
-    # partition count > N_p/(cap+1) survives) covers all true heavy hitters
-    # only when cap + 1 >= 1/min_share — a smaller caller value would make
-    # phase 1 silently drop real hitters (balanced keys tie at the
-    # decrement threshold and all die), so capacity is clamped UP to the
-    # pigeonhole floor; the knob only adds headroom, never breaks exactness.
-    floor_cap = max(1, math.ceil(1.0 / min_share))
-    cap = max(capacity, floor_cap) if capacity is not None else floor_cap
+    # The per-partition MG guarantee (every key with partition count
+    # > N_p/(cap+1) survives) covers all true heavy hitters only when
+    # cap + 1 >= 1/min_share; a smaller cap would make phase 1 silently
+    # drop real hitters (balanced keys tie at the decrement threshold and
+    # all die), so cap is the pigeonhole floor.
+    cap = max(1, math.ceil(1.0 / min_share))
 
     keys = df.select(
         F.col(key_col).cast("string").alias("k")
@@ -458,7 +445,6 @@ def heavy_hitters_grouped(
     key_col: str,
     group_col: str,
     min_share: float = 0.01,
-    capacity: int | None = None,
 ) -> DataFrame:
     """Per-group EXACT frequent items — :func:`heavy_hitters` with the
     Misra-Gries guarantee applied WITHIN each group (a time window, a
@@ -466,7 +452,7 @@ def heavy_hitters_grouped(
     of its group's rows. This is the windowed/trending form.
 
     Phase 1 keeps one capped MG summary PER GROUP seen in the partition
-    (memory O(groups-in-partition × capacity) — groups are time windows or
+    (memory O(groups-in-partition × cap) — groups are time windows or
     sources, i.e. few). Pigeonhole per group still holds: a key with
     group-global count > N_g·min_share exceeds the per-partition MG bound
     for that group somewhere, so candidates ⊇ true hitters; phase 2's
@@ -483,14 +469,12 @@ def heavy_hitters_grouped(
 
     if not 0.0 < min_share < 1.0:
         raise ValueError("need 0 < min_share < 1")
-    # Exactness floor: the per-partition MG guarantee (every key with
-    # partition count > N_p/(cap+1) survives) covers all true heavy hitters
-    # only when cap + 1 >= 1/min_share — a smaller caller value would make
-    # phase 1 silently drop real hitters (balanced keys tie at the
-    # decrement threshold and all die), so capacity is clamped UP to the
-    # pigeonhole floor; the knob only adds headroom, never breaks exactness.
-    floor_cap = max(1, math.ceil(1.0 / min_share))
-    cap = max(capacity, floor_cap) if capacity is not None else floor_cap
+    # The per-partition MG guarantee (every key with partition count
+    # > N_p/(cap+1) survives) covers all true heavy hitters only when
+    # cap + 1 >= 1/min_share; a smaller cap would make phase 1 silently
+    # drop real hitters (balanced keys tie at the decrement threshold and
+    # all die), so cap is the pigeonhole floor.
+    cap = max(1, math.ceil(1.0 / min_share))
 
     base = df.where(
         F.col(key_col).isNotNull() & F.col(group_col).isNotNull()

@@ -68,13 +68,13 @@ def interval_overlap_join(
     b: DataFrame,
     start_col: str,
     end_col: str,
-    on: list[str] | None = None,
+    on: list[str],
     band_seconds: int = 7 * 86400,
     suffix: str = "_b",
 ) -> DataFrame:
     """Interval×interval overlap join (CLOSED intervals: rows pair iff
-    ``a.start <= b.end AND b.start <= a.end``), optionally pre-keyed on
-    ``on`` equi-columns — the missing sibling of :func:`interval_point_join`
+    ``a.start <= b.end AND b.start <= a.end``), pre-keyed on the ``on``
+    equi-columns (``[]`` for none) — the missing sibling of :func:`interval_point_join`
     (maintenance windows × outages, shipment spans × promotion spans,
     session spans × incident spans).
 
@@ -90,8 +90,6 @@ def interval_overlap_join(
     ``b``'s non-key columns come back suffixed (default ``_b``), so
     self-joins work by passing the same frame twice.
     """
-    on = list(on or [])
-
     def band(c: Column) -> Column:
         return F.floor(
             c.cast("timestamp").cast("double").cast("long") / band_seconds

@@ -163,14 +163,13 @@ def tfidf_top_terms(
 
 def unigram_lm_cross_entropy(
     docs: DataFrame,
-    train_docs: DataFrame | None = None,
     alpha: float = 0.5,
     id_col: str = "doc_id",
     text_col: str = "text",
 ) -> DataFrame:
     """CCNet-style LM quality signal: per-document cross-entropy (nats per
-    token) under an add-α-smoothed unigram model fit on ``train_docs``
-    (default: the corpus itself). Low = looks like the reference corpus;
+    token) under an add-α-smoothed unigram model fit on the corpus
+    itself. Low = looks like the rest of the corpus;
     high = gibberish/boilerplate/another register — filter or re-weight on
     it exactly as CCNet buckets by perplexity. Cross-entropy rather than
     ``exp`` of it is returned so the score stays in well-behaved range and
@@ -183,8 +182,7 @@ def unigram_lm_cross_entropy(
     per-token ``ln p``. Empty docs are kept with NULL score (no silent
     drops). Returns ``(id_col, n_tokens, cross_entropy)``.
     """
-    train = train_docs if train_docs is not None else docs
-    train_tok = _doc_tokens(train, id_col, text_col)
+    train_tok = _doc_tokens(docs, id_col, text_col)
     model = train_tok.groupBy("token").agg(F.count(F.lit(1)).alias("c"))
     consts = model.agg(
         F.sum("c").alias("t_total"), F.count(F.lit(1)).alias("v_size")
@@ -302,7 +300,6 @@ def bm25_search_topk(
 
 def perplexity_buckets(
     docs: DataFrame,
-    train_docs: DataFrame | None = None,
     n_buckets: int = 3,
     strata_col: str = "lang",
     id_col: str = "doc_id",
@@ -330,7 +327,7 @@ def perplexity_buckets(
     if n_buckets < 2:
         raise ValueError("n_buckets must be >= 2")
     scored = unigram_lm_cross_entropy(
-        docs, train_docs, alpha=alpha, id_col=id_col, text_col=text_col
+        docs, alpha=alpha, id_col=id_col, text_col=text_col
     )
     joined = docs.select(F.col(id_col), F.col(strata_col)).join(
         scored, id_col
@@ -403,7 +400,6 @@ def _doc_bigrams(docs: DataFrame, id_col: str, text_col: str) -> DataFrame:
 
 def bigram_lm_cross_entropy(
     docs: DataFrame,
-    train_docs: DataFrame | None = None,
     alpha: float = 0.5,
     id_col: str = "doc_id",
     text_col: str = "text",
@@ -412,7 +408,7 @@ def bigram_lm_cross_entropy(
     :func:`unigram_lm_cross_entropy`, the direction CCNet actually goes
     (its reference model is a 5-gram KenLM): per-document cross-entropy
     (nats per transition) of ``p(b|a) = (c(a,b)+α) / (c(a·)+α·V)`` with
-    add-α smoothing, fit on ``train_docs`` (default: the corpus itself).
+    add-α smoothing, fit on the corpus itself.
     A bigram model separates fluent text from shuffled-word soup that a
     unigram model scores identically — exactly the gibberish class the
     unigram signal is blind to.
@@ -424,11 +420,10 @@ def bigram_lm_cross_entropy(
     transitions — kept, not dropped). Returns
     ``(id_col, n_bigrams, cross_entropy)``.
     """
-    train = train_docs if train_docs is not None else docs
-    tg = _doc_bigrams(train, id_col, text_col)
+    tg = _doc_bigrams(docs, id_col, text_col)
     model = tg.groupBy("a", "b").agg(F.count(F.lit(1)).alias("c2"))
     contexts = tg.groupBy("a").agg(F.count(F.lit(1)).alias("c1"))
-    vocab = _doc_tokens(train, id_col, text_col).agg(
+    vocab = _doc_tokens(docs, id_col, text_col).agg(
         F.count_distinct("token").alias("v_size")
     )
 

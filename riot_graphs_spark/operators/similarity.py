@@ -143,7 +143,6 @@ def lsh_bucketed_topk(
 def embedding_neardup_pairs(
     embeddings: DataFrame,
     threshold: float = 0.95,
-    block_col: str | None = None,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     bucket_dims: int = 8,
@@ -160,17 +159,10 @@ def embedding_neardup_pairs(
     near-dup pair straddling a sign boundary is missed; lower
     ``bucket_dims`` for recall, raise it for smaller blocks.
 
-    ``block_col`` overrides the key with a caller-supplied column (e.g. an
-    IVF cell id, or a fixture label in tests). The unblocked cartesian path
-    is a deliberate scale-killer and only runs with an explicit
+    The unblocked cartesian path is a deliberate scale-killer and only runs with an explicit
     ``allow_all_pairs=True`` (small corpora / recall measurement).
     """
-    if allow_all_pairs:
-        block = None
-    elif block_col is not None:
-        block = F.col(block_col)
-    else:
-        block = sign_bucket(vec_col, bucket_dims)
+    block = None if allow_all_pairs else sign_bucket(vec_col, bucket_dims)
     a = embeddings.select(
         *([] if block is None else [block.alias("_block")]),
         F.col(id_col).alias("vec_a"),

@@ -29,13 +29,11 @@ STOPWORDS: tuple[str, ...] = (
 )
 
 
-def tokens(text: Column | str, lower: bool = True) -> Column:
-    """Word tokens: maximal ``[a-z0-9]+`` runs (BPE-ish regex tokenizer's
-    word-boundary pass)."""
+def tokens(text: Column | str) -> Column:
+    """Word tokens: maximal ``[a-z0-9]+`` runs of the lower-cased text
+    (BPE-ish regex tokenizer's word-boundary pass)."""
     c = F.col(text) if isinstance(text, str) else text
-    if lower:
-        c = F.lower(c)
-    return F.regexp_extract_all(c, F.lit("[a-z0-9]+"), 0)
+    return F.regexp_extract_all(F.lower(c), F.lit("[a-z0-9]+"), 0)
 
 
 def token_count(text: Column | str) -> Column:
@@ -490,33 +488,10 @@ def bpe_pair_counts(
     return pairs.orderBy(F.desc("n"), F.asc("pair")).limit(top_n)
 
 
-def _batch_compatible(
-    ranked: list[tuple[str, str]], limit: int
-) -> list[tuple[str, str]]:
-    """Greedy maximal prefix of ``ranked`` (count-desc order) whose merges
-    cannot interact within one round: accepted pairs share no symbol, and no
-    accepted pair's concatenation equals a symbol of another (the merge's
-    NEW symbol must not create or destroy occurrences of a co-selected
-    pair)."""
-    taken: list[tuple[str, str]] = []
-    used: set[str] = set()
-    for a, b in ranked:
-        if len(taken) >= limit:
-            break
-        # `used` holds every accepted symbol AND concat, so this one test
-        # covers shared-symbol and concat-collision interactions both ways.
-        if a in used or b in used or (a + b) in used:
-            continue
-        taken.append((a, b))
-        used.update((a, b, a + b))
-    return taken
-
-
 def bpe_train(
     docs: DataFrame,
     n_merges: int = 10,
     text_col: str = "text",
-    batch_size: int = 1,
 ) -> list[tuple[str, str]]:
     """Distributed BPE tokenizer training: learn ``n_merges`` merge rules
     over the corpus. Returns the rules in learned order (greedy argmax of
@@ -528,15 +503,8 @@ def bpe_train(
     shuffle); every merge round then runs on the vocab-sized symbol table —
     one pair-count aggregation (vocab-sized) + one tiny argmax collect + a
     row-local merge rewrite, with ``localCheckpoint`` cutting lineage per
-    round exactly like the CC/k-means loops.
-
-    ``batch_size=1`` (default) is EXACT sequential BPE. ``batch_size=k``
-    accepts up to k non-interacting pairs per round (no shared symbol, no
-    concat collision — see :func:`_batch_compatible`), cutting the number of
-    Spark jobs for a 32k-vocab training run by ~k×. This is the standard
-    fast-trainer batching and is exact UNLESS a merge mints a new pair that
-    outcounts a later same-round selection — rare in natural corpora, but a
-    deviation from strict BPE, so it is opt-in, never silently on.
+    round exactly like the CC/k-means loops.  Each round accepts exactly
+    one merge, so the result is exact sequential BPE.
 
     Loop-state representation (r14): the symbol sequence is carried as ONE
     space-separated string ``' s1 s2 … sk '`` instead of an array.  The
@@ -552,8 +520,6 @@ def bpe_train(
     expression.  Pair counting splits the string back to an array — same
     counts, same argmax, bit-identical merge sequence (parity-pinned by
     the reference-Python trainer tests)."""
-    if batch_size < 1:
-        raise ValueError("batch_size must be >= 1")
     word = F.explode(tokens(text_col)).alias("w")
     # Narrow projection first: the spread exchange carries only the text
     # column (guide §2.3; the full-row form also paid the SPARK-23207
@@ -575,10 +541,9 @@ def bpe_train(
     while len(merges) < n_merges:
         arr = F.split(F.trim(F.col("sym")), " ")
         pair_idx = F.expr("sequence(1, size(_arr) - 1)")
-        # Over-fetch 4x: the compatibility filter skips interacting pairs.
-        # tail() (not collect()) fetches the ≤4k-row ordered result — the
+        # tail() (not collect()) fetches the one-row ordered result — the
         # executeTail path halves the per-round driver round-trip cost.
-        pairs = (
+        top = (
             vocab.select("f", arr.alias("_arr"))
             .filter(F.size("_arr") >= 2)
             .select(
@@ -596,19 +561,14 @@ def bpe_train(
             .groupBy("p")
             .agg(F.sum("f").alias("n"))
             .orderBy(F.desc("n"), F.asc("p"))
-            .limit(max(1, batch_size * 4))
-            .tail(max(1, batch_size * 4))
+            .limit(1)
+            .tail(1)
         )
-        if not pairs:
+        if not top:
             break
-        ranked = [(r.p.a, r.p.b) for r in pairs]
-        batch = _batch_compatible(
-            ranked, min(batch_size, n_merges - len(merges))
-        )
-        col = F.col("sym")
-        for a, b in batch:  # rank order; merges provably independent
-            merges.append((a, b))
-            col = F.regexp_replace(col, f"(?<= ){a} {b}(?= )", a + b)
+        a, b = top[0].p.a, top[0].p.b
+        merges.append((a, b))
+        col = F.regexp_replace(F.col("sym"), f"(?<= ){a} {b}(?= )", a + b)
         # Lazy: the rewrite materializes inside the NEXT round's pair
         # aggregation instead of as its own driver round-trip — same
         # lineage cut, half the per-round jobs (r13-opt).

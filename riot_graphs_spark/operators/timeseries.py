@@ -72,7 +72,8 @@ def last_per_bucket(
     dims: Sequence[str],
     payload: Sequence[str],
     bucket: Column | None = None,
-    tiebreak: str | None = None,
+    *,
+    tiebreak: str,
 ) -> DataFrame:
     """A1 — top-1-per-time-bucket ("last build of the day",
     reference ``riot_graphs/rg.py:52-84``).
@@ -85,9 +86,7 @@ def last_per_bucket(
     timestamps (unique id column).
     """
     bucket = bucket if bucket is not None else F.date_trunc("DAY", F.col(ts))
-    order = (
-        F.struct(F.col(ts), F.col(tiebreak)) if tiebreak else F.col(ts)
-    )
+    order = F.struct(F.col(ts), F.col(tiebreak))
     picked = F.max_by(F.struct(*[F.col(c) for c in payload]), order).alias("_last")
     out = df.groupBy(bucket.alias("bucket"), *_cols(dims)).agg(picked)
     return out.select(
@@ -95,12 +94,12 @@ def last_per_bucket(
     )
 
 
-def top1_by_time(df: DataFrame, ts: str, tiebreak: str | None = None) -> DataFrame:
+def top1_by_time(df: DataFrame, ts: str, tiebreak: str) -> DataFrame:
     """A2 — global newest row (``SELECT … ORDER BY time DESC LIMIT 1``,
     reference ``rg.py:130-131``). Plans as TakeOrderedAndProject: each
     partition keeps 1 row, driver merges — no full sort, no full shuffle.
     """
-    order = [F.col(ts).desc()] + ([F.col(tiebreak).desc()] if tiebreak else [])
+    order = [F.col(ts).desc(), F.col(tiebreak).desc()]
     return df.orderBy(*order).limit(1)
 
 
@@ -163,12 +162,11 @@ def gap_fill_value(
     dims: Sequence[str],
     values: Sequence[str],
     step: str = "INTERVAL 1 DAY",
-    fill: float | int | None = None,
+    *,
+    fill: float | int,
 ) -> DataFrame:
-    """G3 variant — Grafana/InfluxQL ``fill(0)`` / ``fill(<const>)`` /
-    ``fill(null)``: every missing bucket appears on the regular grid with a
-    constant value (``fill=None`` leaves NULL — ``fill(null)``, which still
-    matters: the chart needs the empty bucket to break the line).
+    """G3 variant — Grafana/InfluxQL ``fill(0)`` / ``fill(<const>)``: every
+    missing bucket appears on the regular grid with the constant ``fill``.
 
     Same distributive spine/grid as :func:`gap_fill_forward` but no window
     at all — just a ``coalesce`` projection after the grid join, so this is
@@ -181,14 +179,7 @@ def gap_fill_value(
     series = df.select(*dims).distinct()
     grid = spine.crossJoin(F.broadcast(series))
     joined = grid.join(df, on=[ts, *dims], how="left")
-    out = [
-        (
-            F.coalesce(F.col(v), F.lit(fill)).alias(v)
-            if fill is not None
-            else F.col(v)
-        )
-        for v in values
-    ]
+    out = [F.coalesce(F.col(v), F.lit(fill)).alias(v) for v in values]
     return joined.select(ts, *dims, *out)
 
 
@@ -256,7 +247,8 @@ def moving_average(
     value: str,
     n: int,
     out: str = "moving_avg",
-    tiebreak: str | None = None,
+    *,
+    tiebreak: str,
 ) -> DataFrame:
     """InfluxQL ``moving_average(field, N)`` — average of the current and the
     N-1 preceding points of the same series; emitted only once the window is
@@ -269,7 +261,7 @@ def moving_average(
     decimals), and the gap widens with ``n``. Same shape as
     :func:`zscore_anomalies`/:func:`rsi`.
     """
-    order = [F.col(ts)] + ([F.col(tiebreak)] if tiebreak else [])
+    order = [F.col(ts), F.col(tiebreak)]
     w = Window.partitionBy(*_cols(dims)).orderBy(*order)
     w_cum = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
     cum = (
@@ -295,12 +287,13 @@ def cumulative_sum(
     ts: str,
     value: str,
     out: str = "cum_sum",
-    tiebreak: str | None = None,
+    *,
+    tiebreak: str,
 ) -> DataFrame:
     """InfluxQL ``cumulative_sum(field)`` — running total per series.
     Unbounded-preceding row frame; DECIMAL accumulation for exactness, cast
     to double at the edge."""
-    order = [F.col(ts)] + ([F.col(tiebreak)] if tiebreak else [])
+    order = [F.col(ts), F.col(tiebreak)]
     w = (
         Window.partitionBy(*_cols(dims))
         .orderBy(*order)
@@ -316,20 +309,20 @@ def derivative(
     ts: str,
     value: str,
     unit_seconds: float = 1.0,
-    non_negative: bool = False,
     out: str = "rate",
-    tiebreak: str | None = None,
+    *,
+    tiebreak: str,
 ) -> DataFrame:
-    """InfluxQL ``derivative(field, unit)`` / ``non_negative_derivative`` —
-    rate of change between consecutive points of a series, scaled to per-
-    ``unit_seconds``. The first point of each series has no predecessor and
-    is dropped (InfluxQL emits nothing for it); with ``non_negative``,
-    negative rates are dropped too (counter-reset semantics).
+    """InfluxQL ``non_negative_derivative(field, unit)`` — rate of change
+    between consecutive points of a series, scaled to per-``unit_seconds``.
+    The first point of each series has no predecessor and is dropped
+    (InfluxQL emits nothing for it); negative rates are dropped too
+    (counter-reset semantics).
 
     Per-row double arithmetic on exactly two rows — bit-deterministic IEEE,
     no decimal hop needed.
     """
-    order = [F.col(ts)] + ([F.col(tiebreak)] if tiebreak else [])
+    order = [F.col(ts), F.col(tiebreak)]
     w = Window.partitionBy(*_cols(dims)).orderBy(*order)
     dv = F.col(value) - F.lag(value, 1).over(w)
     dt = (
@@ -337,10 +330,11 @@ def derivative(
         - F.lag(F.col(ts).cast("timestamp").cast("double"), 1).over(w)
     )
     rate = dv / dt * F.lit(float(unit_seconds))
-    res = df.withColumn(out, rate).filter(F.col(out).isNotNull())
-    if non_negative:
-        res = res.filter(F.col(out) >= 0)
-    return res
+    return (
+        df.withColumn(out, rate)
+        .filter(F.col(out).isNotNull())
+        .filter(F.col(out) >= 0)
+    )
 
 
 def elapsed(
@@ -348,12 +342,13 @@ def elapsed(
     dims: Sequence[str],
     ts: str,
     out: str = "elapsed_us",
-    tiebreak: str | None = None,
+    *,
+    tiebreak: str,
 ) -> DataFrame:
     """InfluxQL ``elapsed(field)`` — microseconds between consecutive points
     of a series (integer arithmetic in epoch-micros space; exact). First
     point of each series is dropped, as in InfluxQL."""
-    order = [F.col(ts)] + ([F.col(tiebreak)] if tiebreak else [])
+    order = [F.col(ts), F.col(tiebreak)]
     w = Window.partitionBy(*_cols(dims)).orderBy(*order)
     us = F.unix_micros(F.col(ts).cast("timestamp"))
     return (
@@ -369,7 +364,8 @@ def integral_per_bucket(
     value: str,
     unit: str = "day",
     out: str = "integral",
-    tiebreak: str | None = None,
+    *,
+    tiebreak: str,
 ) -> DataFrame:
     """InfluxQL ``integral(field, 1s)`` under ``GROUP BY time(...)`` —
     trapezoidal area under the series curve, per time bucket and series.
@@ -382,7 +378,7 @@ def integral_per_bucket(
     (bucket, series) per task.
     """
     bucket = F.date_trunc(unit, F.col(ts))
-    order = [F.col(ts)] + ([F.col(tiebreak)] if tiebreak else [])
+    order = [F.col(ts), F.col(tiebreak)]
     w = Window.partitionBy(*_cols(dims), bucket).orderBy(*order)
     tsec = F.col(ts).cast("timestamp").cast("double")
     area = (
@@ -408,7 +404,8 @@ def time_weighted_avg_per_bucket(
     value: str,
     unit: str = "day",
     out: str = "twa",
-    tiebreak: str | None = None,
+    *,
+    tiebreak: str,
 ) -> DataFrame:
     """Time-weighted average per bucket and series — the honest mean for
     irregularly sampled series (plain ``avg`` over-weights dense bursts).
@@ -417,7 +414,7 @@ def time_weighted_avg_per_bucket(
     point's value (zero covered time).
     """
     bucket = F.date_trunc(unit, F.col(ts))
-    order = [F.col(ts)] + ([F.col(tiebreak)] if tiebreak else [])
+    order = [F.col(ts), F.col(tiebreak)]
     w = Window.partitionBy(*_cols(dims), bucket).orderBy(*order)
     tsec = F.col(ts).cast("timestamp").cast("double")
     dt = tsec - F.lag(tsec, 1).over(w)
@@ -430,7 +427,7 @@ def time_weighted_avg_per_bucket(
             F.sum(F.col("_area").cast("decimal(28,6)")).cast("double").alias("_sa"),
             F.sum(F.col("_dt").cast("decimal(28,6)")).cast("double").alias("_sd"),
             F.max_by(
-                F.col(value), F.struct(*[F.col(ts)] + ([F.col(tiebreak)] if tiebreak else []))
+                F.col(value), F.struct(F.col(ts), F.col(tiebreak))
             ).alias("_lastv"),
         )
     )
@@ -480,7 +477,8 @@ def ewma(
     value: str,
     alpha: float = 0.3,
     out: str = "ewma",
-    tiebreak: str | None = None,
+    *,
+    tiebreak: str,
 ) -> DataFrame:
     """InfluxQL ``exponential_moving_average`` — per-point recursive smooth
     ``e_t = α·x_t + (1-α)·e_{t-1}`` seeded with the series' first value.
@@ -497,7 +495,7 @@ def ewma(
     import pandas as pd
 
     dims = list(dims)
-    order = [ts] + ([tiebreak] if tiebreak else [])
+    order = [ts, tiebreak]
     schema_out = df.select(*dims, ts, value).schema.add(out, "double")
 
     def smooth(pdf: pd.DataFrame) -> pd.DataFrame:
@@ -527,7 +525,8 @@ def ewma_window(
     alpha: float = 0.3,
     k: int = 8,
     out: str = "ewma_w",
-    tiebreak: str | None = None,
+    *,
+    tiebreak: str,
     round_to: int = 6,
 ) -> DataFrame:
     """K-term truncated EWMA — the *oracle-pairable* sibling of
@@ -557,7 +556,7 @@ def ewma_window(
         raise ValueError("need 0 < alpha < 1")
     if k < 1:
         raise ValueError("k must be >= 1")
-    order = [F.col(ts)] + ([F.col(tiebreak)] if tiebreak else [])
+    order = [F.col(ts), F.col(tiebreak)]
     w = Window.partitionBy(*_cols(dims)).orderBy(*order)
     a = Decimal(str(alpha))
     q = Decimal("1.000000000000")
@@ -720,14 +719,14 @@ def top_n_per_series(
     value: str,
     n: int,
     tiebreak: str,
-    bottom: bool = False,
 ) -> DataFrame:
-    """InfluxQL ``top(field, N)`` / ``bottom(field, N)`` per tag — ranked
-    window with a unique-id tiebreak so equal values can't flip the pick.
-    One shuffle on dims; with AQE the per-series sort is a top-K heap when N
-    is small relative to series length."""
-    val = F.col(value).asc() if bottom else F.col(value).desc()
-    w = Window.partitionBy(*_cols(dims)).orderBy(val, F.col(tiebreak))
+    """InfluxQL ``top(field, N)`` per tag — ranked window with a unique-id
+    tiebreak so equal values can't flip the pick. One shuffle on dims; with
+    AQE the per-series sort is a top-K heap when N is small relative to
+    series length."""
+    w = Window.partitionBy(*_cols(dims)).orderBy(
+        F.col(value).desc(), F.col(tiebreak)
+    )
     return (
         df.withColumn("_rn", F.row_number().over(w))
         .filter(F.col("_rn") <= n)
@@ -800,7 +799,8 @@ def zscore_anomalies(
     value: str,
     trailing: int = 100,
     threshold: float = 3.0,
-    tiebreak: str | None = None,
+    *,
+    tiebreak: str,
 ) -> DataFrame:
     """Streaming-style anomaly flag: z-score of each point against the mean
     and sample stddev of the previous ``trailing`` points of its series
@@ -822,7 +822,7 @@ def zscore_anomalies(
     exactness, identical output (~8× faster at sf0.1, and the gap widens
     with ``trailing``).
     """
-    order = [F.col(ts)] + ([F.col(tiebreak)] if tiebreak else [])
+    order = [F.col(ts), F.col(tiebreak)]
     wp = Window.partitionBy(*_cols(dims)).orderBy(*order)
     w_cum = wp.rowsBetween(Window.unboundedPreceding, Window.currentRow)
     y = F.col(value).cast("decimal(18,2)")
@@ -892,7 +892,8 @@ def ohlc_candles(
     ts: str,
     value: str,
     unit: str = "day",
-    tiebreak: str | None = None,
+    *,
+    tiebreak: str,
 ) -> DataFrame:
     """OHLC candles: per (series, bucket) the opening (first), high (max),
     low (min), and closing (last) value — the candlestick/stat-panel
@@ -904,8 +905,7 @@ def ohlc_candles(
     key plus plain min/max — constant state per group.
     """
     bucket = F.date_trunc(unit, F.col(ts)).alias("bucket")
-    tb = [F.col(tiebreak)] if tiebreak else []
-    time_key = F.struct(F.col(ts), *tb)
+    time_key = F.struct(F.col(ts), F.col(tiebreak))
     return df.groupBy(*_cols(dims), bucket).agg(
         F.min_by(value, time_key).alias("open"),
         F.max(value).alias("high"),
@@ -1029,7 +1029,8 @@ def rsi(
     ts: str,
     value: str,
     n: int = 14,
-    tiebreak: str | None = None,
+    *,
+    tiebreak: str,
 ) -> DataFrame:
     """Relative Strength Index, Cutler's simple-average form (the
     InfluxQL/TA ``relative_strength_index`` transform):
@@ -1058,7 +1059,8 @@ def chande_momentum(
     ts: str,
     value: str,
     n: int = 14,
-    tiebreak: str | None = None,
+    *,
+    tiebreak: str,
 ) -> DataFrame:
     """Chande Momentum Oscillator (InfluxQL
     ``chande_momentum_oscillator``): ``100·(ΣGain − ΣLoss)/(ΣGain + ΣLoss)``
@@ -1080,13 +1082,13 @@ def _with_trailing_gain_loss(
     ts: str,
     value: str,
     n: int,
-    tiebreak: str | None,
+    tiebreak: str,
 ) -> DataFrame:
     """Shared TA core: attach ``_sg``/``_sl`` — the trailing-``n`` sums of
     point-to-point gains and losses — as exact running-sum differences
     (O(1) per row), dropping the first ``n`` rows of each series (no full
     change window yet)."""
-    order = [F.col(ts)] + ([F.col(tiebreak)] if tiebreak else [])
+    order = [F.col(ts), F.col(tiebreak)]
     wp = Window.partitionBy(*_cols(dims)).orderBy(*order)
     change = F.col(value) - F.lag(value).over(wp)
     gain = F.coalesce(
@@ -1185,7 +1187,8 @@ def m4_downsample(
     ts: str,
     value: str,
     unit: str = "day",
-    tiebreak: str | None = None,
+    *,
+    tiebreak: str,
 ) -> DataFrame:
     """M4 downsampling (Jugel et al., VLDB 2014): per series and time
     bucket keep only the first, last, min-value, and max-value *points* —
@@ -1204,10 +1207,9 @@ def m4_downsample(
     windows, no second shuffle.
     """
     bucket = F.date_trunc(unit, F.col(ts)).alias("bucket")
-    tb = [F.col(tiebreak)] if tiebreak else []
     pt = F.struct(F.col(ts).alias(ts), F.col(value).alias(value))
-    time_key = F.struct(F.col(ts), *tb)
-    value_key = F.struct(F.col(value), F.col(ts), *tb)
+    time_key = F.struct(F.col(ts), F.col(tiebreak))
+    value_key = F.struct(F.col(value), F.col(ts), F.col(tiebreak))
     return (
         df.groupBy(*_cols(dims), bucket)
         .agg(
@@ -1239,12 +1241,11 @@ def annotations(
     ts: str,
     start: datetime | str,
     end: datetime | str,
-    projection: Sequence[Column] | None = None,
+    projection: Sequence[Column],
 ) -> DataFrame:
     """G6 — events-in-range with formatted title/text columns
     (reference ``rg.py:331-348`` feeds Grafana annotation tooltips)."""
-    out = time_range(df, ts, start, end)
-    return out.select(*projection) if projection is not None else out
+    return time_range(df, ts, start, end).select(*projection)
 
 
 def session_windows(
@@ -1456,7 +1457,7 @@ def autocorrelation(
     ts: str,
     value: str,
     max_lag: int,
-    tiebreak: str | None = None,
+    tiebreak: str,
 ) -> DataFrame:
     """Per-series autocorrelation function at lags 1..max_lag — the
     seasonality/memory detector read before choosing a Holt-Winters
@@ -1482,7 +1483,7 @@ def autocorrelation(
     if max_lag < 1:
         raise ValueError("need max_lag >= 1")
     dec = "decimal(28,12)"
-    order = [F.col(ts)] + ([F.col(tiebreak)] if tiebreak else [])
+    order = [F.col(ts), F.col(tiebreak)]
     w = Window.partitionBy(*_cols(dims)).orderBy(*order)
     w_all = Window.partitionBy(*_cols(dims))
     base = df.filter(F.col(value).isNotNull())

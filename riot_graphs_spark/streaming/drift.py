@@ -78,7 +78,6 @@ def record_baseline_cdf(
     value_col: str,
     nbins: int,
     group_cols: Sequence[str] = (),
-    recorded_at: str | None = None,
 ) -> DataFrame:
     """The KS calibration artifact: the baseline's empirical CDF sampled
     at its own equi-depth edges — per (group, edge value), the EXACT
@@ -98,12 +97,7 @@ def record_baseline_cdf(
     shuffle) + cumulative/lag windows over the distinct-value axis.
     NULL values / group keys excluded.
 
-    ``recorded_at`` (ISO timestamp string, explicit — see
-    :func:`record_baseline`) stamps the artifact with its calibration
-    time, so a reader can flag the baseline as stale.
-
-    Output: ``(*group_cols, _v <value type>, cum bigint, n bigint
-    [, recorded_at timestamp])``.
+    Output: ``(*group_cols, _v <value type>, cum bigint, n bigint)``.
     """
     if nbins < 1:
         raise ValueError("need nbins >= 1")
@@ -133,17 +127,12 @@ def record_baseline_cdf(
     c = c.withColumn("_lvl", lvl).withColumn(
         "_prev", F.coalesce(F.lag("_lvl").over(w_lag), F.lit(0))
     )
-    out = c.filter(F.col("_lvl") > F.col("_prev")).select(
+    return c.filter(F.col("_lvl") > F.col("_prev")).select(
         *gcols,
         "_v",
         F.col("_cum").alias("cum"),
         F.col("_tot").alias("n"),
     )
-    if recorded_at is not None:
-        out = out.withColumn(
-            "recorded_at", F.lit(recorded_at).cast("timestamp")
-        )
-    return out
 
 
 def ks_against_baseline_cdf(

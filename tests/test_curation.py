@@ -155,30 +155,6 @@ def test_gopher_flags_reject_symbol_soup_and_bullets(spark):
     assert got[3] is False  # symbol:word ratio 8/23 > 0.1
 
 
-def test_lsh_bucket_cap_drops_only_oversized_buckets(spark):
-    from riot_graphs_spark.operators.dedup import minhash_lsh_pairs
-
-    # 5 identical docs (one giant bucket in every band) + 2 near-identical
-    # docs that share buckets only with each other.
-    boiler = "the quick brown fox jumps over the lazy dog again and again"
-    near_a = "completely different text about spark shuffle partitions here"
-    near_b = "completely different text about spark shuffle partitions there"
-    docs = spark.createDataFrame(
-        [Row(doc_id=i, text=boiler) for i in range(5)]
-        + [Row(doc_id=10, text=near_a), Row(doc_id=11, text=near_b)]
-    )
-    uncapped = {
-        (r.doc_a, r.doc_b) for r in minhash_lsh_pairs(docs).collect()
-    }
-    capped = {
-        (r.doc_a, r.doc_b)
-        for r in minhash_lsh_pairs(docs, max_bucket_size=4).collect()
-    }
-    assert (10, 11) in uncapped and (10, 11) in capped  # small bucket kept
-    assert any(a < 5 and b < 5 for a, b in uncapped)  # boilerplate paired
-    assert not any(a < 5 and b < 5 for a, b in capped)  # cap dropped them
-
-
 def test_boilerplate_lines_removed_order_preserved(spark):
     from riot_graphs_spark.operators.curation import remove_boilerplate_lines
 
@@ -518,37 +494,6 @@ def test_bpe_train_matches_reference_implementation(spark):
     assert got == want
 
 
-def test_bpe_train_batched_rounds_match_sequential(spark):
-    """batch_size>1 collapses merge rounds; on a corpus whose frequent pairs
-    don't interact (disjoint symbols, distinct counts) it is provably
-    identical to exact sequential BPE — and runs n_merges/k rounds."""
-    from riot_graphs_spark.operators.textstats import bpe_train
-
-    texts = [
-        "aa aa aa aa aa aa",   # (a,a) dominates
-        "bb bb bb bb bb",      # then (b,b)
-        "cc cc cc cc",         # then (c,c)
-        "dd dd dd",            # then (d,d)
-    ]
-    docs = spark.createDataFrame(
-        [(i, t) for i, t in enumerate(texts)], "doc_id long, text string"
-    )
-    seq = bpe_train(docs, n_merges=4, batch_size=1)
-    bat = bpe_train(docs, n_merges=4, batch_size=4)
-    assert seq == bat == [("a", "a"), ("b", "b"), ("c", "c"), ("d", "d")]
-
-
-def test_bpe_batch_compatibility_filter():
-    """Interacting pairs are deferred to a later round, not co-applied:
-    shared symbols and concat collisions both disqualify."""
-    from riot_graphs_spark.operators.textstats import _batch_compatible
-
-    ranked = [("a", "b"), ("b", "c"), ("x", "y"), ("ab", "z"), ("p", "q")]
-    # (b,c) shares b with (a,b); (ab,z) collides with concat of (a,b)
-    assert _batch_compatible(ranked, 5) == [("a", "b"), ("x", "y"), ("p", "q")]
-    assert _batch_compatible(ranked, 2) == [("a", "b"), ("x", "y")]
-
-
 def test_chunk_by_sentences_never_splits_a_sentence(spark):
     from riot_graphs_spark.operators.curation import chunk_by_sentences
 
@@ -723,27 +668,13 @@ def test_containment_tie_prefers_doc_a(spark):
     assert (r.doc_a, r.doc_b, r.containment, r.contained) == (7, 9, 1.0, 7)
 
 
-def test_winsorize_approx_mode_close_to_exact(spark, sf_dir):
-    """The sketch-backed 100 TB form: same plan shape, bounds within sketch
-    accuracy of exact — clipped sets agree except near the thresholds."""
-    from riot_graphs_spark.operators.profile import winsorize
-    from riot_graphs_spark.sources.tables import load_table
-
-    ev = load_table(spark, sf_dir, "events")
-    exact = winsorize(ev).agg(F.sum(F.col("clipped").cast("long"))).collect()[0][0]
-    approx = winsorize(ev, approx=True).agg(
-        F.sum(F.col("clipped").cast("long"))
-    ).collect()[0][0]
-    n = ev.count()
-    assert abs(exact - approx) <= max(10, 0.02 * n)
-
-
 # --------------------------------------------------------------------------
 # heavy_hitters: two-phase Misra-Gries candidates + exact recount
 # --------------------------------------------------------------------------
 def test_heavy_hitters_equals_exact_group_by(spark):
-    """With capacity FAR below the distinct-key count (forcing real MG
-    decrements in phase 1), the result must still exactly equal
+    """With the counter cap (⌈1/min_share⌉ = 20) FAR below the distinct-key
+    count (forcing real MG decrements in phase 1), the result must exactly
+    equal
     GROUP BY HAVING cnt > N*min_share."""
     from pyspark.sql import functions as F
 
@@ -763,7 +694,7 @@ def test_heavy_hitters_equals_exact_group_by(spark):
     )
     got = {
         r.k: (r.cnt, r.share)
-        for r in heavy_hitters(df, "k", min_share=0.05, capacity=12).collect()
+        for r in heavy_hitters(df, "k", min_share=0.05).collect()
     }
     n = 300 + 120 + 60 + 500
     expect = {
@@ -795,7 +726,7 @@ def test_heavy_hitters_excludes_nulls_and_validates(spark):
 
 def test_heavy_hitters_grouped_equals_exact_per_group(spark):
     """Grouped MG + recount must exactly equal per-group GROUP BY HAVING,
-    with capacity far below the distinct-key count and keys that are heavy
+    with the counter cap far below the distinct-key count and keys that are heavy
     in one group but cold in another."""
     from pyspark.sql import functions as F
 
@@ -818,7 +749,7 @@ def test_heavy_hitters_grouped_equals_exact_per_group(spark):
     got = {
         (r.g, r.k): (r.cnt, r.share)
         for r in heavy_hitters_grouped(
-            df, key_col="k", group_col="g", min_share=0.05, capacity=15
+            df, key_col="k", group_col="g", min_share=0.05
         ).collect()
     }
     exact = {
@@ -835,33 +766,6 @@ def test_heavy_hitters_grouped_equals_exact_per_group(spark):
     n1, n2 = 200 + 80 + 400, 2 + 90 + 300
     assert abs(got[("g1", "hot")][1] - 200 / n1) < 1e-12
     assert abs(got[("g2", "spike")][1] - 90 / n2) < 1e-12
-
-
-def test_heavy_hitters_capacity_below_floor_is_clamped(spark):
-    """Review regression: a caller capacity below the pigeonhole floor
-    (cap+1 < 1/min_share) must not break exactness — balanced keys used to
-    tie at the MG decrement threshold and BOTH died, returning []."""
-    from pyspark.sql import functions as F
-
-    from riot_graphs_spark.operators.profile import (
-        heavy_hitters,
-        heavy_hitters_grouped,
-    )
-
-    rows = [("g", "A"), ("g", "B")] * 5
-    df = spark.createDataFrame(rows, "g string, k string").repartition(5)
-    flat = {
-        r.k: r.cnt
-        for r in heavy_hitters(df, "k", min_share=0.2, capacity=1).collect()
-    }
-    assert flat == {"A": 5, "B": 5}
-    grouped = {
-        (r.g, r.k): r.cnt
-        for r in heavy_hitters_grouped(
-            df, key_col="k", group_col="g", min_share=0.2, capacity=1
-        ).collect()
-    }
-    assert grouped == {("g", "A"): 5, ("g", "B"): 5}
 
 
 def test_heavy_hitters_grouped_excludes_null_keys_and_groups(spark):
@@ -910,43 +814,28 @@ def test_paragraph_dedup_stats_block_mode(spark):
     assert 4 not in got  # no full block -> no row
 
 
-def test_paragraph_dedup_stats_sep_mode_and_within_doc(spark):
-    """sep mode splits on the separator; a unit repeated only WITHIN one
-    doc is not a duplicate."""
+def test_paragraph_dedup_stats_within_doc_repeat_is_not_a_dup(spark):
+    """A unit repeated only WITHIN one doc is not a duplicate."""
     import pytest as _pytest
 
     from riot_graphs_spark.operators.dedup import paragraph_dedup_stats
 
     df = spark.createDataFrame(
         [
-            (1, "alpha\n\nbeta\n\nalpha"),   # alpha twice, same doc only
-            (2, "beta\n\ngamma\n\n  "),      # beta shared with doc 1
+            (1, "alpha beta alpha beta gamma delta"),  # alpha beta twice
+            (2, "gamma delta omega psi"),  # gamma delta shared with doc 1
         ],
         "doc_id long, text string",
     )
     got = {
         r.doc_id: (r.n_units, r.n_dup_units)
-        for r in paragraph_dedup_stats(df, sep="\n\n").collect()
+        for r in paragraph_dedup_stats(df, block_tokens=2).collect()
     }
-    # doc1: units alpha,beta,alpha; only beta crosses docs -> 1 dup unit
+    # doc1: units alpha beta, alpha beta, gamma delta; only gamma delta
+    # crosses docs -> 1 dup unit
     assert got == {1: (3, 1), 2: (2, 1)}
     with _pytest.raises(ValueError):
         paragraph_dedup_stats(df, block_tokens=0)
-
-
-def test_paragraph_dedup_sep_is_literal_not_regex(spark):
-    """Review regression: a separator containing regex metacharacters must
-    split literally — '|' used to split between every character."""
-    from riot_graphs_spark.operators.dedup import paragraph_dedup_stats
-
-    df = spark.createDataFrame(
-        [(1, "alpha|beta"), (2, "beta|gamma")], "doc_id long, text string"
-    )
-    got = {
-        r.doc_id: (r.n_units, r.n_dup_units)
-        for r in paragraph_dedup_stats(df, sep="|").collect()
-    }
-    assert got == {1: (2, 1), 2: (2, 1)}  # units alpha/beta and beta/gamma
 
 
 # --------------------------------------------------------------------------

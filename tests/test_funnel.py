@@ -116,7 +116,7 @@ def test_interval_overlap_join_dedups_multiband_pairs(spark):
         (4, d(2024, 6, 1), d(2024, 6, 10)),
     ]
     df = spark.createDataFrame(rows, "id long, s timestamp, e timestamp")
-    got = interval_overlap_join(df, df, "s", "e", band_seconds=7 * 86400)
+    got = interval_overlap_join(df, df, "s", "e", [], band_seconds=7 * 86400)
     pairs = sorted(
         (r.id, r.id_b)
         for r in got.filter(F.col("id") < F.col("id_b")).collect()

@@ -157,7 +157,7 @@ def test_ewma_window_all_null_window_is_null_under_ansi(spark):
         got = {
             r.t: r.ewma_w
             for r in ewma_window(
-                df, dims=["s"], ts="t", value="value", k=2
+                df, dims=["s"], ts="t", value="value", k=2, tiebreak="t"
             ).collect()
         }
     finally:
@@ -173,9 +173,11 @@ def test_ewma_window_validates(spark):
 
     df = spark.createDataFrame([("a", 1, 1.0)], "s string, t long, value double")
     with _pytest.raises(ValueError):
-        ewma_window(df, dims=["s"], ts="t", value="value", alpha=1.0)
+        ewma_window(
+            df, dims=["s"], ts="t", value="value", alpha=1.0, tiebreak="t"
+        )
     with _pytest.raises(ValueError):
-        ewma_window(df, dims=["s"], ts="t", value="value", k=0)
+        ewma_window(df, dims=["s"], ts="t", value="value", k=0, tiebreak="t")
 
 
 def test_trend_fit_recovers_exact_line(spark):
@@ -429,7 +431,7 @@ def test_scd2_history_intervals_close_and_gap_on_delete(spark):
     assert out[4]["valid_to"] is None and out[4]["is_current"]
 
 
-def test_gap_fill_value_constant_and_null_modes(spark):
+def test_gap_fill_value_fills_missing_buckets_with_the_constant(spark):
     from datetime import datetime, timedelta
 
     from riot_graphs_spark.operators.timeseries import gap_fill_value
@@ -446,13 +448,6 @@ def test_gap_fill_value_constant_and_null_modes(spark):
         ).collect()
     }
     assert zero == {t0: 1.0, t0 + timedelta(days=1): 0.0, t0 + timedelta(days=2): 3.0}
-    nulls = {
-        r["bucket"]: r["v"]
-        for r in gap_fill_value(
-            df, ts="bucket", dims=["event_type"], values=["v"], fill=None
-        ).collect()
-    }
-    assert nulls[t0 + timedelta(days=1)] is None  # fill(null) keeps the bucket
 
 
 def test_sample_per_series_is_deterministic_and_sized(spark):
@@ -672,21 +667,16 @@ def test_cmo_hand_computation_and_flat_window(spark):
     assert out[("b", 4)] == 0.0 and out[("b", 5)] == 0.0
 
 
-def test_profile_columns_exact_and_approx(spark):
+def test_profile_columns_counts_exactly(spark):
     from riot_graphs_spark.operators.profile import profile_columns
 
     df = spark.createDataFrame(
         [(1, "a"), (2, "b"), (3, "b"), (4, None)], "k long, v string"
     )
-    exact = {r.column: r for r in profile_columns(df, ["k", "v"], exact=True).collect()}
+    exact = {r.column: r for r in profile_columns(df, ["k", "v"]).collect()}
     assert exact["k"].n == 4 and exact["k"].n_null == 0 and exact["k"].n_distinct == 4
     assert exact["v"].n == 3 and exact["v"].n_null == 1 and exact["v"].n_distinct == 2
     assert exact["k"].min_value == "1" and exact["k"].max_value == "4"
-
-    # Default (100-TB) path: approx_count_distinct — identical schema, and
-    # at this cardinality HLL++ is exact too; everything else unchanged.
-    approx = {r.column: r for r in profile_columns(df, ["k", "v"]).collect()}
-    assert approx["k"].n_distinct == 4 and approx["v"].n_distinct == 2
     assert [f.name for f in profile_columns(df, ["k"]).schema.fields] == [
         "column", "n", "n_null", "n_distinct", "min_value", "max_value"
     ]
@@ -1992,11 +1982,6 @@ def test_survival_summary_hand_cases(spark):
     got = survival_summary(cen).collect()[0]
     assert got["median_survival"] is None
     assert got["rmst"] == _pytest.approx(1 + 4 / 3)
-
-    # explicit horizon clips the integral
-    got = survival_summary(cen, horizon=2).collect()[0]
-    assert got["horizon"] == 2
-    assert got["rmst"] == _pytest.approx(1 + 2 / 3)
 
 
 # --------------------------------------------------------------------------

@@ -460,7 +460,8 @@ def test_integral_matches_trapezoid(spark, events):
     from riot_graphs_spark.operators.timeseries import integral_per_bucket
 
     want = integral_per_bucket(
-        events, ["event_type"], "ts", "value", unit="day", out="area"
+        events, ["event_type"], "ts", "value", unit="day", out="area",
+        tiebreak="event_id",
     ).withColumnRenamed("bucket", "time")
     joined = got.join(want, ["time", "event_type"], "full").select(
         got["area"].alias("g"), want["area"].alias("w")

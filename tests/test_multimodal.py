@@ -142,7 +142,7 @@ def test_phash_pairs_find_exact_duplicates(spark):
         (3, other, "image", 64, 64, 0),
     ]
     media = spark.createDataFrame(rows, MEDIA_SCHEMA)
-    pairs = {(r.doc_a, r.doc_b): r.hamming for r in phash_near_dup_pairs(media, max_hamming=0).collect()}
+    pairs = {(r.doc_a, r.doc_b): r.hamming for r in phash_near_dup_pairs(media, max_hamming=0, bands=1).collect()}
     assert pairs == {(1, 2): 0}
 
 
@@ -222,7 +222,9 @@ def test_audio_pairs_find_exact_duplicates_and_recall(spark):
     media = spark.createDataFrame(rows, MEDIA_SCHEMA)
     pairs = {
         (r.doc_a, r.doc_b): r.hamming
-        for r in audio_near_dup_pairs(media, max_hamming=0).collect()
+        for r in audio_near_dup_pairs(
+            media, max_hamming=0, bands=1, max_bucket_size=None
+        ).collect()
     }
     assert pairs == {(1, 2): 0}
 
@@ -239,7 +241,9 @@ def test_audio_pairs_find_exact_duplicates_and_recall(spark):
     }
     banded = {
         (r.doc_a, r.doc_b): r.hamming
-        for r in audio_near_dup_pairs(big, max_hamming=radius, bands=8).collect()
+        for r in audio_near_dup_pairs(
+            big, max_hamming=radius, bands=8, max_bucket_size=None
+        ).collect()
     }
     assert banded == brute
 

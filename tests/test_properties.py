@@ -295,9 +295,10 @@ def test_m4_contains_extremes_and_is_subset(spark, events):
 @given(events=events_strategy, split=st.integers(min_value=0, max_value=40))
 @settings(**SETTINGS)
 def test_cdc_split_compaction_equals_full_compaction(spark, events, split):
-    """Associativity with tombstones retained: compact(compact(A) ∪ B) ==
-    compact(A ∪ B) for ANY split point — the invariant the streaming
-    materialization rests on (late data cannot resurrect deletes)."""
+    """Last-writer-wins under any split of the log: compacting the union of
+    two splits, however its rows are spread over partitions, equals the
+    Python reference — per series the change with the largest
+    (ts, event_id) wins and a winning delete drops the series."""
     from riot_graphs_spark.operators.cdc import apply_changelog
 
     df = to_df(spark, events).withColumn(
@@ -306,14 +307,14 @@ def test_cdc_split_compaction_equals_full_compaction(spark, events, split):
     kw = dict(keys=["series"], seq=["ts", "event_id"], op_col="op")
     a = df.filter(F.col("event_id") < split)
     b = df.filter(F.col("event_id") >= split)
-    state_a = apply_changelog(a, keep_tombstones=True, **kw)
-    incremental = apply_changelog(
-        state_a.unionByName(b), keep_tombstones=True, **kw
-    )
-    full = apply_changelog(df, keep_tombstones=True, **kw)
-    inc_rows = sorted(map(tuple, incremental.collect()))
-    full_rows = sorted(map(tuple, full.collect()))
-    assert inc_rows == full_rows
+    got = apply_changelog(b.unionByName(a), **kw)
+    winners = {}
+    for r in df.collect():
+        best = winners.get(r["series"])
+        if best is None or (r["ts"], r["event_id"]) > (best["ts"], best["event_id"]):
+            winners[r["series"]] = r
+    want = sorted(tuple(r) for r in winners.values() if r["op"] != "D")
+    assert sorted(map(tuple, got.collect())) == want
 
 
 edges_strategy = st.lists(
@@ -586,25 +587,26 @@ def test_winsorize_bounds_and_row_preservation(spark, values):
 
 # --------------------------------------------------------------------------
 # heavy_hitters: two-phase result equals exact GROUP BY HAVING, any capacity
+# (the counter cap is ⌈1/min_share⌉, so drawing min_share draws caps from 3
+# to 10; phase 1 decrements whenever a draw has more distinct keys than that)
 # --------------------------------------------------------------------------
 @settings(**SETTINGS)
 @given(
     keys=st.lists(
         st.integers(min_value=0, max_value=30), min_size=1, max_size=120
     ),
-    cap=st.integers(min_value=2, max_value=12),
+    share=st.sampled_from((0.1, 0.12, 0.2, 0.25, 0.34)),
 )
-def test_heavy_hitters_exact_for_any_capacity(spark, keys, cap):
+def test_heavy_hitters_exact_for_any_capacity(spark, keys, share):
     from riot_graphs_spark.operators.profile import heavy_hitters
 
     df = spark.createDataFrame(
         [(f"k{k}",) for k in keys], "k string"
     ).repartition(5)
     n = len(keys)
-    share = 0.12
     got = {
         r.k: r.cnt
-        for r in heavy_hitters(df, "k", min_share=share, capacity=cap).collect()
+        for r in heavy_hitters(df, "k", min_share=share).collect()
     }
     exact = {
         r.k: r.cnt
@@ -692,19 +694,18 @@ def test_sorted_neighborhood_pairs_property(spark, texts):
         min_size=1,
         max_size=60,
     ),
-    cap=st.integers(min_value=1, max_value=6),
+    share=st.sampled_from((0.1, 0.2, 0.25, 0.34)),
 )
-def test_heavy_hitters_grouped_exact_for_any_capacity(spark, keyed, cap):
+def test_heavy_hitters_grouped_exact_for_any_capacity(spark, keyed, share):
     from riot_graphs_spark.operators.profile import heavy_hitters_grouped
 
     df = spark.createDataFrame(
         [(f"g{g}", f"k{k}") for g, k in keyed], "g string, k string"
     ).repartition(5)
-    share = 0.2
     got = {
         (r.g, r.k): r.cnt
         for r in heavy_hitters_grouped(
-            df, key_col="k", group_col="g", min_share=share, capacity=cap
+            df, key_col="k", group_col="g", min_share=share
         ).collect()
     }
     exact = {

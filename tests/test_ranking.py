@@ -90,14 +90,6 @@ def test_unigram_lm_cross_entropy_hand_and_totality(spark):
     assert out[2].n_tokens == 0 and out[2].cross_entropy is None
 
 
-def test_unigram_lm_unseen_tokens_get_alpha_mass(spark):
-    train = _docs(spark, [(10, "a a b")])
-    score = _docs(spark, [(1, "z z")])  # z unseen in the model
-    out = unigram_lm_cross_entropy(score, train_docs=train).collect()[0]
-    # p(unseen) = 0.5 / (3 + 0.5*2) = 0.125
-    assert abs(out.cross_entropy - (-math.log(0.125))) < 1e-9
-
-
 def test_perplexity_buckets_per_lang_and_keep(spark):
     """Common-word docs land in head, gibberish in tail, per language
     independently; keep = head+middle (CCNet's training set)."""

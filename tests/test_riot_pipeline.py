@@ -119,13 +119,11 @@ def test_nightly_builds_picks_last_commit_with_stats(spark, sizes_raw):
     assert len(day1) == 3  # all (test, board) rows of that nightly
 
 
-def test_asof_inclusive_vs_strict(spark):
+def test_asof_equal_ts_is_visible(spark):
     left = spark.createDataFrame([Row(k="a", ts=ts(5), id=1)])
     right = spark.createDataFrame([Row(k="a", ts=ts(5), v=10), Row(k="a", ts=ts(4), v=9)])
     incl = asof_join(left, right, on="k", right_payload=["v"]).collect()[0]
-    assert incl.v_asof == 10  # tie at equal ts visible when inclusive
-    strict = asof_join(left, right, on="k", right_payload=["v"], strict=True).collect()[0]
-    assert strict.v_asof == 9  # equal ts excluded when strict
+    assert incl.v_asof == 10  # a right row at the equal ts is the match
 
 
 def test_asof_no_preceding_row_is_null(spark):
@@ -135,7 +133,7 @@ def test_asof_no_preceding_row_is_null(spark):
     assert out.v_asof is None  # total: left row kept with NULL
 
 
-def test_asof_forward_inclusive_and_strict(spark):
+def test_asof_forward_equal_ts_is_visible(spark):
     from riot_graphs_spark.operators.asof import asof_join_forward
 
     left = spark.createDataFrame([Row(k="a", ts=ts(5), id=1)])
@@ -143,11 +141,7 @@ def test_asof_forward_inclusive_and_strict(spark):
         [Row(k="a", ts=ts(5), v=50), Row(k="a", ts=ts(7), v=70)]
     )
     incl = asof_join_forward(left, right, on="k", right_payload=["v"]).collect()[0]
-    assert incl.v_asof == 50  # equal ts visible when inclusive
-    strict = asof_join_forward(
-        left, right, on="k", right_payload=["v"], strict=True
-    ).collect()[0]
-    assert strict.v_asof == 70  # equal ts excluded when strict
+    assert incl.v_asof == 50  # a right row at the equal ts is the match
 
 
 def test_asof_forward_no_following_is_null(spark):
