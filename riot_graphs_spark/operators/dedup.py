@@ -22,17 +22,13 @@ from pyspark.sql import functions as F
 
 from ..functions.spread import spread_small_scan
 from .graph import _sym
+from .textstats import tokens
 
 #: Modulus for the MinHash permutation family (prime > 2^30 × small a).
 MINHASH_P = 1_000_000_007
 #: Signature length and LSH banding (4 bands × 4 rows).
 MINHASH_K = 16
 MINHASH_BAND_ROWS = 4
-
-
-def words(text: Column | str) -> Column:
-    c = F.col(text) if isinstance(text, str) else text
-    return F.regexp_extract_all(F.lower(c), F.lit("[a-z0-9]+"), 0)
 
 
 def word_shingles(text: Column | str, n: int = 3) -> Column:
@@ -51,7 +47,7 @@ def word_shingles(text: Column | str, n: int = 3) -> Column:
             F.transform(idx, lambda i: F.array_join(F.slice(w, i, n), " "))
         )
 
-    return bind_array(words(text), make)
+    return bind_array(tokens(text), make)
 
 
 def hash56(s: Column) -> Column:
@@ -213,7 +209,7 @@ def _minhash_wide(
     # Spread only the two columns the signature reads: the exchange
     # carries whatever it is given.
     docs = spread_small_scan(docs.select(F.col(id_col), F.col(text_col)))
-    word_hashes = F.transform(words(text_col), lambda t: hash32(t))
+    word_hashes = F.transform(tokens(text_col), lambda t: hash32(t))
     with_h = docs.select(
         F.col(id_col),
         composed_shingle_hashes(word_hashes, shingle_n).alias("_h2s"),
@@ -508,7 +504,7 @@ def simhash_signatures(
     docs = spread_small_scan(docs.select(F.col(id_col), F.col(text_col)))
     hs = docs.select(
         F.col(id_col),
-        F.transform(words(text_col), lambda t: hash32(t)).alias("_hs"),
+        F.transform(tokens(text_col), lambda t: hash32(t)).alias("_hs"),
     )
     out_schema = StructType(
         [hs.schema[0], StructField("simhash", LongType())]
@@ -1465,7 +1461,7 @@ def minhash_estimate_calibration(
         .union(pairs.select(F.col("doc_b").alias(id_col)))
         .distinct()
     )
-    word_hashes = F.transform(words(text_col), lambda t: hash32(t))
+    word_hashes = F.transform(tokens(text_col), lambda t: hash32(t))
     sh = (
         docs.join(ids, id_col, "left_semi")
         .select(
@@ -1512,7 +1508,7 @@ def content_units(text_col: str, block_tokens: int = 10) -> Column:
     """
     if block_tokens < 1:
         raise ValueError("block_tokens must be >= 1")
-    w = words(text_col)
+    w = tokens(text_col)
     n_blocks = F.floor(F.size(w) / block_tokens).cast("int")
     return F.when(
         n_blocks >= 1,
@@ -1660,7 +1656,7 @@ def content_defined_chunks(
     # inlined form re-tokenized the doc once per gram and measured
     # minutes instead of seconds at sf0.01
     staged = spread_small_scan(docs).select(
-        "doc_id", words(text_col).alias("_toks")
+        "doc_id", tokens(text_col).alias("_toks")
     ).filter(F.size("_toks") > 0)
     staged = staged.withColumn(
         "_hs", F.transform(F.col("_toks"), lambda t: hash32(t))

@@ -66,7 +66,9 @@ def pagerank(
     table must be executor-memory-sized (a parts catalog, a vocab).  The
     iterations pipeline into one plan with no per-iteration barrier,
     which suits the short fixed runs this operator serves; plan size
-    grows linearly with ``iterations``.  ``dedup_edges=False`` skips the
+    grows linearly with ``iterations``.  Construction has two barriers,
+    the forward edge list and the degree table, and one job-running
+    step, the node count.  ``dedup_edges=False`` skips the
     edge-distinct exchange when the caller guarantees unique
     ``(src, dst)`` pairs with ``src < dst`` (mirroring cannot then
     collide) — one full edge-set shuffle saved.
@@ -78,25 +80,26 @@ def pagerank(
     if not 0.0 < damping < 1.0:
         raise ValueError("need 0 < damping < 1")
 
+    # _sym's one barrier holds the forward edge list; the mirrored union
+    # over it is a narrow map, re-derived per consumer (see
+    # label_propagation).
     e = _sym(edges.select(F.col(src).alias("src"), F.col(dst).alias("dst")))
     if dedup_edges:
         e = e.distinct()
-    # One lazy checkpoint of the edge list: degree, weighted edges, the
-    # node set AND the node count all derive from it — without this the
-    # upstream edge construction (often a pair-generation aggregate) runs
-    # once per consumer.
-    e = e.localCheckpoint(eager=False)
-    deg = e.groupBy("src").agg(F.count(F.lit(1)).alias("_od"))
-    # The degree-weighted edge table is static across iterations: without
-    # its own barrier every iteration re-runs the degree aggregate and
-    # the edge⋈degree join (3 exchanges per iteration, r14).
-    ew = e.join(deg, "src")
-    if iterations > 1:
-        ew = ew.localCheckpoint(eager=False)
-    # Mirrored edges: every endpoint appears as a src.
-    nodes = e.select(F.col("src").alias("node")).distinct()
+    # The degree table is the second and last barrier: with mirrored edges
+    # every node is a src, so its keys ARE the node set, and the node
+    # count (one bounded scalar, needed inside the teleport constant)
+    # materializes it.
+    deg = (
+        e.groupBy("src").agg(F.count(F.lit(1)).alias("_od"))
+        .localCheckpoint(eager=False)
+    )
+    n = deg.count()
+    # Static across iterations: the broadcast join re-runs per iteration
+    # but moves no edges.
+    ew = e.join(F.broadcast(deg), "src")
+    nodes = deg.select(F.col("src").alias("node"))
 
-    n = nodes.count()  # one bounded scalar: the node count
     pr = nodes.withColumn("pr", F.lit(1.0) / F.lit(float(n)))
     teleport = F.lit(1.0) - F.lit(damping)
     for _ in range(iterations):

@@ -1,4 +1,5 @@
-"""Filesystem primitives for non-transactional parquet sinks.
+"""Filesystem primitives for non-transactional parquet sinks and the table
+readers' footer lookup (:mod:`.tables`).
 
 The plain-parquet keyed append needs what a transactional table format
 would give for free: an explicit "does the partition exist yet" probe

@@ -232,6 +232,117 @@ def test_load_table_reads_the_sink_without_a_job(spark, tmp_path):
     assert sorted(df.collect()) == sorted(spark.read.parquet(sink).collect())
 
 
+def _bind_exactly(spark, tables: str, name: str):
+    """``load_table(tables, name)`` runs no Spark job, and its schema and
+    rows are those of Spark's inferred read; returns the bound frame."""
+    from riot_graphs_spark.sources.tables import load_table
+
+    df, jobs = _group_jobs(
+        spark, f"bind-{uuid.uuid4()}", lambda: load_table(spark, tables, name)
+    )
+    assert jobs == 0, name
+    ref = spark.read.parquet(f"{tables}/{name}.parquet")
+    assert df.schema == ref.schema, name
+    assert df.count() == ref.count(), name
+    assert df.exceptAll(ref).count() == 0, name
+    return df
+
+
+@pytest.mark.parametrize(
+    "name",
+    [
+        "region", "nation", "customer", "supplier", "part",
+        "orders", "lineitem", "events", "documents", "embeddings",
+    ],
+)
+def test_load_table_binds_driver_tables_without_a_job(spark, sf_dir, name):
+    """Every driver table is bound with its footer's schema: no Spark job
+    infers it, and schema and rows equal the inferred read's."""
+    _bind_exactly(spark, sf_dir, name)
+
+
+def test_load_table_footer_schema_of_a_directory_table(spark, sf_dir, tmp_path):
+    """A Spark-written directory of two part files (beside ``_SUCCESS``
+    and ``.crc`` files) binds from its first data file with no job, and a
+    date-partitioned one keeps its partition column."""
+    tables = str(tmp_path)
+    orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
+    orders.repartition(2).write.parquet(f"{tables}/orders.parquet")
+    names = sorted(p.name for p in (tmp_path / "orders.parquet").iterdir())
+    assert sum(n.startswith("part-") for n in names) == 2, names
+    assert "_SUCCESS" in names and any(n.startswith(".") for n in names)
+    _bind_exactly(spark, tables, "orders")
+
+    orders.withColumn("o_year", F.year("o_orderdate")).write.partitionBy(
+        "o_year"
+    ).parquet(f"{tables}/orders_by_year.parquet")
+    bound = _bind_exactly(spark, tables, "orders_by_year")
+    assert bound.columns[-1] == "o_year"
+
+
+def test_load_table_nanosecond_events_without_a_job(spark, sf_dir, tmp_path):
+    """``events.ts`` stored as TIMESTAMP(NANOS): the footer schema is the
+    inferred one under ``nanosAsLong`` (``ts`` a bigint), binding runs no
+    job, and the bound ``ts`` equals the microsecond table's."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from riot_graphs_spark.sources.tables import _footer_schema, load_table
+
+    src = f"{sf_dir}/events.parquet"
+    table = pq.read_table(src)
+    i = table.schema.get_field_index("ts")
+    table = table.set_column(i, "ts", table.column("ts").cast(pa.timestamp("ns")))
+    path = str(tmp_path / "events.parquet")
+    pq.write_table(table, path)
+
+    assert _footer_schema(spark, path) == spark.read.parquet(path).schema
+    assert dict(spark.read.parquet(path).dtypes)["ts"] == "bigint"
+    df, jobs = _group_jobs(
+        spark,
+        f"bind-{uuid.uuid4()}",
+        lambda: load_table(spark, str(tmp_path), "events"),
+    )
+    assert jobs == 0
+    assert dict(df.dtypes)["ts"] == "timestamp"
+    micros = load_table(spark, sf_dir, "events")
+    assert df.select(*micros.columns).exceptAll(micros).count() == 0
+    assert df.count() == table.num_rows
+
+
+#: Single-pass registry members whose construction only binds tables.
+_JOB_FREE_BUILDS = (
+    "q1_pricing_summary",
+    "j1_lineitem_orders",
+    "flagship_daily_delta",
+    "influxql_daily_derivative",
+    "dedup_simhash",
+    "p13_wrap",
+)
+
+
+def test_registry_construction_job_budget(spark, sf_dir):
+    """Building a registry query runs no Spark job for its tables: the
+    single-pass members build with 0 jobs, and ``graph_pagerank_parts``
+    spends its 6 on the node count that materializes its degree table
+    (one job per stage of the edge pipeline under AQE). The previous
+    reads ran one schema-inference job per table bound."""
+    import __spark_entry__
+
+    queries = __spark_entry__.queries()
+    for name in _JOB_FREE_BUILDS:
+        _, jobs = _group_jobs(
+            spark, f"build-{uuid.uuid4()}", lambda: queries[name](spark, sf_dir)
+        )
+        assert jobs == 0, name
+    _, jobs = _group_jobs(
+        spark,
+        f"build-{uuid.uuid4()}",
+        lambda: queries["graph_pagerank_parts"](spark, sf_dir),
+    )
+    assert jobs <= 6
+
+
 def test_merge_sink_read_is_partition_pruned(spark, dirs, tmp_path):
     """The anti-join's sink-side read must carry a partition filter on the
     batch's dates — at a 100-TB sink the merge touches only the named date
