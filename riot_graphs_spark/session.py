@@ -10,8 +10,20 @@ Design notes (100 TB posture, SURVEY §4):
   and tz-aware datetimes (``rg.py:101`` vs ``rg.py:62-67``); we are tz-correct
   by construction.
 - ``spark.sql.legacy.parquet.nanosAsLong`` lets Spark read TIMESTAMP(NANOS)
-  parquet columns (the driver's ``events.ts``); :mod:`..sources.tables`
-  converts them back to TimestampType losslessly at microsecond precision.
+  parquet columns. The driver's tables store TIMESTAMP(MICROS); an
+  ``events.ts`` stored as NANOS is accepted too, and :mod:`..sources.tables`
+  converts it back to TimestampType losslessly at microsecond precision.
+- Streams write their checkpoint logs (file-source log, offset WAL, commit
+  log) through ``FileSystemBasedCheckpointFileManager``: write a temporary
+  file, then rename it over the log entry. Spark's default, the
+  ``FileContext`` manager, runs 2 ``chmod`` and 8 ``readlink`` child
+  processes per log write on a local filesystem when Hadoop's native
+  library is not loaded; the three writes of one ``/update`` trigger then
+  took about 45 ms, against about 12 ms now (docs/SCALING.md). The rename
+  is atomic on POSIX filesystems and HDFS, and ``/update`` calls are
+  serialized per checkpoint, so no two writers race for one entry. On an
+  object store, whose rename is a copy, set the store's own manager here
+  instead.
 - Arrow is enabled so the few pandas-UDF operators (text wrap P13, multimodal
   decode stubs) move data in columnar batches, never row-at-a-time pickling.
 """
@@ -35,6 +47,12 @@ RUNTIME_CONFS: dict[str, str] = {
     # window() require TIMESTAMP, and batch/stream must see identical types.
     "spark.sql.parquet.inferTimestampNTZ.enabled": "false",
     "spark.sql.execution.arrow.pyspark.enabled": "true",
+    # Streams write their checkpoint logs through Hadoop's FileSystem API
+    # (see the module's design notes).
+    "spark.sql.streaming.checkpointFileManagerClass": (
+        "org.apache.spark.sql.execution.streaming.checkpointing."
+        "FileSystemBasedCheckpointFileManager"
+    ),
 }
 
 
@@ -43,13 +61,11 @@ def default_parallelism() -> int:
 
 
 def apply_runtime_confs(spark: SparkSession) -> SparkSession:
-    """Set runtime confs on an externally-provided session (idempotent)."""
+    """Set runtime confs on an externally-provided session (idempotent).
+    Every key is settable at runtime (tests/test_session), so a failure
+    here is raised, not skipped."""
     for key, value in RUNTIME_CONFS.items():
-        try:
-            spark.conf.set(key, value)
-        except Exception:
-            # Static confs on a running session — keep whatever it has.
-            pass
+        spark.conf.set(key, value)
     return spark
 
 

@@ -24,6 +24,11 @@ sink's layout and upsert key:
   :data:`SINK_SCHEMA` for the same reason.
 - Batching (reference ``batch_size=20``) is the file-sizing concern Spark
   already owns; writers emit one file per task.
+- No ``_SUCCESS`` marker is written: every append would rewrite the one
+  at the sink's root, and no reader looks at it (Spark's listing skips
+  it, DuckDB reads ``*/*.parquet``). On a local filesystem without
+  Hadoop's native library the marker and its ``.crc`` cost two ``chmod``
+  child processes per append.
 - ``noop=True`` (reference ``--noop``) runs the same dedupe and pruned
   anti-join into the built-in noop sink: the count a real run would
   ingest, zero writes.
@@ -144,7 +149,12 @@ def merge_append(
         if noop:
             fresh.write.format("noop").mode("overwrite").save()
         else:
-            fresh.write.mode("append").partitionBy(PARTITION_COL).parquet(sink_path)
+            (
+                fresh.write.mode("append")
+                .option("mapreduce.fileoutputcommitter.marksuccessfuljobs", "false")
+                .partitionBy(PARTITION_COL)
+                .parquet(sink_path)
+            )
         return int(obs.get["n"])
     finally:
         rows.unpersist()

@@ -124,12 +124,14 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     :func:`~..session.apply_runtime_confs` so it is the schema inference
     would give, which the ``events.ts`` path below needs.
 
-    The driver writes ``events.ts`` as parquet TIMESTAMP(NANOS), which Spark's
-    vectorized reader rejects. With ``spark.sql.legacy.parquet.nanosAsLong``
-    the column arrives as LongType nanoseconds; ``ts div 1000`` (integer
-    division — float division would lose precision above 2^53) then
-    ``timestamp_micros`` restores TimestampType at microsecond precision,
-    matching what DuckDB/pandas see.
+    The driver's tables store their timestamps as parquet TIMESTAMP(MICROS).
+    An ``events.ts`` stored as TIMESTAMP(NANOS) is accepted too, though
+    Spark's vectorized reader rejects that type. With
+    ``spark.sql.legacy.parquet.nanosAsLong`` the column arrives as LongType
+    nanoseconds; ``ts div 1000`` (integer division — float division would
+    lose precision above 2^53) then ``timestamp_micros`` restores
+    TimestampType at microsecond precision, matching what DuckDB/pandas
+    see.
     """
     apply_runtime_confs(spark)
     path = f"{sf_dir}/{name}.parquet"

@@ -193,6 +193,148 @@ def test_incremental_refresh_logs_one_record_per_call(spark, dirs, caplog):
     assert third["watermark"].startswith("2023-12-30T04:00:00")
 
 
+#: The session conf naming the class that writes a stream's checkpoint logs.
+_MANAGER_CONF = "spark.sql.streaming.checkpointFileManagerClass"
+
+
+def _checkpoint_manager(spark, path: str) -> str:
+    """Class name of the manager a stream started now would write its
+    checkpoint logs under *path* with (the stream builds it the same way,
+    from the session's Hadoop conf)."""
+    jvm = spark._jvm
+    checkpointing = jvm.org.apache.spark.sql.execution.streaming.checkpointing
+    manager = checkpointing.CheckpointFileManager.create(
+        jvm.org.apache.hadoop.fs.Path(path),
+        spark._jsparkSession.sessionState().newHadoopConf(),
+    )
+    return manager.getClass().getSimpleName()
+
+
+def test_filecontext_checkpoint_resumes_under_the_filesystem_manager(
+    spark, dirs
+):
+    """Streams on the engine's session resolve the rename-based FileSystem
+    manager, and a checkpoint written under Spark's default FileContext
+    manager resumes under it: nothing is reprocessed, and a newly landed
+    document gives its true delta."""
+    from riot_graphs_spark.session import apply_runtime_confs
+
+    b = {"bss": 1, "text": 2, "data": 3, "count": 0}
+    spark.conf.unset(_MANAGER_CONF)
+    try:
+        assert _checkpoint_manager(spark, dirs["ckpt"]) == (
+            "FileContextBasedCheckpointFileManager"
+        )
+        _land_days(spark, dirs, (1,))
+    finally:
+        apply_runtime_confs(spark)
+    assert _checkpoint_manager(spark, dirs["ckpt"]) == (
+        "FileSystemBasedCheckpointFileManager"
+    )
+    assert incremental_refresh(spark, dirs["landing"], dirs["sink"], dirs["ckpt"]) == 0
+    with open(f"{dirs['landing']}/day2.json", "w") as f:
+        f.write(_doc(2, "sha2", {"native": b, "esp32": b}))
+    assert incremental_refresh(spark, dirs["landing"], dirs["sink"], dirs["ckpt"]) == 2
+    assert spark.read.parquet(dirs["sink"]).count() == 3
+
+
+def test_sink_appends_leave_no_success_marker(spark, dirs, tmp_path):
+    """Neither ``/update`` nor ``fetch`` leaves a ``_SUCCESS`` marker (or
+    its ``.crc``) in the sink, and ``build_sizes`` still binds with no
+    Spark job."""
+    from riot_graphs_spark.plans.fetch import batch_fetch
+    from riot_graphs_spark.sources.tables import load_table
+
+    tables = tmp_path / "tables"
+    fetched = tmp_path / "fetched" / "build_sizes.parquet"
+    dirs = {**dirs, "sink": str(tables / "build_sizes.parquet")}
+    _land_days(spark, dirs, (1, 2))
+    now = datetime.datetime(2024, 1, 5, 4)
+    assert batch_fetch(spark, dirs["landing"], str(fetched), history=10, now=now) == 2
+    for sink in (pathlib.Path(dirs["sink"]), fetched):
+        names = sorted(p.name for p in sink.rglob("*"))
+        assert any(n.endswith(".parquet") for n in names), names
+        assert not any("_SUCCESS" in n for n in names), names
+        df, jobs = _group_jobs(
+            spark,
+            f"repoint-{uuid.uuid4()}",
+            lambda: load_table(spark, str(sink.parent), "build_sizes"),
+        )
+        assert jobs == 0
+        assert df.count() == 2
+
+
+#: Child session for the spawn guard: three ``/update`` calls (the first
+#: night, which also creates the checkpoint; a fresh night; a re-delivery
+#: of the first), printing each call's delta and the commands it spawned.
+_SPAWN_PROBE = """
+import json, pathlib, sys
+from riot_graphs_spark.session import get_spark
+from riot_graphs_spark.streaming.ingest import incremental_refresh
+
+root, log = pathlib.Path(sys.argv[1]), pathlib.Path(sys.argv[2])
+spark = get_spark(master="local[1]", shuffle_partitions=1)
+landing = root / "landing"
+landing.mkdir()
+sizes = {"bss": 1, "text": 2, "data": 3, "count": 0}
+calls = []
+for i, day in enumerate((1, 2, 1)):
+    doc = {"ts": f"2024-01-{day:02d} 04:00:00", "sha": f"sha{day}",
+           "sizes": {"tests_shell": {"native": sizes, "esp32": sizes}}}
+    (landing / f"n{i}.json").write_text(json.dumps(doc))
+    before = len(log.read_text().splitlines()) if log.exists() else 0
+    rows = incremental_refresh(
+        spark, str(landing), str(root / "sink"), str(root / "ckpt"))
+    spawned = log.read_text().splitlines()[before:] if log.exists() else []
+    calls.append({"rows": rows, "spawned": [s.split()[0] for s in spawned]})
+spark.stop()
+print(json.dumps(calls))
+"""
+
+
+def test_update_spawns_no_readlink_and_few_chmods(spark, tmp_path):
+    """Without Hadoop's native library the local filesystem runs a
+    ``chmod`` per permission set and a ``readlink`` per link lookup. A
+    session whose ``PATH`` logs both runs three ``/update`` calls: none
+    runs ``readlink`` (the FileContext checkpoint manager ran 24 a call),
+    and a call after the first spawns at most 13 commands (it was 39 for a
+    fresh night, 34 for a re-delivery)."""
+    import os
+    import shutil
+    import subprocess
+    import sys
+
+    if spark._jvm.org.apache.hadoop.util.NativeCodeLoader.isNativeCodeLoaded():
+        pytest.skip("Hadoop's native library is loaded: chmod runs in-process")
+    bin_dir = tmp_path / "bin"
+    bin_dir.mkdir()
+    log = tmp_path / "spawned.log"
+    for cmd in ("chmod", "readlink"):
+        wrapper = bin_dir / cmd
+        wrapper.write_text(
+            f'#!/bin/sh\necho "{cmd} $*" >> "{log}"\nexec {shutil.which(cmd)} "$@"\n'
+        )
+        wrapper.chmod(0o755)
+    repo = pathlib.Path(__file__).resolve().parent.parent
+    env = {
+        **os.environ,
+        "PATH": f"{bin_dir}{os.pathsep}{os.environ['PATH']}",
+        "PYTHONPATH": str(repo),
+        "SPARK_GRAFT_DRIVER_MEM": "1g",
+    }
+    out = subprocess.run(
+        [sys.executable, "-c", _SPAWN_PROBE, str(tmp_path), str(log)],
+        env=env, cwd=repo, capture_output=True, text=True, timeout=120,
+    )
+    assert out.returncode == 0, out.stderr[-2000:]
+    calls = json.loads(out.stdout.strip().splitlines()[-1])
+    assert [c["rows"] for c in calls] == [2, 2, 0]
+    spawned = [cmd for c in calls for cmd in c["spawned"]]
+    assert "chmod" in spawned  # the wrappers were on the JVM's PATH
+    assert "readlink" not in spawned
+    assert max(len(c["spawned"]) for c in calls[1:]) <= 13, calls
+
+
 def test_sink_schema_is_what_update_writes(spark, dirs, tmp_path):
     """The sink's read schema, field metadata included, is the schema of the
     files /update and ``fetch`` write: a column change in
@@ -280,21 +422,29 @@ def test_load_table_footer_schema_of_a_directory_table(spark, sf_dir, tmp_path):
     assert bound.columns[-1] == "o_year"
 
 
+def _nanos_events(sf_dir: str, tmp_path) -> int:
+    """Write the testdata ``events`` table (``ts`` TIMESTAMP(MICROS)) to
+    ``tmp_path/events.parquet`` with ``ts`` as TIMESTAMP(NANOS); returns
+    its row count."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    table = pq.read_table(f"{sf_dir}/events.parquet")
+    assert table.schema.field("ts").type == pa.timestamp("us")
+    i = table.schema.get_field_index("ts")
+    table = table.set_column(i, "ts", table.column("ts").cast(pa.timestamp("ns")))
+    pq.write_table(table, str(tmp_path / "events.parquet"))
+    return table.num_rows
+
+
 def test_load_table_nanosecond_events_without_a_job(spark, sf_dir, tmp_path):
     """``events.ts`` stored as TIMESTAMP(NANOS): the footer schema is the
     inferred one under ``nanosAsLong`` (``ts`` a bigint), binding runs no
     job, and the bound ``ts`` equals the microsecond table's."""
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
     from riot_graphs_spark.sources.tables import _footer_schema, load_table
 
-    src = f"{sf_dir}/events.parquet"
-    table = pq.read_table(src)
-    i = table.schema.get_field_index("ts")
-    table = table.set_column(i, "ts", table.column("ts").cast(pa.timestamp("ns")))
+    num_rows = _nanos_events(sf_dir, tmp_path)
     path = str(tmp_path / "events.parquet")
-    pq.write_table(table, path)
 
     assert _footer_schema(spark, path) == spark.read.parquet(path).schema
     assert dict(spark.read.parquet(path).dtypes)["ts"] == "bigint"
@@ -307,7 +457,38 @@ def test_load_table_nanosecond_events_without_a_job(spark, sf_dir, tmp_path):
     assert dict(df.dtypes)["ts"] == "timestamp"
     micros = load_table(spark, sf_dir, "events")
     assert df.select(*micros.columns).exceptAll(micros).count() == 0
-    assert df.count() == table.num_rows
+    assert df.count() == num_rows
+
+
+def test_time_range_pushes_nanos_bounds_to_the_scan(spark, sf_dir, tmp_path):
+    """On a TIMESTAMP(NANOS) ``events`` the window also filters the raw
+    ``_ts_ns`` column, and those bounds reach the parquet scan as pushed
+    filters on the file's ``ts`` column, in nanoseconds (the derived
+    ``ts`` comparison cannot pass ``timestamp_micros``); the window's rows
+    are the MICROS table's."""
+    import pandas as pd
+
+    from riot_graphs_spark.operators.timeseries import time_range
+    from riot_graphs_spark.sources.tables import load_table
+
+    start, end = "2024-01-10 00:00:00", "2024-01-20 00:00:00"
+    _nanos_events(sf_dir, tmp_path)
+    nanos = time_range(load_table(spark, str(tmp_path), "events"), "ts", start, end)
+    plan = nanos._jdf.queryExecution().explainString(
+        spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
+    )
+    pushed = [line for line in plan.splitlines() if "PushedFilters" in line]
+    assert len(pushed) == 1, pushed
+    lo, hi = pd.Timestamp(start).value, pd.Timestamp(end).value
+    assert f"GreaterThanOrEqual(ts,{lo})" in pushed[0]
+    assert f"LessThan(ts,{hi})" in pushed[0]
+
+    micros = time_range(load_table(spark, sf_dir, "events"), "ts", start, end)
+    assert "_ts_ns" not in micros.columns
+    nanos = nanos.select(*micros.columns)
+    assert micros.count() > 0
+    assert nanos.count() == micros.count()
+    assert nanos.exceptAll(micros).count() == 0
 
 
 #: Single-pass registry members whose construction only binds tables.
